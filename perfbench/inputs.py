@@ -1,5 +1,5 @@
-"""Seeded inputs: a BTS-shaped monthly CSV tree, the Tom's-trip origin
-subset, and the point-lookup key stream.
+"""Seeded inputs: a BTS-shaped monthly CSV tree and the point-lookup
+key stream.
 
 Everything here is a pure function of the seed, so two runs with the
 same seed see byte-identical inputs.
@@ -39,11 +39,6 @@ def write_csv_tree(root: str, n_rows: int, seed: int) -> int:
             w.writerows(["" if v is None else v for v in r] for r in rows)
         total += os.path.getsize(path)
     return total
-
-
-def origin_subset(seed: int, k: int) -> list[str]:
-    """The ``k`` request origins of one Tom's-trip run."""
-    return sorted(random.Random(seed * 7919 + 1).sample(AIRPORTS, k))
 
 
 # Airport codes that never occur in the generated data: a lookup on

