@@ -539,7 +539,7 @@ def _lsh_candidates(
     """Distinct candidate pairs (id_a < id_b when symmetric) from the
     banded LSH frames — the UNVERIFIED stage, exposed separately so
     candidate volume is measurable per (bands, rows) configuration
-    (scripts/minhash_band_ab.py) and the hot-bucket cap is testable.
+    and the hot-bucket cap is testable.
 
     Hot-bucket guard: any (band, bkey) bucket holding more than
     ``max_bucket`` universe rows is dropped wholesale BEFORE the
@@ -666,7 +666,7 @@ def minhash_neardup_pairs(
     1.0; verified rep pairs expand to all member combinations.
 
     Tuning ``bands``/``rows = num_hashes // bands`` (measured A/B in
-    BASELINE.md r6, scripts/minhash_band_ab.py): per-pair candidate
+    BASELINE.md r6): per-pair candidate
     probability is 1-(1-J^rows)^bands, so more rows per band steepens
     the S-curve at the threshold. On a corpus whose near-miss mass
     sits just below threshold (the banded-LSH worst case), 16×8 cut

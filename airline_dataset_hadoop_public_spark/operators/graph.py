@@ -488,8 +488,7 @@ def adamic_adar_scores(
     deg > hub_cap are DROPPED before expansion: wedge count per
     center is bounded by C(hub_cap, 2) (pytest-pinned), making
     worst-case work linear in edges for fixed cap. Score impact is
-    quantified per-graph by scripts/adamic_adar_hubcap_ab.py
-    (table in BASELINE.md §r7): each surviving pair loses at most
+    quantified per-graph in BASELINE.md §r7: each surviving pair loses at most
     the dropped centers' Σ 1/ln(deg) — a bias, not noise, and
     monotone in the cap. ``None`` = exact (no drop).
 

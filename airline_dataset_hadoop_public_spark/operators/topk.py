@@ -272,10 +272,10 @@ def ordered_prefix_distributed(
                     T.DecimalType)
         ):
             raise TypeError(
-                f"ordered_prefix_distributed: running_sums column {src!r} "
-                f"aggregates to {dtype.simpleString()}; only integral or "
-                "decimal sums are bit-identical under the two-pass offset "
-                "recomposition — pre-scale to fixed point first"
+                "ordered_prefix_distributed: running_sums/sum_totals "
+                f"column {src!r} aggregates to {dtype.simpleString()}; "
+                "only integral or decimal sums are bit-identical under the "
+                "two-pass offset recomposition — pre-scale to fixed point first"
             )
     out_rows = []
     for grp, grp_rows in by_group.items():

@@ -420,9 +420,8 @@ def parts_copurchase_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # attached pre-expansion; the naive two-leg self-join layout
     # measured 35s vs 2.6s at sf0.1). No hub cap here: the support
     # floor already bounds degrees at tested scales, and the oracle
-    # computes the exact (uncapped) definition — the cap knob and its
-    # measured score-impact/wall trade live in
-    # scripts/adamic_adar_hubcap_ab.py + BASELINE.md §r7.
+    # computes the exact (uncapped) definition — the cap knob's
+    # measured score-impact/wall trade is in BASELINE.md §r7.
     from ..operators.graph import adamic_adar_scores
 
     score = adamic_adar_scores(adj, hub_cap=None)

@@ -63,8 +63,7 @@ def register(name: str, oracle: str | None):
 #   1. _PINNED_FIRST jump the queue (e.g. a query whose oracle was red
 #      last round and must re-verify).
 #   2. Queries with NO driver-green CORRECTNESS row yet
-#      (plans/driver_history.py, regenerated each round by
-#      scripts/update_driver_history.py), dealt round-robin across
+#      (plans/driver_history.py, a frozen snapshot), dealt round-robin across
 #      fixture modules — breadth before depth, so every never-verified
 #      family lands inside the window before any family gets a second
 #      slot; modules with more unverified queries enter the robin

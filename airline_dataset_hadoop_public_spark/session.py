@@ -23,9 +23,14 @@ def get_spark(
     driver_memory: str = "16g",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession with engine defaults."""
+    """Build (or reuse) a local SparkSession with engine defaults.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the cores this
+    process may run on."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (

@@ -1,76 +1,13 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
-
-Each query is timed as a full execution to completion (collect of an
-already-aggregated/limited result — driver-sized outputs only; large
-outputs are drained via count to avoid driver materialization skew).
-A warmup query runs first so JVM/codegen startup isn't attributed to
-the first measured query.
+"""Process-tree CPU accounting shared by the benchmark
+(``perfbench/run.py``) and its tests: snapshot the CPU ticks of this
+process and its descendants (the Spark JVM and its Python workers),
+then take the CPU seconds between two snapshots.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# Queries whose result is fact-table-sized get drained with .count()
-# instead of .collect() so we measure engine time, not driver transfer.
-_DRAIN_WITH_COUNT = {
-    "t4_popularity_sorted",
-    "x1_popularity_rank",
-    "j3_permutation_triplets",
-    "a6_distinct_keys",
-    "p_leg_candidates",
-    # all-pairs outputs are quadratic in duplicate-cluster size —
-    # measure the engine, not a ~1M-row driver transfer
-    "dedup_minhash_neardup",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "streaming_session_windows",
-    "text_winnowing_overlap",
-    "events_batch_sessionization",
-    "docs_chunk_windows",
-    "events_ewma_per_user",
-    # merged/rebuilt state and pair reports are fact-sized
-    "orders_merge_upsert",
-    "orders_priority_scd2",
-    "docs_tfidf_cosine_pairs",
-    # per-document score tables are corpus-sized
-    "docs_bigram_lm_score",
-    "docs_repetition_ngram_fracs",
-    "docs_hashed_ngram_classifier",
-    "streaming_corpus_ingest",
-    "dedup_minhash_incremental",
-    "events_holt_level_trend",
-    "parts_itemitem_cf_topk",
-    "dedup_containment_neardup",
-    # r4c: per-document cleaning report / fact-sized applied table
-    "dedup_span_removal",
-    "orders_cdc_log_apply",
-    # r5: per-document survivor report is corpus-sized
-    "docs_paragraph_dedup",
-    # r5: per-customer score table is dimension-sized
-    "orders_rfm_segmentation",
-    "events_time_weighted_avg",
-    # r6: per-user walk summary is dimension-sized
-    "events_clamped_running_balance",
-    # r6: allocation pair report is fact-sized
-    "lineitem_fifo_lot_allocation",
-    # r6: per-document novelty report is corpus-sized
-    "docs_ngram_novelty",
-    # r8: per-document outputs (drained for the scale-curve runs;
-    # only token_budget/epoch are in the bench set itself)
-    "docs_pack_sequences",
-    "docs_lang_rebalance",
-    "docs_epoch_reshuffle_shards",
-    "corpus_token_budget_select",
-}
 
 def _tree_cpu_snapshot() -> dict[tuple[int, int], tuple[int, tuple | None]]:
     """CPU ticks per live process in this process's descendant tree —
@@ -145,12 +82,12 @@ def _cpu_delta_detail(before: dict, after: dict) -> tuple[float, float]:
     reparented to init/a subreaper AFTER the snapshot but BEFORE dying
     delivers its cutime to nobody in the tree, while the walk still
     subtracts its last-seen ticks — text_winnowing_overlap recorded
-    −100.3 cpu_sec in the committed r9 BENCH_DETAIL.json, silently
+    −100.3 cpu_sec in the r9 bench detail, silently
     cancelling ~100s of real CPU elsewhere in the cross-round totals
     this metric exists for. Returns (cpu_sec clamped at ≥ 0,
     reap_residual = the clamped-away over-subtraction, ≥ 0): the
-    residual is reported separately in BENCH_DETAIL.json instead of
-    being netted against other queries' real CPU."""
+    residual is reported separately instead of being netted against
+    other windows' real CPU."""
     ticks = sum(t - before.get(key, (0, None))[0]
                 for key, (t, _) in after.items())
     for key, (t, parent_key) in before.items():
@@ -170,384 +107,3 @@ def _cpu_delta_detail(before: dict, after: dict) -> tuple[float, float]:
 def _cpu_delta(before: dict, after: dict) -> float:
     """Clamped window CPU (see `_cpu_delta_detail`)."""
     return _cpu_delta_detail(before, after)[0]
-
-
-HEADLINE = [
-    "g1q1_top10_popularity",
-    "g1q2_top10_priority_by_avg_price",
-    "g2q1_top10_customers_per_segment",
-    "g2q3_top10_months_per_flagstatus",
-    "t4_popularity_sorted",
-    "x1_popularity_rank",
-    "g3q2_toms_leg1",
-    "g3q2_toms_leg2",
-    "tpch_q1_pricing",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "events_json_extract",
-]
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    from airline_dataset_hadoop_public_spark.session import get_spark
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("bench", cpus=cpus, driver_memory="48g")
-    qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
-    # include any registered extension headliners tagged via registry order
-    for extra in (
-        "dedup_minhash_neardup",
-        "dedup_ngram_jaccard",
-        "dedup_simhash",
-        "similarity_bruteforce_topk",
-        "similarity_ivf_topk",
-        "similarity_srp_lsh_pairs",
-        "text_quality_scores",
-        "text_winnowing_overlap",
-        "tpch_q5_local_supplier_revenue",
-        "events_batch_sessionization",
-        "events_cohort_retention",
-        "text_gopher_quality_flags",
-        "streaming_tumbling_counts",
-        "streaming_session_windows",
-        # r2 additions
-        "ingest_csv_roundtrip",
-        "docs_chunk_windows",
-        "corpus_vocab_coverage",
-        "events_ewma_per_user",
-        "dq_constraint_report",
-        "streaming_stream_stream_join",
-        # r2 scale-pattern wave
-        "warehouse_bucketed_join",
-        "orders_merge_upsert",
-        "orders_priority_scd2",
-        "embeddings_gram_matrix",
-        "docs_tfidf_cosine_pairs",
-        # r2 corpus-model wave
-        "docs_bigram_lm_score",
-        "docs_repetition_ngram_fracs",
-        "corpus_bpe_pair_merge",
-        "similarity_pq_adc_topk",
-        "docs_hashed_ngram_classifier",
-        "streaming_corpus_ingest",
-        "dedup_minhash_incremental",
-        "events_holt_level_trend",
-        "parts_itemitem_cf_topk",
-        "docs_source_quality_report",
-        # r3 additions
-        "dedup_simhash_clusters",
-        "dedup_semantic_keeplist",
-        "docs_epoch_reshuffle_shards",
-        "corpus_token_budget_select",
-        # r3b additions (curation wave)
-        "events_kmv_distinct_users",
-        "storage_compaction_bin_pack",
-        "embeddings_mutual_knn_graph",
-        "docs_dsir_importance_weights",
-        "events_bitmap_retention",
-        "ingest_xml_roundtrip",
-        "streaming_state_introspection",
-        "lineitem_bloom_prune_revenue",
-        # r4 additions
-        "dedup_containment_neardup",
-        "events_kmv_type_overlap",
-        "lineitem_join_size_estimate",
-        "dq_observe_metrics",
-        "events_decayed_activity",
-        # r4b additions
-        "orders_target_encoding_oof",
-        "parts_copurchase_bfs_hops",
-        "orders_mor_position_deletes",
-        "events_hll_sketch_merge",
-        "events_weighted_median_udaf",
-        "events_hourly_acf",
-        "parts_copurchase_kcore",
-        "orders_window_rank_profile",
-        # r4c additions
-        "orders_cdc_log_apply",
-        "dedup_span_removal",
-        # r5 additions
-        "events_ddsketch_quantiles",
-        "events_dpp_weekend_scan",
-        "similarity_ivf_recall",
-        "docs_weighted_reservoir",
-        "docs_paragraph_dedup",
-        "events_incident_session_overlap",
-        "parts_value_skyline",
-        "events_cusum_changepoints",
-        "events_time_weighted_avg",
-        "orders_pct_of_parent_rollup",
-        "orders_rfm_segmentation",
-        "events_funnel_step_latency",
-        "orders_cohort_ltv_triangle",
-        "dq_benford_first_digit",
-        "docs_source_drift_chi2",
-        # r6 additions
-        "parts_copurchase_adamic_adar",
-        "parts_copurchase_triple_itemsets",
-        "events_xcorr_lead_lag",
-        "events_clamped_running_balance",
-        "events_last_touch_attribution",
-        "events_linear_touch_attribution",
-        "lineitem_fifo_lot_allocation",
-        "orders_mom_revenue_growth",
-        "events_theilsen_trend",
-        "events_value_woe_iv",
-        "events_winsorized_stats",
-        "docs_ngram_novelty",
-        # r7 additions
-        "orders_repeat_kaplan_meier",
-        "events_mann_whitney_weekend",
-        "orders_segment_revenue_gini",
-        "nation_budget_largest_remainder",
-        "supplier_pareto_coverage",
-        "parts_copurchase_npmi",
-        "events_time_decay_attribution",
-        "orders_revenue_bridge_waterfall",
-        # r8 addition
-        "embeddings_cluster_curation_report",
-        # r10 additions
-        "corpus_mixing_weights",
-        "streaming_ingest_resume",
-    ):
-        if extra in qs and extra not in names:
-            names.append(extra)
-
-    # warmup: run every headline query once at the smallest sf so
-    # JIT/codegen of each plan shape isn't attributed to the measured
-    # run (the docstring's stated intent — the HOF-heavy dedup
-    # pipelines pay ~8-12s of first-run compile otherwise)
-    warm_sf = "/root/testdata/sf0.001"
-    for name in names:
-        try:
-            qs[name](spark, warm_sf).count()
-        except Exception:
-            pass  # a warmup failure must not break the measured run
-    # Persisted-index fixtures: materialize their index at the
-    # MEASURED sf during warmup. On a cold scratch dir, pass 1 would
-    # otherwise pay the one-time index build; min-of-2 hides that only
-    # when pass 2 lands, and the recorded number should be the
-    # production per-batch probe cost either way.
-    for name in ("dedup_minhash_incremental", "orders_mor_position_deletes"):
-        if name in names:
-            try:
-                qs[name](spark, sf_dir).count()
-            except Exception:
-                pass
-    # drop warmup cache entries (the dedup operators cache their
-    # collapsed-group frames) so the measured run starts clean
-    spark.catalog.clearCache()
-
-    # two measured passes per query, report the min: co-tenant CPU
-    # noise on shared hosts shows up as one-sided inflation (2x
-    # swings observed on identical plans), and min-of-2 is the
-    # standard steady-state estimator for that
-    timings: dict[str, float] = {}
-    # 1-min loadavg snapshot at the START of the pass that produced
-    # each query's recorded min — BENCH_DETAIL-only evidence so a
-    # co-tenant spike behind an inflated number is attributable
-    # (judge r4: dedup_minhash_neardup 5.9 -> 12.3s on unchanged code
-    # under loadavg 8+ of external noise).
-    loads: dict[str, float] = {}
-    # process-tree CPU seconds burned by the pass that produced each
-    # recorded min (r7 judge item 3): wall clock on a co-tenanted host
-    # swings ±15% on identical code, CPU time doesn't — compare
-    # cpu_sec across rounds when wall disagrees with the diff.
-    cpu_secs: dict[str, float] = {}
-    # over-subtraction clamped away from the recorded-min pass (only
-    # non-zero entries are kept): diagnostics for how much reap
-    # misattribution the window absorbed, never netted into cpu_sec
-    reap_residuals: dict[str, float] = {}
-
-    def measure(name: str) -> None:
-        load1 = round(os.getloadavg()[0], 2)
-        c0 = _tree_cpu_snapshot()
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        if name in _DRAIN_WITH_COUNT:
-            df.count()
-        else:
-            df.collect()
-        elapsed = round(time.time() - t0, 3)
-        if name not in timings or elapsed < timings[name]:
-            timings[name] = elapsed
-            loads[name] = load1
-            cpu, resid = _cpu_delta_detail(c0, _tree_cpu_snapshot())
-            cpu_secs[name] = round(cpu, 3)
-            if resid > 0:
-                reap_residuals[name] = round(resid, 3)
-            else:
-                reap_residuals.pop(name, None)
-
-    # LSH/self-join heavies are measured in their own dedicated pass
-    # (below) with cache + GC hygiene between queries: in the shared
-    # pass, executor-memory pressure from whatever ran before them
-    # showed 2x swings on identical plans (judge r4 adjudication).
-    heavies = [
-        n
-        for n in (
-            "dedup_minhash_neardup",
-            "dedup_minhash_incremental",
-            "dedup_ngram_jaccard",
-            "dedup_simhash_clusters",
-            "similarity_srp_lsh_pairs",
-            "text_winnowing_overlap",
-        )
-        if n in names
-    ]
-    regular = [n for n in names if n not in heavies]
-
-    for _ in range(2):
-        for name in regular:
-            measure(name)
-        spark.catalog.clearCache()
-
-    # Sub-2s tier (r6 verdict item 4): 1-second queries are noise-
-    # dominated well below the heavy LOAD_GATE — r6 recorded
-    # events_incident_session_overlap 0.77 -> 1.16s (1.51x) on
-    # unchanged code with its min landing at load1 6.11, UNDER the
-    # 8.0 gate, so no retry fired. Short queries get a third measured
-    # pass (best-of-3): one extra ~1s sample per short query buys
-    # most of the variance reduction the gate buys heavies, at a
-    # bounded cost (~the sub-2s tier's own total, < 30s).
-    SHORT_TIER_S = 2.0
-    shorts = [n for n in regular if timings.get(n, SHORT_TIER_S) < SHORT_TIER_S]
-    for name in shorts:
-        measure(name)
-    spark.catalog.clearCache()
-
-    # dedicated heavy pass: clean cache + forced JVM and Python GC
-    # before each measurement so each heavy starts from the same
-    # executor-memory state regardless of pass order
-    def heavy_hygiene() -> None:
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        import gc as _gc
-
-        _gc.collect()
-
-    for _ in range(2):
-        for name in heavies:
-            heavy_hygiene()
-            measure(name)
-        spark.catalog.clearCache()
-
-    # Load gate (r5 verdict item 2): a heavy whose recorded min was
-    # captured at load1 > LOAD_GATE is evidence-weak — r5 shipped
-    # dedup_ngram_jaccard 6.28s with its own detail row showing load1
-    # 12.61 at the min, 1.43x its steady state. Re-measure such
-    # heavies up to MAX_RETRY more times, first letting the 1-min
-    # loadavg decay below the gate (bounded wait — the tail of OUR own
-    # 32-thread passes dominates load1 here and decays in ~1 min;
-    # co-tenant noise may not, in which case the retry still lands and
-    # the recorded load1 attributes whatever remains).
-    LOAD_GATE = 8.0
-    MAX_RETRY = 2
-    # Global wall budget for the whole gate phase: on a busy host
-    # every heavy could otherwise burn MAX_RETRY × 90s of decay waits
-    # (~20 min worst case) — past the budget, remaining heavies keep
-    # their min and stay attributed via load1_at_min + the retry map.
-    GATE_BUDGET_S = 300.0
-    gate_deadline = time.time() + GATE_BUDGET_S
-    gate_retries: dict[str, int] = {}
-    for name in heavies:
-        tries = 0
-        while (
-            loads.get(name, 0.0) > LOAD_GATE
-            and tries < MAX_RETRY
-            and time.time() < gate_deadline
-        ):
-            wait_until = min(time.time() + 90, gate_deadline)
-            while os.getloadavg()[0] > LOAD_GATE and time.time() < wait_until:
-                time.sleep(10)
-            heavy_hygiene()
-            measure(name)
-            tries += 1
-        if tries:
-            gate_retries[name] = tries
-
-    total = round(sum(timings.values()), 3)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-
-    # Full per-query detail goes to a sidecar file; the stdout line is
-    # kept under a hard length budget. The driver records only a
-    # bounded tail of stdout, and r3's 58-query line exceeded it — the
-    # captured line was front-truncated and failed to parse, so the
-    # round had no recorded bench number at all. Keep the line short:
-    # slowest queries first, drop the fastest until it fits, and keep
-    # "value" as the total over ALL measured queries regardless.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(
-            {
-                "metric": "headline_queries_total_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                # loadavg-1m at the start of the pass that produced
-                # each recorded min (noise attribution, not a metric)
-                "load1_at_min": loads,
-                # process-tree CPU seconds for the recorded-min pass —
-                # the load-immune cross-round comparison signal; wall
-                # inflation with flat cpu_sec = co-tenant noise, wall
-                # AND cpu_sec moving together = a real plan change
-                "cpu_sec": cpu_secs,
-                # reap-correction over-subtraction clamped out of
-                # cpu_sec for the recorded-min pass (r9 judge item 1:
-                # a negative row cancelled ~100s of real CPU in the
-                # cross-round total); non-zero entries only, plus the
-                # total to add back when comparing raw tree CPU
-                "reap_residual": reap_residuals,
-                "reap_residual_total": round(
-                    sum(reap_residuals.values()), 3
-                ),
-                "isolated_heavy_pass": heavies,
-                # heavies re-measured because their min landed at
-                # load1 > load_gate (value = extra attempts used); a
-                # name still above the gate after retries keeps its
-                # min but stays attributed via load1_at_min
-                "load_gate": LOAD_GATE,
-                "load_gate_retries": gate_retries,
-                # sub-2s queries measured best-of-3 (third pass) —
-                # their per-sample noise floor is a large fraction of
-                # the measurement, so they get an extra sample instead
-                # of a load-gated retry
-                "short_best_of_3": sorted(shorts),
-                "short_tier_s": SHORT_TIER_S,
-                "sf": sf_val,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-
-    by_cost = sorted(timings.items(), key=lambda kv: -kv[1])
-    kept = dict(by_cost)
-    line_budget = 1500
-    while True:
-        payload = {
-            "metric": "headline_queries_total_wall_sec",
-            "value": total,
-            "unit": "sec",
-            "queries": kept,
-            "n_queries": len(timings),
-            "n_reported": len(kept),
-            "sf": sf_val,
-        }
-        line = json.dumps(payload, separators=(",", ":"))
-        if len(line) <= line_budget or len(kept) <= 1:
-            break
-        kept.pop(by_cost[len(kept) - 1][0])  # drop the cheapest kept query
-    print(line)
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -2,14 +2,18 @@
 
 from pyspark.sql import functions as F
 
-from airline_dataset_hadoop_public_spark.operators import (
-    argmin_by,
+from airline_dataset_hadoop_public_spark.operators.aggregates import (
     avg_by_key,
-    date_series,
     distinct_union,
     explode_count,
-    global_top_k,
+)
+from airline_dataset_hadoop_public_spark.operators.argmin import argmin_by
+from airline_dataset_hadoop_public_spark.operators.generators import (
+    date_series,
     permutation_triplets,
+)
+from airline_dataset_hadoop_public_spark.operators.topk import (
+    global_top_k,
     rank_table,
     top_k_per_group,
 )
