@@ -4,17 +4,21 @@ Replaces the reference's Cassandra serving tables
 (/root/reference/README.md:264-274,597-615): where Cassandra keys a
 table per access path (`(airport, unique_carrier)`,
 `(origin, stop, dest, date)`) for CQL point lookups, we write results
-`partitionBy(serving keys)` and serve point reads as filtered scans —
-Spark's partition pruning turns the equality filter into a file-level
-prune, the same I/O profile as a Cassandra partition read. For
-high-cardinality keys, `bucketBy` into the session catalog is the
-analog (see `save_bucketed`).
+`partitionBy(serving keys)` and serve a point read from the partition
+directory its keys bind. `point_read` walks down from the table root
+into `col=<value>` for each bound key and lists and reads only that
+subtree, so a fully bound lookup touches one partition, as a Cassandra
+partition read does. It reads the whole table only when the keys bind
+no partition level, or when the subtree would infer a partition column
+type other than string. For high-cardinality keys, `bucketBy` into the
+session catalog is the analog (see `save_bucketed`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 def write_serving(
@@ -27,22 +31,88 @@ def write_serving(
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
+def _bound_subtree(spark: SparkSession, root: str, keys: dict):
+    """Walk down from ``root`` through the partition levels ``keys``
+    bind. Returns the deepest directory reached (None when no level is
+    bound) and the names of all partition columns.
+
+    Each level costs one Hadoop listing, so HDFS and local paths both
+    work. A ``str`` value steps into ``col=<value>``, escaped as
+    ``partitionBy`` escaped it on write; a missing directory steps into
+    a sibling instead, whose rows the caller's equality filter drops.
+    Binding stops at the first level whose column is unbound, or bound
+    to None or a non-``str``; below it the walk follows any child only
+    to name the remaining columns."""
+    jvm = spark._jvm
+    escaping = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    Path = jvm.org.apache.hadoop.fs.Path
+    d = Path(root)
+    fs = d.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.isDirectory(d):
+        return None, []
+    reached, cols, binding = None, [], True
+    while True:
+        for st in fs.listStatus(d):
+            if st.isDirectory():
+                child = st.getPath()
+                name = child.getName()
+                if "=" in name and not name.startswith("."):
+                    break
+        else:
+            return reached, cols
+        prefix = name.split("=", 1)[0]
+        cols.append(escaping.unescapePathName(prefix))
+        value = keys.get(cols[-1])
+        binding = binding and isinstance(value, str)
+        if binding:
+            bound = Path(d, f"{prefix}={escaping.escapePathName(value)}")
+            if fs.isDirectory(bound):
+                child = bound
+            else:
+                binding = False
+            reached = child
+        d = child
+
+
 def point_read(
     spark: SparkSession, path: str, schema=None, **key_equalities
 ) -> DataFrame:
     """X2: point lookup — conjunctive equality on serving keys.
-    Filters on partition columns prune at file level (check
-    `.explain` for PartitionFilters).
+
+    Reads only the subtree of partition directories the keys bind
+    (``basePath`` stays the table root, so partition columns keep
+    their place in the schema). Every equality stays a filter: those
+    on partition columns show as PartitionFilters in ``.explain``,
+    and they drop the rows of the sibling read for a missing key. Two
+    cases read the whole table instead:
+
+    - no key binds the outermost partition level (or the key is None
+      or not a ``str``);
+    - the subtree infers some partition column as other than
+      ``StringType``. Spark infers each column's type from the values
+      it lists, so a subtree holding only ``stop=007`` infers int 7
+      where the whole table infers string "007". A string anywhere
+      makes the merged type string, so a subtree that infers string
+      has the whole table's type.
 
     Pass the serving table's ``schema`` (a catalog would supply it at
     scale) to make the read robust to an EMPTY serving table:
     ``partitionBy`` of a zero-row frame writes no files, and
     schema inference over the bare directory raises where an explicit
     schema simply yields an empty scan."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
+
+    def read(p: str, **options) -> DataFrame:
+        reader = spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(p)
+
+    subtree, cols = _bound_subtree(spark, path, key_equalities)
+    df = None if subtree is None else read(subtree.toString(), basePath=path)
+    if df is None or not set(cols) <= {
+        f.name for f in df.schema if isinstance(f.dataType, StringType)
+    }:
+        df = read(path)
     for k, v in key_equalities.items():
         df = df.filter(F.col(k) == F.lit(v))
     return df

@@ -234,4 +234,7 @@ def test_reference_demo_session_golden_layout(spark, canonical, tmp_path):
         request_date=s["request_date"],
     ).collect()
     assert len(got) == 1 and got[0]["carrier"] == s["carrier"]
-    assert point_read(spark, p2, stop=s["stop"]).count() >= 0  # leg-2 table serves
+    assert (  # leg-2 table serves a lookup that binds only its outer key
+        point_read(spark, p2, stop=s["stop"]).count()
+        == leg2.filter(F.col("stop") == s["stop"]).count()
+    )
