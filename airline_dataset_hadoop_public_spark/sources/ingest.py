@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .serving import _bound_subtree, _footer_schema
+
 # The eight BTS On-Time columns the reference consumes
 # (README.md:147,171,200,449,510). DepTime stays VARCHAR: the raw data
 # carries malformed "hhmm" values with hour > 23 that the leg-candidate
@@ -75,10 +77,20 @@ def canonicalize(
 
 
 def read_canonical(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Pass the canonical ``schema`` (source schema + the Year
-    partition column) to keep the read working when the canonicalized
-    input was empty — ``partitionBy`` of a zero-row frame writes no
-    files, and inference over the bare directory raises."""
+    """Read the canonical parquet table. Without ``schema``, the data
+    columns' schema comes from one file's footer, read in the driver
+    (see ``serving._footer_schema``), so no inference job runs; the
+    Year partition column is still inferred from the paths. Spark
+    infers as before when the footer holds no Spark schema, and a
+    missing or empty ``path`` raises as ``spark.read.parquet`` does.
+
+    Pass the canonical ``schema`` (source schema + the Year partition
+    column) to keep the read working when the canonicalized input was
+    empty — ``partitionBy`` of a zero-row frame writes no files, and
+    inference over the bare directory raises."""
+    if schema is None:
+        _, cols, data_file = _bound_subtree(spark, path, {})
+        schema = _footer_schema(spark, data_file, cols)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
