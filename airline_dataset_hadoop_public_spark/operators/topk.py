@@ -98,58 +98,10 @@ def rank_table(
     A global row_number window is a single-partition sort — acceptable
     ONLY because rank tables in this family are group-key-domain sized
     (|airports|, |carriers| — thousands of rows), never fact-table
-    sized. For fact-scale ranking use `rank_table_distributed`.
+    sized. For fact-scale ranking use `ordered_prefix_distributed`.
     """
     w = Window.orderBy(*_cols(order))
     return df.withColumn(rank, F.row_number().over(w))
-
-
-def rank_table_distributed(
-    df: DataFrame,
-    order: Sequence[str | Column],
-    rank: str = "rank",
-    total: str | None = None,
-) -> DataFrame:
-    """Fact-scale global 1..N ranking without a single-partition window.
-
-    Two passes over a range-partitioned sort: (1) count rows per sorted
-    partition and broadcast the cumulative offsets (numPartitions rows
-    through the driver — a scalar per task, not data); (2) per-partition
-    row_number + offset. Every stage is partition-parallel; `order`
-    must be a total order so ranks are deterministic.
-
-    ``total``: optionally attach the total row count N as a literal
-    column of that name — pass 1's size collect already knows it, so
-    consumers (NTILE's closed form) skip a separate count job over the
-    ranked frame (r10 optimization round).
-    """
-    # pin the range partitioning: both passes must see the SAME
-    # partition assignment (a recompute could re-sample boundaries)
-    ordered = (
-        df.orderBy(*_cols(order))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    # cumulative offset per sorted partition (partitions are emitted in
-    # range order, so pid order == global sort order)
-    sizes = ordered.groupBy("__pid").count().collect()
-    offsets, acc = {}, 0
-    for row in sorted(sizes, key=lambda r: r["__pid"]):
-        offsets[row["__pid"]] = acc
-        acc += row["count"]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "__pid int, __off long"
-    )
-    w = Window.partitionBy("__pid").orderBy(*_cols(order))
-    out = (
-        ordered.join(F.broadcast(off_df), "__pid")
-        .withColumn(rank, (F.row_number().over(w) + F.col("__off")).cast("long"))
-        .drop("__pid", "__off")
-    )
-    if total:
-        out = out.withColumn(total, F.lit(int(acc)).cast("long"))
-    return out
 
 
 def ordered_prefix_distributed(
@@ -159,33 +111,24 @@ def ordered_prefix_distributed(
     rank: str | None = "rank",
     running_sums: dict[str, str] | None = None,
     group_total: str | None = None,
-    sum_totals: dict[str, str] | None = None,
 ) -> DataFrame:
     """Per-group (or global) 1..N rank AND inclusive running sums over
-    a total order WITHOUT a single-partition window.
+    a total order WITHOUT a single-partition window — the fact-scale
+    form of `rank_table` (X1) and the one two-pass offset walk in this
+    module: `ntile_distributed` and the window-profile fixture build on
+    it.
+
+    ``partition_by``: an optional group key whose domain may be far
+    smaller than the data (5 market segments ranking millions of
+    customers — a plain per-group window sorts N/5 rows in one task
+    each); the default ``()`` ranks the whole frame as one group.
+    ``running_sums`` maps source column -> output column for inclusive
+    running sums computed with the same two passes.
 
     ``group_total``: optionally attach each group's total row count as
     a column of that name — the pass-2 size collect already has it, so
-    consumers (per-group NTILE) skip a separate group-count aggregate
-    and its re-join (r10 optimization round).
-
-    ``sum_totals``: source column -> output column; attach each
-    group's TOTAL sum of the source as a column — the same pass-1
-    per-(partition, group) sums the driver walk already accumulates
-    for ``running_sums`` offsets, read to the end of the group (r11
-    optimization round: winsorized/pareto consumers ran a separate
-    whole-group aggregate plus a broadcast re-join for a number the
-    collect already knew). SQL SUM semantics: NULL iff the group saw
-    no non-NULL input. Sources share ``running_sums``'s integral/
-    decimal restriction (same bit-equality argument).
-
-    Generalizes `rank_table_distributed` two ways the statistics wave
-    needs (r7 judge item 1): an optional `partition_by` group key whose
-    domain may be far smaller than the data (5 market segments ranking
-    millions of customers — a plain per-group window sorts N/5 rows in
-    one task each), and inclusive running sums of value columns
-    (`running_sums` maps source column -> output column) computed with
-    the same two-pass range-partitioned pattern.
+    consumers (NTILE, the window-profile fixture) skip a separate
+    group-count aggregate and its re-join (r10 optimization round).
 
     Pass 1 range-partitions the sort — `partition_by` LEADS the sort
     key, so each group occupies a contiguous run of partitions — and
@@ -217,14 +160,11 @@ def ordered_prefix_distributed(
     window — no exchange, deterministic because the checkpoint pinned
     the partitioning). Callers that consume the result more than once
     should `cache_tracked` it (see supplier_pareto_coverage /
-    orders_window_rank_profile / the ntile helpers).
+    orders_window_rank_profile).
     """
     from pyspark.sql import types as T
 
     sums = dict(running_sums or {})
-    tots = dict(sum_totals or {})
-    # union of source columns either feature needs from pass 1
-    srcs = list(dict.fromkeys([*sums, *tots]))
     pb = list(partition_by)
     sort_cols = [F.col(c) for c in pb] + _cols(order)
     ordered = (
@@ -233,7 +173,7 @@ def ordered_prefix_distributed(
         .localCheckpoint(eager=True)
     )
     aggs = [F.count(F.lit(1)).alias("__cnt")] + [
-        F.sum(src).alias(f"__s_{src}") for src in srcs
+        F.sum(src).alias(f"__s_{src}") for src in sums
     ]
     sizes_df = ordered.groupBy("__pid", *pb).agg(*aggs)
     # pid order == global sort order (range exchange emits partitions
@@ -265,14 +205,14 @@ def ordered_prefix_distributed(
             return Decimal(v) if not hasattr(v, "as_tuple") else v
         return v
 
-    sum_types = {src: sizes_df.schema[f"__s_{src}"].dataType for src in srcs}
+    sum_types = {src: sizes_df.schema[f"__s_{src}"].dataType for src in sums}
     for src, dtype in sum_types.items():
         if not isinstance(
             dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                     T.DecimalType)
         ):
             raise TypeError(
-                "ordered_prefix_distributed: running_sums/sum_totals "
+                "ordered_prefix_distributed: running_sums "
                 f"column {src!r} aggregates to {dtype.simpleString()}; "
                 "only integral or decimal sums are bit-identical under the "
                 "two-pass offset recomposition — pre-scale to fixed point first"
@@ -286,24 +226,12 @@ def ordered_prefix_distributed(
         # SQL rule that a window SUM is NULL until the first non-NULL
         sum_off = {src: 0 for src in sums}
         seen = {src: False for src in sums}
-        # whole-group totals (sum_totals): the same pass-1 sums the
-        # offsets walk below, read to the end of the group; NULL iff
-        # the group saw no non-NULL input (SQL SUM semantics)
-        g_tot = {}
-        for src in tots:
-            parts = [
-                r[f"__s_{src}"]
-                for r in grp_rows
-                if r[f"__s_{src}"] is not None
-            ]
-            g_tot[src] = _as(sum_types[src], sum(parts)) if parts else None
         for row in sorted(grp_rows, key=lambda r: r["__pid"]):
             out_rows.append(
                 (row["__pid"], *grp, rk_off)
                 + tuple(_as(sum_types[s], sum_off[s]) for s in sums)
                 + tuple(seen[s] for s in sums)
                 + ((n_grp,) if group_total else ())
-                + tuple(g_tot[s] for s in tots)
             )
             rk_off += row["__cnt"]
             for src in sums:
@@ -323,9 +251,6 @@ def ordered_prefix_distributed(
     ]
     if group_total:
         fields.append(T.StructField(group_total, T.LongType(), False))
-    fields += [
-        T.StructField(tots[src], sum_types[src]) for src in tots
-    ]
     off_df = F.broadcast(
         df.sparkSession.createDataFrame(out_rows, T.StructType(fields))
     )
@@ -365,8 +290,8 @@ def ntile_bucket(rank_col: Column, n_col: Column, k: int) -> Column:
     with q = N div k and r = N % k, the first r buckets hold q+1 rows.
     Integer arithmetic end to end (the exact-ceil trick below), so the
     assignment is bit-identical to any engine's NTILE given the same
-    total order. Shared by `ntile_distributed`,
-    `ntile_distributed_grouped`, and the window-profile fixture."""
+    total order. Shared by `ntile_distributed` and the window-profile
+    fixture."""
     # true integer division end to end (ADVICE r8): subtracting the
     # remainder makes the pair exactly divisible, but a `/` of longs
     # still casts BOTH operands to double first, and a dividend above
@@ -390,53 +315,30 @@ def ntile_distributed(
     order: Sequence[str | Column],
     k: int,
     out: str = "ntile",
+    partition_by: Sequence[str] = (),
 ) -> DataFrame:
-    """Exact NTILE(k) over a global order WITHOUT a single-partition
-    window (Spark's `ntile().over(Window.orderBy(...))` coalesces the
-    whole frame into one task — fine for a manifest, fatal for a
-    billion-row customer table).
+    """Exact NTILE(k) over a global order — or per group of
+    `partition_by` — WITHOUT a single-task window (Spark's
+    `ntile().over(Window.orderBy(...))` coalesces the whole frame into
+    one task, fine for a manifest, fatal for a billion-row customer
+    table; `ntile(k).over(partitionBy(low-card key))` over a
+    fact-scaled frame sorts N/|groups| rows per task — the r8
+    Gini-class hazard).
 
-    Layout: `rank_table_distributed` supplies the global 1..N rank
-    (range-partitioned sort + broadcast offsets), then the SQL NTILE
-    bucket is a closed form of (rank, N): with q = N // k and
+    Layout: `ordered_prefix_distributed` supplies the 1..N rank and the
+    group size N (range-partitioned sort + broadcast offsets; a NULL
+    group key is a group, matching window semantics), then the SQL
+    NTILE bucket is a closed form of (rank, N): with q = N // k and
     r = N % k, the first r buckets hold q+1 rows —
     bucket = ceil(rank/(q+1)) while rank <= r*(q+1), else
     r + ceil((rank - r*(q+1))/q). Integer arithmetic end to end, so
     assignment is bit-identical to any engine's NTILE given the same
     total order (`order` must be total — include a key tie-break).
     """
-    # N rides out of pass 1's size collect as a literal column
-    # (r10 optimization round — was: cache the ranked frame, run a
-    # separate count aggregate, cross-join it back; one extra job,
-    # one cache and one join per call, ×3 in the RFM fixture)
-    ranked = rank_table_distributed(df, order, rank="__rk", total="__n")
-    return ranked.withColumn(
-        out, ntile_bucket(F.col("__rk"), F.col("__n"), int(k))
-    ).drop("__rk", "__n")
-
-
-def ntile_distributed_grouped(
-    df: DataFrame,
-    order: Sequence[str | Column],
-    k: int,
-    partition_by: Sequence[str],
-    out: str = "ntile",
-) -> DataFrame:
-    """Exact per-group NTILE(k) without whole-group window tasks (r8
-    self-audit: `ntile(k).over(partitionBy(low-card key))` over a
-    fact-scaled frame sorts N/|groups| rows per task — the Gini-class
-    hazard). Per-group ranks come from `ordered_prefix_distributed`;
-    group sizes broadcast back (null-safe: a NULL group key is a
-    group, matching window semantics); the bucket is the same closed
-    form of (rank, N) `ntile_distributed` documents, so assignment is
-    bit-identical to any engine's NTILE given the same total order.
-    """
-    pb = list(partition_by)
-    # per-group N rides out of the offset walk's size collect
-    # (r10 optimization round — was: cache the ranked frame, run a
-    # separate group-count aggregate, null-safe-join it back)
+    # N rides out of the offset walk's size collect: no separate count
+    # aggregate, cache or re-join per call
     ranked = ordered_prefix_distributed(
-        df, order, partition_by=pb, rank="__rk", group_total="__n"
+        df, order, partition_by=partition_by, rank="__rk", group_total="__n"
     )
     return ranked.withColumn(
         out, ntile_bucket(F.col("__rk"), F.col("__n"), int(k))

@@ -279,9 +279,6 @@ allow("operators/lm.py", "dsir_importance_weights", "ratio", "dimension",
       "per-hashed-feature log-ratios: rows = the fixed hash-bucket "
       "count (operator param), not the corpus")
 allow("plans/fixtures_analytics.py", "orders_window_rank_profile",
-      "ranked.groupBy('priority').agg(F.count(F.lit(1)).alias('__n'))",
-      "dimension", "per-priority counts: 5 rows (priority enum)")
-allow("plans/fixtures_analytics.py", "orders_window_rank_profile",
       "ranked.filter(F.col('__rk') == 2).select(F.col('priority')"
       ".alias('__p2'), F.col('price').alias('__second'))",
       "dimension", "second-ranked row per priority: <= 5 rows")
@@ -326,7 +323,6 @@ allow("operators/timeseries.py", "resample_ffill",
 
 _OFF = ("per-range-partition offset table: rows = shuffle partition "
         "count of the pass-1 sort, not the data")
-allow("operators/topk.py", "rank_table_distributed", "off_df", "offset", _OFF)
 allow("operators/topk.py", "ordered_prefix_distributed",
       "df.sparkSession.createDataFrame(out_rows, T.StructType(fields))",
       "offset", _OFF)

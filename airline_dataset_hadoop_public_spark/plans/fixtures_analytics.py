@@ -401,10 +401,10 @@ def events_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame — ntile(10).over(partitionBy(event_type)) sorts N/|types|
     # rows in one task each. Grouped distributed NTILE instead (same
     # closed-form bucket, bit-identical assignment).
-    from ..operators.topk import ntile_distributed_grouped
+    from ..operators.topk import ntile_distributed
 
     return (
-        ntile_distributed_grouped(
+        ntile_distributed(
             ev.select("event_type", "value", "event_id"),
             order=[F.asc("value"), F.asc("event_id")],
             k=10,
@@ -941,8 +941,9 @@ def orders_window_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..runtime import cache_tracked
 
     orders = load_table(spark, sf_dir, "orders")
-    # cached: three consumers (group sizes, the rk=2 nth_value pick,
-    # and the profile join) — pass 2 would re-run per consumer
+    # cached: two consumers (the rk=2 nth_value pick and the profile
+    # join) — pass 2 would re-run per consumer. Per-priority N rides
+    # out of the offset walk's size collect.
     ranked = cache_tracked(ordered_prefix_distributed(
         orders.select(
             F.col("o_orderpriority").alias("priority"),
@@ -952,24 +953,17 @@ def orders_window_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         order=["price", "o_orderkey"],
         partition_by=["priority"],
         rank="__rk",
+        group_total="__n",
     ))
-    n = F.broadcast(
-        ranked.groupBy("priority").agg(F.count(F.lit(1)).alias("__n"))
-    )
     second = F.broadcast(
         ranked.filter(F.col("__rk") == 2).select(
             F.col("priority").alias("__p2"),
             F.col("price").alias("__second"),
         )
     )
-    j = (
-        ranked.join(n, ranked["priority"].eqNullSafe(n["priority"]))
-        .drop(n["priority"])
-        .join(
-            second, F.col("priority").eqNullSafe(F.col("__p2")), "left"
-        )
-        .drop("__p2")
-    )
+    j = ranked.join(
+        second, F.col("priority").eqNullSafe(F.col("__p2")), "left"
+    ).drop("__p2")
     rk, nn = F.col("__rk"), F.col("__n")
     pr = F.when(nn == 1, F.lit(0.0)).otherwise(
         (rk - F.lit(1)).cast("double") / (nn - F.lit(1)).cast("double")

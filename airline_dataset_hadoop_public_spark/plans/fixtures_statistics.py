@@ -247,10 +247,9 @@ def events_mann_whitney_weekend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # windows over the value histogram — but `value` is a continuous
     # double, so distinct cardinality ≈ row count at scale and that was
     # a single-partition sort of ~N rows. The two-pass range-partitioned
-    # prefix sum (ordered_prefix_distributed, same pattern as
-    # rank_table_distributed) keeps every stage partition-parallel;
-    # n / n1 / tie_term never needed an ordered window at all — they
-    # fold into the one final aggregate.
+    # prefix sum (ordered_prefix_distributed) keeps every stage
+    # partition-parallel; n / n1 / tie_term never needed an ordered
+    # window at all — they fold into the one final aggregate.
     pre = ordered_prefix_distributed(
         hist, order=["v"], rank=None, running_sums={"c": "upto"}
     )

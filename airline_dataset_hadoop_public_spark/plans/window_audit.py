@@ -9,10 +9,10 @@ mechanical: it walks every registered query's optimized plan, parses
 every `windowspecdefinition`, and classifies each window's partition
 keys. A window passes only if
 
-- a key starts with ``__pid`` — the repo's two-pass primitives
-  (`ordered_prefix_distributed`, `rank_table_distributed` and their
-  derivatives) key every window they emit by the range partition id,
-  so frames are bounded by a partition, or
+- a key starts with ``__pid`` — the repo's two-pass primitive
+  (`ordered_prefix_distributed` and its derivatives) keys every
+  window it emits by the range partition id, so frames are bounded
+  by a partition, or
 - the plan contains a ``WindowGroupLimit`` with the same partition
   keys — Catalyst's InferWindowGroupLimit (SPARK-37099) compiled a
   literal ``rank <= k`` filter into a Partial group-limit below the

@@ -69,7 +69,7 @@ def test_removed_hints_stay_removed():
     banned = {
         ("operators/sketches.py", "kmv_distinct_per_key"),
         ("operators/sketches.py", "ddsketch_quantiles"),
-        ("operators/topk.py", "ntile_distributed_grouped"),
+        ("operators/topk.py", "ntile_distributed"),
         ("plans/fixtures_training_prep.py", "docs_decontaminate"),
         ("plans/fixtures_parity.py", "g2q1_top10_customers_per_segment"),
         ("plans/fixtures_parity.py", "g2q2_top10_parts_per_brand"),

@@ -98,8 +98,8 @@ def test_date_series_inclusive(spark):
 
 def test_rank_table_distributed_equals_window_rank(spark):
     from airline_dataset_hadoop_public_spark.operators.topk import (
+        ordered_prefix_distributed,
         rank_table,
-        rank_table_distributed,
     )
     from pyspark.sql import functions as F
 
@@ -108,5 +108,8 @@ def test_rank_table_distributed_equals_window_rank(spark):
     ).repartition(16)
     order = [F.desc("v"), F.asc("id")]
     small = {(r["id"], r["rank"]) for r in rank_table(df, order).collect()}
-    big = {(r["id"], r["rank"]) for r in rank_table_distributed(df, order).collect()}
+    big = {
+        (r["id"], r["rank"])
+        for r in ordered_prefix_distributed(df, order).collect()
+    }
     assert small == big

@@ -521,10 +521,10 @@ def test_woe_iv_uses_distributed_ntile(spark, qs):
     NTILE window."""
     plan = _plan(qs["events_value_woe_iv"](spark, SF))
     # ntile_distributed's signature in the FINAL plan: the broadcast
-    # per-partition offset frame (__pid/__off) joined onto the
+    # per-partition offset frame (__pid/__rk_off) joined onto the
     # range-sorted data (the range exchange itself runs eagerly inside
-    # rank_table_distributed when it sizes partitions)
-    assert "__pid" in plan and "__off" in plan
+    # ordered_prefix_distributed when it sizes partitions)
+    assert "__pid" in plan and "__rk_off" in plan
     assert "PythonUDF" not in plan
 
 

@@ -7,11 +7,6 @@ directly here in addition to the registered-query oracles.
 
 from __future__ import annotations
 
-import math
-
-import pytest
-from pyspark.sql import functions as F
-
 
 # --- streaming state sizing: non-local-path guard (VERDICT r10 item 5) -----
 
@@ -34,70 +29,3 @@ def test_stream_partitions_fall_back_on_missing_path(spark, tmp_path):
     d.mkdir()
     assert W.scoped_stream_shuffle_partitions(spark, str(d)) == cur
 
-
-# --- ordered_prefix_distributed sum_totals fusion (r11) ---------------------
-
-
-def _prefix_frame(spark):
-    rows = [
-        # group "a": mixed NULLs
-        ("a", 1, 10),
-        ("a", 2, None),
-        ("a", 3, 5),
-        ("a", 4, 7),
-        # group "b": all NULL values -> SUM must be NULL
-        ("b", 1, None),
-        ("b", 2, None),
-        # NULL group key is a group of its own
-        (None, 1, 3),
-        (None, 2, 4),
-    ]
-    return spark.createDataFrame(rows, "k string, o int, v int")
-
-
-def test_sum_totals_matches_whole_group_aggregate(spark):
-    from airline_dataset_hadoop_public_spark.operators.topk import (
-        ordered_prefix_distributed,
-    )
-
-    df = _prefix_frame(spark)
-    out = ordered_prefix_distributed(
-        df,
-        order=["o"],
-        partition_by=["k"],
-        rank="rk",
-        running_sums={"v": "cum"},
-        group_total="n",
-        sum_totals={"v": "tot"},
-    ).collect()
-    # reference: plain whole-group aggregates
-    ref = {
-        r["k"]: (r["tot"], r["n"])
-        for r in df.groupBy("k")
-        .agg(F.sum("v").alias("tot"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert len(out) == 8
-    for row in out:
-        want_tot, want_n = ref[row["k"]]
-        assert row["tot"] == want_tot, row
-        assert row["n"] == want_n, row
-        # the running sum at the last rank equals the total
-        if row["rk"] == want_n and want_tot is not None:
-            assert row["cum"] == want_tot
-
-
-def test_sum_totals_global_walk(spark):
-    from airline_dataset_hadoop_public_spark.operators.topk import (
-        ordered_prefix_distributed,
-    )
-
-    df = _prefix_frame(spark).withColumn("u", F.expr("k || o"))
-    out = ordered_prefix_distributed(
-        df,
-        order=["u"],
-        rank="rk",
-        sum_totals={"v": "tot"},
-    ).collect()
-    want = sum(r["v"] for r in df.collect() if r["v"] is not None)
-    assert all(r["tot"] == want for r in out)

@@ -178,23 +178,35 @@ def test_cluster_curation_members_sum_to_graph_nodes(spark):
 
 def test_null_group_key_is_its_own_group(spark):
     """Window.partitionBy treats NULL as a group; the offset join is
-    null-safe so NULL-group rows must survive with correct ranks."""
-    rows = [Row(g=None if i % 3 == 0 else "a", v=i % 4, k=i) for i in range(60)]
-    df = spark.createDataFrame(rows, "g string, v long, k long").repartition(7)
-    got = (
-        ordered_prefix_distributed(
-            df, order=["v", "k"], partition_by=["g"], rank="r"
+    null-safe so NULL-group rows must survive with correct ranks and
+    group totals."""
+    many = [(None if i % 3 == 0 else "a", i % 4, i) for i in range(60)]
+    # small groups, one of them the NULL key
+    few = [
+        ("a", 1, 0), ("a", 2, 1), ("a", 3, 2), ("a", 4, 3),
+        ("b", 1, 4), ("b", 2, 5),
+        (None, 1, 6), (None, 2, 7),
+    ]
+    for rows, parts in ((many, 7), (few, 3)):
+        df = spark.createDataFrame(
+            rows, "g string, v long, k long"
+        ).repartition(parts)
+        got = (
+            ordered_prefix_distributed(
+                df, order=["v", "k"], partition_by=["g"], rank="r",
+                group_total="n",
+            )
+            .select("g", "k", "r", "n")
+            .collect()
         )
-        .select("g", "k", "r")
-        .collect()
-    )
-    assert len(got) == 60
-    w = Window.partitionBy("g").orderBy("v", "k")
-    want = df.select(
-        "g", "k", F.row_number().over(w).cast("long").alias("r")
-    ).collect()
-    key = lambda r: (r["g"] or "", r["k"])
-    assert sorted(got, key=key) == sorted(want, key=key)
+        assert len(got) == len(rows)
+        w = Window.partitionBy("g").orderBy("v", "k")
+        want = df.select(
+            "g", "k", F.row_number().over(w).cast("long").alias("r"),
+            F.count(F.lit(1)).over(Window.partitionBy("g")).alias("n"),
+        ).collect()
+        key = lambda r: (r["g"] or "", r["k"])
+        assert sorted(got, key=key) == sorted(want, key=key)
 
 
 def test_running_sum_null_until_first_nonnull_across_partitions(spark):
@@ -223,11 +235,11 @@ def test_running_sum_null_until_first_nonnull_across_partitions(spark):
 
 
 def test_grouped_ntile_matches_window_ntile_across_k(spark):
-    """ntile_distributed_grouped's closed-form bucket must equal
+    """ntile_distributed's per-group closed-form bucket must equal
     Spark's NTILE for every k, including k > group size and the
     uneven-remainder cases (first r buckets get q+1 rows)."""
     from airline_dataset_hadoop_public_spark.operators.topk import (
-        ntile_distributed_grouped,
+        ntile_distributed,
     )
 
     rows = [
@@ -237,8 +249,8 @@ def test_grouped_ntile_matches_window_ntile_across_k(spark):
     for k in (1, 2, 3, 4, 7, 10, 200):
         got = {
             (r["g"], r["k"]): r["nt"]
-            for r in ntile_distributed_grouped(
-                df, order=["v", "k"], k=k, partition_by=["g"], out="nt"
+            for r in ntile_distributed(
+                df, order=["v", "k"], k=k, out="nt", partition_by=["g"]
             ).collect()
         }
         w = Window.partitionBy("g").orderBy("v", "k")
