@@ -53,6 +53,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted entries get
-    the driver's weaker rows-only check)."""
+    """DuckDB-runnable ANSI SQL oracle for every query, keyed like
+    ``queries()``."""
     return _registry.oracle_sql()

@@ -15,6 +15,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Runtime-settable engine defaults: get_spark bakes them into a new
+# session, apply_engine_conf sets them on a session built elsewhere.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet naive timestamps read as TIMESTAMP (LTZ, pinned-UTC
+    # session) rather than TIMESTAMP_NTZ so epoch arithmetic and the
+    # ANSI-SQL oracles share one timestamp algebra.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "airline-spark-engine",
@@ -37,20 +51,11 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Parquet naive timestamps read as TIMESTAMP (LTZ, pinned-UTC
-        # session) rather than TIMESTAMP_NTZ so epoch arithmetic and the
-        # ANSI-SQL oracles share one timestamp algebra.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -60,15 +65,7 @@ def get_spark(
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
     session (the driver hands us its own SparkSession)."""
-    runtime = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }
-    for k, v in runtime.items():
+    for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -3,8 +3,7 @@
 Runs every ``queries()`` entry at the given sf against its
 ``oracle_sql()`` DuckDB equivalent and compares row count, column
 names, and an order-insensitive value hash (columns sorted by name,
-rows sorted, values stringified). Queries without an oracle get a
-rows-only smoke run.
+rows sorted, values stringified).
 
 Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 """
@@ -84,11 +83,7 @@ def main() -> int:
             traceback.print_exc()
             failures += 1
             continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ok?  {name}: rows-only ({len(rows)} rows, "
-                  f"{time.time()-t0:.1f}s) [no oracle]")
-            continue
+        sql = oracles[name]
         try:
             res = con.execute(sql)
             ocols = [d[0] for d in res.description]
