@@ -1,5 +1,6 @@
-"""Time-series resampling operators: fixed-interval spine generation,
-gap-filling, and forward-fill.
+"""Time-series operators: fixed-interval spine generation, gap-filling
+and forward-fill, plus per-key sequential folds (EWMA, Holt smoothing,
+clamped running balance) that run as one streamed pass per key.
 
 The reference (/root/reference/README.md) has no time-series surface —
 its only temporal logic is per-day equi-keys in the G3Q2 join
@@ -22,7 +23,6 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -121,109 +121,30 @@ def ewma_per_key(
     value_col: str,
     alpha: float = 0.3,
     out: str = "ewma",
-    impl: str = "streamed",
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average, exact recurrence
     y_t = alpha*x_t + (1-alpha)*y_{t-1} (y_0 = x_0), ordered by
     (ts, value). A window function cannot express the recurrence
     without exponentially-scaled weights that overflow on long series.
 
-    Three implementations, same semantics and the same single shuffle:
-
-    - ``streamed`` (default since r7): sorted-stream fold with the
-      accumulator carried across Arrow batches (`_streamed_fold`) —
-      peak memory one batch regardless of key length, identical IEEE
-      sequence (bit-equal to packed, pytest-pinned). Also measured
-      FASTER than packed at sf0.1 (0.50s vs 0.62s): it skips the
-      collect_list materialization and the posexplode.
-    - ``packed``: collect each key's sorted series into one array
-      row, fold all series in ONE Arrow-batched kernel call,
-      posexplode back. ~4x faster than grouped-pandas at sf0.1 —
-      ``applyInPandas`` flushes a separate Arrow batch per GROUP, and
-      with thousands of small groups that per-group overhead dominates
-      the actual fold. Requires each key's series to fit in a row
-      (the usual collect_list contract) — a hot key is one task's OOM,
-      which is why it lost the default to streamed.
-    - ``grouped_pandas``: ``groupBy().applyInPandas`` streaming one
-      group at a time — NOTE this still materializes each GROUP as
-      one pandas frame, so a hot key is still one task's memory.
+    Runs as a sorted-stream fold with the accumulator carried across
+    Arrow batches (`_streamed_fold`): one shuffle on the key, peak
+    memory one batch regardless of key length.
     """
-    if impl == "streamed":
 
-        def ewma_chunk(x: np.ndarray, st):
-            y = np.empty_like(x)
-            acc = 0.0 if st is None else st
-            first = st is None
-            for i, v in enumerate(x):
-                if first and i == 0:
-                    acc = v
-                else:
-                    acc = alpha * v + (1.0 - alpha) * acc
-                y[i] = acc
-            return {out: y}, acc
+    def ewma_chunk(x: np.ndarray, st):
+        y = np.empty_like(x)
+        acc = 0.0 if st is None else st
+        first = st is None
+        for i, v in enumerate(x):
+            if first and i == 0:
+                acc = v
+            else:
+                acc = alpha * v + (1.0 - alpha) * acc
+            y[i] = acc
+        return {out: y}, acc
 
-        return _streamed_fold(df, key_col, ts_col, value_col, ewma_chunk, [out])
-
-    if impl == "grouped_pandas":
-        # derive the output schema from the INPUT types — hardcoding
-        # 'long/timestamp/double' silently narrowed the accepted key
-        # and ts types versus the type-generic packed path
-        in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        schema = (
-            f"{key_col} {in_schema[key_col]}, {ts_col} {in_schema[ts_col]}, "
-            f"{value_col} double, {out} double"
-        )
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values([ts_col, value_col], kind="mergesort")
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            y = np.empty_like(x)
-            acc = 0.0
-            for i, v in enumerate(x):
-                acc = v if i == 0 else alpha * v + (1.0 - alpha) * acc
-                y[i] = acc
-            pdf = pdf[[key_col, ts_col, value_col]].copy()
-            pdf[out] = y
-            return pdf
-
-        return (
-            df.select(key_col, ts_col, value_col)
-            .groupBy(key_col)
-            .applyInPandas(fold, schema=schema)
-        )
-
-    def fold_arrays(series: pd.Series) -> pd.Series:  # noqa: F821
-        outv = []
-        for xs in series:
-            x = np.asarray(xs, dtype=np.float64)
-            y = np.empty_like(x)
-            acc = 0.0
-            for i, v in enumerate(x):
-                acc = v if i == 0 else alpha * v + (1.0 - alpha) * acc
-                y[i] = acc
-            outv.append(y)
-        return pd.Series(outv)
-
-    kernel = F.pandas_udf(fold_arrays, "array<double>")
-    packed = df.groupBy(key_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(ts_col), F.col(value_col)))
-        ).alias("__s")
-    )
-    folded = packed.select(
-        key_col,
-        F.expr(f"transform(__s, e -> e.{ts_col})").alias("__ts"),
-        F.expr(f"transform(__s, e -> e.{value_col})").alias("__xs"),
-    ).withColumn("__ys", kernel(F.col("__xs")))
-    return folded.select(
-        key_col,
-        F.posexplode(F.arrays_zip("__ts", "__xs", "__ys")).alias("__i", "__z"),
-    ).select(
-        key_col,
-        F.col("__z.__ts").alias(ts_col),
-        F.col("__z.__xs").alias(value_col),
-        F.col("__z.__ys").alias(out),
-    )
+    return _streamed_fold(df, key_col, ts_col, value_col, ewma_chunk, [out])
 
 
 def holt_per_key(
@@ -231,90 +152,44 @@ def holt_per_key(
     key_col: str,
     ts_col: str,
     value_col: str,
-    impl: str = "streamed",
 ) -> DataFrame:
     """Per-key Holt double exponential smoothing (level + trend),
-    exact recurrence with alpha = beta = 0.5 (both smoothing products
-    are exact halvings, so every fold step is a fixed sequence of
-    identically-rounded IEEE adds — the same bit-exactness contract as
-    ewma_per_key, see the alpha=0.5 note there):
+    exact recurrence with alpha = beta = 0.5:
 
         l_0 = x_0, b_0 = 0
         l_t = 0.5·x_t + 0.5·(l_{t-1} + b_{t-1})
         b_t = 0.5·(l_t − l_{t-1}) + 0.5·b_{t-1}
 
-    One shuffle on the key either way. Output adds (level, trend)
-    columns; rows ordered within key by (ts, value).
+    Both smoothing products are exact halvings, so every fold step is
+    a fixed sequence of identically-rounded IEEE adds and any engine
+    folding in the same order gets the same bits.
 
-    ``impl="streamed"`` (default since r7) carries the (level, trend)
-    pair across Arrow batches over the sorted row stream — bounded
-    memory for hot keys, identical IEEE sequence (see
-    `_streamed_fold`), and measured faster than packed at sf0.1
-    (0.44s vs 0.70s). ``impl="packed"`` keeps the collect-fold-explode
-    layout (whole key in one array cell).
+    Output adds (level, trend) columns; rows ordered within key by
+    (ts, value). Runs as `_streamed_fold`, carrying the (level, trend)
+    pair across Arrow batches: one shuffle on the key, bounded memory
+    for hot keys.
     """
-    if impl == "streamed":
 
-        def holt_chunk(x: np.ndarray, st):
-            lv = np.empty_like(x)
-            tr = np.empty_like(x)
-            if st is None:
-                l, b = x[0], 0.0
-                lv[0], tr[0] = l, b
-                start = 1
-            else:
-                l, b = st
-                start = 0
-            for i in range(start, len(x)):
-                prev = l + b
-                l_new = 0.5 * x[i] + 0.5 * prev
-                b = 0.5 * (l_new - l) + 0.5 * b
-                l = l_new
-                lv[i], tr[i] = l, b
-            return {"level": lv, "trend": tr}, (l, b)
-
-        return _streamed_fold(
-            df, key_col, ts_col, value_col, holt_chunk, ["level", "trend"]
-        )
-
-    def fold_arrays(series: pd.Series) -> pd.Series:
-        outv = []
-        for xs in series:
-            x = np.asarray(xs, dtype=np.float64)
-            lv = np.empty_like(x)
-            tr = np.empty_like(x)
-            l = x[0]
-            b = 0.0
+    def holt_chunk(x: np.ndarray, st):
+        lv = np.empty_like(x)
+        tr = np.empty_like(x)
+        if st is None:
+            l, b = x[0], 0.0
             lv[0], tr[0] = l, b
-            for i in range(1, len(x)):
-                prev = l + b
-                l_new = 0.5 * x[i] + 0.5 * prev
-                b = 0.5 * (l_new - l) + 0.5 * b
-                l = l_new
-                lv[i], tr[i] = l, b
-            outv.append(np.stack([lv, tr], axis=1))
-        return pd.Series(outv)
+            start = 1
+        else:
+            l, b = st
+            start = 0
+        for i in range(start, len(x)):
+            prev = l + b
+            l_new = 0.5 * x[i] + 0.5 * prev
+            b = 0.5 * (l_new - l) + 0.5 * b
+            l = l_new
+            lv[i], tr[i] = l, b
+        return {"level": lv, "trend": tr}, (l, b)
 
-    kernel = F.pandas_udf(fold_arrays, "array<array<double>>")
-    packed = df.groupBy(key_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(ts_col), F.col(value_col)))
-        ).alias("__s")
-    )
-    folded = packed.select(
-        key_col,
-        F.expr(f"transform(__s, e -> e.{ts_col})").alias("__ts"),
-        F.expr(f"transform(__s, e -> e.{value_col})").alias("__xs"),
-    ).withColumn("__ys", kernel(F.col("__xs")))
-    return folded.select(
-        key_col,
-        F.posexplode(F.arrays_zip("__ts", "__xs", "__ys")).alias("__i", "__z"),
-    ).select(
-        key_col,
-        F.col("__z.__ts").alias(ts_col),
-        F.col("__z.__xs").alias(value_col),
-        F.col("__z.__ys")[0].alias("level"),
-        F.col("__z.__ys")[1].alias("trend"),
+    return _streamed_fold(
+        df, key_col, ts_col, value_col, holt_chunk, ["level", "trend"]
     )
 
 
@@ -327,7 +202,6 @@ def clamped_running_balance(
     hi: float = 100.0,
     out: str = "balance",
     step: str = "step",
-    impl: str = "streamed",
 ) -> DataFrame:
     """Per-key two-sided-clamped running balance, ordered by
     (ts, delta):  b_t = min(hi, max(lo, b_{t-1} + delta_t)),  b_{-1}=0.
@@ -337,12 +211,11 @@ def clamped_running_balance(
     fixtures_timeseries.py) a TWO-sided barrier has no prefix-scan
     closed form — each step's clamp depends on which barrier was hit
     last — so this is the honest tier-(b) operator per the build
-    rules: built-ins genuinely can't express it, and the sequential
-    fold runs as one Arrow-batched numpy kernel per key batch
-    (``ewma_per_key``'s packed layout: collect each key's sorted
-    series into one array row, fold all rows in one pandas_udf call,
-    posexplode back — a single shuffle, per-key-linear work,
-    partition-parallel across keys).
+    rules: built-ins genuinely can't express it. The sequential fold
+    runs as `_streamed_fold` over the key-sorted row stream with the
+    balance carried across Arrow batches — a single shuffle,
+    per-key-linear work, partition-parallel across keys, peak memory
+    one batch, hot keys of any length safe.
 
     Determinism contract: the (ts, delta) sort is total up to ties of
     identical (ts, delta) pairs, and swapping two identical steps
@@ -355,83 +228,36 @@ def clamped_running_balance(
     engine that orders the same way (the DuckDB oracle's recursive
     CTE reproduces it bit-exactly). NULL key/ts/delta rows must be
     dropped by the caller (FIXTURES.md §J).
-
-    ``impl="streamed"`` (default since r7) runs the fold over the
-    sorted row stream with the accumulator carried across Arrow
-    batches — peak memory one batch, hot keys of any length safe;
-    ``impl="packed"`` keeps the r6 collect_list layout (per-key
-    series must fit in one array row). Both execute the identical
-    per-element IEEE sequence and are pytest-pinned bit-equal.
     """
-    if impl == "streamed":
 
-        def clamp_chunk(x: np.ndarray, st):
-            acc = 0.0 if st is None else st
-            y = np.empty_like(x)
-            for i, v in enumerate(x):
-                acc = acc + v
-                if acc < lo:
-                    acc = lo
-                elif acc > hi:
-                    acc = hi
-                y[i] = acc
-            return {out: y}, acc
+    def clamp_chunk(x: np.ndarray, st):
+        acc = 0.0 if st is None else st
+        y = np.empty_like(x)
+        for i, v in enumerate(x):
+            acc = acc + v
+            if acc < lo:
+                acc = lo
+            elif acc > hi:
+                acc = hi
+            y[i] = acc
+        return {out: y}, acc
 
-        return _streamed_fold(
-            df, key_col, ts_col, delta_col, clamp_chunk, [out],
-            with_step=True, step=step,
-        )
-
-    def fold_arrays(series: pd.Series) -> pd.Series:
-        outv = []
-        for xs in series:
-            x = np.asarray(xs, dtype=np.float64)
-            y = np.empty_like(x)
-            acc = 0.0
-            for i, v in enumerate(x):
-                acc = acc + v
-                if acc < lo:
-                    acc = lo
-                elif acc > hi:
-                    acc = hi
-                y[i] = acc
-            outv.append(y)
-        return pd.Series(outv)
-
-    kernel = F.pandas_udf(fold_arrays, "array<double>")
-    packed = df.groupBy(key_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(ts_col), F.col(delta_col)))
-        ).alias("__s")
-    )
-    folded = packed.select(
-        key_col,
-        F.expr(f"transform(__s, e -> e.{ts_col})").alias("__ts"),
-        F.expr(f"transform(__s, e -> e.{delta_col})").alias("__xs"),
-    ).withColumn("__ys", kernel(F.col("__xs")))
-    return folded.select(
-        key_col,
-        F.posexplode(F.arrays_zip("__ts", "__xs", "__ys")).alias("__i", "__z"),
-    ).select(
-        key_col,
-        F.col("__i").cast("long").alias(step),
-        F.col("__z.__ts").alias(ts_col),
-        F.col("__z.__xs").alias(delta_col),
-        F.col("__z.__ys").alias(out),
+    return _streamed_fold(
+        df, key_col, ts_col, delta_col, clamp_chunk, [out],
+        with_step=True, step=step,
     )
 
 
 # ---------------------------------------------------------------------------
-# Streamed (bounded-memory) sequential folds — r7.
+# Streamed (bounded-memory) sequential folds.
 #
-# The packed layout above collects each key's ENTIRE series into one
-# array row, which is the fast shape at bench scale but makes a
+# Collecting each key's series into one array row would make a
 # pathological key (one user with 1e9 events at 100 TB) a single
 # task's OOM: Arrow's maxRecordsPerBatch caps ROWS, not array cells,
 # so one giant array cell rides one batch no matter the cap. The
-# streamed shape removes the bound entirely:
+# streamed shape has no such bound:
 #
-#   repartition(key)                      -- one shuffle, same as packed
+#   repartition(key)                      -- one shuffle
 #   sortWithinPartitions(key, ts, x)      -- key runs become contiguous
 #   mapInPandas(fold)                     -- iterate Arrow batches IN
 #                                            PARTITION ORDER, carrying
@@ -440,12 +266,11 @@ def clamped_running_balance(
 #
 # Peak memory is one Arrow batch (spark.sql.execution.arrow.
 # maxRecordsPerBatch rows) regardless of how long any key's series
-# is. The per-element arithmetic is the IDENTICAL IEEE sequence as
-# the packed kernels — the carried state is exactly the accumulator
-# the packed loop would hold at the same position — so packed and
-# streamed are bit-equal and both satisfy the same DuckDB oracle
-# (pytest-pinned in tests/test_r7_ops.py, including a 1e6-event
-# single key under a 10k-row Arrow batch cap).
+# is. The carried state is exactly the accumulator a one-pass loop
+# over the key's whole series would hold at the same position, so the
+# output equals a plain sequential replay bit for bit, whatever the
+# batch cap (pytest-pinned in tests/test_r7_ops.py, including a
+# 1e6-event single key under a 10k-row Arrow batch cap).
 # ---------------------------------------------------------------------------
 
 
@@ -463,9 +288,7 @@ def _streamed_fold(
 
     ``fold_chunk(x: np.float64[n], state) -> (dict[name -> np.float64[n]],
     new_state)`` folds one contiguous chunk of a single key's series;
-    ``state=None`` marks start-of-key. The chunk function must apply
-    the same per-element operation sequence as its packed twin so the
-    two implementations stay bit-equal.
+    ``state=None`` marks start-of-key.
     """
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     parts = [f"{key_col} {in_schema[key_col]}"]

@@ -70,9 +70,14 @@ class Site:
     lineno: int
 
 
-def scan_sites(root: str | None = None) -> list[Site]:
+def _call_sites(root: str | None, names: set[str]):
+    """Every call in the package whose callee is named in ``names``
+    (``f(...)`` or ``x.f(...)``) and has a positional argument, as
+    ``(callee name, package-relative path, enclosing function or
+    "<module>", unparsed first argument, line)``, in file walk order.
+    Shared with plans/cell_audit.py."""
     root = root or _PKG_ROOT
-    sites: list[Site] = []
+    calls: list[tuple[str, str, str, str, int]] = []
     for dirpath, _, files in sorted(os.walk(root)):
         if "__pycache__" in dirpath:
             continue
@@ -100,9 +105,10 @@ def scan_sites(root: str | None = None) -> list[Site]:
                         if isinstance(f, ast.Attribute)
                         else getattr(f, "id", None)
                     )
-                    if name == "broadcast" and n.args:
-                        sites.append(
-                            Site(
+                    if name in names and n.args:
+                        calls.append(
+                            (
+                                name,
                                 rel,
                                 stack[-1] if stack else "<module>",
                                 ast.unparse(n.args[0]),
@@ -112,7 +118,33 @@ def scan_sites(root: str | None = None) -> list[Site]:
                     self.generic_visit(n)
 
             _V().visit(tree)
-    return sites
+    return calls
+
+
+def scan_sites(root: str | None = None) -> list[Site]:
+    return [
+        Site(rel, func, arg, lineno)
+        for _, rel, func, arg, lineno in _call_sites(root, {"broadcast"})
+    ]
+
+
+def _classify(sites: list, allowlist: dict, key) -> tuple[list, list, list]:
+    """Match each site's ``key(site)`` against ``allowlist``; returns
+    (adjudicated (site, class, reason) triples, unadjudicated sites,
+    allowlist keys that matched no site). Shared with
+    plans/cell_audit.py."""
+    seen = set()
+    adjudicated, unknown = [], []
+    for s in sites:
+        k = key(s)
+        hit = allowlist.get(k)
+        if hit is None:
+            unknown.append(s)
+        else:
+            seen.add(k)
+            adjudicated.append((s, hit[0], hit[1]))
+    stale = [k for k in allowlist if k not in seen]
+    return adjudicated, unknown, stale
 
 
 # --- adjudications ----------------------------------------------------------
@@ -135,18 +167,7 @@ def classify(
 ) -> tuple[list[tuple[Site, str, str]], list[Site], list[tuple]]:
     """Returns (adjudicated, unadjudicated_sites, stale_entries)."""
     sites = scan_sites() if sites is None else sites
-    seen: set[tuple[str, str, str]] = set()
-    adjudicated, unknown = [], []
-    for s in sites:
-        key = (s.path, s.func, s.arg)
-        hit = ALLOWLIST.get(key)
-        if hit is None:
-            unknown.append(s)
-        else:
-            seen.add(key)
-            adjudicated.append((s, hit[0], hit[1]))
-    stale = [k for k in ALLOWLIST if k not in seen]
-    return adjudicated, unknown, stale
+    return _classify(sites, ALLOWLIST, lambda s: (s.path, s.func, s.arg))
 
 
 # --- scalar: one-row aggregates / solver outputs ---------------------------

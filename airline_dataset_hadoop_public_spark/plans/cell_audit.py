@@ -28,9 +28,6 @@ Cell classes:
                  (enums, calendar buckets, k centroids).
   * cap-guard  — an enforced cap (hub_cap degree pre-filter, posting
                  caps) bounds the cell; the cap path is documented.
-  * series     — per-entity time series over the calendar-bounded
-                 span (the Arrow-kernel pack shape: one entity's
-                 events in order).
   * cluster    — one duplicate-cluster's member ids: output is
                  cluster-linear; a whole-corpus-identical cell is the
                  documented degenerate-corpus caveat of the dedup
@@ -43,8 +40,9 @@ Cross-join classes reuse the broadcast audit's size-provenance
 vocabulary: scalar / dimension / calendar / contract (the side is a
 documented small probe/grid).
 
-Keying, gating and staleness semantics are identical to
-plans/broadcast_audit.py: (package-relative path, enclosing function,
+Keying, gating and staleness semantics are those of
+plans/broadcast_audit.py, whose call walker and allowlist matcher this
+module reuses: (kind, package-relative path, enclosing function,
 unparsed first argument); unadjudicated sites AND stale entries fail
 tests/test_cell_audit.py; scripts/cell_audit.py renders
 CELL_AUDIT.md.
@@ -52,11 +50,9 @@ CELL_AUDIT.md.
 
 from __future__ import annotations
 
-import ast
-import os
 from dataclasses import dataclass
 
-_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from .broadcast_audit import _call_sites, _classify
 
 _KINDS = {"collect_list", "collect_set", "crossJoin"}
 
@@ -71,52 +67,13 @@ class Site:
 
 
 def scan_sites(root: str | None = None) -> list[Site]:
-    root = root or _PKG_ROOT
-    sites: list[Site] = []
-    for dirpath, _, files in sorted(os.walk(root)):
-        if "__pycache__" in dirpath:
-            continue
-        for fn in sorted(files):
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            rel = os.path.relpath(path, root)
-            with open(path) as fh:
-                tree = ast.parse(fh.read())
-            stack: list[str] = []
-
-            class _V(ast.NodeVisitor):
-                def visit_FunctionDef(self, n):  # noqa: N802
-                    stack.append(n.name)
-                    self.generic_visit(n)
-                    stack.pop()
-
-                visit_AsyncFunctionDef = visit_FunctionDef
-
-                def visit_Call(self, n):  # noqa: N802
-                    f = n.func
-                    name = (
-                        f.attr
-                        if isinstance(f, ast.Attribute)
-                        else getattr(f, "id", None)
-                    )
-                    if name in _KINDS and n.args:
-                        kind = (
-                            "crossjoin" if name == "crossJoin" else "collect"
-                        )
-                        sites.append(
-                            Site(
-                                kind,
-                                rel,
-                                stack[-1] if stack else "<module>",
-                                ast.unparse(n.args[0]),
-                                n.lineno,
-                            )
-                        )
-                    self.generic_visit(n)
-
-            _V().visit(tree)
-    return sites
+    return [
+        Site(
+            "crossjoin" if name == "crossJoin" else "collect",
+            rel, func, arg, lineno,
+        )
+        for name, rel, func, arg, lineno in _call_sites(root, _KINDS)
+    ]
 
 
 ALLOWLIST: dict[tuple[str, str, str, str], tuple[str, str]] = {}
@@ -134,18 +91,9 @@ def classify(
     sites: list[Site] | None = None,
 ) -> tuple[list[tuple[Site, str, str]], list[Site], list[tuple]]:
     sites = scan_sites() if sites is None else sites
-    seen: set[tuple[str, str, str, str]] = set()
-    adjudicated, unknown = [], []
-    for s in sites:
-        key = (s.kind, s.path, s.func, s.arg)
-        hit = ALLOWLIST.get(key)
-        if hit is None:
-            unknown.append(s)
-        else:
-            seen.add(key)
-            adjudicated.append((s, hit[0], hit[1]))
-    stale = [k for k in ALLOWLIST if k not in seen]
-    return adjudicated, unknown, stale
+    return _classify(
+        sites, ALLOWLIST, lambda s: (s.kind, s.path, s.func, s.arg)
+    )
 
 
 # --- collect-cell adjudications ---------------------------------------------
@@ -185,16 +133,6 @@ allow("collect", "operators/text.py", "tfidf_cosine_pairs", "id_col",
 allow("collect", "operators/text.py", "duplicate_span_removal",
       "F.struct('s', 'e')", "entity",
       "one document's duplicate spans, bounded by document length")
-allow("collect", "operators/timeseries.py", "ewma_per_key",
-      "F.struct(F.col(ts_col), F.col(value_col))", "series",
-      "one key's time series over the calendar-bounded span (the "
-      "Arrow pack shape both EWMA paths share)")
-allow("collect", "operators/timeseries.py", "holt_per_key",
-      "F.struct(F.col(ts_col), F.col(value_col))", "series",
-      "one key's time series over the calendar-bounded span")
-allow("collect", "operators/timeseries.py", "clamped_running_balance",
-      "F.struct(F.col(ts_col), F.col(delta_col))", "series",
-      "one key's delta series over the calendar-bounded span")
 allow("collect", "plans/fixtures_behavior.py", "parts_copurchase_lift",
       "'l_partkey'", "entity",
       "one order's basket: lineitem fans out <= 7 parts per order")

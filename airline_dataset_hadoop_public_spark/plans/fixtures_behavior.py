@@ -246,8 +246,8 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Per-user Holt double exponential smoothing (level + trend) — the
-# forecasting complement of events_ewma_per_user (same packed
-# collect-fold shape, same alpha=beta=0.5 bit-exactness contract:
+# forecasting complement of events_ewma_per_user (same streamed
+# per-key fold, same alpha=beta=0.5 bit-exactness contract:
 # every fold step is halvings + identically-rounded adds, so outputs
 # are emitted UNROUNDED). The oracle folds the identical recurrence
 # with list_reduce carrying (level, trend) pairs in a flat list.

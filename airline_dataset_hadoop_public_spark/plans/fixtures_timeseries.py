@@ -780,7 +780,7 @@ def events_xcorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one-sided barrier (prefix-reflection identity, above) the two-sided
 # clamp has NO prefix-scan closed form, so the engine runs the honest
 # Arrow-batched sequential kernel (operators/timeseries.
-# clamped_running_balance — packed fold, one shuffle, linear per key)
+# clamped_running_balance — streamed fold, one shuffle, linear per key)
 # and the oracle replays the identical walk with a recursive CTE
 # stepping one row per user per iteration (bounded: ≤ max per-user
 # event count iterations, each dimension-sized).

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .serving import _bound_subtree, _footer_schema
+from .serving import point_read
 
 # The eight BTS On-Time columns the reference consumes
 # (README.md:147,171,200,449,510). DepTime stays VARCHAR: the raw data
@@ -77,9 +77,9 @@ def canonicalize(
 
 
 def read_canonical(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read the canonical parquet table. Without ``schema``, the data
-    columns' schema comes from one file's footer, read in the driver
-    (see ``serving._footer_schema``), so no inference job runs; the
+    """Read the canonical parquet table: ``serving.point_read`` with no
+    key. Without ``schema``, the data columns' schema comes from one
+    file's footer, read in the driver, so no inference job runs; the
     Year partition column is still inferred from the paths. Spark
     infers as before when the footer holds no Spark schema, and a
     missing or empty ``path`` raises as ``spark.read.parquet`` does.
@@ -88,10 +88,4 @@ def read_canonical(spark: SparkSession, path: str, schema=None) -> DataFrame:
     column) to keep the read working when the canonicalized input was
     empty — ``partitionBy`` of a zero-row frame writes no files, and
     inference over the bare directory raises."""
-    if schema is None:
-        _, cols, data_file = _bound_subtree(spark, path, {})
-        schema = _footer_schema(spark, data_file, cols)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    return point_read(spark, path, schema)

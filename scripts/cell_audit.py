@@ -39,7 +39,7 @@ def main() -> int:
         "stale entries.",
         "",
         "Cell classes: entity / k-bounded / domain / cap-guard / "
-        "series / cluster / exact-mode. Cross-join classes: scalar / "
+        "cluster / exact-mode. Cross-join classes: scalar / "
         "dimension / calendar / contract.",
         "",
         "Shapes FIXED by this audit (r10): docs_inverted_index "

@@ -14,8 +14,7 @@ from airline_dataset_hadoop_public_spark.plans.cell_audit import (
 )
 
 _CELL_CLASSES = {
-    "entity", "k-bounded", "domain", "cap-guard", "series", "cluster",
-    "exact-mode",
+    "entity", "k-bounded", "domain", "cap-guard", "cluster", "exact-mode",
 }
 _XJOIN_CLASSES = {"scalar", "dimension", "calendar", "contract"}
 

@@ -107,6 +107,23 @@ def test_pagerank_releases_all_storage(spark, qs):
             spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
         )
 
+    def leftover_rdds(base: set) -> str:
+        """One line per persistent RDD not in ``base``: id, name,
+        storage level and the first line of its lineage."""
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        lines = []
+        for rid in sorted(set(rdds.keySet().toArray()) - base):
+            rdd = rdds.get(rid)
+            if rdd is None:  # released since the key set was read
+                continue
+            lineage = rdd.toDebugString().splitlines()
+            lines.append(
+                f"rdd {rid} name={rdd.name()!r} "
+                f"level={rdd.getStorageLevel().description()} "
+                f"lineage={lineage[0] if lineage else ''}"
+            )
+        return "persistent RDDs left after 90 s:\n" + "\n".join(lines)
+
     release_caches()
     gc.collect()
     # account for pagerank's OWN storage delta, not the session-global
@@ -131,7 +148,7 @@ def test_pagerank_releases_all_storage(spark, qs):
         # collects the weak ref; Spark's own periodic-GC default is 30
         # minutes, so nudge the JVM collector instead of waiting on it.
         spark.sparkContext._jvm.System.gc()
-    assert persistent_ids() <= base
+    assert persistent_ids() <= base, leftover_rdds(base)
 
 
 def test_copurchase_edge_semantics(spark):

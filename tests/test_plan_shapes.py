@@ -196,7 +196,7 @@ def test_ingest_roundtrip_prunes_canonical_partitions(spark, qs):
 
 
 def test_ewma_default_is_streamed_single_shuffle(spark, qs):
-    """Default EWMA path (streamed since r7): one repartition
+    """The EWMA fold (streamed, its only path): one repartition
     exchange, within-partition sort, one MapInPandas carrying the
     accumulator across batches — no per-group pandas flush, no
     unbounded collect_list cells."""
@@ -205,38 +205,6 @@ def test_ewma_default_is_streamed_single_shuffle(spark, qs):
     assert "FlatMapGroupsInPandas" not in plan
     assert "collect_list" not in plan
     assert plan.count("Exchange") <= 2
-
-
-def test_ewma_packed_is_arrow_single_shuffle(spark):
-    """The packed variant keeps its shape: collect-fold-explode — one
-    key shuffle, one Arrow kernel call per batch."""
-    from airline_dataset_hadoop_public_spark.operators.timeseries import (
-        ewma_per_key,
-    )
-    from airline_dataset_hadoop_public_spark.sources.catalog import load_table
-
-    ev = load_table(spark, SF, "events").limit(500)
-    plan = _plan(ewma_per_key(ev, "user_id", "ts", "value", impl="packed"))
-    assert "ArrowEvalPython" in plan
-    assert "FlatMapGroupsInPandas" not in plan
-
-
-def test_ewma_grouped_pandas_variant(spark):
-    """The applyInPandas variant stays available for keys whose series
-    exceed a collect_list cell, and matches the packed fold."""
-    from airline_dataset_hadoop_public_spark.operators.timeseries import (
-        ewma_per_key,
-    )
-    from airline_dataset_hadoop_public_spark.sources.catalog import load_table
-
-    ev = load_table(spark, SF, "events").limit(500)
-    a = ewma_per_key(ev, "user_id", "ts", "value", alpha=0.5)
-    b = ewma_per_key(ev, "user_id", "ts", "value", alpha=0.5,
-                     impl="grouped_pandas")
-    assert "FlatMapGroupsInPandas" in _plan(b)
-    va = {(r[0], r[1]): r[3] for r in a.collect()}
-    vb = {(r[0], r[1]): r[3] for r in b.collect()}
-    assert va == vb
 
 
 def test_dq_orphan_check_is_broadcast_anti_join(spark, qs):

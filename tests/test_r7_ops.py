@@ -1,17 +1,18 @@
 """r7 wave tests: streamed (bounded-memory) sequential folds.
 
-The r6 verdict's watch item 3: the packed collect_list layout puts a
-key's ENTIRE series in one array row, so one pathological key at
-100 TB is one task's OOM (Arrow's maxRecordsPerBatch caps rows, not
-array cells). The r7 streamed implementation folds the sorted row
-stream inside mapInPandas, carrying the accumulator across Arrow
-batches — peak memory one batch regardless of key length.
+Collecting a key's ENTIRE series into one array row makes one
+pathological key at 100 TB one task's OOM (Arrow's maxRecordsPerBatch
+caps rows, not array cells). The streamed fold instead walks the
+sorted row stream inside mapInPandas, carrying the accumulator across
+Arrow batches — peak memory one batch regardless of key length.
 
 Pins:
-- packed and streamed are BIT-EQUAL (identical IEEE sequence) for
-  clamp / ewma / holt on multi-key data with ties;
+- clamp / ewma / holt are BIT-EQUAL (== on floats) to a plain-Python
+  replay of each recurrence on multi-key data with ties, under a
+  7-row Arrow batch cap;
 - the carried state survives Arrow batch boundaries (tiny batch cap,
   key runs straddling batches, several keys inside one batch);
+- NULL keys fold as ONE group, as SQL GROUP BY groups them;
 - a single key with 1e6 events folds correctly under a 10k-row batch
   cap (the verdict's stated done-bar) and matches a local numpy walk.
 """
@@ -46,10 +47,11 @@ class _arrow_batch_cap:
         )
 
 
-def _mixed_series_df(spark, n_keys=13, max_len=41, seed=7):
-    """Keys of varying lengths (1..max_len) with tied (ts, value)
-    rows sprinkled in, so batch boundaries land mid-key and the sort
-    comparator's tie handling is exercised."""
+def _mixed_series(spark, n_keys=13, max_len=41, seed=7):
+    """``(u, t, x)`` rows and their frame: keys of varying lengths
+    (1..max_len) with tied (ts, value) rows sprinkled in, so batch
+    boundaries land mid-key and the sort comparator's tie handling is
+    exercised."""
     rng = np.random.RandomState(seed)
     rows = []
     for u in range(n_keys):
@@ -60,56 +62,108 @@ def _mixed_series_df(spark, n_keys=13, max_len=41, seed=7):
             rows.append((u, t, v))
             if rng.rand() < 0.1:
                 rows.append((u, t, v))  # exact (ts, value) tie
-    return spark.createDataFrame(rows, "u long, t long, x double")
+    return rows, spark.createDataFrame(rows, "u long, t long, x double")
 
 
-def _cmp_bit_equal(a_rows, b_rows, key_cols, val_cols):
-    a = sorted(tuple(r[c] for c in key_cols + val_cols) for r in a_rows)
-    b = sorted(tuple(r[c] for c in key_cols + val_cols) for r in b_rows)
+def _replay(rows, fold):
+    """Plain-Python reference for the per-key folds: group ``(u, t, x)``
+    rows by key (every NULL key in one group, as SQL GROUP BY does),
+    sort each group by (t, x) and run ``fold`` over its x values.
+    ``fold(xs)`` returns one tuple of outputs per element; each output
+    row is ``(u, step, t, x, *outputs)``."""
+    groups = {}
+    for u, t, x in rows:
+        groups.setdefault(u, []).append((t, x))
+    out = []
+    for u, series in groups.items():
+        series.sort()
+        ys = fold([x for _, x in series])
+        for i, ((t, x), y) in enumerate(zip(series, ys)):
+            out.append((u, i, t, x, *y))
+    return out
+
+
+def _ewma(alpha):
+    def fold(xs):
+        acc, ys = 0.0, []
+        for i, v in enumerate(xs):
+            acc = v if i == 0 else alpha * v + (1.0 - alpha) * acc
+            ys.append((acc,))
+        return ys
+
+    return fold
+
+
+def _holt(xs):
+    lv, b = xs[0], 0.0
+    ys = [(lv, b)]
+    for v in xs[1:]:
+        l_new = 0.5 * v + 0.5 * (lv + b)
+        b = 0.5 * (l_new - lv) + 0.5 * b
+        lv = l_new
+        ys.append((lv, b))
+    return ys
+
+
+def _clamp(lo, hi):
+    def fold(xs):
+        acc, ys = 0.0, []
+        for v in xs:
+            acc = min(hi, max(lo, acc + v))
+            ys.append((acc,))
+        return ys
+
+    return fold
+
+
+def _cmp_bit_equal(got_rows, want, cols):
+    """``got_rows`` (Spark rows) projected on ``cols`` must equal the
+    ``want`` tuples as multisets; NULL keys sort first."""
+    keyf = lambda t: tuple((v is not None, v) for v in t)  # noqa: E731
+    a = sorted((tuple(r[c] for c in cols) for r in got_rows), key=keyf)
+    b = sorted(want, key=keyf)
     assert len(a) == len(b)
     for ra, rb in zip(a, b):
         assert ra == rb, (ra, rb)  # == on floats: BIT equality demanded
 
 
 def test_clamp_streamed_bit_equal_to_packed_small_batches(spark):
-    df = _mixed_series_df(spark)
-    packed = clamped_running_balance(
-        df, "u", "t", "x", lo=0.0, hi=50.0, out="b", impl="packed"
-    ).collect()
+    rows, df = _mixed_series(spark)
+    want = _replay(rows, _clamp(0.0, 50.0))
     with _arrow_batch_cap(spark, 7):
         streamed = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=50.0, out="b", impl="streamed"
+            df, "u", "t", "x", lo=0.0, hi=50.0, out="b"
         ).collect()
-    _cmp_bit_equal(packed, streamed, ["u", "step"], ["t", "x", "b"])
+    _cmp_bit_equal(streamed, want, ["u", "step", "t", "x", "b"])
 
 
 def test_ewma_streamed_bit_equal_to_packed_small_batches(spark):
-    df = _mixed_series_df(spark, seed=11)
-    packed = ewma_per_key(df, "u", "t", "x", alpha=0.3, impl="packed").collect()
-    with _arrow_batch_cap(spark, 7):
-        streamed = ewma_per_key(
-            df, "u", "t", "x", alpha=0.3, impl="streamed"
-        ).collect()
+    rows, df = _mixed_series(spark, seed=11)
     # ewma output has no step column; (u, t, x) can tie exactly — the
-    # tied rows' ewma values coincide too (same prefix), so sorting by
-    # the full tuple is a sound compare
-    _cmp_bit_equal(packed, streamed, ["u"], ["t", "x", "ewma"])
+    # tied rows' ewma values coincide too (same prefix), so comparing
+    # the full tuples as multisets is sound
+    want = [(u, t, x, y) for u, _, t, x, y in
+            _replay(rows, _ewma(0.3))]
+    with _arrow_batch_cap(spark, 7):
+        streamed = ewma_per_key(df, "u", "t", "x", alpha=0.3).collect()
+    _cmp_bit_equal(streamed, want, ["u", "t", "x", "ewma"])
 
 
 def test_holt_streamed_bit_equal_to_packed_small_batches(spark):
-    df = _mixed_series_df(spark, seed=23)
-    packed = holt_per_key(df, "u", "t", "x", impl="packed").collect()
+    rows, df = _mixed_series(spark, seed=23)
+    want = [(u, t, x, lv, b) for u, _, t, x, lv, b in
+            _replay(rows, _holt)]
     with _arrow_batch_cap(spark, 7):
-        streamed = holt_per_key(df, "u", "t", "x", impl="streamed").collect()
-    _cmp_bit_equal(packed, streamed, ["u"], ["t", "x", "level", "trend"])
+        streamed = holt_per_key(df, "u", "t", "x").collect()
+    _cmp_bit_equal(streamed, want, ["u", "t", "x", "level", "trend"])
 
 
 def test_clamp_streamed_hot_key_1e6_events_bounded_batches(spark):
     """The verdict's done-bar: one key, 1e6 events, Arrow batches
-    capped at 10k rows — the packed layout would ship one 1e6-cell
-    array cell through a single batch; the streamed fold never holds
-    more than 10k rows. Expected values from a local numpy replay of
-    the identical walk."""
+    capped at 10k rows — a collect_list layout would ship one
+    1e6-element array cell through a single batch; the streamed fold
+    never holds more than 10k rows. Expected values from a local numpy
+    replay of the identical walk."""
     n = 1_000_000
     df = (
         spark.range(n)
@@ -122,7 +176,7 @@ def test_clamp_streamed_hot_key_1e6_events_bounded_batches(spark):
     )
     with _arrow_batch_cap(spark, 10_000):
         out = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=50.0, out="b", impl="streamed"
+            df, "u", "t", "x", lo=0.0, hi=50.0, out="b"
         )
         got = (
             out.groupBy("u")
@@ -172,7 +226,7 @@ def test_streamed_fold_key_runs_across_batch_boundaries(spark):
     df = spark.createDataFrame(rows, "u long, t long, x double")
     with _arrow_batch_cap(spark, 4):
         out = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=7.0, out="b", impl="streamed"
+            df, "u", "t", "x", lo=0.0, hi=7.0, out="b"
         ).collect()
     assert len(out) == 66
     for r in out:
@@ -280,37 +334,27 @@ def test_streamed_fold_null_keys_form_one_sql_group(spark):
     """SQL GROUP BY collapses every NULL key into ONE group; the
     streamed fold's run detection must be null-safe or each null-key
     row restarts the accumulator (caught by the NULL-injection axis:
-    events.user_id goes NULL on every 11th row). Packed (groupBy) is
-    the SQL-semantics reference; streamed must be bit-equal on a
-    frame whose null-key rows interleave with live keys and straddle
-    tiny Arrow batches."""
+    events.user_id goes NULL on every 11th row). The replay groups
+    NULL keys as SQL does; streamed must be bit-equal to it on a frame
+    whose null-key rows interleave with live keys and straddle tiny
+    Arrow batches."""
     rows = []
     for i in range(60):
         u = None if i % 3 == 0 else (i % 2 + 1)
         rows.append((u, i, float((i * 7) % 23)))
     df = spark.createDataFrame(rows, "u long, t long, x double")
 
-    def cmp(a_rows, b_rows, cols):
-        keyf = lambda t: tuple((v is None, v) for v in t)  # noqa: E731
-        a = sorted((tuple(r[c] for c in cols) for r in a_rows), key=keyf)
-        b = sorted((tuple(r[c] for c in cols) for r in b_rows), key=keyf)
-        assert len(a) == len(b)
-        for ra, rb in zip(a, b):
-            assert ra == rb, (ra, rb)  # bit equality on the floats
-
-    packed = ewma_per_key(df, "u", "t", "x", alpha=0.5, impl="packed").collect()
     with _arrow_batch_cap(spark, 7):
-        streamed = ewma_per_key(
-            df, "u", "t", "x", alpha=0.5, impl="streamed"
-        ).collect()
-    assert sum(1 for r in packed if r["u"] is None) == 20
-    cmp(packed, streamed, ["u", "t", "x", "ewma"])
+        streamed = ewma_per_key(df, "u", "t", "x", alpha=0.5).collect()
+    assert sum(1 for r in streamed if r["u"] is None) == 20
+    want = [(u, t, x, y) for u, _, t, x, y in _replay(rows, _ewma(0.5))]
+    _cmp_bit_equal(streamed, want, ["u", "t", "x", "ewma"])
 
-    packed_b = clamped_running_balance(
-        df, "u", "t", "x", lo=0.0, hi=30.0, out="b", impl="packed"
-    ).collect()
     with _arrow_batch_cap(spark, 7):
         streamed_b = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=30.0, out="b", impl="streamed"
+            df, "u", "t", "x", lo=0.0, hi=30.0, out="b"
         ).collect()
-    cmp(packed_b, streamed_b, ["u", "step", "t", "x", "b"])
+    _cmp_bit_equal(
+        streamed_b, _replay(rows, _clamp(0.0, 30.0)),
+        ["u", "step", "t", "x", "b"],
+    )
