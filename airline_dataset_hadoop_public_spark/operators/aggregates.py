@@ -53,24 +53,16 @@ def explode_count(
 
 
 def avg_by_key(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: str | Column,
-    out: str,
-    ndigits: int | None = 4,
+    df: DataFrame, keys: Sequence[str], value: str | Column, out: str
 ) -> DataFrame:
-    """Mean of `value` per multi-column key (A2/A4/A5).
+    """Mean of `value` per multi-column key (A2/A4/A5), as
+    `round(avg, 4)` for oracle-stable float comparison (SURVEY.md §5.2).
 
     Nulls in `value` are excluded by `avg` exactly as the reference's
     cleaning drops malformed rows per-job (README.md:111-112).
-    Rounded to `ndigits` for oracle-stable float comparison
-    (SURVEY.md §5.2); pass None to keep full precision.
     """
     col = F.col(value) if isinstance(value, str) else value
-    agg = F.avg(col)
-    if ndigits is not None:
-        agg = F.round(agg, ndigits)
-    return df.groupBy(*keys).agg(agg.alias(out))
+    return df.groupBy(*keys).agg(F.round(F.avg(col), 4).alias(out))
 
 
 def distinct_union(df: DataFrame, cols: Sequence[str], out: str) -> DataFrame:

@@ -12,9 +12,9 @@
   `explode()` generates the dates engine-side.
 
 Scale: |codes|³ explodes combinatorially (the reference capped request
-generation during dev, README.md:500 — our T5 analog is the `limit`
-parameter on the caller side). Generation is lazy/distributed; nothing
-is driver-materialized.
+generation during dev, README.md:500 — our T5 analog is a caller's
+`.limit(n)` on the frame `plans/airline.requests` returns). Generation
+is lazy/distributed; nothing is driver-materialized.
 """
 
 from __future__ import annotations

@@ -20,6 +20,8 @@ Pinned semantic decisions (SURVEY.md §2.11/§2.4):
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,57 +31,75 @@ from ..operators.generators import date_series, permutation_triplets
 from ..operators.topk import global_sort, global_top_k, rank_table, top_k_per_group
 
 _NOON_SEC = 12 * 3600
+# Every reference ranking job is a Top10* (README.md:151,175,195).
+_TOP_K = 10
+# Tom's trip (G3Q2) flies in 2008 only (P2, README.md:512).
+_YEAR = 2008
+# Leg number → (noon side of `sched_sec`, the request columns the leg
+# flies from and to, days from request_date to the flight date).
+_LEG_SPEC = {
+    1: (operator.lt, "origin", "stop", 0),
+    2: (operator.gt, "stop", "dest", 2),
+}
 
 
-def g1q1_airport_popularity(ontime: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k airports by arrivals + departures
-    (ArrivalsAndDeparturesPerAirport + Top10..., README.md:143-161)."""
+def _popularity(ontime: DataFrame) -> DataFrame:
+    """Arrivals + departures per airport, the one ArrivalsAndDepartures
+    job behind G1Q1 and G3Q1 (README.md:147-149)."""
     clean = ontime.na.drop(subset=["Origin", "Dest"])
-    counts = explode_count(clean, ["Origin", "Dest"], key="airport", cnt="flights")
-    return global_top_k(counts, [F.desc("flights"), F.asc("airport")], k)
+    return explode_count(clean, ["Origin", "Dest"], key="airport", cnt="flights")
 
 
-def g1q2_carrier_on_time(ontime: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k carriers by mean arrival delay, ascending = most on-time
+def _lowest_mean_per_group(
+    ontime: DataFrame, group: list[str], key: str, value: str, out: str
+) -> DataFrame:
+    """Per `group`, the top `key`s by lowest mean `value`, tie-broken on
+    `key` — the AvgReducer + Top10*Per* pair behind G2Q1-G2Q3."""
+    clean = ontime.na.drop(subset=[*group, key, value])
+    avg = avg_by_key(clean, [*group, key], value, out)
+    return top_k_per_group(avg, group, [F.asc(out), F.asc(key)], _TOP_K)
+
+
+def g1q1_airport_popularity(ontime: DataFrame) -> DataFrame:
+    """Top-10 airports by arrivals + departures
+    (ArrivalsAndDeparturesPerAirport + Top10..., README.md:143-161)."""
+    return global_top_k(
+        _popularity(ontime), [F.desc("flights"), F.asc("airport")], _TOP_K
+    )
+
+
+def g1q2_carrier_on_time(ontime: DataFrame) -> DataFrame:
+    """Top-10 carriers by mean arrival delay, ascending = most on-time
     (AvgDelayPerAirline + Top10AirlinesByDelay, README.md:167-185)."""
     clean = ontime.na.drop(subset=["UniqueCarrier", "ArrDelay"])
     avg = avg_by_key(clean, ["UniqueCarrier"], "ArrDelay", "avg_arr_delay")
-    return global_top_k(avg, [F.asc("avg_arr_delay"), F.asc("UniqueCarrier")], k)
+    return global_top_k(avg, [F.asc("avg_arr_delay"), F.asc("UniqueCarrier")], _TOP_K)
 
 
-def g2q1_carriers_per_airport(ontime: DataFrame, k: int = 10) -> DataFrame:
-    """Per origin airport, the k carriers with lowest mean DepDelay
+def g2q1_carriers_per_airport(ontime: DataFrame) -> DataFrame:
+    """Per origin airport, the 10 carriers with lowest mean DepDelay
     (AvgDepDelayPerAirportCarrier + Top10CarriersByDepDelayPerAirport,
     README.md:197-239)."""
-    clean = ontime.na.drop(subset=["Origin", "UniqueCarrier", "DepDelay"])
-    avg = avg_by_key(clean, ["Origin", "UniqueCarrier"], "DepDelay", "avg_dep_delay")
-    return top_k_per_group(
-        avg, ["Origin"], [F.asc("avg_dep_delay"), F.asc("UniqueCarrier")], k
+    return _lowest_mean_per_group(
+        ontime, ["Origin"], "UniqueCarrier", "DepDelay", "avg_dep_delay"
     )
 
 
-def g2q2_dests_per_airport(ontime: DataFrame, k: int = 10) -> DataFrame:
-    """Per origin airport, the k destinations with lowest mean DepDelay
+def g2q2_dests_per_airport(ontime: DataFrame) -> DataFrame:
+    """Per origin airport, the 10 destinations with lowest mean DepDelay
     (AvgDepDelayPerAirportDest + Top10DestByDepDelayPerAirport,
     README.md:286-326)."""
-    clean = ontime.na.drop(subset=["Origin", "Dest", "DepDelay"])
-    avg = avg_by_key(clean, ["Origin", "Dest"], "DepDelay", "avg_dep_delay")
-    return top_k_per_group(avg, ["Origin"], [F.asc("avg_dep_delay"), F.asc("Dest")], k)
+    return _lowest_mean_per_group(
+        ontime, ["Origin"], "Dest", "DepDelay", "avg_dep_delay"
+    )
 
 
-def g2q3_carriers_per_route(ontime: DataFrame, k: int = 10) -> DataFrame:
-    """Per (origin, dest) route, the k carriers with lowest mean
+def g2q3_carriers_per_route(ontime: DataFrame) -> DataFrame:
+    """Per (origin, dest) route, the 10 carriers with lowest mean
     ArrDelay (AvgArrDelayPerAirportPairCarrier + Top10CarriersBy-
     ArrDelayPerAirportPair, README.md:333-367)."""
-    clean = ontime.na.drop(subset=["Origin", "Dest", "UniqueCarrier", "ArrDelay"])
-    avg = avg_by_key(
-        clean, ["Origin", "Dest", "UniqueCarrier"], "ArrDelay", "avg_arr_delay"
-    )
-    return top_k_per_group(
-        avg,
-        ["Origin", "Dest"],
-        [F.asc("avg_arr_delay"), F.asc("UniqueCarrier")],
-        k,
+    return _lowest_mean_per_group(
+        ontime, ["Origin", "Dest"], "UniqueCarrier", "ArrDelay", "avg_arr_delay"
     )
 
 
@@ -89,17 +109,16 @@ def g3q1_popularity_ranked(ontime: DataFrame) -> DataFrame:
     (ArrivalsAndDeparturesPerAirportSortedByFrequency + zipf.py,
     README.md:375-430). Feed `.toPandas()` of this into
     analytics.fit_rank_distribution for the offline tail."""
-    clean = ontime.na.drop(subset=["Origin", "Dest"])
-    counts = explode_count(clean, ["Origin", "Dest"], key="airport", cnt="flights")
-    ranked = rank_table(counts, [F.desc("flights"), F.asc("airport")], rank="rank")
+    ranked = rank_table(
+        _popularity(ontime), [F.desc("flights"), F.asc("airport")], rank="rank"
+    )
     return global_sort(ranked, [F.asc("rank")])
 
 
 def airports(ontime: DataFrame) -> DataFrame:
-    """Distinct airport list (Airports job, README.md:447-454)."""
-    o = ontime.select(F.col("Origin").alias("airport"))
-    d = ontime.select(F.col("Dest").alias("airport"))
-    return distinct_union(o.unionByName(d).na.drop(), ["airport"], "airport")
+    """Distinct non-NULL airport codes from Origin and Dest, in one scan
+    (A6, the Airports job, README.md:447-454)."""
+    return distinct_union(ontime, ["Origin", "Dest"], "airport").na.drop()
 
 
 def requests(
@@ -107,22 +126,20 @@ def requests(
     airports_df: DataFrame,
     start: str = "2008-01-01",
     end: str = "2008-12-31",
-    limit: int | None = None,
 ) -> DataFrame:
     """(origin, stop, dest, request_date) — airport permutation
     triplets × the 2008 date series (OriginStopDest + Requests,
-    README.md:458-503). `limit` is the reference's dev-time cap (T5,
-    README.md:500) — at full scale |airports|³×366 is huge; generate
-    lazily and cap explicitly."""
+    README.md:458-503). At full scale |airports|³×366 rows is huge:
+    the plan is lazy, and a caller that wants the reference's dev-time
+    cap (T5, README.md:500) takes `.limit(n)` of the result."""
     triplets = permutation_triplets(airports_df, "airport")
     dates = date_series(spark, start, end, out="request_date")
-    req = triplets.crossJoin(F.broadcast(dates))
-    return req.limit(limit) if limit is not None else req
+    return triplets.crossJoin(F.broadcast(dates))
 
 
-def leg_candidates(ontime: DataFrame, year: int = 2008) -> DataFrame:
+def leg_candidates(ontime: DataFrame) -> DataFrame:
     """Flight legs eligible for Tom's trip (LegCandidates,
-    README.md:505-534): project the 8 columns, keep `year` flights
+    README.md:505-534): project the 8 columns, keep 2008 flights
     (P2), drop rows with missing fields (P4), repair DepTime hour > 23
     by rolling into the next day (P5, README.md:513), and derive the
     scheduled departure = actual − DepDelay minutes (P6,
@@ -130,7 +147,7 @@ def leg_candidates(ontime: DataFrame, year: int = 2008) -> DataFrame:
     noon predicate; `sched_dep_fmt` is the reference's output format
     (P7, 'HH:mm dd/MM/yyyy', README.md:507)."""
     clean = (
-        ontime.filter(F.year("FlightDate") == year)
+        ontime.filter(F.year("FlightDate") == _YEAR)
         .na.drop(
             subset=[
                 "Origin",
@@ -190,26 +207,22 @@ def toms_leg(requests_df: DataFrame, legs: DataFrame, leg_no: int) -> DataFrame:
     keep the candidate with least ArrDelay (A7, tie-broken on
     (UniqueCarrier, FlightNum) for determinism — README exposes no
     tie rule, SURVEY.md §2.4)."""
+    if leg_no not in _LEG_SPEC:
+        raise ValueError("leg_no must be 1 or 2")
+    noon_side, frm, to, shift = _LEG_SPEC[leg_no]
     # Both sides can share lineage (requests are generated from the
     # same ontime frame), and Spark's case-insensitive resolution
     # would conflate `origin`/`Origin` — alias-qualify everything.
     req = requests_df.alias("req")
-    if leg_no == 1:
-        leg = legs.filter(F.col("sched_sec") < _NOON_SEC).alias("leg")
-        join_cond = (
-            (F.col("leg.Origin") == F.col("req.origin"))
-            & (F.col("leg.Dest") == F.col("req.stop"))
-            & (F.col("leg.FlightDate") == F.col("req.request_date"))
-        )
-    elif leg_no == 2:
-        leg = legs.filter(F.col("sched_sec") > _NOON_SEC).alias("leg")
-        join_cond = (
-            (F.col("leg.Origin") == F.col("req.stop"))
-            & (F.col("leg.Dest") == F.col("req.dest"))
-            & (F.col("leg.FlightDate") == F.date_add(F.col("req.request_date"), 2))
-        )
-    else:
-        raise ValueError("leg_no must be 1 or 2")
+    leg = legs.filter(noon_side(F.col("sched_sec"), _NOON_SEC)).alias("leg")
+    leg_date = F.col("req.request_date")
+    if shift:
+        leg_date = F.date_add(leg_date, shift)
+    join_cond = (
+        (F.col("leg.Origin") == F.col(f"req.{frm}"))
+        & (F.col("leg.Dest") == F.col(f"req.{to}"))
+        & (F.col("leg.FlightDate") == leg_date)
+    )
     joined = req.join(leg, join_cond).select(
         F.col("req.origin").alias("origin"),
         F.col("req.stop").alias("stop"),

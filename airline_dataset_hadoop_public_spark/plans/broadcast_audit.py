@@ -13,10 +13,11 @@ the window audit (plans/window_audit.py):
 - `scan_sites()` walks the package AST and finds every call to a
   function named `broadcast` (pyspark's hint — the repo has no other
   broadcast), keyed by (package-relative path, enclosing function,
-  unparsed first argument). Line numbers are reported but NOT part of
-  the key, so refactors that move code don't invalidate
-  adjudications; renaming the broadcast frame or function does, which
-  is correct — a changed expression needs a fresh look.
+  unparsed first argument). Line numbers are NOT part of the key,
+  and the rendered inventory omits them, so refactors that move code
+  invalidate neither adjudications nor BROADCAST_AUDIT.md; renaming
+  the broadcast frame or function does, which is correct — a changed
+  expression needs a fresh look.
 - every site must match an `allow(...)` entry carrying a SIZE
   PROVENANCE class and a written boundedness reason — the
   adjudication trail the judge reads. Classes:

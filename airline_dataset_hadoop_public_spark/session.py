@@ -34,13 +34,19 @@ def get_spark(
     app_name: str = "airline-spark-engine",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "16g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with engine defaults.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the cores this
-    process may run on."""
+    process may run on. ``driver_memory`` defaults to half the host's
+    physical memory, at most 16g: in local mode the driver JVM is the
+    whole engine, and the rest is left to its Python workers and the
+    OS."""
+    if driver_memory is None:
+        mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+        driver_memory = f"{min(mem_mb // 2, 16 * 1024)}m"
     if cpus is None:
         cpus = int(
             os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))

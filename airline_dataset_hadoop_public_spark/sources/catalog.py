@@ -52,12 +52,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in FIXTURE_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for SQL-side use)."""
-    for t in FIXTURE_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

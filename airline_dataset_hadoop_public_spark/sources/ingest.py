@@ -59,18 +59,14 @@ def read_ontime_csv(
     return reader.csv(path)
 
 
-def canonicalize(
-    df: DataFrame,
-    out_path: str,
-    mode: str = "overwrite",
-    date_col: str = "FlightDate",
-) -> None:
-    """One-time canonicalization: typed parquet partitioned by year.
-    Downstream year filters become partition pruning (S3); columnar
-    layout makes every per-job projection a pruned scan (S2)."""
+def canonicalize(df: DataFrame, out_path: str, date_col: str = "FlightDate") -> None:
+    """One-time canonicalization: typed parquet partitioned by year,
+    overwriting ``out_path``. Downstream year filters become partition
+    pruning (S3); columnar layout makes every per-job projection a
+    pruned scan (S2)."""
     (
         df.withColumn("Year", F.year(date_col))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("Year")
         .parquet(out_path)
     )

@@ -27,14 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
 
-def write_serving(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """S6: persist a query result keyed for point lookups."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_serving(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """S6: persist a query result keyed for point lookups, overwriting
+    ``path``."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def _bound_subtree(spark: SparkSession, root: str, keys: dict):

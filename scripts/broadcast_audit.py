@@ -69,15 +69,14 @@ def main() -> int:
         "| file | function | broadcast frame | class | boundedness |",
         "|---|---|---|---|---|",
     ]
+    # Rows carry the allowlist key (path, function, argument) and no
+    # line number, so moving code leaves the inventory as it is.
     for s, cls, reason in sorted(
-        adjudicated, key=lambda t: (t[0].path, t[0].lineno)
+        adjudicated, key=lambda t: (t[0].path, t[0].func, t[0].arg)
     ):
         arg = s.arg if len(s.arg) <= 60 else s.arg[:57] + "..."
         arg = arg.replace("|", "\\|")
-        lines.append(
-            f"| {s.path}:{s.lineno} | {s.func} | `{arg}` | {cls} | "
-            f"{reason} |"
-        )
+        lines.append(f"| {s.path} | {s.func} | `{arg}` | {cls} | {reason} |")
     if unknown:
         lines += ["", "## UNADJUDICATED", ""]
         lines += [

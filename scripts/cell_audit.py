@@ -58,14 +58,15 @@ def main() -> int:
         "| kind | file | function | argument | class | boundedness |",
         "|---|---|---|---|---|---|",
     ]
+    # Rows carry the allowlist key (kind, path, function, argument)
+    # and no line number, so moving code leaves the inventory as it is.
     for s, cls, reason in sorted(
-        adjudicated, key=lambda t: (t[0].path, t[0].lineno)
+        adjudicated, key=lambda t: (t[0].path, t[0].func, t[0].arg, t[0].kind)
     ):
         arg = s.arg if len(s.arg) <= 50 else s.arg[:47] + "..."
         arg = arg.replace("|", "\\|")
         lines.append(
-            f"| {s.kind} | {s.path}:{s.lineno} | {s.func} | `{arg}` | "
-            f"{cls} | {reason} |"
+            f"| {s.kind} | {s.path} | {s.func} | `{arg}` | {cls} | {reason} |"
         )
     if unknown:
         lines += ["", "## UNADJUDICATED", ""]

@@ -13,6 +13,6 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     from airline_dataset_hadoop_public_spark.session import get_spark
 
-    s = get_spark("pytest", shuffle_partitions=8, driver_memory="8g")
+    s = get_spark("pytest", shuffle_partitions=8)
     yield s
     s.stop()

@@ -49,7 +49,7 @@ def test_g2_families_k_bound_and_monotone(spark, ontime):
         (A.g2q2_dests_per_airport, ["Origin"], "avg_dep_delay"),
         (A.g2q3_carriers_per_route, ["Origin", "Dest"], "avg_arr_delay"),
     ):
-        out = fn(ontime, k=10)
+        out = fn(ontime)
         sizes = out.groupBy(*grp).count().agg(F.max("count")).collect()[0][0]
         assert sizes <= 10
         # per-group values are the k smallest → group max ≤ global max
@@ -68,7 +68,7 @@ def test_g3q1_rank_is_dense_from_one(spark, ontime):
 def test_leg_candidates_invariants(spark, ontime):
     from airline_dataset_hadoop_public_spark.plans.airline import leg_candidates
 
-    legs = leg_candidates(ontime, year=2008).cache()
+    legs = leg_candidates(ontime).cache()
     # P2: only 2008 flights (sched_dep may roll into 2009-01-01)
     assert legs.filter(F.year("FlightDate") != 2008).count() == 0
     # P4: no nulls in any required column
@@ -98,7 +98,7 @@ def test_p5_hour_rollover_rolls_date(spark):
         ArrDelay=1.0,
     )
     df = spark.createDataFrame([row], schema=ONTIME_SCHEMA)
-    [leg] = leg_candidates(df, year=2008).collect()
+    [leg] = leg_candidates(df).collect()
     assert leg["sched_dep_fmt"] == "01:30 01/01/2009"
     assert leg["sched_sec"] == 1 * 3600 + 30 * 60
 
@@ -106,10 +106,8 @@ def test_p5_hour_rollover_rolls_date(spark):
 def test_toms_trip_invariants(spark, ontime):
     from airline_dataset_hadoop_public_spark.plans import airline as A
 
-    legs = A.leg_candidates(ontime, year=2008).cache()
-    reqs = A.requests(
-        spark, A.airports(ontime), "2008-06-01", "2008-06-30", limit=None
-    )
+    legs = A.leg_candidates(ontime).cache()
+    reqs = A.requests(spark, A.airports(ontime), "2008-06-01", "2008-06-30")
     # bound the request space for the test: only ORD/ATL/DFW triplets
     reqs = reqs.filter(
         F.col("origin").isin("ORD", "ATL", "DFW")
@@ -143,6 +141,106 @@ def test_toms_trip_invariants(spark, ontime):
         .count()
         == 0
     )
+
+
+def test_airports_is_one_scan_of_origin_and_dest(spark, ontime):
+    """A6 (Airports job): one leaf in the optimized plan, and the same
+    set as a pandas union of the non-NULL Origin and Dest codes."""
+    from airline_dataset_hadoop_public_spark.plans.airline import airports
+
+    out = airports(ontime)
+    assert out.columns == ["airport"]
+    assert out._jdf.queryExecution().optimizedPlan().collectLeaves().size() == 1
+    got = [r["airport"] for r in out.collect()]
+    pdf = ontime.select("Origin", "Dest").toPandas()
+    expect = set(pdf["Origin"].dropna()) | set(pdf["Dest"].dropna())
+    assert len(got) == len(set(got)) and set(got) == expect
+
+
+def test_toms_legs_noon_ties_and_hour_rollover(spark):
+    """Hand-built legs through leg_candidates and toms_leg: the noon
+    rule (12:00 itself in neither leg), the (carrier, flight_num)
+    tie-break of equal ArrDelays, and DepTime hour > 23 rows near noon,
+    which must come out as the DuckDB oracle's rule (perfbench/oracle.py
+    `_LEGS` and `_LEG_ON`) has them."""
+    import duckdb
+
+    from airline_dataset_hadoop_public_spark.plans import airline as A
+    from airline_dataset_hadoop_public_spark.sources.ingest import ONTIME_SCHEMA
+    from perfbench.oracle import _LEGS, LEG_COLUMNS, _leg_sql
+
+    d8, d10, d12 = (dt.date(2008, 3, day) for day in (8, 10, 12))
+    # (FlightDate, UniqueCarrier, FlightNum, Origin, Dest, DepTime,
+    #  DepDelay, ArrDelay); a noon row has the least ArrDelay of its
+    # route, so it would win if the noon rule let it in.
+    rows = [
+        # request (AAA, BBB, CCC, 3/10): noon rule
+        (d10, "UA", 1, "AAA", "BBB", "1200", 0.0, -50.0),
+        (d10, "UA", 2, "AAA", "BBB", "1159", 0.0, 5.0),
+        (d12, "UA", 3, "BBB", "CCC", "1200", 0.0, -50.0),
+        (d12, "UA", 4, "BBB", "CCC", "1201", 0.0, 7.0),
+        (d10, "UA", 5, "BBB", "CCC", "1201", 0.0, -99.0),  # request day, not +2
+        # request (DDD, EEE, FFF, 3/10): equal ArrDelay, lowest key wins
+        (d10, "WN", 20, "DDD", "EEE", "0800", 0.0, 3.0),
+        (d10, "AA", 30, "DDD", "EEE", "0900", 0.0, 3.0),
+        (d10, "AA", 10, "DDD", "EEE", "1000", 0.0, 3.0),
+        (d10, "WN", 5, "DDD", "EEE", "0700", 0.0, 3.0),
+        (d12, "DL", 7, "EEE", "FFF", "1500", 0.0, -2.0),
+        (d12, "DL", 5, "EEE", "FFF", "1600", 0.0, -2.0),
+        # request (GGG, HHH, III, 3/10): 35:59 → 11:59 on 3/11
+        (d10, "B6", 1, "GGG", "HHH", "3559", 0.0, 1.0),
+        # request (JJJ, KKK, LLL, 3/8), leg 2 flies on 3/10: 36:00 is
+        # noon on 3/11; 36:01 and 25:30 − 120 min are after noon
+        (d10, "B6", 2, "KKK", "LLL", "3600", 0.0, -10.0),
+        (d10, "B6", 3, "KKK", "LLL", "3601", 0.0, 4.0),
+        (d10, "B6", 4, "KKK", "LLL", "2530", 120.0, 6.0),
+    ]
+    reqs = [
+        ("AAA", "BBB", "CCC", d10),
+        ("DDD", "EEE", "FFF", d10),
+        ("GGG", "HHH", "III", d10),
+        ("JJJ", "KKK", "LLL", d8),
+    ]
+    cands = A.leg_candidates(spark.createDataFrame(rows, schema=ONTIME_SCHEMA))
+    req_df = spark.createDataFrame(
+        reqs, "origin string, stop string, dest string, request_date date"
+    )
+    got = {}
+    for no in (1, 2):
+        leg = A.toms_leg(req_df, cands, no).select(LEG_COLUMNS)
+        got[no] = sorted(map(tuple, leg.collect()))
+    picked = {
+        no: {(r[0], r[5], r[6], r[11]) for r in got[no]} for no in (1, 2)
+    }
+    assert picked[1] == {
+        ("AAA", "UA", 2, "11:59 10/03/2008"),
+        ("DDD", "AA", 10, "10:00 10/03/2008"),
+        ("GGG", "B6", 1, "11:59 11/03/2008"),
+    }
+    assert picked[2] == {
+        ("AAA", "UA", 4, "12:01 12/03/2008"),
+        ("DDD", "DL", 5, "16:00 12/03/2008"),
+        ("JJJ", "B6", 3, "12:01 11/03/2008"),
+    }
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE ontime (FlightDate DATE, UniqueCarrier VARCHAR, "
+        "FlightNum INTEGER, Origin VARCHAR, Dest VARCHAR, DepTime VARCHAR, "
+        "DepDelay DOUBLE, ArrDelay DOUBLE)"
+    )
+    con.executemany("INSERT INTO ontime VALUES (?, ?, ?, ?, ?, ?, ?, ?)", rows)
+    con.execute(_LEGS)
+    con.execute(
+        "CREATE TABLE requests (origin VARCHAR, stop VARCHAR, dest VARCHAR, "
+        "request_date DATE)"
+    )
+    con.executemany("INSERT INTO requests VALUES (?, ?, ?, ?)", reqs)
+    for no in (1, 2):
+        assert got[no] == sorted(con.execute(_leg_sql(no)).fetchall()), no
+    con.close()
+    with pytest.raises(ValueError):
+        A.toms_leg(req_df, cands, 3)
 
 
 def test_csv_ingest_and_partition_pruning(spark, tmp_path):

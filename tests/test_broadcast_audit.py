@@ -79,3 +79,26 @@ def test_removed_hints_stay_removed():
         s for s in scan_sites() if (s.path, s.func) in banned
     ]
     assert not hits, f"removed hints returned: {hits}"
+
+
+def test_committed_inventories_match_the_scripts(tmp_path):
+    """BROADCAST_AUDIT.md and CELL_AUDIT.md are what
+    scripts/broadcast_audit.py and scripts/cell_audit.py write today.
+    Rows name sites by (path, function, argument) with no line number,
+    so only an added, removed or re-adjudicated site changes them."""
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    for name in ("broadcast_audit", "cell_audit"):
+        out = tmp_path / f"{name}.md"
+        subprocess.run(
+            [sys.executable, str(repo / "scripts" / f"{name}.py"), str(out)],
+            check=True,
+            capture_output=True,
+        )
+        committed = repo / f"{name.upper()}.md"
+        assert out.read_text() == committed.read_text(), (
+            f"{committed.name} is stale: run python scripts/{name}.py"
+        )

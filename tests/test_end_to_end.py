@@ -62,8 +62,8 @@ def test_all_seven_query_families_run(spark, canonical):
 
     fit = fit_rank_distribution(pdf.rename(columns={"flights": "cnt"}))
     assert fit["best"] is not None  # G3Q1 tail runs on engine output
-    legs = A.leg_candidates(canonical, year=2008)
-    reqs = A.requests(spark, A.airports(canonical), limit=2000)
+    legs = A.leg_candidates(canonical)
+    reqs = A.requests(spark, A.airports(canonical)).limit(2000)
     assert A.toms_leg(reqs, legs, 1).columns[0] == "origin"
 
 
@@ -99,8 +99,8 @@ def test_serving_four_key_request_lookup(spark, canonical, tmp_path):
         write_serving,
     )
 
-    legs = A.leg_candidates(canonical, year=2008)
-    reqs = A.requests(spark, A.airports(canonical), limit=None).filter(
+    legs = A.leg_candidates(canonical)
+    reqs = A.requests(spark, A.airports(canonical)).filter(
         F.col("origin").isin("ORD", "ATL") & F.col("dest").isin("ORD", "ATL")
     )
     leg1 = A.toms_leg(reqs, legs, 1)
@@ -215,8 +215,8 @@ def test_reference_demo_session_golden_layout(spark, canonical, tmp_path):
 
     # --- G3Q2 + serving: Tom's legs written and point-read ------------------
     create_database(spark, "golden_demo")
-    legs = A.leg_candidates(canonical, year=2008)
-    reqs = A.requests(spark, A.airports(canonical), limit=None).filter(
+    legs = A.leg_candidates(canonical)
+    reqs = A.requests(spark, A.airports(canonical)).filter(
         F.col("origin").isin("ORD", "ATL", "DFW")
         & F.col("dest").isin("ORD", "ATL", "DFW")
     )

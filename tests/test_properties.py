@@ -90,7 +90,7 @@ def test_date_repair_rollover_any_day(spark, date, hh, mm, delay):
         ArrDelay=0.0,
     )
     df = spark.createDataFrame([row], schema=ONTIME_SCHEMA)
-    [leg] = leg_candidates(df, year=2008).collect()
+    [leg] = leg_candidates(df).collect()
     expect = dt.datetime.combine(date, dt.time(0, 0)) + dt.timedelta(
         days=1, hours=hh - 24, minutes=mm
     ) - dt.timedelta(minutes=delay)
