@@ -16,3 +16,21 @@ def spark():
     s = get_spark("pytest", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(group, action)`` runs ``action()`` under Spark job
+    group ``group`` and returns its result and the number of Spark jobs
+    it ran."""
+    sc = spark.sparkContext
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import csv
 import datetime as dt
+import os
 
 import pytest
 
@@ -243,6 +244,24 @@ def test_toms_legs_noon_ties_and_hour_rollover(spark):
         A.toms_leg(req_df, cands, 3)
 
 
+def _write_csv_tree(root, rows):
+    """Rows as a nested monthly CSV layout, as the unzipped reference
+    tree (S1): the first half under ``1988_1``, the rest under
+    ``2008_6``."""
+    from airline_dataset_hadoop_public_spark.sources.ingest import ONTIME_SCHEMA
+
+    header = ONTIME_SCHEMA.fieldNames()
+    half = len(rows) // 2
+    for sub, part in (("1988_1", rows[:half]), ("2008_6", rows[half:])):
+        d = root / sub
+        d.mkdir(parents=True)
+        with open(d / f"ontime_{sub}.csv", "w", newline="") as f:
+            w = csv.writer(f)
+            w.writerow(header)
+            for r in part:
+                w.writerow([r[c] if r[c] is not None else "" for c in header])
+
+
 def test_csv_ingest_and_partition_pruning(spark, tmp_path):
     from airline_dataset_hadoop_public_spark.sources.ingest import (
         canonicalize,
@@ -251,20 +270,7 @@ def test_csv_ingest_and_partition_pruning(spark, tmp_path):
     )
     from airline_dataset_hadoop_public_spark.testing.ontime import generate_ontime_rows
 
-    rows = generate_ontime_rows(500, seed=7)
-    header = [
-        "FlightDate", "UniqueCarrier", "FlightNum", "Origin", "Dest",
-        "DepTime", "DepDelay", "ArrDelay",
-    ]
-    # nested monthly layout, as the unzipped reference tree (S1)
-    for sub in ("1988_1", "2008_6"):
-        d = tmp_path / "csv" / sub
-        d.mkdir(parents=True)
-        with open(d / f"ontime_{sub}.csv", "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow(header)
-            for r in rows[:250] if sub == "1988_1" else rows[250:]:
-                w.writerow([r[c] if r[c] is not None else "" for c in header])
+    _write_csv_tree(tmp_path / "csv", generate_ontime_rows(500, seed=7))
 
     df = read_ontime_csv(spark, str(tmp_path / "csv"))
     assert df.count() == 500
@@ -278,6 +284,115 @@ def test_csv_ingest_and_partition_pruning(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "Year" in plan
     assert pruned.count() == canon.filter(F.year("FlightDate") == 2008).count()
+
+
+@pytest.fixture(scope="module")
+def small_canonical(spark, tmp_path_factory):
+    """A canonicalized CSV tree of 5,000 rows, far below
+    ``ingest._ONE_PARTITION_MAX_BYTES``; returns its path."""
+    from airline_dataset_hadoop_public_spark.sources.ingest import (
+        canonicalize,
+        read_ontime_csv,
+    )
+    from airline_dataset_hadoop_public_spark.testing.ontime import generate_ontime_rows
+
+    tmp = tmp_path_factory.mktemp("small-canonical")
+    _write_csv_tree(tmp / "csv", generate_ontime_rows(5_000, seed=7))
+    canonicalize(read_ontime_csv(spark, str(tmp / "csv")), str(tmp / "parquet"))
+    return str(tmp / "parquet")
+
+
+def test_small_canonical_table_runs_each_family_in_one_job(
+    spark, spark_jobs, small_canonical, monkeypatch
+):
+    """A table of at most ``_ONE_PARTITION_MAX_BYTES`` is read as one
+    partition, which satisfies every aggregate, window and sort of a
+    family: no exchange is planned and each family runs one Spark job.
+    With the bound below the table's size the read splits as before,
+    and g2q1 runs a job per exchange plus one."""
+    from airline_dataset_hadoop_public_spark.plans import airline as A
+    from airline_dataset_hadoop_public_spark.sources import ingest
+
+    families = (
+        A.g1q1_airport_popularity,
+        A.g1q2_carrier_on_time,
+        A.g2q1_carriers_per_airport,
+        A.g2q2_dests_per_airport,
+        A.g2q3_carriers_per_route,
+        A.g3q1_popularity_ranked,
+        A.airports,
+    )
+    ontime = ingest.read_canonical(spark, small_canonical)
+    for fn in families:
+        rows, jobs = spark_jobs(
+            f"test-small-{fn.__name__}", lambda fn=fn: fn(ontime).collect()
+        )
+        assert rows and jobs == 1, fn.__name__
+
+    size = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(small_canonical)
+        for f in files
+        if f.endswith(".parquet")
+    )
+    monkeypatch.setattr(ingest, "_ONE_PARTITION_MAX_BYTES", size - 1)
+    split = ingest.read_canonical(spark, small_canonical)
+    _, jobs = spark_jobs(
+        "test-split-g2q1", lambda: A.g2q1_carriers_per_airport(split).collect()
+    )
+    assert jobs == 3
+
+
+def test_one_partition_read_answers_as_the_split_read(spark, small_canonical):
+    """The one-partition canonical read gives the multi-partition
+    read's answers. Counts, airports and Tom's legs are equal; the
+    averaged families pick the same groups with means one rounding
+    step apart at most, since the summation order can flip
+    ``round(avg, 4)`` on an exact tie."""
+    from airline_dataset_hadoop_public_spark.plans import airline as A
+    from airline_dataset_hadoop_public_spark.sources.ingest import read_canonical
+    from airline_dataset_hadoop_public_spark.sources.serving import point_read
+
+    one = read_canonical(spark, small_canonical)
+    split = point_read(spark, small_canonical)
+    assert one.rdd.getNumPartitions() == 1 < split.rdd.getNumPartitions()
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    for fn in (A.g1q1_airport_popularity, A.g3q1_popularity_ranked, A.airports):
+        assert rows(fn(one)) == rows(fn(split)), fn.__name__
+
+    def legs(ontime):
+        reqs = A.requests(spark, A.airports(ontime), "2008-01-01", "2008-03-31")
+        reqs = reqs.filter(
+            F.col("origin").isin("ORD", "ATL", "DFW")
+            & F.col("dest").isin("ORD", "ATL", "DFW")
+        )
+        cands = A.leg_candidates(ontime)
+        return [rows(A.toms_leg(reqs, cands, no)) for no in (1, 2)]
+
+    got, want = legs(one), legs(split)
+    assert all(want) and got == want
+
+    for fn, keys, out in (
+        (A.g1q2_carrier_on_time, ["UniqueCarrier"], "avg_arr_delay"),
+        (A.g2q1_carriers_per_airport, ["Origin", "UniqueCarrier"], "avg_dep_delay"),
+        (A.g2q2_dests_per_airport, ["Origin", "Dest"], "avg_dep_delay"),
+        (
+            A.g2q3_carriers_per_route,
+            ["Origin", "Dest", "UniqueCarrier"],
+            "avg_arr_delay",
+        ),
+    ):
+        means = [
+            {tuple(r[k] for k in keys): r[out] for r in fn(df).collect()}
+            for df in (one, split)
+        ]
+        assert means[0].keys() == means[1].keys(), fn.__name__
+        assert all(
+            abs(means[0][k] - means[1][k]) <= 1e-4 + 1e-9 for k in means[0]
+        ), fn.__name__
 
 
 def test_golden_report_layout_g2q1(spark, ontime, tmp_path):

@@ -120,19 +120,7 @@ def test_point_read_missing_table_raises_as_whole_table_read(spark, tmp_path):
     _assert_same_error(spark, str(tmp_path / "absent"), origin="B", stop="x")
 
 
-def _spark_jobs(spark, group, action):
-    """Run ``action()`` under job group ``group``; return its result
-    and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_bound_lookup_lists_and_reads_only_its_leaf(spark, tmp_path):
+def test_bound_lookup_lists_and_reads_only_its_leaf(spark, spark_jobs, tmp_path):
     """Over the parallel-listing threshold, a whole-table read runs a
     listing job before it reads a row. A fully bound lookup runs one
     job, the scan, over its leaf's files: the schema comes from a
@@ -148,7 +136,7 @@ def test_bound_lookup_lists_and_reads_only_its_leaf(spark, tmp_path):
         df = point_read(spark, root, origin="O07", stop="S2")
         return df, df.collect()
 
-    (df, got), jobs = _spark_jobs(spark, "test-bound-lookup-jobs", lookup)
+    (df, got), jobs = spark_jobs("test-bound-lookup-jobs", lookup)
     assert [tuple(r) for r in got] == [(7, "O07", "S2")]
     assert jobs == 1
     leaf = os.path.join(root, "origin=O07", "stop=S2") + os.sep
@@ -262,7 +250,7 @@ def test_point_read_merges_schemas_as_whole_table_read(spark, tmp_path):
         spark.conf.unset("spark.sql.parquet.mergeSchema")
 
 
-def test_read_canonical_takes_schema_from_footer(spark, tmp_path):
+def test_read_canonical_takes_schema_from_footer(spark, spark_jobs, tmp_path):
     """Reading the canonical table runs no Spark job, and it answers
     as ``spark.read.parquet`` does."""
     path = str(tmp_path / "canonical")
@@ -271,8 +259,8 @@ def test_read_canonical_takes_schema_from_footer(spark, tmp_path):
         "FlightDate string, UniqueCarrier string, DepDelay double",
     ).withColumn("FlightDate", F.to_date("FlightDate"))
     canonicalize(frame, path)
-    got, jobs = _spark_jobs(
-        spark, "test-read-canonical-jobs", lambda: read_canonical(spark, path)
+    got, jobs = spark_jobs(
+        "test-read-canonical-jobs", lambda: read_canonical(spark, path)
     )
     assert jobs == 0
     _assert_same_answer(got, spark.read.parquet(path))
