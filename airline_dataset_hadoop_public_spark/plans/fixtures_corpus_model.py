@@ -285,7 +285,9 @@ def _docs_bucket_stream_dir(spark: SparkSession, sf_dir: str) -> tuple[str, obje
     """Mirror `documents` as 4 single-file buckets (doc_id % 4) whose
     mtimes force arrival order bucket 0 → 3 (FileStreamSource orders
     new files by modification time). Cache keyed by source identity,
-    like fixtures_streaming._events_stream_dir."""
+    like fixtures_streaming._events_stream_dir. The mtimes are stamped
+    again on every call: a copy of the mirror (``cp -r``) keeps its
+    ``_READY`` marker but not the order."""
     import glob
     import os
     import shutil
@@ -298,10 +300,10 @@ def _docs_bucket_stream_dir(spark: SparkSession, sf_dir: str) -> tuple[str, obje
     path = scratch_dir("stream_src", key, "documents_buckets")
     docs = load_table(spark, sf_dir, "documents")
     marker = os.path.join(path, "_READY")
+    base = os.stat(sf_dir).st_mtime
     if not os.path.exists(marker):
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path, exist_ok=True)
-        base = os.stat(sf_dir).st_mtime
         for b in range(4):
             tmp = os.path.join(path, f"__tmp{b}")
             (
@@ -314,9 +316,10 @@ def _docs_bucket_stream_dir(spark: SparkSession, sf_dir: str) -> tuple[str, obje
             dst = os.path.join(path, f"bucket{b}.parquet")
             shutil.move(part, dst)
             shutil.rmtree(tmp, ignore_errors=True)
-            os.utime(dst, (base + 10 * b, base + 10 * b))
         with open(marker, "w"):
             pass
+    for b in range(4):
+        os.utime(os.path.join(path, f"bucket{b}.parquet"), (base + 10 * b,) * 2)
     return path, docs.schema
 
 

@@ -12,9 +12,9 @@ partition read does. It reads the whole table only when the keys bind
 no partition level, or when the subtree would infer a partition column
 type other than string. The data columns' schema comes from the footer
 of one file the walk listed, read in the driver, so a fully bound
-lookup runs one Spark job: the scan. For high-cardinality keys,
+lookup runs one Spark job: the scan. For high-cardinality join keys,
 `bucketBy` into the session catalog is the analog (see
-`save_bucketed`).
+`sources.warehouse.bucketed_table`).
 """
 
 from __future__ import annotations
@@ -211,16 +211,3 @@ def write_text_report(
     if single_file:
         out = out.coalesce(1)
     out.write.mode(mode).text(path)
-
-
-def save_bucketed(
-    df: DataFrame, table: str, bucket_cols: list[str], num_buckets: int = 16
-) -> None:
-    """High-cardinality serving: bucketed catalog table — co-locates
-    later joins/lookups on the bucket key without a shuffle."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table)
-    )

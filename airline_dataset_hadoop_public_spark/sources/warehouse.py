@@ -13,10 +13,8 @@ the exchange.
 
 The writer is mirror-cached by source-file identity (path + mtime +
 size), same contract as the streaming source mirror: re-running a
-query in one session reuses the bucketed copy instead of rewriting.
-(`sources.serving.save_bucketed` is the plain write-once variant for
-serving tables the caller manages; this layer adds idempotent reuse +
-re-registration so a registered query can call it every run.)
+query in one session reuses the bucketed copy instead of rewriting,
+and re-registers it, so a registered query can call it every run.
 """
 
 from __future__ import annotations

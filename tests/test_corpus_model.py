@@ -198,6 +198,25 @@ def test_hashed_classifier_matches_hashlib(spark):
 # ---------------------------------------------------------------------------
 
 
+def test_stream_mirror_restamps_bucket_order(spark):
+    """A mirror whose mtimes were reset (a ``cp -r`` copy keeps the
+    ``_READY`` marker) gets its bucket 0 → 3 arrival order back on the
+    next call."""
+    import os
+
+    from airline_dataset_hadoop_public_spark.plans.fixtures_corpus_model import (
+        _docs_bucket_stream_dir,
+    )
+
+    path, _ = _docs_bucket_stream_dir(spark, SF)
+    files = [os.path.join(path, f"bucket{b}.parquet") for b in range(4)]
+    later = os.stat(files[3]).st_mtime + 100
+    os.utime(files[0], (later, later))
+    assert _docs_bucket_stream_dir(spark, SF)[0] == path
+    mtimes = [os.stat(f).st_mtime for f in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 4
+
+
 def test_streaming_ingest_equals_batch_rule(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -120,33 +120,6 @@ def test_rolling_hash_matches_python_any_text(spark, text):
     assert row["rhash"] == expect
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """save_bucketed co-locates join keys: the join plan must contain
-    no Exchange (the serving-layer answer to repeated key lookups /
-    joins at scale, SURVEY.md §2.1 S6)."""
-    from airline_dataset_hadoop_public_spark.sources.serving import save_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}'")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        a = spark.range(0, 1000).withColumn("va", F.col("id") * 2)
-        b = spark.range(0, 1000).withColumn("vb", F.col("id") * 3)
-        save_bucketed(a, "bkt.ta", ["id"], num_buckets=4)
-        save_bucketed(b, "bkt.tb", ["id"], num_buckets=4)
-        # tiny test tables would be auto-broadcast (which also skips
-        # bucketed scans); force the sort-merge path the serving layer
-        # targets for large-×-large joins
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt.ta").join(spark.table("bkt.tb"), "id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP DATABASE IF EXISTS bkt CASCADE")
-
-
 def test_salted_join_equals_plain_join(spark):
     """90%-hot-key corpus: the salted join must return exactly the
     plain join's multiset of rows."""
