@@ -59,12 +59,12 @@ def word_ngrams(tokens_col: str, n: int) -> Column:
     )
 
 
-def composite_key(cols: list[str | Column], sep: str = " ") -> Column:
+def composite_key(cols: list[str | Column]) -> Column:
     """P9 — the reference's space-joined composite display key
     ("ORIGIN CARRIER", /root/reference/README.md:201-203). Display-only:
     grouping always uses the real columns; this exists to reproduce the
     reference's output text byte-for-byte."""
-    return F.concat_ws(sep, *[_c(c).cast("string") for c in cols])
+    return F.concat_ws(" ", *[_c(c).cast("string") for c in cols])
 
 
 def cosine_similarity(a_col: str, b_col: str) -> Column:

@@ -30,6 +30,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Decimal places of every float an operator emits: its oracles ROUND
+# to the same width, so results hash-compare equal (SURVEY.md §5.2).
+ROUND_DIGITS = 4
+
 
 def union_all_column(df: DataFrame, cols: Sequence[str], out: str) -> DataFrame:
     """SELECT c1 AS out FROM df UNION ALL SELECT c2 AS out FROM df ...
@@ -56,13 +60,13 @@ def avg_by_key(
     df: DataFrame, keys: Sequence[str], value: str | Column, out: str
 ) -> DataFrame:
     """Mean of `value` per multi-column key (A2/A4/A5), as
-    `round(avg, 4)` for oracle-stable float comparison (SURVEY.md §5.2).
+    `round(avg, ROUND_DIGITS)` for oracle-stable float comparison (SURVEY.md §5.2).
 
     Nulls in `value` are excluded by `avg` exactly as the reference's
     cleaning drops malformed rows per-job (README.md:111-112).
     """
     col = F.col(value) if isinstance(value, str) else value
-    return df.groupBy(*keys).agg(F.round(F.avg(col), 4).alias(out))
+    return df.groupBy(*keys).agg(F.round(F.avg(col), ROUND_DIGITS).alias(out))
 
 
 def distinct_union(df: DataFrame, cols: Sequence[str], out: str) -> DataFrame:

@@ -36,9 +36,9 @@ from ..functions.scalar import tokens
 from ..runtime import cache_tracked
 
 
-def _word_types(docs: DataFrame, text_col: str) -> DataFrame:
+def _word_types(docs: DataFrame) -> DataFrame:
     return (
-        docs.select(F.explode(tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -139,13 +139,13 @@ def _merge(sym: DataFrame, best: DataFrame) -> DataFrame:
 
 def bpe_pair_merge_rounds(
     docs: DataFrame,
-    text_col: str = "text",
     rounds: int = 2,
     topn: int = 10,
     probe=None,
 ) -> DataFrame:
-    """Learn `rounds` BPE merges; report each round's top-`topn` pair
-    counts (the table a tokenizer trainer would inspect).
+    """Learn `rounds` BPE merges over the documents' text column; report
+    each round's top-`topn` pair counts (the table a tokenizer trainer
+    would inspect).
 
     Output: (round, rank, sym1, sym2, cnt) ordered by (round, rank);
     rank is by (cnt desc, sym1 asc, sym2 asc). Round r counts are
@@ -156,7 +156,7 @@ def bpe_pair_merge_rounds(
     post-checkpoint symbol frame; lets tests assert the lineage bound
     on the REAL loop instead of a mirror of it.
     """
-    sym = _initial_symbols(_word_types(docs, text_col))
+    sym = _initial_symbols(_word_types(docs))
     out: DataFrame | None = None
     prev_pairs: DataFrame | None = None
     for r in range(1, rounds + 1):
@@ -205,15 +205,10 @@ def bpe_pair_merge_rounds(
     return out
 
 
-def bpe_encode_token_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    merges: int = 2,
-) -> DataFrame:
-    """Tokenizer INFERENCE under a just-learned BPE vocab: learn
-    `merges` merges sequentially on the word-type table, then count
-    each document's tokens under the merged segmentation.
+def bpe_encode_token_counts(docs: DataFrame) -> DataFrame:
+    """Tokenizer INFERENCE under a just-learned BPE vocab: learn two
+    merges sequentially on the word-type table, then count each
+    (doc_id, text) document's tokens under the merged segmentation.
 
     The per-word symbol counts form a vocabulary-sized dimension that
     joins back onto the exploded document words — the corpus is
@@ -221,12 +216,12 @@ def bpe_encode_token_counts(
     every merge round runs on word TYPES only (the property that makes
     tokenization O(vocab) not O(corpus) per merge).
 
-    Output: (id, n_words, n_tokens_bpe) — n_tokens_bpe ≤ chars,
+    Output: (doc_id, n_words, n_tokens_bpe) — n_tokens_bpe ≤ chars,
     shrinking as merges land.
     """
-    sym = _initial_symbols(_word_types(docs, text_col))
+    sym = _initial_symbols(_word_types(docs))
     prev_pairs = None
-    for i in range(merges):
+    for i in range(2):
         if i > 0:
             # per-round lineage truncation + cache release — see
             # bpe_pair_merge_rounds
@@ -238,7 +233,7 @@ def bpe_encode_token_counts(
         prev_pairs = pairs
     nsym = sym.groupBy("word").agg(F.count("*").alias("n_sym"))
     doc_words = docs.select(
-        F.col(id_col).alias("__id"), F.explode(tokens(text_col)).alias("word")
+        F.col("doc_id").alias("__id"), F.explode(tokens("text")).alias("word")
     )
     return (
         doc_words.join(nsym, "word")
@@ -247,5 +242,5 @@ def bpe_encode_token_counts(
             F.count("*").alias("n_words"),
             F.sum("n_sym").alias("n_tokens_bpe"),
         )
-        .select(F.col("__id").alias(id_col), "n_words", "n_tokens_bpe")
+        .select(F.col("__id").alias("doc_id"), "n_words", "n_tokens_bpe")
     )

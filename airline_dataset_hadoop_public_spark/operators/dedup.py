@@ -27,11 +27,11 @@ the quadratic blowup at 100 TB:
   one of k+1 signature chunks; verified with exact Hamming distance.
 
 Every stage is a DataFrame op (explode / groupBy / join); the hash
-primitives are Spark's `xxhash64` (JVM, codegen). A `max_bucket`
-guard caps pathological posting lists / LSH buckets — at planet scale
-a stop-word shingle or an empty-document cluster would otherwise
-produce a quadratic join; capped groups are dropped (count them via
-the returned metrics if exactness matters).
+primitives are Spark's `xxhash64` (JVM, codegen). The ``_MAX_POSTING``
+and ``_MAX_BUCKET`` guards cap pathological posting lists / LSH
+buckets — at planet scale a stop-word shingle or an empty-document
+cluster would otherwise produce a quadratic join; capped groups are
+dropped (count them via the returned metrics if exactness matters).
 """
 
 from __future__ import annotations
@@ -43,8 +43,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, LongType
 
+from .aggregates import ROUND_DIGITS
 from ..functions.scalar import tokens, word_ngrams
-from ..runtime import cache_tracked
+from ..runtime import cache_tracked, scoped_shuffle_partitions
 
 # Epsilon-guarded ceiling for threshold·size overlap bounds. The IEEE
 # product t·n can land one ulp ABOVE the exact value (e.g.
@@ -55,6 +56,19 @@ from ..runtime import cache_tracked
 # so subtracting 1e-4 can only ever LOOSEN a bound — at worst one
 # extra prefix token per document — never tighten it.
 _CEIL_EPS = 1e-4
+
+
+# Scale guards: a prefix token whose posting list holds more than
+# _MAX_POSTING documents, or an LSH / SimHash bucket holding more than
+# _MAX_BUCKET representatives, is dropped before its equi-join. Neither
+# fires on the test corpora.
+_MAX_POSTING = 100_000
+_MAX_BUCKET = 20_000
+# Round bound of the connected-components label loop (it stops earlier
+# once no label changes).
+_CC_MAX_ITER = 25
+# Hamming-distance bound of the SimHash pair and cluster reports
+_SIMHASH_MAX_DISTANCE = 3
 
 
 def _safe_ceil(expr):
@@ -169,11 +183,7 @@ def _expand_rep_pairs(rep_pairs: DataFrame, grp: DataFrame, val_cols: list[str])
 
 
 def _verify_jaccard(
-    cands: DataFrame,
-    shingles: DataFrame,
-    id_col: str,
-    threshold: float,
-    ndigits: int = 4,
+    cands: DataFrame, shingles: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Join candidate (id_a, id_b) pairs back to shingle sets and keep
     those with exact Jaccard ≥ threshold."""
@@ -193,7 +203,7 @@ def _verify_jaccard(
             / (F.size("__sha") + F.size("__shb") - F.col("__inter")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", ndigits).alias("jaccard"))
+        .select("id_a", "id_b", F.round("jaccard", ROUND_DIGITS).alias("jaccard"))
     )
 
 
@@ -203,13 +213,12 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 2,
     threshold: float = 0.2,
-    max_posting: int = 100_000,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with word-n-gram Jaccard ≥ threshold.
 
-    Exact (prefix-filter candidates → Jaccard verify). `max_posting`
+    Exact (prefix-filter candidates → Jaccard verify). ``_MAX_POSTING``
     drops prefix tokens whose posting list exceeds the cap — a scale
-    guard; at the default it never triggers on test corpora.
+    guard that never triggers on test corpora.
     """
     all_sh = _shingled(df, id_col, text_col, n).filter(F.size("__sh") > 0)
     grp = _collapse_identical(all_sh, id_col, fingerprint=True).transform(cache_tracked)
@@ -251,7 +260,7 @@ def ngram_jaccard_pairs(
     hot = (
         prefix.groupBy("__t")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_posting)
+        .filter(F.col("__n") > _MAX_POSTING)
         .select("__t")
     )
     prefix = prefix.join(F.broadcast(hot), "__t", "left_anti")
@@ -298,7 +307,7 @@ def ngram_jaccard_pairs(
             F.col("__i") / (F.size("__ha") + F.size("__hb") - F.col("__i")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+        .select("id_a", "id_b", F.round("jaccard", ROUND_DIGITS).alias("jaccard"))
     )
     cross = _expand_rep_pairs(rep_pairs, grp, ["jaccard"])
     return intra.select("id_a", "id_b", "jaccard").unionByName(cross)
@@ -308,11 +317,9 @@ def containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.9,
-    max_posting: int = 100_000,
 ) -> DataFrame:
-    """All ORDERED (id_a, id_b) pairs with n-gram Jaccard containment
+    """All ORDERED (id_a, id_b) pairs with word-trigram containment
     C(A,B) = |A∩B| / |A| ≥ threshold, id_a ≠ id_b — "A is mostly
     contained in B". The asymmetric complement of
     ``ngram_jaccard_pairs``: symmetric Jaccard misses a short document
@@ -320,7 +327,7 @@ def containment_pairs(
     size gap; C is not), which is exactly the boilerplate-inclusion /
     quote-expansion shape a training-corpus dedup pass must catch.
 
-    Exact up to the ``max_posting`` scale guard (which, like the
+    Exact up to the ``_MAX_POSTING`` scale guard (which, like the
     Jaccard join's, never triggers on the test corpora — a capped
     container token silently drops candidate pairs whose every other
     contained-side prefix token is also capped, so raise the cap or
@@ -337,11 +344,11 @@ def containment_pairs(
 
     Same scale shape as the Jaccard join: identical shingle sets are
     collapsed to one representative before candidate generation (so an
-    exact-duplicate cluster costs 1 row, not c²), ``max_posting`` caps
+    exact-duplicate cluster costs 1 row, not c²), ``_MAX_POSTING`` caps
     the container-side posting lists, and every stage is an
     explode/groupBy/equi-join — no all-pairs product.
     """
-    all_sh = _shingled(df, id_col, text_col, n).filter(F.size("__sh") > 0)
+    all_sh = _shingled(df, id_col, text_col, 3).filter(F.size("__sh") > 0)
     grp = _collapse_identical(all_sh, id_col, fingerprint=True).transform(
         cache_tracked
     )
@@ -383,7 +390,7 @@ def containment_pairs(
     hot = (
         full.groupBy("__t")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_posting)
+        .filter(F.col("__n") > _MAX_POSTING)
         .select("__t")
     )
     full = full.join(F.broadcast(hot), "__t", "left_anti")
@@ -433,7 +440,7 @@ def containment_pairs(
     return (
         intra.select("id_a", "id_b", "containment")
         .unionByName(cross)
-        .withColumn("containment", F.round("containment", 4))
+        .withColumn("containment", F.round("containment", ROUND_DIGITS))
     )
 
 
@@ -598,7 +605,6 @@ def _rep_neardup_edges(
     threshold: float,
     num_hashes: int,
     bands: int,
-    max_bucket: int,
     reps_universe: DataFrame | None = None,
     banded_probe: DataFrame | None = None,
     banded_universe: DataFrame | None = None,
@@ -624,7 +630,7 @@ def _rep_neardup_edges(
         reps_universe = reps_probe
         banded_universe = banded_probe
     cands = _lsh_candidates(
-        banded_probe, banded_universe, id_col, threshold, max_bucket, symmetric
+        banded_probe, banded_universe, id_col, threshold, _MAX_BUCKET, symmetric
     )
     a = reps_universe.select(
         F.col(id_col).alias("id_a"), F.col("__hs").alias("__ha")
@@ -641,7 +647,7 @@ def _rep_neardup_edges(
             F.col("__i") / (F.size("__ha") + F.size("__hb") - F.col("__i")),
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
+        .select("id_a", "id_b", F.round("jaccard", ROUND_DIGITS).alias("jaccard"))
     )
 
 
@@ -649,14 +655,12 @@ def minhash_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
     threshold: float = 0.9,
     num_hashes: int = 128,
     bands: int = 32,
-    max_bucket: int = 20_000,
 ) -> DataFrame:
-    """Near-duplicate (id_a < id_b) pairs via MinHash+LSH banding,
-    verified with exact Jaccard ≥ threshold.
+    """Near-duplicate (id_a < id_b) pairs via MinHash+LSH banding over
+    word shingles, verified with exact Jaccard ≥ threshold.
 
     LSH runs over distinct shingle sets only (duplicate-group
     collapse, keyed by representative); signature + band keys come
@@ -675,18 +679,18 @@ def minhash_neardup_pairs(
     pairs. Keep rows=4 when downstream needs per-pair miss ≲ 1e-11
     (oracle-equality regime); raise rows when candidate shuffle
     dominates and ~1e-4 miss at the threshold is acceptable.
-    ``max_bucket`` bounds any (band, bucket) to that many reps —
-    worst-case join fan-out per bucket is C(max_bucket, 2) — at the
+    ``_MAX_BUCKET`` bounds any (band, bucket) to that many reps —
+    worst-case join fan-out per bucket is C(_MAX_BUCKET, 2) — at the
     cost of recall only on clusters hot in EVERY band.
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    sh = _shingled(df, id_col, text_col, n).filter(F.size("__sh") > 0)
+    sh = _shingled(df, id_col, text_col, 1).filter(F.size("__sh") > 0)
     grp = _collapse_identical(sh, id_col, fingerprint=True).transform(cache_tracked)
     intra = _intra_group_pairs(grp, "jaccard", 1.0)
     reps = _hashed_reps(grp, id_col)
     rep_pairs = _rep_neardup_edges(
-        reps, id_col, threshold, num_hashes, bands, max_bucket
+        reps, id_col, threshold, num_hashes, bands
     )
     cross = _expand_rep_pairs(rep_pairs, grp, ["jaccard"])
     return intra.select("id_a", "id_b", "jaccard").unionByName(cross)
@@ -789,13 +793,10 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "node",
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
     local_solve_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) — min-id label propagation with pointer
-    jumping over an undirected edge set. The dedup ACTION step:
+    jumping over an undirected (id_a, id_b) edge set. The dedup ACTION step:
     near-dup pairs → duplicate clusters → one canonical id per
     cluster (min id).
 
@@ -823,36 +824,39 @@ def connected_components(
     components (observed: 9 rounds on the sf0.1 simhash graph; a
     1M-long chain at 100 TB would never finish); hook+shortcut is
     O(log diameter) (cf. the MapReduce CC literature, Kiveris et al.).
-    Converged when no label changes; `max_iter` is a safety bound.
+    Converged when no label changes; ``_CC_MAX_ITER`` rounds is a
+    safety bound.
     Edge endpoints missing from `nodes` act as relays (labels propagate
     through them) but are excluded from the output.
     Per-round lineage is truncated with localCheckpoint — without it
     the plan doubles each iteration. The convergence check is a
     driver-side count (one scalar), not a data collect.
 
-    The label loop's shuffles are scoped to a partition count sized by
-    the REPRESENTATIVE graph (known after the edge materialization),
-    not the session default: the loop runs many small jobs, and when
-    the corpus-sized default exceeds the graph, task-launch overhead
-    dominates (measured 2x on the sf0.1 graph). Everything inside is
-    materialized eagerly, so restoring the setting on exit cannot
-    affect the returned (already-checkpointed) frame. Caveat: the
-    setting is session-global for the loop's duration, so OTHER
-    queries running concurrently on the same SparkSession would
-    inherit the shrunken count — this engine runs queries sequentially
-    per session (bench and the driver both do); callers sharing a
-    session across threads should clone it via ``spark.newSession()``.
+    The label loop's shuffles are scoped (``runtime.scoped_shuffle_partitions``)
+    to a partition count sized by the LARGER of the REPRESENTATIVE
+    graph's node and edge counts (known after the edge
+    materialization; a sparse graph still shuffles the full label
+    table every round), not the session default: the loop runs many
+    small jobs, and when the corpus-sized default exceeds the graph,
+    task-launch overhead dominates (measured 2x on the sf0.1 graph).
+    Everything inside is materialized eagerly, so restoring the
+    setting on exit cannot affect the returned (already-checkpointed)
+    frame. Caveat: the setting is session-global for the loop's
+    duration, so OTHER queries running concurrently on the same
+    SparkSession would inherit the shrunken count — this engine runs
+    queries sequentially per session (bench and the driver both do);
+    callers sharing a session across threads should clone it via
+    ``spark.newSession()``.
     """
     # Materialize the symmetrized edge list ONCE: it is consumed by
     # every iteration, and without the checkpoint each iteration would
     # re-execute the whole upstream candidate-pair pipeline (this was
     # 5/6 of dedup_connected_canonical's runtime).
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .unionByName(edges.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
         .localCheckpoint(eager=True)
     )
-    spark = nodes.sparkSession
     n_edges = sym.count()
     # checkpoint the declared node list once: the gate count, the
     # local solve's marker rows, the loop's initial labels, and the
@@ -871,14 +875,8 @@ def connected_components(
     if max(n_nodes, n_edges) <= local_solve_max_edges:
         return _cc_local_solve(sym, declared)
     labels = declared.select("node", F.col("node").alias("lbl"))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    # sized by the LARGER of nodes and edges: a sparse graph (many
-    # nodes, few edges) still shuffles the full label table every round
-    target = max(2, min(int(prev), max(n_nodes, n_edges) // 100_000 + 2))
-    spark.conf.set(key, str(target))
-    try:
-        for _ in range(max_iter):
+    with scoped_shuffle_partitions(nodes.sparkSession, max(n_nodes, n_edges)):
+        for _ in range(_CC_MAX_ITER):
             # hook: min over self + neighbors
             msgs = sym.join(
                 labels.select(F.col("node").alias("b"), "lbl"), "b"
@@ -920,8 +918,6 @@ def connected_components(
             labels = new_labels.select("node", "lbl")
             if changed == 0:
                 break
-    finally:
-        spark.conf.set(key, prev)
     # undeclared relay endpoints served propagation; only declared
     # nodes appear in the result
     return labels.join(declared, "node").select(
@@ -933,10 +929,9 @@ def simhash_signature(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
     portable_hash: bool = False,
 ) -> DataFrame:
-    """id → 64-bit SimHash of the document's n-gram shingle set.
+    """id → 64-bit SimHash of the document's word shingle set.
 
     ``portable_hash=True`` swaps the per-shingle hash from xxhash64
     (fast, JVM codegen — the production default) to a 60-bit integer
@@ -951,7 +946,7 @@ def simhash_signature(
         else "t -> xxhash64(t)"
     )
     sh = (
-        _shingled(df, id_col, text_col, n)
+        _shingled(df, id_col, text_col, 1)
         .filter(F.size("__sh") > 0)
         # hash shingles JVM-side (codegen'd scalar funcs) once up front
         .withColumn("__hs", F.expr(f"transform(__sh, {shingle_hash})"))
@@ -998,19 +993,17 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
-    max_distance: int = 3,
-    max_bucket: int = 20_000,
     portable_hash: bool = False,
 ) -> DataFrame:
-    """(id_a < id_b, distance) pairs with SimHash Hamming distance ≤ k.
+    """(id_a < id_b, distance) pairs with SimHash Hamming distance ≤
+    k = ``_SIMHASH_MAX_DISTANCE``.
 
     Pigeonhole candidates: split the 64-bit signature into k+1 chunks;
     any pair within distance k agrees on at least one chunk → equi-join
     per chunk, then exact popcount verification. (Manku/Jain/Sarma,
     WWW'07 — the standard web-scale simhash dedup layout.)
     """
-    sigs = simhash_signature(df, id_col, text_col, n, portable_hash=portable_hash)
+    sigs = simhash_signature(df, id_col, text_col, portable_hash=portable_hash)
     # Collapse identical signatures: distance is a pure function of the
     # signature, so candidate generation runs once per distinct value
     # (intra-group pairs have distance 0 by construction).
@@ -1019,22 +1012,17 @@ def simhash_pairs(
         "distance", F.col("distance").cast("long")
     )
     reps = grp.select(F.col("__rep").alias(id_col), "simhash")
-    rep_pairs = _simhash_rep_edges(reps, id_col, max_distance, max_bucket)
+    rep_pairs = _simhash_rep_edges(reps, id_col)
     cross = _expand_rep_pairs(rep_pairs, grp, ["distance"])
     return intra.select("id_a", "id_b", "distance").unionByName(cross)
 
 
-def _simhash_rep_edges(
-    reps: DataFrame,
-    id_col: str,
-    max_distance: int,
-    max_bucket: int,
-) -> DataFrame:
+def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
     """Verified (id_a < id_b, distance ≤ k) pairs over REPRESENTATIVE
     signatures — the shared candidate/guard/verify stage behind both
     the pair report (simhash_pairs) and the cluster report
     (simhash_clusters), mirroring ``_rep_neardup_edges`` for minhash."""
-    chunks = max_distance + 1
+    chunks = _SIMHASH_MAX_DISTANCE + 1
     width = 64 // chunks
     chunked = reps.select(
         id_col,
@@ -1051,7 +1039,7 @@ def _simhash_rep_edges(
     big = (
         chunked.groupBy("chunk", "ckey")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket)
+        .filter(F.col("__n") > _MAX_BUCKET)
         .select("chunk", "ckey")
     )
     chunked = chunked.join(F.broadcast(big), ["chunk", "ckey"], "left_anti")
@@ -1067,7 +1055,7 @@ def _simhash_rep_edges(
         .select("id_a", "id_b", "__ha", "__hb")
         .distinct()
         .withColumn("distance", F.bit_count(F.expr("__ha ^ __hb")))
-        .filter(F.col("distance") <= max_distance)
+        .filter(F.col("distance") <= _SIMHASH_MAX_DISTANCE)
         .select("id_a", "id_b", F.col("distance").cast("long").alias("distance"))
     )
     return rep_pairs
@@ -1077,11 +1065,7 @@ def simhash_clusters(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
-    max_distance: int = 3,
-    max_bucket: int = 20_000,
     portable_hash: bool = False,
-    max_iter: int = 25,
 ) -> DataFrame:
     """(id, canonical) SimHash near-dup clusters WITHOUT materializing
     the quadratic pair report — the dedup ACTION a 100 TB corpus runs.
@@ -1096,17 +1080,12 @@ def simhash_clusters(
     so the inherited label equals the min doc id over the cluster —
     the same contract as CC over the expanded pair graph.
     """
-    sigs = simhash_signature(df, id_col, text_col, n, portable_hash=portable_hash)
+    sigs = simhash_signature(df, id_col, text_col, portable_hash=portable_hash)
     grp = cache_tracked(_collapse_identical(sigs, id_col, key="simhash"))
     reps = grp.select(F.col("__rep").alias(id_col), "simhash")
-    rep_edges = _simhash_rep_edges(reps, id_col, max_distance, max_bucket).select(
-        "id_a", "id_b"
-    )
+    rep_edges = _simhash_rep_edges(reps, id_col).select("id_a", "id_b")
     comp = connected_components(
-        reps.select(F.col(id_col).alias("node")),
-        rep_edges,
-        node_col="node",
-        max_iter=max_iter,
+        reps.select(F.col(id_col).alias("node")), rep_edges
     )
     return (
         grp.select(F.col("__rep").alias("node"), "__members")
@@ -1118,46 +1097,39 @@ def simhash_clusters(
     )
 
 
+# Signature shape of the persisted LSH index: INDEX_BANDS bands of
+# INDEX_NUM_HASHES // INDEX_BANDS rows over word shingles. A persisted
+# index is only valid for the shape it was built with.
+INDEX_NUM_HASHES = 96
+INDEX_BANDS = 24
+
+
 def minhash_build_index(
-    base: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 1,
-    num_hashes: int = 96,
-    bands: int = 24,
+    base: DataFrame, id_col: str, text_col: str
 ) -> dict[str, DataFrame]:
     """Build the persistable LSH index of a corpus: duplicate-group
     table, per-representative hashed shingle sets, and the banded
     signature frame. In production these three frames ARE the index —
     materialized tables maintained across ingest batches (band frame
-    keyed by (band, bkey)); rebuilding happens only on parameter
-    changes. ``minhash_probe_index`` consumes them per delta batch.
+    keyed by (band, bkey)); rebuilding happens only on a change of
+    signature shape. ``minhash_probe_index`` consumes them per delta
+    batch.
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    sh = _shingled(base, id_col, text_col, n).filter(F.size("__sh") > 0)
+    sh = _shingled(base, id_col, text_col, 1).filter(F.size("__sh") > 0)
     grp = cache_tracked(_collapse_identical(sh, id_col, fingerprint=True))
     reps = _hashed_reps(grp, id_col)
     return {
         "grp": grp.select("__rep", "__members"),
         "reps": reps,
-        "banded": _banded(reps, id_col, num_hashes, bands),
+        "banded": _banded(reps, id_col, INDEX_NUM_HASHES, INDEX_BANDS),
     }
 
 
 def minhash_probe_index(
-    index: dict[str, DataFrame],
-    delta: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 1,
-    threshold: float = 0.9,
-    num_hashes: int = 96,
-    bands: int = 24,
-    max_bucket: int = 20_000,
+    index: dict[str, DataFrame], delta: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Probe a prebuilt LSH index with a delta batch: all pairs
-    (id_a < id_b, jaccard >= threshold) touching the delta — new docs
+    (id_a < id_b, jaccard >= 0.9) touching the delta — new docs
     vs the indexed corpus and vs each other. The incremental ingest
     loop: per batch the work is O(|delta| + collisions), never
     O(|base|²), and both sides are duplicate-group collapsed so the
@@ -1171,9 +1143,7 @@ def minhash_probe_index(
     deterministically. Candidate/guard/verify logic is the shared
     ``_rep_neardup_edges`` (probe × universe form).
     """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    d = minhash_build_index(delta, id_col, text_col, n, num_hashes, bands)
+    d = minhash_build_index(delta, id_col, text_col)
     grp_d, reps_d = d["grp"], d["reps"]
     probe = cache_tracked(d["banded"])
     intra = _intra_group_pairs(grp_d, "jaccard", 1.0)
@@ -1181,10 +1151,9 @@ def minhash_probe_index(
     rep_pairs = _rep_neardup_edges(
         reps_d,
         id_col,
-        threshold,
-        num_hashes,
-        bands,
-        max_bucket,
+        0.9,
+        INDEX_NUM_HASHES,
+        INDEX_BANDS,
         reps_universe=index["reps"].unionByName(reps_d),
         banded_probe=probe,
         banded_universe=index["banded"].unionByName(probe),
@@ -1196,39 +1165,15 @@ def minhash_probe_index(
     )
 
 
-def minhash_neardup_pairs_incremental(
-    base: DataFrame,
-    delta: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 1,
-    threshold: float = 0.9,
-    num_hashes: int = 96,
-    bands: int = 24,
-    max_bucket: int = 20_000,
-) -> DataFrame:
-    """Build-then-probe convenience wrapper (see minhash_build_index /
-    minhash_probe_index — the fixture persists the index instead)."""
-    idx = minhash_build_index(base, id_col, text_col, n, num_hashes, bands)
-    idx["banded"] = cache_tracked(idx["banded"])
-    return minhash_probe_index(
-        idx, delta, id_col, text_col, n, threshold, num_hashes, bands,
-        max_bucket,
-    )
-
-
 def minhash_neardup_clusters(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 1,
-    threshold: float = 0.9,
     num_hashes: int = 128,
     bands: int = 32,
-    max_bucket: int = 20_000,
-    max_iter: int = 25,
 ) -> DataFrame:
-    """(id, canonical) near-dup clusters WITHOUT materializing the
+    """(id, canonical) word-shingle near-dup clusters at Jaccard ≥ 0.9
+    WITHOUT materializing the
     quadratic pair report: label propagation runs on the collapsed
     REPRESENTATIVE graph (one node per distinct shingle set, verified
     rep-level edges from the shared ``_rep_neardup_edges``), and every
@@ -1244,18 +1189,13 @@ def minhash_neardup_clusters(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    sh = _shingled(df, id_col, text_col, n).filter(F.size("__sh") > 0)
+    sh = _shingled(df, id_col, text_col, 1).filter(F.size("__sh") > 0)
     grp = cache_tracked(_collapse_identical(sh, id_col, fingerprint=True))
     reps = _hashed_reps(grp, id_col)
     rep_edges = _rep_neardup_edges(
-        reps, id_col, threshold, num_hashes, bands, max_bucket
+        reps, id_col, 0.9, num_hashes, bands
     ).select("id_a", "id_b")
-    comp = connected_components(
-        reps.select(F.col(id_col).alias("node")),
-        rep_edges,
-        node_col="node",
-        max_iter=max_iter,
-    )
+    comp = connected_components(reps.select(F.col(id_col).alias("node")), rep_edges)
     # members inherit their representative's component label
     return (
         grp.select(F.col("__rep").alias("node"), "__members")

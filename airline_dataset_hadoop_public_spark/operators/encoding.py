@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
+
 
 def target_encode_oof(
     df: DataFrame,
@@ -76,7 +78,7 @@ def target_encode_oof(
             F.round(
                 ((F.col("sc") - F.col("s")) + m * F.col("gm"))
                 / ((F.col("nc") - F.col("n")) + m),
-                4,
+                ROUND_DIGITS,
             ).alias("target_enc"),
         )
     )

@@ -25,24 +25,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def permutation_triplets(
-    codes: DataFrame,
-    col: str,
-    out: tuple[str, str, str] = ("origin", "stop", "dest"),
-) -> DataFrame:
+def permutation_triplets(codes: DataFrame, col: str) -> DataFrame:
     """(origin, stop, dest) with stop ≠ origin ∧ stop ≠ dest.
 
     Note origin == dest is allowed, matching the reference's constraint
     set (README.md:465 constrains only the stop column).
     """
-    o, s, d = out
-    a = codes.select(F.col(col).alias(o))
-    b = codes.select(F.col(col).alias(s))
-    c = codes.select(F.col(col).alias(d))
+    a = codes.select(F.col(col).alias("origin"))
+    b = codes.select(F.col(col).alias("stop"))
+    c = codes.select(F.col(col).alias("dest"))
     return (
         a.crossJoin(F.broadcast(b))
         .crossJoin(F.broadcast(c))
-        .filter((F.col(s) != F.col(o)) & (F.col(s) != F.col(d)))
+        .filter((F.col("stop") != F.col("origin")) & (F.col("stop") != F.col("dest")))
     )
 
 

@@ -29,18 +29,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
+from ..runtime import cache_tracked, scoped_shuffle_partitions, shuffle_partitions
+
+# Every operator here reads edges as (src, dst) columns; pagerank also
+# reads the edge weight column w.
+
+_DAMPING = 0.85  # pagerank's damping factor
+_CHECKPOINT_INTERVAL = 5  # pagerank truncates rank lineage every this many rounds
+
 
 def pagerank(
     edges: DataFrame,
-    damping: float = 0.85,
     iters: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
     symmetric: bool = True,
-    checkpoint_interval: int = 5,
 ) -> DataFrame:
-    """Weighted PageRank over a directed edge list.
+    """Weighted PageRank (damping ``_DAMPING``) over a directed
+    (src, dst, w) edge list.
 
     Returns (pk, r) with sum(r) == 1 when every node has out-edges
     (no dangling-mass redistribution is performed; co-occurrence
@@ -55,13 +60,13 @@ def pagerank(
     from one shuffle, and with symmetric=True the node set is derived
     from the cached frame instead of re-scanning the edges.
     """
-    out = edges.groupBy(src).agg(F.sum(weight).alias("outw"))
+    out = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     contrib = (
-        edges.join(out, src)
+        edges.join(out, "src")
         .select(
-            F.col(src).alias("c_src"),
-            F.col(dst).alias("c_dst"),
-            (F.col(weight).cast("double") / F.col("outw")).alias("frac"),
+            F.col("src").alias("c_src"),
+            F.col("dst").alias("c_dst"),
+            (F.col("w").cast("double") / F.col("outw")).alias("frac"),
         )
         .cache()
     )
@@ -69,8 +74,8 @@ def pagerank(
         nodes = contrib.select(F.col("c_src").alias("pk")).distinct()
     else:
         nodes = (
-            edges.select(F.col(src).alias("pk"))
-            .union(edges.select(F.col(dst).alias("pk")))
+            edges.select(F.col("src").alias("pk"))
+            .union(edges.select(F.col("dst").alias("pk")))
             .distinct()
         )
     nodes = nodes.cache()
@@ -87,7 +92,7 @@ def pagerank(
         return empty
 
     ranks = nodes.select("pk", F.lit(1.0 / n).alias("r"))
-    base = (1.0 - damping) / n
+    base = (1.0 - _DAMPING) / n
     try:
         for i in range(iters):
             # ranks is node-cardinality (small vs edges): broadcast it
@@ -100,13 +105,13 @@ def pagerank(
             ranks = nodes.join(msgs, nodes.pk == msgs.c_dst, "left").select(
                 "pk",
                 (
-                    F.lit(base) + F.lit(damping) * F.coalesce("msum", F.lit(0.0))
+                    F.lit(base) + F.lit(_DAMPING) * F.coalesce("msum", F.lit(0.0))
                 ).alias("r"),
             )
             # truncate lineage only every few rounds: deep runs stay
             # O(interval) in plan size, shallow runs stay one fully
             # pipelined job (each eager checkpoint is its own job)
-            if (i + 1) % checkpoint_interval == 0 and (i + 1) < iters:
+            if (i + 1) % _CHECKPOINT_INTERVAL == 0 and (i + 1) < iters:
                 ranks = ranks.localCheckpoint(eager=True)
         ranks = ranks.localCheckpoint(eager=True)
     finally:
@@ -115,11 +120,7 @@ def pagerank(
     return ranks
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected graph, via DEGREE-ORDERED edge orientation (Suri &
     Vassilvitskii, WWW 2011 — the canonical scalable triangle join).
@@ -134,18 +135,16 @@ def triangle_counts(
     all three corners.
 
     Output: (node, degree, triangles, clustering) with clustering =
-    2*t / (d*(d-1)) rounded to 4 (0.0 for degree < 2).
+    2*t / (d*(d-1)) rounded to ``ROUND_DIGITS`` (0.0 for degree < 2).
     """
     canon = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("src"), F.col("dst")).alias("u"),
+            F.greatest(F.col("src"), F.col("dst")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    from ..runtime import cache_tracked
-
     canon = cache_tracked(canon)
     deg = (
         canon.select(F.col("u").alias("n"))
@@ -234,7 +233,7 @@ def triangle_counts(
                     * F.coalesce("triangles", F.lit(0))
                     / (F.col("deg") * (F.col("deg") - 1)),
                 ).otherwise(0.0),
-                4,
+                ROUND_DIGITS,
             ).alias("clustering"),
         )
     )
@@ -244,8 +243,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
     undirected: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: minimum hop distance from any seed, bounded
@@ -272,9 +269,12 @@ def bfs_hops(
       not the whole visited set, and the visited accumulation
       becomes a lazy union of the already-checkpointed frontiers
       (no per-round visited materialization);
-    - the forced broadcasts are frontier-sized; a graph whose
-      per-hop frontier outgrows broadcast would flip them to
-      shuffled joins (knob, not algorithm — same caveat as kcore).
+    - both joins of a round broadcast unconditionally: the expansion
+      broadcasts the current frontier, the anti-join the block of
+      earlier frontiers (the last two when undirected, all of them
+      otherwise). That holds while those stay far below node scale;
+      a graph whose frontiers approach node scale would need both as
+      shuffled joins instead.
     """
     frontier = (
         seeds.select("n").distinct().withColumn("hop", F.lit(0))
@@ -292,62 +292,50 @@ def bfs_hops(
     # expansion per 100k-row partition and is clamped to the session
     # default, so a frontier that grows toward graph scale restores
     # full parallelism. Each round's result is localCheckpoint-
-    # materialized before the conf can change again.
+    # materialized inside its scope.
     spark = frontier.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev_conf = spark.conf.get(key)
-    try:
-        for h in range(1, max_hops + 1):
-            n_f = frontier.count()
-            if n_f == 0:
-                break
-            spark.conf.set(
-                key,
-                str(max(2, min(int(prev_conf), 8 * n_f // 100_000 + 2))),
-            )
-            if undirected:
-                block = frontier.select("n")
-                if prev is not None:
-                    block = block.unionByName(prev.select("n"))
-            else:
-                block = None
-                for f in frontiers:
-                    fn = f.select("n")
-                    block = fn if block is None else block.unionByName(fn)
-            # the frontier side of the expansion join is force-
-            # broadcast (r11, ADVICE r10): the per-round clamp above
-            # sizes the shuffle count from the FRONTIER alone, and a
-            # localCheckpointed frontier carries no size stats — if
-            # the static planner picked a sort-merge join here, the
-            # FULL edge list would shuffle into ~2 partitions every
-            # round. Frontier-sized, consistent with the anti-join's
-            # F.broadcast(block); same scale caveat as documented.
+    session_default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for h in range(1, max_hops + 1):
+        n_f = frontier.count()
+        if n_f == 0:
+            break
+        if undirected:
+            block = frontier.select("n")
+            if prev is not None:
+                block = block.unionByName(prev.select("n"))
+        else:
+            block = None
+            for f in frontiers:
+                fn = f.select("n")
+                block = fn if block is None else block.unionByName(fn)
+        # the frontier side of the expansion join is force-broadcast
+        # (r11, ADVICE r10): the per-round clamp sizes the shuffle
+        # count from the FRONTIER alone, and a localCheckpointed
+        # frontier carries no size stats — if the static planner
+        # picked a sort-merge join here, the FULL edge list would
+        # shuffle into ~2 partitions every round. Frontier-sized,
+        # consistent with the anti-join's F.broadcast(block); same
+        # scale caveat as documented.
+        target = max(2, min(session_default, 8 * n_f // 100_000 + 2))
+        with shuffle_partitions(spark, target):
             nxt = (
-                F.broadcast(frontier).join(edges, frontier.n == F.col(src))
-                .select(F.col(dst).alias("n"))
+                F.broadcast(frontier).join(edges, frontier.n == F.col("src"))
+                .select(F.col("dst").alias("n"))
                 .join(F.broadcast(block), "n", "left_anti")
                 .distinct()
                 .withColumn("hop", F.lit(h))
                 .localCheckpoint(eager=True)
             )
-            prev = frontier
-            frontier = nxt
-            frontiers.append(nxt)
-    finally:
-        spark.conf.set(key, prev_conf)
+        prev = frontier
+        frontier = nxt
+        frontiers.append(nxt)
     out = frontiers[0]
     for f in frontiers[1:]:
         out = out.unionByName(f)
     return out
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Bounded k-core peeling: ``rounds`` iterations of "drop every
     node with fewer than k surviving neighbors", over a symmetric
     distinct edge list.  Returns the surviving edges.
@@ -371,15 +359,10 @@ def kcore_peel(
     only the matched rows), subtract, re-threshold.  The edge list is
     materialized once and filtered once at the end against the final
     keep set.  Per-round checkpoints truncate only node-sized frames.
-    The forced broadcasts are node-table-sized; at true scale a
-    billion-node graph would flip them to shuffled joins (same
-    caveat as the original shape — the knob, not the algorithm).
+    The forced broadcasts are node-table-sized and unconditional; at
+    true scale a billion-node graph would need them as shuffled joins.
     """
-    from ..runtime import scoped_shuffle_partitions
-
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    )
+    e = edges.select("src", "dst")
     if rounds <= 0:
         return e
     e = e.localCheckpoint(eager=True)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
+
 _GRAM_SCHEMA = "i BIGINT, j BIGINT, partial DOUBLE"
 _GRAM_SCHEMA_Q = "i BIGINT, j BIGINT, partial BIGINT"
 
@@ -37,7 +39,7 @@ _INT64_HEADROOM = 1 << 62
 def gram_matrix(
     df: DataFrame,
     vec_col: str,
-    ndigits: int = 4,
+    ndigits: int = ROUND_DIGITS,
     quantize_bits: int | None = None,
 ) -> DataFrame:
     """Upper-triangle Gramian of the embedding column: one row per

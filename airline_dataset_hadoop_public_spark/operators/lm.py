@@ -24,6 +24,9 @@ Frequent-token join skew (e.g. "the the") is the known hazard — AQE
 skew-join splitting handles it, and the count tables are orders of
 magnitude smaller than the exploded facts, so the join is
 fact × small-dim shaped even before AQE.
+
+Every operator reads documents as (doc_id, text) and keys its output
+by doc_id.
 """
 
 from __future__ import annotations
@@ -31,34 +34,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
 from ..functions.scalar import tokens, word_ngrams
 from ..runtime import cache_tracked
 
+_ADD_K = 0.5  # bigram_lm_scores' add-k smoothing
+_CLASSIFIER_BUCKETS = 1024  # hashed_ngram_classifier's feature space
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-    ndigits: int = 4,
-) -> DataFrame:
+
+def bigram_lm_scores(docs: DataFrame) -> DataFrame:
     """Per-document mean add-k bigram log-probability under the corpus
     LM.
 
     score(d) = avg over bigrams (w1,w2) of d of
                ln((c(w1,w2) + k) / (c(w1) + k·V))
 
-    where c(·) are corpus-wide counts and V the corpus vocabulary
-    size. Documents with < 2 tokens have no bigrams and are omitted
+    where k = ``_ADD_K``, c(·) are corpus-wide counts and V the corpus
+    vocabulary size. Documents with < 2 tokens have no bigrams and are omitted
     (inner-join semantics, mirrored by the oracle).
 
-    Output: (id, n_bigrams, lm_score) — lm_score rounded to `ndigits`.
+    Output: (doc_id, n_bigrams, lm_score) — lm_score rounded to
+    ``ROUND_DIGITS``.
     """
     # cached: `d` feeds both count tables and `bg` feeds both the
     # bigram counts and the score join — uncached, the fact-sized
     # tokenize + explode would run twice per consumer
     d = cache_tracked(
-        docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("ws"))
+        docs.select(F.col("doc_id").alias("__id"), tokens("text").alias("ws"))
     )
 
     uni = (
@@ -87,23 +89,18 @@ def bigram_lm_scores(
         .withColumn(
             "__lp",
             F.log(
-                (F.col("c2") + F.lit(k))
-                / (F.col("c1") + F.lit(k) * F.col("vsz"))
+                (F.col("c2") + F.lit(_ADD_K))
+                / (F.col("c1") + F.lit(_ADD_K) * F.col("vsz"))
             ),
         )
     )
     return scored.groupBy("__id").agg(
         F.count("*").alias("n_bigrams"),
-        F.round(F.avg("__lp"), ndigits).alias("lm_score"),
-    ).select(F.col("__id").alias(id_col), "n_bigrams", "lm_score")
+        F.round(F.avg("__lp"), ROUND_DIGITS).alias("lm_score"),
+    ).select(F.col("__id").alias("doc_id"), "n_bigrams", "lm_score")
 
 
-def dup_ngram_char_fracs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ndigits: int = 4,
-) -> DataFrame:
+def dup_ngram_char_fracs(docs: DataFrame) -> DataFrame:
     """Gopher repetition signals per document.
 
     - dup3_frac: of the total character mass of all 3-gram occurrences
@@ -113,9 +110,9 @@ def dup_ngram_char_fracs(
       frequent 2-gram (ties broken by the lexically smallest gram).
 
     Documents with < 3 tokens are omitted (no 3-grams). Output:
-    (id, n_grams3, dup3_frac, top2_frac), fractions rounded.
+    (doc_id, n_grams3, dup3_frac, top2_frac), fractions rounded.
     """
-    d = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("ws"))
+    d = docs.select(F.col("doc_id").alias("__id"), tokens("text").alias("ws"))
     d = (
         d.withColumn("g3", word_ngrams("ws", 3))
         .withColumn("g2", word_ngrams("ws", 2))
@@ -136,7 +133,7 @@ def dup_ngram_char_fracs(
         F.round(
             F.sum(F.when(F.col("cnt") >= 2, F.col("mass")).otherwise(F.lit(0)))
             / F.sum("mass"),
-            ndigits,
+            ROUND_DIGITS,
         ).alias("dup3_frac"),
     )
 
@@ -148,23 +145,17 @@ def dup_ngram_char_fracs(
         .filter(F.col("__rn") == 1)
         .select(
             "__id",
-            F.round(F.col("mass") / F.col("__total"), ndigits).alias("top2_frac"),
+            F.round(F.col("mass") / F.col("__total"), ROUND_DIGITS).alias("top2_frac"),
         )
     )
 
     return (
         d3.join(t2, "__id")
-        .select(F.col("__id").alias(id_col), "n_grams3", "dup3_frac", "top2_frac")
+        .select(F.col("__id").alias("doc_id"), "n_grams3", "dup3_frac", "top2_frac")
     )
 
 
-def hashed_ngram_classifier(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 1024,
-    ndigits: int = 4,
-) -> DataFrame:
+def hashed_ngram_classifier(docs: DataFrame) -> DataFrame:
     """Linear quality classifier over hashed uni+bigram features —
     fasttext-style INFERENCE as a pure declarative plan (the shape a
     distilled quality filter runs at 100 TB: explode features, map to
@@ -172,18 +163,19 @@ def hashed_ngram_classifier(
     the doc key, no model table, no UDF).
 
     Weights are pseudo-random but fixed, derived from md5 of the
-    bucket id (portable to the DuckDB oracle): w(b) ∈ [-1, 1] in
-    0.001 steps. p = sigmoid(mean(w)); keep = p ≥ 0.5.
+    bucket id b < ``_CLASSIFIER_BUCKETS`` (portable to the DuckDB
+    oracle): w(b) ∈ [-1, 1] in 0.001 steps. p = sigmoid(mean(w));
+    keep = p ≥ 0.5.
 
-    Output: (id, n_feats, p_keep, keep).
+    Output: (doc_id, n_feats, p_keep, keep).
     """
-    d = docs.select(F.col(id_col).alias("__id"), tokens(text_col).alias("ws"))
+    d = docs.select(F.col("doc_id").alias("__id"), tokens("text").alias("ws"))
     feats = d.withColumn("bg", word_ngrams("ws", 2)).select(
         "__id", F.explode(F.concat(F.col("ws"), F.col("bg"))).alias("f")
     )
     bk = (
         F.conv(F.substring(F.md5("f"), 1, 15), 16, 10).cast("bigint")
-        % F.lit(buckets)
+        % F.lit(_CLASSIFIER_BUCKETS)
     )
     wexpr = (
         (
@@ -203,20 +195,17 @@ def hashed_ngram_classifier(
         scored.groupBy("__id")
         .agg(
             F.count("*").alias("n_feats"),
-            F.round(p, ndigits).alias("p_keep"),
+            F.round(p, ROUND_DIGITS).alias("p_keep"),
             (p >= 0.5).cast("int").alias("keep"),
         )
-        .select(F.col("__id").alias(id_col), "n_feats", "p_keep", "keep")
+        .select(F.col("__id").alias("doc_id"), "n_feats", "p_keep", "keep")
     )
 
 
 def dsir_importance_weights(
     docs: DataFrame,
     target: "F.Column",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 256,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Per-document DSIR importance weights (Data Selection via
     Importance Resampling, Xie et al. 2023, arXiv:2302.03169): featurize
@@ -241,16 +230,16 @@ def dsir_importance_weights(
     (that is the point of hashing) and the md5-derived bucket matches
     the repo's portable-hash convention for engine-identical results.
 
-    Output: (id, is_target, n_feats, dsir_weight) for every document
-    with ≥1 token.
+    Output: (doc_id, is_target, n_feats, dsir_weight) for every
+    document with ≥1 token.
     """
     d = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target.alias("is_target"),
-        tokens(text_col).alias("__t"),
+        tokens("text").alias("__t"),
     ).filter(F.size("__t") > 0)
     feats = d.select(
-        id_col,
+        "doc_id",
         "is_target",
         F.explode(
             F.concat(F.col("__t"), word_ngrams("__t", 2))
@@ -264,7 +253,7 @@ def dsir_importance_weights(
     # (≤ docs × buckets rows), so the tokenize/explode/hash never
     # re-runs — the distributions are sums of the per-doc counts
     doc_feats = cache_tracked(
-        feats.groupBy(id_col, "is_target", "__b").agg(
+        feats.groupBy("doc_id", "is_target", "__b").agg(
             F.count(F.lit(1)).alias("__n")
         )
     )
@@ -295,10 +284,10 @@ def dsir_importance_weights(
     )
     return (
         doc_feats.join(F.broadcast(ratio), "__b")
-        .groupBy(id_col, "is_target")
+        .groupBy("doc_id", "is_target")
         .agg(
             F.sum("__n").alias("n_feats"),
-            F.round(F.sum(F.col("__n") * F.col("__lr")), ndigits).alias(
+            F.round(F.sum(F.col("__n") * F.col("__lr")), ROUND_DIGITS).alias(
                 "dsir_weight"
             ),
         )

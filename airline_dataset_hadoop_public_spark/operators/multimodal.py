@@ -4,8 +4,8 @@ Images/audio/video are carried as opaque `binary` columns with typed
 metadata alongside. The Spark-side machinery here is real and tested —
 schema handling, Arrow batching through `mapInPandas`, partition-
 parallel feature extraction — while the actual media decoding is
-stubbed: the container has no image/audio libraries, so `decode=True`
-raises NotImplementedError and the default path computes deterministic
+stubbed: the container has no image/audio libraries, so `decode_media`
+raises NotImplementedError and the feature path computes deterministic
 byte-level features (length, first byte, a simple checksum) that an
 oracle can verify. Swapping the stub for PIL/librosa later changes
 only `_decode_batch`, not the Spark plumbing.
@@ -14,6 +14,9 @@ Design notes for 100 TB: mapInPandas streams Arrow batches — per-task
 memory is bounded by `spark.sql.execution.arrow.maxRecordsPerBatch`;
 binary payloads never pass through the driver; feature extraction is
 a narrow transformation (no shuffle).
+
+Every kernel reads the media blob from a binary column named
+``payload`` (see ``with_binary_payload``).
 """
 
 from __future__ import annotations
@@ -25,27 +28,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "id bigint, n_bytes bigint, first_byte bigint, checksum bigint"
+# sample_frames: every _FRAME_STRIDE-th byte, at most _MAX_FRAMES frames
+_FRAME_STRIDE = 16
+_MAX_FRAMES = 8
+# resize_media's target dimensions
+_TARGET_W = 224
+_TARGET_H = 224
 
 
-def with_binary_payload(
-    df: DataFrame, src_col: str, out: str = "payload"
-) -> DataFrame:
-    """Materialize a binary payload column (UTF-8 bytes of a string
-    column here; in a real pipeline this is the raw media blob read
-    from object storage)."""
-    return df.withColumn(out, F.encode(F.col(src_col), "UTF-8"))
+def with_binary_payload(df: DataFrame, src_col: str) -> DataFrame:
+    """Materialize the binary ``payload`` column (UTF-8 bytes of a
+    string column here; in a real pipeline this is the raw media blob
+    read from object storage)."""
+    return df.withColumn("payload", F.encode(F.col(src_col), "UTF-8"))
 
 
-def _non_null_payload(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+def _non_null_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Narrow (id, payload) projection minus NULL payloads.
 
     A missing blob is routine at 100 TB (failed fetch, tombstoned
     object); the media kernels skip it instead of crashing the batch.
     Oracles mirror with WHERE text IS NOT NULL.
     """
-    return df.where(F.col(payload_col).isNotNull()).select(
-        F.col(id_col), F.col(payload_col).alias("payload")
-    )
+    return df.where(F.col("payload").isNotNull()).select(id_col, "payload")
 
 
 def _feature_batch(
@@ -65,12 +70,10 @@ def _feature_batch(
         )
 
 
-def extract_byte_features(
-    df: DataFrame, id_col: str, payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched per-partition feature extraction over a binary
-    column. Deterministic stub features (see module docstring)."""
-    narrow = _non_null_payload(df, id_col, payload_col)
+def extract_byte_features(df: DataFrame, id_col: str) -> DataFrame:
+    """Arrow-batched per-partition feature extraction over the binary
+    payload column. Deterministic stub features (see module docstring)."""
+    narrow = _non_null_payload(df, id_col)
     return narrow.mapInPandas(
         lambda it: _feature_batch(it, id_col), schema=FEATURE_SCHEMA
     )
@@ -80,13 +83,13 @@ FRAME_SCHEMA = "id bigint, frame_idx bigint, byte_val bigint"
 
 
 def _frame_batch(
-    batches: Iterator[pd.DataFrame], id_name: str, stride: int, max_frames: int
+    batches: Iterator[pd.DataFrame], id_name: str
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         ids, idxs, vals = [], [], []
         for rid, payload in zip(pdf[id_name], pdf["payload"]):
-            for i in range(max_frames):
-                pos = i * stride
+            for i in range(_MAX_FRAMES):
+                pos = i * _FRAME_STRIDE
                 if pos >= len(payload):
                     break
                 ids.append(rid)
@@ -103,15 +106,9 @@ def _frame_batch(
         )
 
 
-def sample_frames(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-    stride: int = 16,
-    max_frames: int = 8,
-) -> DataFrame:
+def sample_frames(df: DataFrame, id_col: str) -> DataFrame:
     """Frame-sampling plumbing for video-like payloads: emit every
-    `stride`-th byte (up to `max_frames`) as one row per "frame".
+    `_FRAME_STRIDE`-th byte (up to `_MAX_FRAMES`) as one row per "frame".
 
     In a real pipeline the body of `_frame_batch` seeks keyframes with
     an av/ffmpeg decoder; here the deterministic byte sampler stands in
@@ -119,14 +116,13 @@ def sample_frames(
     the parts Spark cares about — are real and oracle-checked. One
     narrow mapInPandas pass, no shuffle, no driver involvement.
     """
-    narrow = _non_null_payload(df, id_col, payload_col)
+    narrow = _non_null_payload(df, id_col)
     return narrow.mapInPandas(
-        lambda it: _frame_batch(it, id_col, stride, max_frames),
-        schema=FRAME_SCHEMA,
+        lambda it: _frame_batch(it, id_col), schema=FRAME_SCHEMA
     )
 
 
-def decode_media(df: DataFrame, payload_col: str = "payload"):
+def decode_media(df: DataFrame):
     """Real media decode — requires image/audio libs absent from this
     environment. The Spark plumbing above is the tested surface."""
     raise NotImplementedError(
@@ -142,12 +138,9 @@ META_SCHEMA = (
 
 
 def _resize_batch(
-    batches: Iterator[pd.DataFrame],
-    id_name: str,
-    target_w: int,
-    target_h: int,
+    batches: Iterator[pd.DataFrame], id_name: str
 ) -> Iterator[pd.DataFrame]:
-    cap = (target_w * target_h) // 64
+    cap = (_TARGET_W * _TARGET_H) // 64
     for pdf in batches:
         ids, mimes, sw, sh, ow, oh, ob = [], [], [], [], [], [], []
         for rid, payload in zip(pdf[id_name], pdf["payload"]):
@@ -160,8 +153,8 @@ def _resize_batch(
             mimes.append("image/stub")
             sw.append(64 + first % 192)
             sh.append(64 + n % 192)
-            ow.append(target_w)
-            oh.append(target_h)
+            ow.append(_TARGET_W)
+            oh.append(_TARGET_H)
             ob.append(min(n, cap))
         yield pd.DataFrame(
             {
@@ -176,26 +169,19 @@ def _resize_batch(
         )
 
 
-def resize_media(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-    target_w: int = 224,
-    target_h: int = 224,
-) -> DataFrame:
+def resize_media(df: DataFrame, id_col: str) -> DataFrame:
     """Resize plumbing for image-like payloads: typed metadata out
     (mime, source dims, target dims, output size), one narrow
     mapInPandas pass, no shuffle.
 
     A real pipeline swaps the body of `_resize_batch` for
-    PIL.Image.open(...).resize((target_w, target_h)) and emits the
+    PIL.Image.open(...).resize((_TARGET_W, _TARGET_H)) and emits the
     re-encoded bytes; the stub derives dimensions/sizes
     deterministically from the payload so the schema, Arrow batch
     shape, and partitioning — the Spark-side contract — are
     oracle-verified. See `decode_media` for the honest decode guard.
     """
-    narrow = _non_null_payload(df, id_col, payload_col)
+    narrow = _non_null_payload(df, id_col)
     return narrow.mapInPandas(
-        lambda it: _resize_batch(it, id_col, target_w, target_h),
-        schema=META_SCHEMA,
+        lambda it: _resize_batch(it, id_col), schema=META_SCHEMA
     )

@@ -23,10 +23,9 @@ is pinned (tests/test_plan_shapes.py), because losing the literal —
 e.g. rewriting the filter against a computed per-stratum k — would
 silently revert to one whole-stratum sort task per stratum.
 
-Determinism contract (FIXTURES.md §F discipline): production callers
-pass their own uniform column (any per-row RNG); the DEFAULT u is a
-portable multiplicative-hash fraction both engines compute exactly in
-64-bit integer arithmetic —
+Determinism contract (FIXTURES.md §F discipline): u is a portable
+multiplicative-hash fraction both engines compute exactly in 64-bit
+integer arithmetic —
 
     v = (id * 2654435761) % 999999937        (Knuth multiplicative
     u = (v + 0.5) / 999999937                 hashing; prime modulus)
@@ -36,7 +35,7 @@ id*2654435761 stays under 2^63 for ids < 3,474,701,543 (~3.47e9 —
 silently while DuckDB raises, r5 review finding), so within that id
 domain DuckDB's checked BIGINT multiply never overflows and the
 oracle reproduces u bit-for-bit. Callers with larger id domains must
-pre-fold ids (e.g. pmod(id, p)) or pass their own uniform column. ``-ln(u)/w`` then differs across engines by at most an
+pre-fold ids (e.g. pmod(id, p)). ``-ln(u)/w`` then differs across engines by at most an
 ulp (both use a ≤1-ulp libm log); selection flips only if the k-th /
 (k+1)-th ES keys per stratum are within float noise, which the
 fixture test bounds explicitly (min observed relative margin must
@@ -70,7 +69,6 @@ def weighted_reservoir_per_key(
     id_col: str,
     weight_col: str,
     k: int,
-    u: Column | None = None,
 ) -> DataFrame:
     """k-sample per key_col, weighted by weight_col, via A-ES top-k.
 
@@ -84,9 +82,8 @@ def weighted_reservoir_per_key(
         & F.col(id_col).isNotNull()
         & F.col(key_col).isNotNull()
     )
-    uu = portable_unit_hash(id_col) if u is None else u
     keyed = c.withColumn(
-        "es_key", -F.log(uu) / F.col(weight_col).cast("double")
+        "es_key", -F.log(portable_unit_hash(id_col)) / F.col(weight_col).cast("double")
     )
     w = Window.partitionBy(key_col).orderBy(
         F.asc("es_key"), F.asc(id_col)

@@ -10,15 +10,16 @@ Two tiers:
   the scan is embarrassingly parallel.
 - ``ivf_topk`` — IVF-style pruned search: vectors are assigned to
   their nearest centroid once (the "index build" — a scan × small
-  broadcast); a probe searches only its `nprobe` nearest centroids'
-  partitions. Deterministic centroid choice (caller supplies them) so
-  results are reproducible and oracle-checkable. Recall < 1 by
+  broadcast); a probe searches only its ``_IVF_NPROBE`` nearest
+  centroids' partitions. Deterministic centroid choice (caller
+  supplies them) so results are reproducible and oracle-checkable. Recall < 1 by
   design; the oracle replicates the same pruning, so the gate checks
   the ALGORITHM, not approximation error.
 
 `embedding_cosine_pairs` is the near-dup variant (all pairs ≥
-threshold) — quadratic; use it on bounded/bucketed inputs only, which
-is why it takes a pre-bucketed frame rather than bucketing internally.
+``_PAIR_THRESHOLD``) — quadratic; use it on bounded/bucketed inputs
+only, which is why it takes a pre-bucketed frame rather than
+bucketing internally.
 """
 
 from __future__ import annotations
@@ -28,8 +29,16 @@ from pyspark.sql import functions as F
 
 import pandas as pd
 
+from .aggregates import ROUND_DIGITS
 from .topk import top_k_per_group
 from ..runtime import cache_tracked
+
+# Every operator here reads vectors as (vec_id, embedding) — the
+# embeddings table's columns — and centroids in the same shape.
+
+_IVF_K = 5  # neighbours per probe in ivf_topk
+_IVF_NPROBE = 2  # centroids searched per probe in ivf_topk
+_PAIR_THRESHOLD = 0.4  # cosine cut of embedding_cosine_pairs and srp_lsh_pairs
 
 
 def vector_is_valid(vec_col: str):
@@ -52,9 +61,9 @@ def vector_is_valid(vec_col: str):
     )
 
 
-def _rename_vec(df: DataFrame, id_col: str, vec_col: str, suffix: str) -> DataFrame:
+def _rename_vec(df: DataFrame, suffix: str) -> DataFrame:
     return df.select(
-        F.col(id_col).alias(f"id_{suffix}"), F.col(vec_col).alias(f"vec_{suffix}")
+        F.col("vec_id").alias(f"id_{suffix}"), F.col("embedding").alias(f"vec_{suffix}")
     )
 
 
@@ -143,12 +152,9 @@ _CELL_PAIR_CHUNK = 1 << 16
 
 def _cell_pair_scores(
     assigned: DataFrame,
-    id_col: str,
-    vec_col: str,
     *,
     threshold: float | None = None,
     topk: int | None = None,
-    cell_col: str = "centroid_id",
 ) -> DataFrame:
     """In-cell pairwise cosine scoring with ONE boundary crossing per
     vector (optimization guide §4.1/§8): the per-cell self-join used
@@ -190,7 +196,7 @@ def _cell_pair_scores(
 
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in assigned.schema.fields
-    )[id_col]
+    )["vec_id"]
     if threshold is not None:
         out_schema = f"id_a {id_type}, id_b {id_type}, __cos double"
     else:
@@ -207,9 +213,9 @@ def _cell_pair_scores(
             )
         # sort by id so the i<j pair expansion and tie-breaks are
         # deterministic regardless of Arrow batch arrival order
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy())  # (n, d) float64
+        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy()
+        V = np.stack(pdf["embedding"].to_numpy())  # (n, d) float64
         out_a: list = []
         out_b: list = []
         out_c: list = []
@@ -256,8 +262,8 @@ def _cell_pair_scores(
         )
 
     return (
-        assigned.select(cell_col, id_col, vec_col)
-        .groupBy(cell_col)
+        assigned.select("centroid_id", "vec_id", "embedding")
+        .groupBy("centroid_id")
         .applyInPandas(score_cell, out_schema)
     )
 
@@ -265,18 +271,15 @@ def _cell_pair_scores(
 def brute_force_topk(
     vectors: DataFrame,
     probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
-    ndigits: int = 4,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per probe (self excluded).
 
     Output: (probe_id, neighbor_id, cosine). Ranking uses unrounded
     cosine with neighbor_id tie-break; the emitted value is rounded.
     """
-    p = _rename_vec(unit_normalize(probes, vec_col), id_col, vec_col, "probe")
-    v = _rename_vec(unit_normalize(vectors, vec_col), id_col, vec_col, "n")
+    p = _rename_vec(unit_normalize(probes, "embedding"), "probe")
+    v = _rename_vec(unit_normalize(vectors, "embedding"), "n")
     scored = (
         v.crossJoin(F.broadcast(p))
         .filter(F.col("id_n") != F.col("id_probe"))
@@ -288,65 +291,55 @@ def brute_force_topk(
     return top.select(
         F.col("id_probe").alias("probe_id"),
         F.col("id_n").alias("neighbor_id"),
-        F.round("__cos", ndigits).alias("cosine"),
+        F.round("__cos", ROUND_DIGITS).alias("cosine"),
     )
 
 
-def assign_to_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-) -> DataFrame:
+def assign_to_centroids(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid (max cosine) assignment — the IVF index build.
 
     Ties break on ascending centroid id. Output: vectors + centroid_id.
     """
-    c = _rename_vec(unit_normalize(centroids, vec_col), id_col, vec_col, "c")
+    c = _rename_vec(unit_normalize(centroids, "embedding"), "c")
     scored = (
-        unit_normalize(vectors, vec_col, "__nvec")
+        unit_normalize(vectors, "embedding", "__nvec")
         .crossJoin(F.broadcast(c))
         .withColumn("__cos", dot_product("__nvec", "vec_c"))
     )
-    best = top_k_per_group(scored, [id_col], [F.desc("__cos"), F.asc("id_c")], 1)
-    return best.select(id_col, vec_col, F.col("id_c").alias(centroid_id))
+    best = top_k_per_group(scored, ["vec_id"], [F.desc("__cos"), F.asc("id_c")], 1)
+    return best.select("vec_id", "embedding", F.col("id_c").alias("centroid_id"))
 
 
 def ivf_topk(
     vectors: DataFrame,
     centroids: DataFrame,
     probes: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-    ndigits: int = 4,
 ) -> DataFrame:
-    """IVF-pruned cosine top-k: search only the `nprobe` centroids
-    nearest each probe. Output: (probe_id, neighbor_id, cosine)."""
-    assigned = unit_normalize(
-        assign_to_centroids(vectors, centroids, id_col, vec_col), vec_col
-    )
-    c = _rename_vec(unit_normalize(centroids, vec_col), id_col, vec_col, "c")
-    p = _rename_vec(unit_normalize(probes, vec_col), id_col, vec_col, "probe")
+    """IVF-pruned cosine top-``_IVF_K``: search only the
+    ``_IVF_NPROBE`` centroids nearest each probe. Output: (probe_id,
+    neighbor_id, cosine)."""
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
+    c = _rename_vec(unit_normalize(centroids, "embedding"), "c")
+    p = _rename_vec(unit_normalize(probes, "embedding"), "probe")
     probe_cells = top_k_per_group(
         p.crossJoin(F.broadcast(c)).withColumn(
             "__pcos", dot_product("vec_probe", "vec_c")
         ),
         ["id_probe"],
         [F.desc("__pcos"), F.asc("id_c")],
-        nprobe,
+        _IVF_NPROBE,
     ).select("id_probe", "vec_probe", F.col("id_c").alias("centroid_id"))
     cand = assigned.join(
         F.broadcast(probe_cells), "centroid_id"
-    ).filter(F.col(id_col) != F.col("id_probe"))
-    scored = cand.withColumn("__cos", dot_product("vec_probe", vec_col))
-    top = top_k_per_group(scored, ["id_probe"], [F.desc("__cos"), F.asc(id_col)], k)
+    ).filter(F.col("vec_id") != F.col("id_probe"))
+    scored = cand.withColumn("__cos", dot_product("vec_probe", "embedding"))
+    top = top_k_per_group(
+        scored, ["id_probe"], [F.desc("__cos"), F.asc("vec_id")], _IVF_K
+    )
     return top.select(
         F.col("id_probe").alias("probe_id"),
-        F.col(id_col).alias("neighbor_id"),
-        F.round("__cos", ndigits).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.round("__cos", ROUND_DIGITS).alias("cosine"),
     )
 
 
@@ -354,8 +347,6 @@ def kmeans_fit(
     vectors: DataFrame,
     k: int,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic spherical k-means (Lloyd, cosine assignment):
     returns (centroid_id, centroid) after `iters` rounds.
@@ -369,23 +360,22 @@ def kmeans_fit(
     only the iteration counter. Empty clusters keep their previous
     centroid (standard Lloyd fallback).
     """
-    normed = unit_normalize(vectors, vec_col)
+    normed = unit_normalize(vectors, "embedding")
     centroids = (
-        normed.orderBy(id_col)
+        normed.orderBy("vec_id")
         .limit(k)
         .select(
-            F.row_number().over(Window.orderBy(id_col))
-            .cast("long").alias("__cid"),
-            F.col(vec_col),
+            F.row_number().over(Window.orderBy("vec_id"))
+            .cast("long").alias("vec_id"),
+            F.col("embedding"),
         )
-        .select(F.col("__cid").alias(id_col), vec_col)
         .localCheckpoint(eager=True)
     )
     for _ in range(iters):
-        assigned = assign_to_centroids(normed, centroids, id_col, vec_col)
+        assigned = assign_to_centroids(normed, centroids)
         means = (
             assigned.select(
-                "centroid_id", F.posexplode(vec_col).alias("pos", "x")
+                "centroid_id", F.posexplode("embedding").alias("pos", "x")
             )
             .groupBy("centroid_id", "pos")
             .agg(F.avg("x").alias("m"))
@@ -397,30 +387,25 @@ def kmeans_fit(
             )
             .select(
                 "centroid_id",
-                F.expr("transform(__pm, s -> s.m)").alias(vec_col),
+                F.expr("transform(__pm, s -> s.m)").alias("embedding"),
             )
         )
         # empty clusters: keep previous centroid
         kept = centroids.join(
-            means.select(F.col("centroid_id").alias(id_col)), id_col, "left_anti"
+            means.select(F.col("centroid_id").alias("vec_id")), "vec_id", "left_anti"
         )
         centroids = (
-            means.select(F.col("centroid_id").alias(id_col), vec_col)
+            means.select(F.col("centroid_id").alias("vec_id"), "embedding")
             .unionByName(kept)
             .localCheckpoint(eager=True)
         )
     return centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid")
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid")
     )
 
 
 def cosine_pairs_within_cells(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    ndigits: int = 4,
+    vectors: DataFrame, centroids: DataFrame, threshold: float = 0.4
 ) -> DataFrame:
     """The scale path for embedding near-dup: pair vectors only within
     their IVF cell (nearest-centroid partition) instead of all-pairs.
@@ -437,20 +422,14 @@ def cosine_pairs_within_cells(
     # per pair (O(n_c²)·2d doubles of serialization); the per-cell
     # kernel ships each vector once and computes the identical einsum
     # per pair — see _cell_pair_scores for the bit-exactness contract.
-    assigned = unit_normalize(
-        assign_to_centroids(vectors, centroids, id_col, vec_col), vec_col
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
+    return _cell_pair_scores(assigned, threshold=threshold).select(
+        "id_a", "id_b", F.round("__cos", ROUND_DIGITS).alias("cosine")
     )
-    return _cell_pair_scores(
-        assigned, id_col, vec_col, threshold=threshold
-    ).select("id_a", "id_b", F.round("__cos", ndigits).alias("cosine"))
 
 
 def semantic_dedup_flags(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
+    vectors: DataFrame, centroids: DataFrame, threshold: float = 0.4
 ) -> DataFrame:
     """SemDeDup-style semantic dedup decision (cluster-then-prune, the
     layout of Abbas et al. 2023, arXiv:2303.09540): within each
@@ -463,41 +442,33 @@ def semantic_dedup_flags(
     ``cosine_pairs_within_cells``). All state is bounded by the
     in-cell pair set; the drop set is a distinct projection of it.
     """
-    pairs = cosine_pairs_within_cells(
-        vectors, centroids, id_col, vec_col, threshold
-    )
+    pairs = cosine_pairs_within_cells(vectors, centroids, threshold)
     dropped = (
-        pairs.select(F.col("id_b").alias(id_col))
+        pairs.select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("__drop", F.lit(True))
     )
     # invalid vectors are outside the decision (unit_normalize
     # contract), so the flag table also excludes them.
-    vectors = vectors.where(vector_is_valid(vec_col))
-    return vectors.select(id_col).join(dropped, id_col, "left").select(
-        id_col, F.coalesce("__drop", F.lit(False)).alias("dropped")
+    vectors = vectors.where(vector_is_valid("embedding"))
+    return vectors.select("vec_id").join(dropped, "vec_id", "left").select(
+        "vec_id", F.coalesce("__drop", F.lit(False)).alias("dropped")
     )
 
 
-def embedding_cosine_pairs(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    ndigits: int = 4,
-) -> DataFrame:
-    """All (id_a < id_b) pairs with cosine ≥ threshold — embedding
+def embedding_cosine_pairs(vectors: DataFrame) -> DataFrame:
+    """All (id_a < id_b) pairs with cosine ≥ ``_PAIR_THRESHOLD`` — embedding
     near-dup detection. Quadratic self-join: bound/bucket the input
     first at scale (e.g. via `assign_to_centroids` and pairing within
     cells)."""
-    normed = unit_normalize(vectors, vec_col)
-    a = _rename_vec(normed, id_col, vec_col, "a")
-    b = _rename_vec(normed, id_col, vec_col, "b")
+    normed = unit_normalize(vectors, "embedding")
+    a = _rename_vec(normed, "a")
+    b = _rename_vec(normed, "b")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("__cos", dot_product("vec_a", "vec_b"))
-        .filter(F.col("__cos") >= threshold)
-        .select("id_a", "id_b", F.round("__cos", ndigits).alias("cosine"))
+        .filter(F.col("__cos") >= _PAIR_THRESHOLD)
+        .select("id_a", "id_b", F.round("__cos", ROUND_DIGITS).alias("cosine"))
     )
 
 
@@ -519,22 +490,26 @@ def _srp_plane_weights(planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-_SRP_KERNELS: dict[tuple[int, int, int], object] = {}
+# srp_lsh_pairs' banding: _SRP_BANDS tables of _SRP_BITS-bit sign
+# codes over _SRP_DIM-dimensional vectors
+_SRP_DIM = 64
+_SRP_BANDS = 12
+_SRP_BITS = 4
+
+_SRP_KERNEL = None
 
 
-def _srp_kernel(bands: int, bits_per_band: int, dim: int):
-    """vector → array of `bands` sign-code bigints, replicating the
+def _srp_kernel():
+    """vector → array of `_SRP_BANDS` sign-code bigints, replicating the
     sequential dot-product fold bit-for-bit (see srp_lsh_pairs)."""
-    key = (bands, bits_per_band, dim)
-    if key not in _SRP_KERNELS:
+    global _SRP_KERNEL
+    if _SRP_KERNEL is None:
         import numpy as np
 
         planes = np.array(
-            _srp_plane_weights(bands * bits_per_band, dim), dtype=np.float64
+            _srp_plane_weights(_SRP_BANDS * _SRP_BITS, _SRP_DIM), dtype=np.float64
         ).T  # (dim, n_planes)
-        bit_vals = np.array(
-            [1 << b for b in range(bits_per_band)], dtype=np.int64
-        )
+        bit_vals = np.array([1 << b for b in range(_SRP_BITS)], dtype=np.int64)
 
         @F.pandas_udf("array<bigint>")
         def kernel(vecs: pd.Series) -> pd.Series:
@@ -545,33 +520,24 @@ def _srp_kernel(bands: int, bits_per_band: int, dim: int):
             # one FMA per dimension keeps the oracle's left-to-right
             # IEEE rounding order — np.dot's blocked summation would
             # not, and a near-zero dot's sign IS the band code
-            for j in range(dim):
+            for j in range(_SRP_DIM):
                 acc += V[:, j, None] * planes[j]
-            bits = (acc >= 0).reshape(-1, bands, bits_per_band)
+            bits = (acc >= 0).reshape(-1, _SRP_BANDS, _SRP_BITS)
             codes = (bits * bit_vals).sum(axis=2, dtype=np.int64)
             return pd.Series(list(codes))
 
-        _SRP_KERNELS[key] = kernel
-    return _SRP_KERNELS[key]
+        _SRP_KERNEL = kernel
+    return _SRP_KERNEL
 
 
-def srp_lsh_pairs(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bands: int = 12,
-    bits_per_band: int = 4,
-    threshold: float = 0.4,
-    ndigits: int = 4,
-) -> DataFrame:
+def srp_lsh_pairs(vectors: DataFrame) -> DataFrame:
     """Near-neighbour (id_a < id_b, cosine) pairs via banded signed-
     random-projection LSH (Charikar, STOC'02 hyperplane hashes; LSH
-    banding per Leskovec/Rajaraman/Ullman ch.3): each of `bands`
-    tables hashes a vector to a `bits_per_band`-bit sign code;
+    banding per Leskovec/Rajaraman/Ullman ch.3): each of `_SRP_BANDS`
+    tables hashes a vector to a `_SRP_BITS`-bit sign code;
     vectors colliding in ANY band become candidates, verified with
-    exact cosine >= threshold. Recall for angle t is
-    1 - (1 - (1 - t/pi)^bits_per_band)^bands.
+    exact cosine >= ``_PAIR_THRESHOLD``. Recall for angle t is
+    1 - (1 - (1 - t/pi)^_SRP_BITS)^_SRP_BANDS.
 
     Scale shape: the plane matrix is tiny (bands*bits x dim ints)
     and is embedded as a literal in the projection - each executor
@@ -595,19 +561,17 @@ def srp_lsh_pairs(
         unit_normalize(
             vectors.withColumn(
                 "__codes",
-                _srp_kernel(bands, bits_per_band, dim)(
-                    F.col(vec_col).cast("array<double>")
-                ),
+                _srp_kernel()(F.col("embedding").cast("array<double>")),
             ),
-            vec_col,
+            "embedding",
         )
         .select(
-            id_col, vec_col, F.posexplode("__codes").alias("__band", "__code")
+            "vec_id", "embedding", F.posexplode("__codes").alias("__band", "__code")
         )
         .transform(cache_tracked)
     )
-    a = coded.select("__band", "__code", F.col(id_col).alias("id_a"))
-    b = coded.select("__band", "__code", F.col(id_col).alias("id_b"))
+    a = coded.select("__band", "__code", F.col("vec_id").alias("id_a"))
+    b = coded.select("__band", "__code", F.col("vec_id").alias("id_b"))
     # the multi-band dedup runs on BARE id pairs — carrying the two
     # 64-double vectors through the distinct's exchange would multiply
     # the shuffle volume ~30×; vectors re-attach afterwards via joins
@@ -618,25 +582,21 @@ def srp_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    vecs = coded.select(id_col, vec_col).dropDuplicates([id_col])
-    cands = pair_ids.join(
-        vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a")),
-        "id_a",
-    ).join(
-        vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b")),
-        "id_b",
+    vecs = coded.select("vec_id", "embedding").dropDuplicates(["vec_id"])
+    cands = pair_ids.join(_rename_vec(vecs, "a"), "id_a").join(
+        _rename_vec(vecs, "b"), "id_b"
     )
     # JVM HOF dot for verification: on weak-similarity corpora the
     # band join yields millions of candidates, and the Arrow UDF would
     # serialize two vectors per pair to Python; the codegen fold keeps
-    # verification in the JVM (bits_per_band should grow ~log2(n) to
-    # keep buckets small — the oracle replicates any setting)
+    # verification in the JVM (_SRP_BITS should grow ~log2(n) to keep
+    # buckets small — the oracle replicates the same banding)
     return (
         cands.withColumn(
             "__cos", dot_product("vec_a", "vec_b", arrow=False)
         )
-        .filter(F.col("__cos") >= threshold)
-        .select("id_a", "id_b", F.round("__cos", ndigits).alias("cosine"))
+        .filter(F.col("__cos") >= _PAIR_THRESHOLD)
+        .select("id_a", "id_b", F.round("__cos", ROUND_DIGITS).alias("cosine"))
     )
 
 
@@ -649,23 +609,23 @@ def _sq_l2(a: str, b: str) -> str:
     )
 
 
-def pq_adc_topk(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    m: int = 4,
-    ksub: int = 16,
-    probe_ids_below: int = 5,
-    k: int = 10,
-    ndigits: int = 4,
-) -> DataFrame:
+# pq_adc_topk's quantizer: _PQ_DIM-dimensional vectors cut into _PQ_M
+# subspaces with a _PQ_KSUB-entry codebook each; the probes are the
+# vectors with id below _PQ_PROBE_IDS_BELOW, answered top-_PQ_K
+_PQ_DIM = 64
+_PQ_M = 4
+_PQ_KSUB = 16
+_PQ_PROBE_IDS_BELOW = 5
+_PQ_K = 10
+
+
+def pq_adc_topk(vectors: DataFrame) -> DataFrame:
     """Product-quantization ANN (Jégou et al., PAMI 2011): encode every
-    vector as `m` subspace codes, then answer top-k by asymmetric
+    vector as `_PQ_M` subspace codes, then answer top-k by asymmetric
     distance computation (ADC) — probe-to-centroid distance tables
     instead of raw vectors.
 
-    Codebook here is sampling-init (subspace slices of the `ksub`
+    Codebook here is sampling-init (subspace slices of the `_PQ_KSUB`
     smallest-id vectors — deterministic, oracle-checkable); production
     would refine it with the kmeans_fit kernel above. The oracle
     replicates the same codebook and greedy argmin, so the gate checks
@@ -675,43 +635,43 @@ def pq_adc_topk(
     codes (scan × broadcast codebook, map-side-combinable argmin per
     (vector, subspace)) and once in the ADC join (codes × broadcast
     distance table, partial-aggregated sum per (probe, vector)). Raw
-    vectors never shuffle; after encoding, each vector is `m` small
+    vectors never shuffle; after encoding, each vector is `_PQ_M` small
     ints — the 16× memory-bandwidth win PQ exists for. Probe set is
     broadcast-sized by contract.
 
-    Output: (probe_id, neighbor_id, rank, adc_dist), k rows per probe,
-    rank by (adc asc, neighbor_id asc); self excluded.
+    Output: (probe_id, neighbor_id, rank, adc_dist), `_PQ_K` rows per
+    probe, rank by (adc asc, neighbor_id asc); self excluded.
     """
-    dsub = dim // m
+    dsub = _PQ_DIM // _PQ_M
     # invalid vectors can't be PQ-encoded (unit_normalize contract).
-    vectors = vectors.where(vector_is_valid(vec_col))
+    vectors = vectors.where(vector_is_valid("embedding"))
     sub = vectors.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.expr(
-                f"transform(sequence(0, {m - 1}), s -> struct(s AS s, "
-                f"transform(slice({vec_col}, s * {dsub} + 1, {dsub}), "
+                f"transform(sequence(0, {_PQ_M - 1}), s -> struct(s AS s, "
+                f"transform(slice(embedding, s * {dsub} + 1, {dsub}), "
                 f"v -> CAST(v AS DOUBLE)) AS sv))"
             )
         ).alias("e"),
-    ).select(id_col, F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
+    ).select("vec_id", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
 
-    codebook = sub.filter(F.col(id_col) < ksub).select(
-        F.col("s").alias("cs"), F.col(id_col).alias("j"), F.col("sv").alias("cv")
+    codebook = sub.filter(F.col("vec_id") < _PQ_KSUB).select(
+        F.col("s").alias("cs"), F.col("vec_id").alias("j"), F.col("sv").alias("cv")
     )
 
     codes = (
         sub.join(F.broadcast(codebook), F.col("s") == F.col("cs"))
         .withColumn("d2", F.expr(_sq_l2("sv", "cv")))
-        .groupBy(id_col, "s")
+        .groupBy("vec_id", "s")
         .agg(F.min(F.struct("d2", "j")).alias("b"))
-        .select(id_col, "s", F.col("b.j").alias("code"))
+        .select("vec_id", "s", F.col("b.j").alias("code"))
     )
 
     dtable = (
-        sub.filter(F.col(id_col) < probe_ids_below)
+        sub.filter(F.col("vec_id") < _PQ_PROBE_IDS_BELOW)
         .select(
-            F.col(id_col).alias("probe_id"),
+            F.col("vec_id").alias("probe_id"),
             F.col("s").alias("ps"),
             F.col("sv").alias("pv"),
         )
@@ -722,31 +682,26 @@ def pq_adc_topk(
 
     adc = (
         codes.join(F.broadcast(dtable), ["s", "code"])
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .groupBy("probe_id", id_col)
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .groupBy("probe_id", "vec_id")
         .agg(F.sum("pd2").alias("adc"))
     )
-    top = top_k_per_group(adc, ["probe_id"], [F.asc("adc"), F.asc(id_col)], k)
+    top = top_k_per_group(adc, ["probe_id"], [F.asc("adc"), F.asc("vec_id")], _PQ_K)
     return top.select(
         "probe_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.row_number()
         .over(
-            Window.partitionBy("probe_id").orderBy(F.asc("adc"), F.asc(id_col))
+            Window.partitionBy("probe_id").orderBy(F.asc("adc"), F.asc("vec_id"))
         )
         .cast("long")
         .alias("rank"),
-        F.round("adc", ndigits).alias("adc_dist"),
+        F.round("adc", ROUND_DIGITS).alias("adc_dist"),
     )
 
 
 def mutual_knn_graph(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndigits: int = 4,
+    vectors: DataFrame, centroids: DataFrame, k: int = 5
 ) -> DataFrame:
     """Mutual k-nearest-neighbor graph within IVF cells: an edge
     (id_a < id_b, cosine) survives only when each endpoint ranks in
@@ -774,11 +729,9 @@ def mutual_knn_graph(
     # doubles (see _cell_pair_scores) — so the surviving directed
     # edge set is bit-identical while the boundary traffic drops from
     # O(pairs·d) to O(vectors·d) and the window exchange disappears.
-    assigned = unit_normalize(
-        assign_to_centroids(vectors, centroids, id_col, vec_col), vec_col
-    )
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
     directed = cache_tracked(
-        _cell_pair_scores(assigned, id_col, vec_col, topk=k).select(
+        _cell_pair_scores(assigned, topk=k).select(
             F.col("src"), F.col("dst"), "__cos"
         )
     )
@@ -791,6 +744,6 @@ def mutual_knn_graph(
         .select(
             F.col("src").alias("id_a"),
             F.col("dst").alias("id_b"),
-            F.round("__cos", ndigits).alias("cosine"),
+            F.round("__cos", ROUND_DIGITS).alias("cosine"),
         )
     )

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
 from ..runtime import cache_tracked
 
 _HASH_SPACE = 2.0**60  # 16^15: md5's first 15 hex digits
@@ -57,7 +58,6 @@ def kmv_distinct_per_key(
     key_col: str,
     value_col: str,
     k: int = 32,
-    ndigits: int = 4,
 ) -> DataFrame:
     """(key, n_exact, kmv_estimate, rel_err) per key.
 
@@ -122,9 +122,9 @@ def kmv_distinct_per_key(
     return kth.select(
         key_col,
         "n_exact",
-        F.round(est, ndigits).alias("kmv_estimate"),
+        F.round(est, ROUND_DIGITS).alias("kmv_estimate"),
         F.round(
-            F.abs(est - F.col("n_exact")) / F.col("n_exact"), ndigits
+            F.abs(est - F.col("n_exact")) / F.col("n_exact"), ROUND_DIGITS
         ).alias("rel_err"),
     )
 
@@ -134,7 +134,6 @@ def kmv_set_overlap_per_key_pair(
     key_col: str,
     value_col: str,
     k: int = 64,
-    ndigits: int = 4,
 ) -> DataFrame:
     """(key_a, key_b, jaccard_est, jaccard_exact, union_est, inter_est)
     for every unordered pair of keys — KMV sketch SET ALGEBRA
@@ -254,23 +253,25 @@ def kmv_set_overlap_per_key_pair(
         .select(
             F.col("__ta").alias("key_a"),
             F.col("__tb").alias("key_b"),
-            F.round(rho, ndigits).alias("jaccard_est"),
-            F.round(iex / (na + nb - iex), ndigits).alias("jaccard_exact"),
-            F.round(union_est, ndigits).alias("union_est"),
-            F.round(rho * union_est, ndigits).alias("inter_est"),
+            F.round(rho, ROUND_DIGITS).alias("jaccard_est"),
+            F.round(iex / (na + nb - iex), ROUND_DIGITS).alias("jaccard_exact"),
+            F.round(union_est, ROUND_DIGITS).alias("union_est"),
+            F.round(rho * union_est, ROUND_DIGITS).alias("inter_est"),
         )
     )
+
+
+_DDSKETCH_QS = (0.5, 0.9, 0.99)
 
 
 def ddsketch_quantiles(
     df: DataFrame,
     key_col: str,
     value_col: str,
-    qs: tuple[float, ...] = (0.5, 0.9, 0.99),
     alpha: float = 0.01,
-    ndigits: int = 4,
 ) -> DataFrame:
-    """(key, q, bucket, n, est, exact_val, rel_err) per (key, quantile):
+    """(key, q, bucket, n, est, exact_val, rel_err) per key and quantile
+    q in ``_DDSKETCH_QS``:
     DDSketch relative-error quantile estimates (Masson, Lee & Rim,
     VLDB 2019) — the mergeable quantile sketch that completes the
     engine's sketch family next to KMV/HLL (distinct), count-min
@@ -338,7 +339,7 @@ def ddsketch_quantiles(
     ranks = totals.select(
         "__k",
         "n",
-        F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"),
+        F.explode(F.array(*[F.lit(q) for q in _DDSKETCH_QS])).alias("q"),
     ).withColumn("__rk", F.ceil(F.col("q") * F.col("n")))
     # smallest bucket whose cumulative count reaches the target rank
     # no broadcast hint on the rank-target frame (ADVICE r9 hazard
@@ -364,9 +365,9 @@ def ddsketch_quantiles(
             "q",
             "bucket",
             "n",
-            F.round(est, ndigits).alias("est"),
-            F.round(F.col("__x"), ndigits).alias("exact_val"),
-            F.round(F.abs(est - F.col("__x")) / F.col("__x"), ndigits).alias(
+            F.round(est, ROUND_DIGITS).alias("est"),
+            F.round(F.col("__x"), ROUND_DIGITS).alias("exact_val"),
+            F.round(F.abs(est - F.col("__x")) / F.col("__x"), ROUND_DIGITS).alias(
                 "rel_err"
             ),
         )

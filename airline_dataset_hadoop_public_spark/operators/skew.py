@@ -9,7 +9,7 @@ exceeds an executor (the classic viral-document / null-key hotspot at
 
 ``salted_join`` replicates the *small* side across `n_salt` shards and
 scatters the skewed side's rows uniformly among them, turning one hot
-partition into `n_salt` even ones. The salt is `rand(seed)`-based:
+partition into `n_salt` even ones. The salt is `rand(42)`-based:
 correctness does not depend on which shard a row lands in (each shard
 holds a full copy of the matching small-side rows), so the join result
 is exactly the plain join's. Cost: the small side is materialized
@@ -30,7 +30,6 @@ def salted_join(
     on: Sequence[str],
     n_salt: int = 8,
     how: str = "inner",
-    seed: int = 42,
 ) -> DataFrame:
     """Equi-join with the skewed side salted across `n_salt` shards.
 
@@ -49,7 +48,7 @@ def salted_join(
             f"salted_join supports inner/left-family joins only, got {how!r}"
         )
     left = skewed.withColumn(
-        "__salt", F.floor(F.rand(seed) * n_salt).cast("int")
+        "__salt", F.floor(F.rand(42) * n_salt).cast("int")
     )
     right = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))

@@ -18,8 +18,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import ROUND_DIGITS
 from ..functions.scalar import normalize_text, tokens
 from ..runtime import cache_tracked
+
+# Polynomial rolling hash of the rolling-hash, winnowing and span-removal
+# operators: fold (acc·_HASH_BASE + code) mod _HASH_MOD. _HASH_MOD < 2³¹
+# keeps every step inside int64.
+_HASH_BASE = 31
+_HASH_MOD = 1_000_000_007
 
 # Small public stop/marker word lists (standard high-frequency words).
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "for")
@@ -36,8 +43,8 @@ def _in_list(var: str, words: tuple[str, ...]) -> str:
     return f"{var} IN ({lst})"
 
 
-def with_tokens(df: DataFrame, text_col: str, out: str = "toks") -> DataFrame:
-    return df.withColumn(out, tokens(text_col))
+def with_tokens(df: DataFrame, text_col: str) -> DataFrame:
+    return df.withColumn("toks", tokens(text_col))
 
 
 def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -49,9 +56,7 @@ def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_scores(
-    df: DataFrame, id_col: str, text_col: str, ndigits: int = 4
-) -> DataFrame:
+def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document quality features: length, token stats, average
     token length, stopword ratio, type-token ratio.
 
@@ -73,9 +78,9 @@ def quality_scores(
         id_col,
         F.length(text_col).cast("long").alias("n_chars_obs"),
         n_tok.alias("n_tokens"),
-        F.round(F.col("__f.charsum") / n_tok, ndigits).alias("avg_token_len"),
-        F.round(F.col("__f.stop_hits") / n_tok, ndigits).alias("stopword_ratio"),
-        F.round(F.col("__f.n_distinct") / n_tok, ndigits).alias("type_token_ratio"),
+        F.round(F.col("__f.charsum") / n_tok, ROUND_DIGITS).alias("avg_token_len"),
+        F.round(F.col("__f.stop_hits") / n_tok, ROUND_DIGITS).alias("stopword_ratio"),
+        F.round(F.col("__f.n_distinct") / n_tok, ROUND_DIGITS).alias("type_token_ratio"),
     )
 
 
@@ -191,17 +196,11 @@ def bpe_token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def rolling_hash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    base: int = 31,
-    mod: int = 1_000_000_007,
-) -> DataFrame:
+def rolling_hash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, rhash) — polynomial rolling hash of the normalized text's
-    byte codes: fold (acc·base + code) mod `mod` left-to-right. Pure
-    higher-order expression; `mod` < 2³¹ keeps acc·base + code inside
-    int64. Mirrored in DuckDB via list_reduce with a prepended 0 seed.
+    byte codes: fold (acc·_HASH_BASE + code) mod _HASH_MOD
+    left-to-right. Pure higher-order expression. Mirrored in DuckDB via
+    list_reduce with a prepended 0 seed.
     """
     # let-bind the normalized text: referenced per character, the
     # normalize regexp would otherwise be inlined into the lambda and
@@ -221,7 +220,7 @@ def rolling_hash(
             f"transform(sequence(1, length(nm)), "
             f"i -> CAST(ascii(substr(nm, i, 1)) AS BIGINT)), "
             f"CAST(0 AS BIGINT), "
-            f"(a, c) -> (a * {base} + c) % {mod}))[0]"
+            f"(a, c) -> (a * {_HASH_BASE} + c) % {_HASH_MOD}))[0]"
         ).alias("rhash"),
     )
 
@@ -232,8 +231,6 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 5,
     window: int = 4,
-    base: int = 31,
-    mod: int = 1_000_000_007,
 ) -> DataFrame:
     """(id, pos, khash) — winnowing document fingerprints (Schleimer/
     Wilkerson/Aiken, "Winnowing: Local Algorithms for Document
@@ -254,7 +251,7 @@ def winnowing_fingerprints(
     rightmost-min-on-tie rule rides on a single windowed min by
     packing each hash with its position into one int64 — combined =
     hash·2²⁰ + (2²⁰−1−i) — so ordering by combined value IS the
-    (hash asc, position desc) order. Valid while hash < 2³⁰ (mod
+    (hash asc, position desc) order. Valid while hash < 2³⁰ (_HASH_MOD
     bounds it) and position < 2²⁰; chunk longer documents upstream.
     """
     pos_bits = 1 << 20
@@ -263,7 +260,7 @@ def winnowing_fingerprints(
     norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
     normed = df.select(id_col, F.expr(norm).alias("__nm"))
     combined = normed.select(
-        id_col, _winnow_kernel(k, window, base, mod, pos_bits)("__nm").alias("__fp")
+        id_col, _winnow_kernel(k, window, pos_bits)("__nm").alias("__fp")
     )
     return combined.select(
         id_col, F.explode("__fp").alias("__c")
@@ -274,10 +271,10 @@ def winnowing_fingerprints(
     )
 
 
-_WINNOW_KERNELS: dict[tuple[int, int, int, int, int], object] = {}
+_WINNOW_KERNELS: dict[tuple[int, int, int], object] = {}
 
 
-def _winnow_kernel(k: int, window: int, base: int, mod: int, pos_bits: int):
+def _winnow_kernel(k: int, window: int, pos_bits: int):
     """Arrow-vectorized winnowing kernel: normalized text → array of
     packed (khash·pos_bits + (pos_bits−1−i)) selected fingerprints.
 
@@ -290,7 +287,7 @@ def _winnow_kernel(k: int, window: int, base: int, mod: int, pos_bits: int):
     O(batch chars), so executor footprint at 100 TB stays bounded by
     the Arrow batch size.
     """
-    key = (k, window, base, mod, pos_bits)
+    key = (k, window, pos_bits)
     if key not in _WINNOW_KERNELS:
 
         def fingerprints(s: str) -> list[int]:
@@ -308,7 +305,7 @@ def _winnow_kernel(k: int, window: int, base: int, mod: int, pos_bits: int):
             # vector ops over all positions at once
             h = cps[: n - k + 1].copy()
             for j in range(1, k):
-                h = (h * base + cps[j : n - k + 1 + j]) % mod
+                h = (h * _HASH_BASE + cps[j : n - k + 1 + j]) % _HASH_MOD
             # pack with 1-indexed position: min == (hash asc, pos desc)
             packed = h * pos_bits + (pos_bits - 1 - np.arange(1, len(h) + 1))
             wins = np.lib.stride_tricks.sliding_window_view(packed, window)
@@ -322,13 +319,8 @@ def _winnow_kernel(k: int, window: int, base: int, mod: int, pos_bits: int):
     return _WINNOW_KERNELS[key]
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-) -> DataFrame:
-    """(id, term, tfidf) — per-document top-k terms by tf·idf.
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, term, tfidf) — per-document top-3 terms by tf·idf.
 
     tf = raw term count in the document; idf = ln(N / df) with N the
     TOTAL document count and df the number of documents containing the
@@ -372,14 +364,14 @@ def tfidf_top_terms(
             F.round(
                 F.col("tf")
                 * F.log(F.col("n_docs").cast("double") / F.col("dfreq")),
-                4,
+                ROUND_DIGITS,
             ).alias("tfidf"),
         )
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .drop("rn")
     )
 
@@ -448,16 +440,14 @@ def tfidf_cosine_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    min_df: int = 2,
     stop_df_divisor: int = 3,
 ) -> DataFrame:
     """(id_a < id_b, cosine) — document pairs with tf-idf cosine
-    similarity >= threshold, computed term-at-a-time over an inverted
+    similarity >= 0.5, computed term-at-a-time over an inverted
     index (no all-pairs stage; reference has no similarity surface at
     all — SURVEY.md §2 ends at exact grouping).
 
-    Weight space: terms with min_df <= df <= floor(N / stop_df_divisor)
+    Weight space: terms with 2 <= df <= floor(N / stop_df_divisor)
     (the cap is computed as an exact float division by an integer
     divisor so any SQL oracle can reproduce the boundary bit-for-bit;
     a ratio multiply like n*(1/3) floors differently when 3 | n),
@@ -478,7 +468,7 @@ def tfidf_cosine_pairs(
     term instead of c (and never c² join rows); intra-group pairs have
     cosine exactly 1.0 by construction and cross-group pairs inherit
     the representative's cosine unchanged (identical weight vectors →
-    identical dot and norm doubles). Requires threshold <= 1.0.
+    identical dot and norm doubles).
     """
     from ..functions.scalar import tokens
 
@@ -495,7 +485,7 @@ def tfidf_cosine_pairs(
         .agg(F.count(F.lit(1)).alias("dfreq"))
         .crossJoin(F.broadcast(ndocs))
         .filter(
-            (F.col("dfreq") >= min_df)
+            (F.col("dfreq") >= 2)
             & (
                 F.col("dfreq")
                 <= F.floor(F.col("n_docs") / F.lit(float(stop_df_divisor)))
@@ -561,8 +551,8 @@ def tfidf_cosine_pairs(
         dots.join(na, "id_a")
         .join(nb, "id_b")
         .withColumn("cosine", F.col("dot") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
+        .filter(F.col("cosine") >= 0.5)
+        .select("id_a", "id_b", F.round("cosine", ROUND_DIGITS).alias("cosine"))
     )
     cross = _expand_rep_pairs(rep_pairs, grp, ["cosine"])
     return intra.select("id_a", "id_b", "cosine").unionByName(
@@ -570,16 +560,15 @@ def tfidf_cosine_pairs(
     )
 
 
-_KGRAM_KERNELS: dict[tuple[int, int, int], object] = {}
+_KGRAM_KERNELS: dict[int, object] = {}
 
 
-def _kgram_hash_kernel(k: int, base: int, mod: int):
+def _kgram_hash_kernel(k: int):
     """Arrow kernel: per-position k-gram polynomial hashes (same
     per-step-mod Horner arithmetic as ``_winnow_kernel``, without the
     window-min) — array[i] is the hash of positions i+1 .. i+k
     (1-based, matching the oracle's range(1, n-k+2))."""
-    key = (k, base, mod)
-    if key not in _KGRAM_KERNELS:
+    if k not in _KGRAM_KERNELS:
 
         def hashes(s: str) -> list[int]:
             if s is None:
@@ -592,15 +581,15 @@ def _kgram_hash_kernel(k: int, base: int, mod: int):
             )
             h = cps[: n - k + 1].copy()
             for j in range(1, k):
-                h = (h * base + cps[j : n - k + 1 + j]) % mod
+                h = (h * _HASH_BASE + cps[j : n - k + 1 + j]) % _HASH_MOD
             return h.tolist()
 
         @F.pandas_udf("array<bigint>")
         def kernel(texts: pd.Series) -> pd.Series:
             return texts.map(hashes)
 
-        _KGRAM_KERNELS[key] = kernel
-    return _KGRAM_KERNELS[key]
+        _KGRAM_KERNELS[k] = kernel
+    return _KGRAM_KERNELS[k]
 
 
 def duplicate_span_removal(
@@ -608,16 +597,13 @@ def duplicate_span_removal(
     id_col: str,
     text_col: str,
     k: int = 20,
-    min_docs: int = 2,
-    base: int = 31,
-    mod: int = 1_000_000_007,
     max_posting: int = 10_000,
 ) -> DataFrame:
     """Exact-substring dedup ACTION (the span-removal layout of Lee et
     al. 2022, arXiv:2107.06499 "Deduplicating Training Data Makes
     Language Models Better", re-expressed relationally instead of via
-    suffix arrays): every character span whose k-gram appears in >=
-    ``min_docs`` DISTINCT documents is cut out of the normalized text.
+    suffix arrays): every character span whose k-gram appears in >= 2
+    DISTINCT documents is cut out of the normalized text.
 
     Output: one row per non-NULL-text document —
     (id, n_spans_removed, chars_removed, n_chars_kept, kept_fp) with
@@ -626,7 +612,7 @@ def duplicate_span_removal(
     Pipeline (all relational, O(corpus chars) rows at the widest):
     1. per-position k-gram hashes — one Arrow numpy pass (same Horner
        arithmetic as winnowing, so the oracle can restate it);
-    2. duplicated grams: hash -> distinct-doc count >= min_docs. The
+    2. duplicated grams: hash -> distinct-doc count >= 2. The
        ``max_posting`` guard drops degenerate boilerplate hashes whose
        posting exceeds the cap (the dedup-module hot-bucket defense) —
        spans that common are template noise, handled by exact dedup;
@@ -653,14 +639,14 @@ def duplicate_span_removal(
     )
     grams = normed.select(
         id_col,
-        F.posexplode(_kgram_hash_kernel(k, base, mod)("__nm")).alias(
+        F.posexplode(_kgram_hash_kernel(k)("__nm")).alias(
             "__p0", "__h"
         ),
     ).select(id_col, (F.col("__p0") + 1).alias("pos"), "__h")
     dup = (
         grams.groupBy("__h")
         .agg(F.countDistinct(id_col).alias("__docs"), F.count(F.lit(1)).alias("__n"))
-        .filter((F.col("__docs") >= min_docs) & (F.col("__n") <= max_posting))
+        .filter((F.col("__docs") >= 2) & (F.col("__n") <= max_posting))
         .select("__h")
     )
     covered = grams.join(dup, "__h").select(

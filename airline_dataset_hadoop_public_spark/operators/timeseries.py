@@ -120,11 +120,10 @@ def ewma_per_key(
     ts_col: str,
     value_col: str,
     alpha: float = 0.3,
-    out: str = "ewma",
 ) -> DataFrame:
-    """Per-key exponentially-weighted moving average, exact recurrence
-    y_t = alpha*x_t + (1-alpha)*y_{t-1} (y_0 = x_0), ordered by
-    (ts, value). A window function cannot express the recurrence
+    """Per-key exponentially-weighted moving average (column
+    ``ewma``), exact recurrence y_t = alpha*x_t + (1-alpha)*y_{t-1}
+    (y_0 = x_0), ordered by (ts, value). A window function cannot express the recurrence
     without exponentially-scaled weights that overflow on long series.
 
     Runs as a sorted-stream fold with the accumulator carried across
@@ -142,9 +141,9 @@ def ewma_per_key(
             else:
                 acc = alpha * v + (1.0 - alpha) * acc
             y[i] = acc
-        return {out: y}, acc
+        return {"ewma": y}, acc
 
-    return _streamed_fold(df, key_col, ts_col, value_col, ewma_chunk, [out])
+    return _streamed_fold(df, key_col, ts_col, value_col, ewma_chunk, ["ewma"])
 
 
 def holt_per_key(
@@ -198,13 +197,11 @@ def clamped_running_balance(
     key_col: str,
     ts_col: str,
     delta_col: str,
-    lo: float = 0.0,
     hi: float = 100.0,
     out: str = "balance",
-    step: str = "step",
 ) -> DataFrame:
     """Per-key two-sided-clamped running balance, ordered by
-    (ts, delta):  b_t = min(hi, max(lo, b_{t-1} + delta_t)),  b_{-1}=0.
+    (ts, delta):  b_t = min(hi, max(0, b_{t-1} + delta_t)),  b_{-1}=0.
 
     The inventory / quota / token-bucket walk. Unlike the one-sided
     Lindley recursion (CUSUM's prefix-reflection identity,
@@ -235,16 +232,15 @@ def clamped_running_balance(
         y = np.empty_like(x)
         for i, v in enumerate(x):
             acc = acc + v
-            if acc < lo:
-                acc = lo
+            if acc < 0.0:
+                acc = 0.0
             elif acc > hi:
                 acc = hi
             y[i] = acc
         return {out: y}, acc
 
     return _streamed_fold(
-        df, key_col, ts_col, delta_col, clamp_chunk, [out],
-        with_step=True, step=step,
+        df, key_col, ts_col, delta_col, clamp_chunk, [out], with_step=True
     )
 
 
@@ -282,18 +278,18 @@ def _streamed_fold(
     fold_chunk,
     out_fields: list[str],
     with_step: bool = False,
-    step: str = "step",
 ):
     """Per-key ordered fold with bounded memory (see section comment).
 
     ``fold_chunk(x: np.float64[n], state) -> (dict[name -> np.float64[n]],
     new_state)`` folds one contiguous chunk of a single key's series;
-    ``state=None`` marks start-of-key.
+    ``state=None`` marks start-of-key. ``with_step`` adds the 0-based
+    walk position as a ``step`` column after the key.
     """
     in_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     parts = [f"{key_col} {in_schema[key_col]}"]
     if with_step:
-        parts.append(f"{step} long")
+        parts.append("step long")
     parts.append(f"{ts_col} {in_schema[ts_col]}")
     parts.append(f"{x_col} double")
     parts.extend(f"{name} double" for name in out_fields)
@@ -341,7 +337,7 @@ def _streamed_fold(
             res = pdf[[key_col, ts_col, x_col]].copy()
             res[x_col] = x
             if with_step:
-                res.insert(1, step, steps)
+                res.insert(1, "step", steps)
             for name in out_fields:
                 res[name] = outs[name]
             yield res

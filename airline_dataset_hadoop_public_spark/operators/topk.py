@@ -89,10 +89,8 @@ def top_k_per_group(
     return out if rn else out.drop("__rn")
 
 
-def rank_table(
-    df: DataFrame, order: Sequence[str | Column], rank: str = "rank"
-) -> DataFrame:
-    """X1: global 1..N rank assignment (G3Q1 popularity ranks,
+def rank_table(df: DataFrame, order: Sequence[str | Column]) -> DataFrame:
+    """X1: global 1..N ``rank`` column (G3Q1 popularity ranks,
     /root/reference/README.md:375-427).
 
     A global row_number window is a single-partition sort — acceptable
@@ -101,7 +99,7 @@ def rank_table(
     sized. For fact-scale ranking use `ordered_prefix_distributed`.
     """
     w = Window.orderBy(*_cols(order))
-    return df.withColumn(rank, F.row_number().over(w))
+    return df.withColumn("rank", F.row_number().over(w))
 
 
 def ordered_prefix_distributed(

@@ -109,9 +109,7 @@ def g3q1_popularity_ranked(ontime: DataFrame) -> DataFrame:
     (ArrivalsAndDeparturesPerAirportSortedByFrequency + zipf.py,
     README.md:375-430). Feed `.toPandas()` of this into
     analytics.fit_rank_distribution for the offline tail."""
-    ranked = rank_table(
-        _popularity(ontime), [F.desc("flights"), F.asc("airport")], rank="rank"
-    )
+    ranked = rank_table(_popularity(ontime), [F.desc("flights"), F.asc("airport")])
     return global_sort(ranked, [F.asc("rank")])
 
 

@@ -71,22 +71,21 @@ class Site:
     lineno: int
 
 
-def _call_sites(root: str | None, names: set[str]):
+def _call_sites(names: set[str]):
     """Every call in the package whose callee is named in ``names``
     (``f(...)`` or ``x.f(...)``) and has a positional argument, as
     ``(callee name, package-relative path, enclosing function or
     "<module>", unparsed first argument, line)``, in file walk order.
     Shared with plans/cell_audit.py."""
-    root = root or _PKG_ROOT
     calls: list[tuple[str, str, str, str, int]] = []
-    for dirpath, _, files in sorted(os.walk(root)):
+    for dirpath, _, files in sorted(os.walk(_PKG_ROOT)):
         if "__pycache__" in dirpath:
             continue
         for fn in sorted(files):
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fn)
-            rel = os.path.relpath(path, root)
+            rel = os.path.relpath(path, _PKG_ROOT)
             with open(path) as fh:
                 tree = ast.parse(fh.read())
             stack: list[str] = []
@@ -122,10 +121,10 @@ def _call_sites(root: str | None, names: set[str]):
     return calls
 
 
-def scan_sites(root: str | None = None) -> list[Site]:
+def scan_sites() -> list[Site]:
     return [
         Site(rel, func, arg, lineno)
-        for _, rel, func, arg, lineno in _call_sites(root, {"broadcast"})
+        for _, rel, func, arg, lineno in _call_sites({"broadcast"})
     ]
 
 

@@ -66,13 +66,13 @@ class Site:
     lineno: int
 
 
-def scan_sites(root: str | None = None) -> list[Site]:
+def scan_sites() -> list[Site]:
     return [
         Site(
             "crossjoin" if name == "crossJoin" else "collect",
             rel, func, arg, lineno,
         )
-        for name, rel, func, arg, lineno in _call_sites(root, _KINDS)
+        for name, rel, func, arg, lineno in _call_sites(_KINDS)
     ]
 
 

@@ -642,9 +642,7 @@ GROUP BY dw.doc_id
 def docs_bpe_encode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import bpe_encode_token_counts
 
-    return bpe_encode_token_counts(
-        load_table(spark, sf_dir, "documents"), merges=2
-    )
+    return bpe_encode_token_counts(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -761,7 +759,7 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text", "ws")
     )
     pairs = D.minhash_neardup_pairs(
-        e, "doc_id", "text", n=1, threshold=0.9, num_hashes=96, bands=24
+        e, "doc_id", "text", threshold=0.9, num_hashes=96, bands=24
     )
     comp = D.connected_components(e.select("doc_id"), pairs, node_col="doc_id")
     s2 = e.join(

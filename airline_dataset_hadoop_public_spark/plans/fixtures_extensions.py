@@ -134,7 +134,7 @@ FROM pairs WHERE CAST(i AS DOUBLE) / la >= 0.9
 @register("dedup_containment_neardup", _CONTAINMENT_ORACLE)
 def dedup_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.containment_pairs(docs, "doc_id", "text", n=3, threshold=0.9)
+    return D.containment_pairs(docs, "doc_id", "text", threshold=0.9)
 
 
 # r5 rewrite mirroring the engine's own two scale tricks (so the
@@ -198,7 +198,7 @@ def dedup_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     math separately. (The operator default stays at 128/32.)"""
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_neardup_pairs(
-        docs, "doc_id", "text", n=1, threshold=0.9, num_hashes=96, bands=24
+        docs, "doc_id", "text", threshold=0.9, num_hashes=96, bands=24
     )
 
 
@@ -292,7 +292,7 @@ def dedup_connected_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, restored by the anti-join union."""
     docs = load_table(spark, sf_dir, "documents")
     clusters = D.minhash_neardup_clusters(
-        docs, "doc_id", "text", n=1, threshold=0.9, num_hashes=96, bands=24
+        docs, "doc_id", "text", num_hashes=96, bands=24
     ).select("doc_id", F.col("canonical").alias("canonical_id"))
     singletons = (
         docs.select("doc_id")
@@ -337,9 +337,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 @register("dedup_simhash", _SIMHASH_ORACLE)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_pairs(
-        docs, "doc_id", "text", n=1, max_distance=3, portable_hash=True
-    )
+    return D.simhash_pairs(docs, "doc_id", "text", portable_hash=True)
 
 
 # SimHash dedup ACTION (r3): clusters without the quadratic pair
@@ -407,7 +405,7 @@ WHERE s2.doc_id IS NULL
 def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     clusters = D.simhash_clusters(
-        docs, "doc_id", "text", n=1, max_distance=3, portable_hash=True
+        docs, "doc_id", "text", portable_hash=True
     ).select("doc_id", F.col("canonical").alias("canonical_id"))
     singletons = (
         docs.select("doc_id")
@@ -429,7 +427,7 @@ WHERE list_cosine_similarity(a.v, b.v) >= 0.4
 @register("dedup_embedding_cosine", _EMB_NEARDUP_ORACLE)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.embedding_cosine_pairs(emb, threshold=0.4)
+    return S.embedding_cosine_pairs(emb)
 
 
 # IVF-bucketed near-dup — the 100 TB path: pairs only within nearest-
@@ -542,7 +540,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     probes = emb.filter(F.col("vec_id") < 5)
-    return S.ivf_topk(emb, centroids, probes, k=5, nprobe=2)
+    return S.ivf_topk(emb, centroids, probes)
 
 
 # ANN quality evaluation — recall@k of the IVF index against exact
@@ -604,7 +602,7 @@ def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = S.brute_force_topk(emb, probes, k=5).select(
         "probe_id", "neighbor_id"
     )
-    approx = S.ivf_topk(emb, centroids, probes, k=5, nprobe=2).select(
+    approx = S.ivf_topk(emb, centroids, probes).select(
         "probe_id", "neighbor_id"
     )
     hits = exact.join(approx, ["probe_id", "neighbor_id"], "left_semi")
@@ -642,8 +640,14 @@ def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 3, nprobe: int = 2, topk: int = 5) -> str:
-    """Unrolled-CTE Lloyd oracle for ``kmeans_fit`` + ``ivf_topk``.
+_KMEANS_K = 8
+_KMEANS_ITERS = 3
+
+
+def _kmeans_oracle() -> str:
+    """Unrolled-CTE Lloyd oracle for ``kmeans_fit`` (``_KMEANS_K``
+    centroids, ``_KMEANS_ITERS`` rounds) + ``ivf_topk`` (top-5 over the
+    2 nearest cells).
 
     Mirrors the Spark op exactly: unit-normalize, init = k smallest
     ids (cid 1..k by id order), per-iteration nearest-centroid
@@ -658,10 +662,10 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, nprobe: int = 2, topk: int = 5) -
         "list_reduce(list_transform(v, y -> y * y), (a, b) -> a + b))) AS v "
         "FROM e)",
         f"c0 AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) AS cid, v AS cv "
-        f"FROM (SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {k}))",
+        f"FROM (SELECT vec_id, v FROM n ORDER BY vec_id LIMIT {_KMEANS_K}))",
     ]
     prev = "c0"
-    for i in range(1, iters + 1):
+    for i in range(1, _KMEANS_ITERS + 1):
         ctes.append(
             f"a{i} AS (SELECT vec_id, v, cid FROM ("
             f"SELECT n.vec_id, n.v, c.cid, "
@@ -695,7 +699,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, nprobe: int = 2, topk: int = 5) -
         f"SELECT p.probe_id, p.pv, c.cid, "
         f"ROW_NUMBER() OVER (PARTITION BY p.probe_id "
         f"ORDER BY list_cosine_similarity(p.pv, c.cv) DESC, c.cid) AS rn "
-        f"FROM p CROSS JOIN {prev} c) WHERE rn <= {nprobe})"
+        f"FROM p CROSS JOIN {prev} c) WHERE rn <= 2)"
     )
     ctes.append(
         "cand AS (SELECT pc.probe_id, a.vec_id AS neighbor_id, "
@@ -707,7 +711,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, nprobe: int = 2, topk: int = 5) -
         "WITH " + ",\n".join(ctes) + "\n"
         "SELECT probe_id, neighbor_id, ROUND(cos, 4) AS cosine FROM cand\n"
         "QUALIFY ROW_NUMBER() OVER (PARTITION BY probe_id "
-        f"ORDER BY cos DESC, neighbor_id) <= {topk}"
+        "ORDER BY cos DESC, neighbor_id) <= 5"
     )
 
 
@@ -716,11 +720,11 @@ def similarity_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The self-contained ANN path: train IVF centroids with
     deterministic spherical k-means, then pruned top-k search."""
     emb = load_table(spark, sf_dir, "embeddings")
-    trained = S.kmeans_fit(emb, k=8, iters=3).select(
+    trained = S.kmeans_fit(emb, k=_KMEANS_K, iters=_KMEANS_ITERS).select(
         F.col("centroid_id").alias("vec_id"), F.col("centroid").alias("embedding")
     )
     probes = emb.filter(F.col("vec_id") < 5)
-    return S.ivf_topk(emb, trained, probes, k=5, nprobe=2)
+    return S.ivf_topk(emb, trained, probes)
 
 
 # ---------------------------------------------------------------------------
@@ -980,9 +984,7 @@ QUALIFY ROW_NUMBER() OVER (
 
 @register("text_tfidf_top_terms", _TFIDF_ORACLE)
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.tfidf_top_terms(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", k=3
-    )
+    return X.tfidf_top_terms(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -1032,7 +1034,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.octet_length("text") == F.length("text")
     )
     payload = M.with_binary_payload(docs, "text")
-    return M.sample_frames(payload, "doc_id", stride=16, max_frames=8)
+    return M.sample_frames(payload, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1150,10 +1152,7 @@ WHERE list_cosine_similarity(ea.v, eb.v) >= 0.4
 @register("similarity_srp_lsh_pairs", _SRP_LSH_ORACLE)
 def similarity_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.srp_lsh_pairs(
-        emb, "vec_id", "embedding", dim=64, bands=12, bits_per_band=4,
-        threshold=0.4,
-    )
+    return S.srp_lsh_pairs(emb)
 
 
 # Corpus-level n-gram language-model statistics: global top-25 word
@@ -1330,9 +1329,7 @@ def embeddings_cluster_curation_report(
         .unionByName(edges.select(F.col("id_b").alias("n")))
         .distinct()
     )
-    comp = connected_components(
-        nodes, edges, node_col="n", src="id_a", dst="id_b"
-    )
+    comp = connected_components(nodes, edges, node_col="n")
     # exact integer ten-thousandths of the (already 4-rounded) cosine
     q = F.round(F.col("cosine") * 10000).cast("long")
     per_edge = (
@@ -1452,7 +1449,7 @@ FROM n LEFT JOIN stitched st USING (doc_id)
 def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return X.duplicate_span_removal(
-        docs, "doc_id", "text", k=_SPAN_K, min_docs=2, max_posting=_SPAN_CAP
+        docs, "doc_id", "text", k=_SPAN_K, max_posting=_SPAN_CAP
     )
 
 

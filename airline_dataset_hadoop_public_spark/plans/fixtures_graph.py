@@ -130,7 +130,7 @@ def parts_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization of the self-join edge build) and returns an
     # eagerly checkpointed rank frame, so counting nodes off the
     # result is free
-    ranks = pagerank(edges, damping=0.85, iters=3)
+    ranks = pagerank(edges, iters=3)
     n_nodes = ranks.count()
     scored = ranks.select(
         F.col("pk").alias("partkey"),
@@ -183,7 +183,7 @@ def parts_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_counts
 
     edges = _copurchase_edges(spark, sf_dir)
-    return triangle_counts(edges, "src", "dst")
+    return triangle_counts(edges)
 
 
 # ---------------------------------------------------------------------------

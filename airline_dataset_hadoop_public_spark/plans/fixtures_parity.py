@@ -231,9 +231,7 @@ FROM (
 
 @register("x1_popularity_rank", _X1_ORACLE)
 def x1_popularity_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ranked = rank_table(
-        _popularity(spark, sf_dir), [F.desc("cnt"), F.asc("key")], rank="rank"
-    )
+    ranked = rank_table(_popularity(spark, sf_dir), [F.desc("cnt"), F.asc("key")])
     return ranked.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -929,7 +927,7 @@ ORDER BY rank
 @register("x1_zipf_loglog_fit", _X1_FIT_ORACLE)
 def x1_zipf_loglog_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = rank_table(
-        _popularity(spark, sf_dir), [F.desc("cnt"), F.asc("key")], rank="rank"
+        _popularity(spark, sf_dir), [F.desc("cnt"), F.asc("key")]
     ).withColumn("rank", F.col("rank").cast("long"))
     fit = ranked.agg(
         F.expr("regr_slope(ln(cnt), ln(rank))").alias("slope"),

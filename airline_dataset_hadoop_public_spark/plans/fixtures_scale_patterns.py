@@ -254,7 +254,7 @@ WHERE dot / (na.nrm * nb.nrm) >= 0.5
 @register("docs_tfidf_cosine_pairs", _COS_ORACLE)
 def docs_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return X.tfidf_cosine_pairs(docs, "doc_id", "text", threshold=0.5)
+    return X.tfidf_cosine_pairs(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -485,7 +485,7 @@ def multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     payload = MM.with_binary_payload(docs, "text")
-    return MM.resize_media(payload, "doc_id", target_w=224, target_h=224)
+    return MM.resize_media(payload, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -963,9 +963,7 @@ def events_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import ddsketch_quantiles
 
     ev = load_table(spark, sf_dir, "events")
-    return ddsketch_quantiles(
-        ev, "event_type", "value", qs=(0.5, 0.9, 0.99), alpha=_DD_ALPHA
-    )
+    return ddsketch_quantiles(ev, "event_type", "value", alpha=_DD_ALPHA)
 
 
 # ---------------------------------------------------------------------------

@@ -327,16 +327,17 @@ def _minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..runtime import scratch_dir, source_scratch_key
 
     key = source_scratch_key(sf_dir, "documents.parquet")
-    # key includes the LSH params: a parameter change must invalidate
+    # key includes the LSH signature shape: a change must invalidate
     # the persisted index, not silently serve stale buckets
-    path = scratch_dir("minhash_index", f"{key}_n1_h96_b24")
+    path = scratch_dir(
+        "minhash_index", f"{key}_n1_h{D.INDEX_NUM_HASHES}_b{D.INDEX_BANDS}"
+    )
     marker = os.path.join(path, "_READY")
     if not os.path.exists(marker):
         shutil.rmtree(path, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
         base = docs.filter(F.col("doc_id") % 5 != 0)
-        idx = D.minhash_build_index(base, "doc_id", "text", n=1,
-                                    num_hashes=96, bands=24)
+        idx = D.minhash_build_index(base, "doc_id", "text")
         for name in ("grp", "reps", "banded"):
             idx[name].write.mode("overwrite").parquet(
                 os.path.join(path, name)
@@ -359,10 +360,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    return D.minhash_probe_index(
-        index, delta, "doc_id", "text", n=1, threshold=0.9,
-        num_hashes=96, bands=24,
-    )
+    return D.minhash_probe_index(index, delta, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------

@@ -128,12 +128,10 @@ def _drained_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
     # input-sized state partitioning (see streaming.windows) — on a
     # RESUMED checkpoint Spark pins the count recorded at first start,
     # so this only shapes newly-created checkpoints
+    from ..runtime import shuffle_partitions
     from ..streaming.windows import scoped_stream_shuffle_partitions
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(scoped_stream_shuffle_partitions(spark, src)))
-    try:
+    with shuffle_partitions(spark, scoped_stream_shuffle_partitions(spark, src)):
         q = (
             stream.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
@@ -150,8 +148,6 @@ def _drained_state_checkpoint(spark: SparkSession, sf_dir: str) -> str:
             # the memory sink is never read (state is read from the
             # checkpoint) — drop it or each invocation leaks a temp view
             spark.catalog.dropTempView(name)
-    finally:
-        spark.conf.set(key, prev)
     return ckpt
 
 

@@ -845,7 +845,7 @@ def events_clamped_running_balance(
         .alias("d"),
     )
     walk = clamped_running_balance(
-        deltas, "user_id", "ts", "d", lo=0.0, hi=_BAL_HI, out="b", step="step"
+        deltas, "user_id", "ts", "d", hi=_BAL_HI, out="b"
     )
     # final balance addressed by WALK STEP, not by max (ts, d): tied
     # (ts, d) rows are interchangeable as rows but sit at different

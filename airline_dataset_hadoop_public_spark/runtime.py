@@ -56,30 +56,37 @@ import contextlib as _contextlib
 
 
 @_contextlib.contextmanager
-def scoped_shuffle_partitions(spark, n_rows: int, per_partition: int = 100_000):
+def shuffle_partitions(spark, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the scope and
+    restore the previous value on exit. Session-global for the scope's
+    duration: this engine runs queries sequentially per session."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set(key, prev)
+
+
+def scoped_shuffle_partitions(spark, n_rows: int):
     """Scale-adaptive shuffle-partition scope for iterative loops
     (optimization guide §2): a hook/peel/frontier round shuffles
     node-cardinality state, and when the session default (sized to
     the corpus / core count) exceeds what that state needs, per-round
-    task-launch overhead dominates the loop (the measured 2x the CC
-    label loop documented before growing its own inline version of
-    this). Target = ceil(n_rows / per_partition), clamped to
-    [2, session default] — a big graph keeps the session default, so
-    cluster deployments are unaffected.
+    task-launch overhead dominates the loop (measured 2x on the
+    connected-components label loop at sf0.1). Target =
+    n_rows // 100_000 + 2, clamped to [2, session default] — a big
+    graph keeps the session default, so cluster deployments are
+    unaffected.
 
     The caller must materialize (localCheckpoint) every frame built
     inside the scope that escapes it; restoring the conf cannot
     affect already-checkpointed RDDs. Session-global for the scope's
     duration — same sequential-queries caveat as connected_components.
     """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    target = max(2, min(int(prev), n_rows // per_partition + 2))
-    spark.conf.set(key, str(target))
-    try:
-        yield target
-    finally:
-        spark.conf.set(key, prev)
+    prev = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return shuffle_partitions(spark, max(2, min(prev, n_rows // 100_000 + 2)))
 
 
 # ---------------------------------------------------------------------------

@@ -191,23 +191,17 @@ def create_database(spark: SparkSession, name: str) -> None:
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
 
 
-def write_text_report(
-    df: DataFrame,
-    path: str,
-    sep: str = " ",
-    single_file: bool = False,
-    mode: str = "overwrite",
-) -> None:
+def write_text_report(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S4: the reference's part-r-00000 text sink
     (README.md:133-139) — space-delimited lines of the stringified
-    columns. `single_file=True` reproduces the one-file layout via
+    columns, overwriting `path`. `single_file=True` reproduces the one-file layout via
     coalesce(1); leave False at scale (a single writer serializes the
     job — the reference's own bottleneck)."""
     out = df.select(
-        F.concat_ws(sep, *[F.col(c).cast("string") for c in df.columns]).alias(
+        F.concat_ws(" ", *[F.col(c).cast("string") for c in df.columns]).alias(
             "value"
         )
     )
     if single_file:
         out = out.coalesce(1)
-    out.write.mode(mode).text(path)
+    out.write.mode("overwrite").text(path)

@@ -21,6 +21,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.aggregates import ROUND_DIGITS
+from ..runtime import shuffle_partitions
+
 # Scale-adaptive state partitioning (optimization guide §2): a
 # stateful streaming query instantiates one state-store instance per
 # shuffle partition PER stateful operator, and every micro-batch pays
@@ -30,13 +33,10 @@ from pyspark.sql import functions as F
 # seconds in state commits for 57k state rows (~1.8k rows per store —
 # pure per-instance overhead). Deriving the partition count from the
 # input size keeps small streams on few stores while large inputs
-# grow back to the session default; the advisory is env-tunable the
-# same way a production deployment sizes state partitions to state
-# volume (the count is pinned into the checkpoint on first start
-# either way, so an existing checkpoint keeps its layout on resume).
-_STREAM_ADVISORY_BYTES = int(
-    os.environ.get("ADHPS_STREAM_STATE_ADVISORY_BYTES", str(32 * 1024 * 1024))
-)
+# grow back to the session default (the count is pinned into the
+# checkpoint on first start, so an existing checkpoint keeps its
+# layout on resume).
+_STREAM_ADVISORY_BYTES = 32 * 1024 * 1024
 
 
 def scoped_stream_shuffle_partitions(spark: SparkSession, src_dir: str) -> int:
@@ -79,7 +79,7 @@ def windowed_agg(
     )
     return (
         src.groupBy(win.alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), ROUND_DIGITS).alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             *keys,
@@ -105,7 +105,7 @@ def session_window_agg(
     src = df.withWatermark(ts_col, watermark) if watermark else df
     return (
         src.groupBy(F.session_window(ts_col, gap).alias("w"), *keys)
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), ROUND_DIGITS).alias("sum_value"))
         .select(
             *keys,
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -137,12 +137,7 @@ def run_file_stream_batch(
     # input-sized state partitioning; the conf is read once at query
     # start (it is pinned into the checkpoint metadata), and the drain
     # is synchronous, so restoring after the drain cannot affect it
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key, str(scoped_stream_shuffle_partitions(spark, src_dir))
-    )
-    try:
+    with shuffle_partitions(spark, scoped_stream_shuffle_partitions(spark, src_dir)):
         q = (
             build_plan(stream)
             .writeStream.outputMode(output_mode)
@@ -154,7 +149,5 @@ def run_file_stream_batch(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(key, prev)
     out = spark.table(name)
     return finalize(out) if finalize else out

@@ -62,5 +62,8 @@ def generate_ontime_rows(n: int, seed: int = 42) -> list[Row]:
     return rows
 
 
-def ontime_df(spark: SparkSession, n: int = 20_000, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(generate_ontime_rows(n, seed), schema=ONTIME_SCHEMA)
+def ontime_df(spark: SparkSession) -> DataFrame:
+    """The 20,000-row, seed-42 on-time frame the airline tests run on."""
+    return spark.createDataFrame(
+        generate_ontime_rows(20_000, 42), schema=ONTIME_SCHEMA
+    )

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 def ontime(spark):
     from airline_dataset_hadoop_public_spark.testing.ontime import ontime_df
 
-    return ontime_df(spark, n=20_000, seed=42).cache()
+    return ontime_df(spark).cache()
 
 
 def test_g1q1_matches_pandas_ground_truth(spark, ontime):

@@ -178,9 +178,7 @@ def test_srp_lsh_subset_of_bruteforce_with_high_recall(spark, qs):
     }
     truth = {
         (r["id_a"], r["id_b"])
-        for r in embedding_cosine_pairs(
-            load_table(spark, SF, "embeddings"), threshold=0.4
-        ).collect()
+        for r in embedding_cosine_pairs(load_table(spark, SF, "embeddings")).collect()
     }
     assert got <= truth  # LSH candidates verified exactly -> no false positives
     if truth:

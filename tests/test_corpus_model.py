@@ -32,7 +32,7 @@ def test_bigram_lm_hand_case(spark):
     # c(a,b)=1, c(b,a)=2; c(a)=3, c(b)=2; k=0.5
     docs = spark.createDataFrame([(0, "a b a"), (1, "b a")], ["doc_id", "text"])
     out = {
-        r["doc_id"]: r for r in bigram_lm_scores(docs, k=0.5).collect()
+        r["doc_id"]: r for r in bigram_lm_scores(docs).collect()
     }
     p_ab = (1 + 0.5) / (3 + 0.5 * 2)
     p_ba = (2 + 0.5) / (2 + 0.5 * 2)
@@ -303,7 +303,7 @@ def test_bpe_encode_counts_match_python_reference(spark):
     }
     got = {
         r["doc_id"]: (r["n_words"], r["n_tokens_bpe"])
-        for r in bpe_encode_token_counts(docs, merges=2).collect()
+        for r in bpe_encode_token_counts(docs).collect()
     }
     assert got == expect
 

@@ -43,7 +43,7 @@ def test_minhash_finds_planted_neardup(spark, docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in D.minhash_neardup_pairs(
-            docs, "doc_id", "text", n=1, threshold=0.8
+            docs, "doc_id", "text", threshold=0.8
         ).collect()
     }
     assert (0, 1) in pairs  # near-dup (one word removed)
@@ -85,7 +85,7 @@ def test_simhash_exact_dup_distance_zero(spark, docs):
     # votes on all 64), so only exact/normalized dups are asserted.
     pairs = {
         (r["id_a"], r["id_b"]): r["distance"]
-        for r in D.simhash_pairs(docs, "doc_id", "text", max_distance=3).collect()
+        for r in D.simhash_pairs(docs, "doc_id", "text").collect()
     }
     assert pairs == {(0, 3): 0, (0, 4): 0, (3, 4): 0}
 
@@ -213,7 +213,7 @@ def test_ivf_recall_matches_python_set_intersection(spark):
     for r in S.brute_force_topk(emb, probes, k=5).collect():
         exact.setdefault(r["probe_id"], set()).add(r["neighbor_id"])
     approx = {}
-    for r in S.ivf_topk(emb, centroids, probes, k=5, nprobe=2).collect():
+    for r in S.ivf_topk(emb, centroids, probes).collect():
         approx.setdefault(r["probe_id"], set()).add(r["neighbor_id"])
 
     got = {r["probe_id"]: r for r in similarity_ivf_recall(spark, sf).collect()}

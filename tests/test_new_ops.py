@@ -48,7 +48,7 @@ def test_sample_frames_shape_and_values(spark):
         spark.createDataFrame([Row(doc_id=1, text=long), Row(doc_id=2, text=short)]),
         "text",
     )
-    rows = sample_frames(df, "doc_id", stride=16, max_frames=8).collect()
+    rows = sample_frames(df, "doc_id").collect()
     by_id: dict = {}
     for r in rows:
         by_id.setdefault(r["id"], []).append((r["frame_idx"], r["byte_val"]))
@@ -478,4 +478,4 @@ def test_triangle_counts_rejects_out_of_range_ids(spark):
         [(-1, 2), (2, 3), (3, -1)], "src long, dst long"
     )
     with _pytest.raises(Exception, match="triangle_counts requires"):
-        triangle_counts(edges, "src", "dst").collect()
+        triangle_counts(edges).collect()

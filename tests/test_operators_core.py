@@ -65,7 +65,7 @@ def test_top_k_per_group_caps_each_group(spark):
 
 def test_rank_table_dense_from_one(spark):
     df = spark.createDataFrame([("a", 3), ("b", 7), ("c", 5)], ["k", "v"])
-    rows = rank_table(df, [F.desc("v"), F.asc("k")], "rank").collect()
+    rows = rank_table(df, [F.desc("v"), F.asc("k")]).collect()
     assert {(r["k"], r["rank"]) for r in rows} == {("b", 1), ("c", 2), ("a", 3)}
 
 

@@ -731,7 +731,7 @@ def test_containment_matches_python_any_threshold(spark, docs, threshold):
     got = sorted(
         (r["id_a"], r["id_b"], r["containment"])
         for r in containment_pairs(
-            df, "doc_id", "text", n=3, threshold=threshold
+            df, "doc_id", "text", threshold=threshold
         ).collect()
     )
 

@@ -91,9 +91,7 @@ def test_cell_pair_kernel_threshold_bitexact_vs_join(spark):
     ).cache()
     new = {
         (r.id_a, r.id_b): r["__cos"]
-        for r in _cell_pair_scores(
-            assigned, "vec_id", "embedding", threshold=0.1
-        ).collect()
+        for r in _cell_pair_scores(assigned, threshold=0.1).collect()
     }
     old = {
         (r.id_a, r.id_b): r["__cos"]
@@ -121,9 +119,7 @@ def test_cell_pair_kernel_topk_bitexact_vs_window(spark):
     ).cache()
     new = {
         (r.src, r.dst): r["__cos"]
-        for r in _cell_pair_scores(
-            assigned, "vec_id", "embedding", topk=4
-        ).collect()
+        for r in _cell_pair_scores(assigned, topk=4).collect()
     }
     old = {
         (r.src, r.dst): r["__cos"]
@@ -146,15 +142,11 @@ def test_cell_pair_kernel_chunking_matches_unchunked(spark, monkeypatch):
         S.assign_to_centroids(vecs, cents), "embedding"
     ).cache()
     big = sorted(
-        map(tuple, S._cell_pair_scores(
-            assigned, "vec_id", "embedding", topk=3
-        ).collect())
+        map(tuple, S._cell_pair_scores(assigned, topk=3).collect())
     )
     monkeypatch.setattr(S, "_CELL_PAIR_CHUNK", 64)  # force many blocks
     small = sorted(
-        map(tuple, S._cell_pair_scores(
-            assigned, "vec_id", "embedding", topk=3
-        ).collect())
+        map(tuple, S._cell_pair_scores(assigned, topk=3).collect())
     )
     assert big == small and len(big) > 0
     assigned.unpersist()

@@ -35,7 +35,7 @@ def test_containment_is_asymmetric(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_pairs(df, "doc_id", "text", n=3, threshold=0.9).collect()
+        for r in containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
     }
     assert _containment(short, long_) == 1.0  # planted premise
     assert _containment(long_, short) < 0.9
@@ -58,7 +58,7 @@ def test_containment_matches_bruteforce(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_pairs(df, "doc_id", "text", n=3, threshold=0.6).collect()
+        for r in containment_pairs(df, "doc_id", "text", threshold=0.6).collect()
     }
     want = {
         (ia, ib): round(_containment(ta, tb), 4)
@@ -177,7 +177,7 @@ def test_containment_float_ceil_boundary(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["containment"]
-        for r in containment_pairs(df, "doc_id", "text", n=3, threshold=0.07).collect()
+        for r in containment_pairs(df, "doc_id", "text", threshold=0.07).collect()
     }
     assert got[(1, 2)] == 0.07 and got[(2, 1)] == 0.07
 

@@ -97,9 +97,7 @@ def test_span_removal_known_answer(spark, tmp_path):
     docs = load_table(spark, str(tmp_path), "documents")
     out = {
         r["doc_id"]: r
-        for r in duplicate_span_removal(
-            docs, "doc_id", "text", k=20, min_docs=2
-        ).collect()
+        for r in duplicate_span_removal(docs, "doc_id", "text", k=20).collect()
     }
     # NULL text excluded; doc shorter than k kept whole
     assert set(out) == {1, 2, 3, 5}

@@ -223,7 +223,7 @@ def test_clamped_running_balance_matches_naive(spark):
     got = {
         (r["u"], r["step"]): r["b"]
         for r in clamped_running_balance(
-            df, "u", "t", "d", lo=0.0, hi=50.0, out="b"
+            df, "u", "t", "d", hi=50.0, out="b"
         ).collect()
     }
     for u in range(5):
@@ -247,7 +247,7 @@ def test_clamped_balance_tied_steps_well_defined(spark):
     out = sorted(
         (r["step"], r["b"])
         for r in clamped_running_balance(
-            df, "u", "t", "d", lo=0.0, hi=50.0, out="b"
+            df, "u", "t", "d", hi=50.0, out="b"
         ).collect()
     )
     assert out == [(0, 40.0), (1, 50.0), (2, 45.0)]

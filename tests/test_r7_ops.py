@@ -132,7 +132,7 @@ def test_clamp_streamed_bit_equal_to_packed_small_batches(spark):
     want = _replay(rows, _clamp(0.0, 50.0))
     with _arrow_batch_cap(spark, 7):
         streamed = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=50.0, out="b"
+            df, "u", "t", "x", hi=50.0, out="b"
         ).collect()
     _cmp_bit_equal(streamed, want, ["u", "step", "t", "x", "b"])
 
@@ -176,7 +176,7 @@ def test_clamp_streamed_hot_key_1e6_events_bounded_batches(spark):
     )
     with _arrow_batch_cap(spark, 10_000):
         out = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=50.0, out="b"
+            df, "u", "t", "x", hi=50.0, out="b"
         )
         got = (
             out.groupBy("u")
@@ -226,7 +226,7 @@ def test_streamed_fold_key_runs_across_batch_boundaries(spark):
     df = spark.createDataFrame(rows, "u long, t long, x double")
     with _arrow_batch_cap(spark, 4):
         out = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=7.0, out="b"
+            df, "u", "t", "x", hi=7.0, out="b"
         ).collect()
     assert len(out) == 66
     for r in out:
@@ -352,7 +352,7 @@ def test_streamed_fold_null_keys_form_one_sql_group(spark):
 
     with _arrow_batch_cap(spark, 7):
         streamed_b = clamped_running_balance(
-            df, "u", "t", "x", lo=0.0, hi=30.0, out="b"
+            df, "u", "t", "x", hi=30.0, out="b"
         ).collect()
     _cmp_bit_equal(
         streamed_b, _replay(rows, _clamp(0.0, 30.0)),

@@ -252,9 +252,7 @@ def test_tfidf_cosine_pairs_detects_near_dups(spark):
         ],
         "doc_id INT, text STRING",
     )
-    rows = tfidf_cosine_pairs(
-        docs, "doc_id", "text", threshold=0.5, stop_df_divisor=1
-    ).collect()
+    rows = tfidf_cosine_pairs(docs, "doc_id", "text", stop_df_divisor=1).collect()
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
     assert pairs[(1, 6)] == pytest.approx(1.0)  # exact dup in pruned space
     assert (1, 2) in pairs and (3, 4) in pairs

@@ -70,17 +70,15 @@ def test_incremental_minhash_equals_batch_restriction(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
+    index = D.minhash_build_index(base, "doc_id", "text")
     inc = {
         tuple(r)
-        for r in D.minhash_neardup_pairs_incremental(
-            base, delta, "doc_id", "text", n=1, threshold=0.9,
-            num_hashes=96, bands=24,
-        ).collect()
+        for r in D.minhash_probe_index(index, delta, "doc_id", "text").collect()
     }
     full = {
         tuple(r)
         for r in D.minhash_neardup_pairs(
-            docs, "doc_id", "text", n=1, threshold=0.9,
+            docs, "doc_id", "text", threshold=0.9,
             num_hashes=96, bands=24,
         ).collect()
         if r["id_a"] % 5 == 0 or r["id_b"] % 5 == 0
@@ -98,12 +96,11 @@ def test_cluster_report_equals_pairs_plus_cc(spark):
     new = {
         (r["doc_id"], r["canonical"])
         for r in D.minhash_neardup_clusters(
-            docs, "doc_id", "text", n=1, threshold=0.9,
-            num_hashes=96, bands=24,
+            docs, "doc_id", "text", num_hashes=96, bands=24
         ).collect()
     }
     pairs = D.minhash_neardup_pairs(
-        docs, "doc_id", "text", n=1, threshold=0.9, num_hashes=96, bands=24
+        docs, "doc_id", "text", threshold=0.9, num_hashes=96, bands=24
     )
     old = {
         (r["node"], r["component"])
@@ -125,11 +122,9 @@ def test_simhash_cluster_report_equals_pairs_plus_cc(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     new = {
         (r["doc_id"], r["canonical"])
-        for r in D.simhash_clusters(
-            docs, "doc_id", "text", n=1, max_distance=3
-        ).collect()
+        for r in D.simhash_clusters(docs, "doc_id", "text").collect()
     }
-    pairs = D.simhash_pairs(docs, "doc_id", "text", n=1, max_distance=3)
+    pairs = D.simhash_pairs(docs, "doc_id", "text")
     old = {
         (r["node"], r["component"])
         for r in D.connected_components(
