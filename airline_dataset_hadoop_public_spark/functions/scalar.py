@@ -21,10 +21,11 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def normalize_text(col: str | Column) -> Column:
-    """lower + trim + collapse internal whitespace to single spaces.
-    DuckDB equivalent: regexp_replace(lower(trim(x)), '\\s+', ' ', 'g')."""
-    return F.regexp_replace(F.lower(F.trim(_c(col))), r"\s+", " ")
+def normalize_text() -> Column:
+    """The ``text`` column, lowered and trimmed, with internal whitespace
+    collapsed to single spaces. DuckDB equivalent:
+    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')."""
+    return F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
 
 
 def tokens(col: str | Column) -> Column:
@@ -65,26 +66,6 @@ def composite_key(cols: list[str | Column]) -> Column:
     grouping always uses the real columns; this exists to reproduce the
     reference's output text byte-for-byte."""
     return F.concat_ws(" ", *[_c(c).cast("string") for c in cols])
-
-
-def cosine_similarity(a_col: str, b_col: str) -> Column:
-    """Cosine similarity of two numeric array columns (by NAME),
-    computed in float64 — matches DuckDB list_cosine_similarity on
-    DOUBLE[] inputs. Pure higher-order-function expression: no UDF,
-    stays inside whole-stage codegen.
-    """
-
-    def dot(x: str, y: str) -> str:
-        return (
-            f"aggregate(zip_with({x}, {y}, "
-            f"(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-
-    return F.expr(
-        f"{dot(a_col, b_col)} / "
-        f"(sqrt({dot(a_col, a_col)}) * sqrt({dot(b_col, b_col)}))"
-    )
 
 
 def finite_measure(col: str | Column) -> Column:

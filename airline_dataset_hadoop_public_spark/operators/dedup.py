@@ -75,11 +75,7 @@ def _safe_ceil(expr):
     return F.ceil(expr - F.lit(_CEIL_EPS))
 
 
-def exact_dedup(
-    df: DataFrame,
-    key: str | list[str],
-    id_col: str,
-) -> DataFrame:
+def exact_dedup(df: DataFrame, key: str | list[str]) -> DataFrame:
     """One row per duplicate-group: the minimum id plus the group size.
 
     `key` may be any column(s) — typically a normalized text column or
@@ -87,12 +83,12 @@ def exact_dedup(
     """
     keys = [key] if isinstance(key, str) else list(key)
     return df.groupBy(*keys).agg(
-        F.min(id_col).alias(id_col),
+        F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+def _shingled(df: DataFrame, n: int) -> DataFrame:
     """id → distinct n-gram shingle array (sorted for determinism).
 
     Shingle construction is CPU-bound; a small-file source (one parquet
@@ -103,18 +99,18 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     # current partition count (df.rdd.getNumPartitions) forces a
     # plan-to-RDD conversion per call, and AQE coalesces any excess
     # partitions at runtime anyway.
-    narrow = df.select(id_col, text_col).repartition(
+    narrow = df.select("doc_id", "text").repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
     return (
-        narrow.select(id_col, tokens(text_col).alias("__toks"))
+        narrow.select("doc_id", tokens("text").alias("__toks"))
         .withColumn("__sh", F.array_sort(F.array_distinct(word_ngrams("__toks", n))))
-        .select(id_col, "__sh")
+        .select("doc_id", "__sh")
     )
 
 
 def _collapse_identical(
-    sh: DataFrame, id_col: str, key: str = "__sh", fingerprint: bool = False
+    sh: DataFrame, key: str = "__sh", fingerprint: bool = False
 ) -> DataFrame:
     """Collapse docs whose `key` column (shingle set / signature) is
     identical into one group: (key, __rep, __members).
@@ -137,15 +133,15 @@ def _collapse_identical(
             sh.withColumn("__fp", F.md5(F.concat_ws("\n", key)))
             .groupBy("__fp")
             .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(id_col).alias("__members"),
+                F.min("doc_id").alias("__rep"),
+                F.collect_list("doc_id").alias("__members"),
                 F.first(key).alias(key),
             )
             .drop("__fp")
         )
     return sh.groupBy(key).agg(
-        F.min(id_col).alias("__rep"),
-        F.collect_list(id_col).alias("__members"),
+        F.min("doc_id").alias("__rep"),
+        F.collect_list("doc_id").alias("__members"),
     )
 
 
@@ -182,16 +178,14 @@ def _expand_rep_pairs(rep_pairs: DataFrame, grp: DataFrame, val_cols: list[str])
     )
 
 
-def _verify_jaccard(
-    cands: DataFrame, shingles: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
+def _verify_jaccard(cands: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
     """Join candidate (id_a, id_b) pairs back to shingle sets and keep
     those with exact Jaccard ≥ threshold."""
     a = shingles.select(
-        F.col(id_col).alias("id_a"), F.col("__sh").alias("__sha")
+        F.col("doc_id").alias("id_a"), F.col("__sh").alias("__sha")
     )
     b = shingles.select(
-        F.col(id_col).alias("id_b"), F.col("__sh").alias("__shb")
+        F.col("doc_id").alias("id_b"), F.col("__sh").alias("__shb")
     )
     return (
         cands.join(a, "id_a")
@@ -207,21 +201,15 @@ def _verify_jaccard(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 2,
-    threshold: float = 0.2,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, n: int = 2, threshold: float = 0.2) -> DataFrame:
     """All (id_a < id_b) pairs with word-n-gram Jaccard ≥ threshold.
 
     Exact (prefix-filter candidates → Jaccard verify). ``_MAX_POSTING``
     drops prefix tokens whose posting list exceeds the cap — a scale
     guard that never triggers on test corpora.
     """
-    all_sh = _shingled(df, id_col, text_col, n).filter(F.size("__sh") > 0)
-    grp = _collapse_identical(all_sh, id_col, fingerprint=True).transform(cache_tracked)
+    all_sh = _shingled(df, n).filter(F.size("__sh") > 0)
+    grp = _collapse_identical(all_sh, fingerprint=True).transform(cache_tracked)
     intra = _intra_group_pairs(grp, "jaccard", 1.0)
     # Work on 64-bit hashed shingles from here on: prefix filtering only
     # needs SOME consistent global token order, and Jaccard over hashed
@@ -229,21 +217,21 @@ def ngram_jaccard_pairs(
     # odds). Int posting lists and int array_intersect are far cheaper
     # than their string equivalents.
     sh = (
-        grp.select(F.col("__rep").alias(id_col), "__sh")
+        grp.select(F.col("__rep").alias("doc_id"), "__sh")
         .withColumn("__hs", F.array_sort(F.expr("transform(__sh, t -> xxhash64(t))")))
-        .select(id_col, "__hs")
+        .select("doc_id", "__hs")
         .transform(cache_tracked)
     )
     # cached: tok_df and the rank join both consume the exploded
     # postings — uncached, the shingle-explode lineage runs twice
     posting = sh.select(
-        id_col, F.size("__hs").alias("__len"), F.explode("__hs").alias("__t")
+        "doc_id", F.size("__hs").alias("__len"), F.explode("__hs").alias("__t")
     ).transform(cache_tracked)
     # global df-order: rarest tokens first → shortest posting lists in
     # the prefix join.
     tok_df = posting.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
     ranked = posting.join(tok_df, "__t")
-    w = Window.partitionBy(id_col).orderBy("__df", "__t")
+    w = Window.partitionBy("doc_id").orderBy("__df", "__t")
     with_pos = ranked.withColumn("__pos", F.row_number().over(w))
     # prefix length: |x| - ceil(t*|x|) + 1. Cached: both the hot-token
     # guard and the self-join consume it — uncached, the whole
@@ -253,7 +241,7 @@ def ngram_jaccard_pairs(
             F.col("__pos")
             <= F.col("__len") - _safe_ceil(F.lit(threshold) * F.col("__len")) + 1
         )
-        .select(id_col, "__t", "__len", "__pos")
+        .select("doc_id", "__t", "__len", "__pos")
         .transform(cache_tracked)
     )
     # posting-list cap (scale guard)
@@ -265,11 +253,11 @@ def ngram_jaccard_pairs(
     )
     prefix = prefix.join(F.broadcast(hot), "__t", "left_anti")
     pa = prefix.select(
-        F.col(id_col).alias("id_a"), "__t",
+        F.col("doc_id").alias("id_a"), "__t",
         F.col("__len").alias("__la"), F.col("__pos").alias("__xa"),
     )
     pb = prefix.select(
-        F.col(id_col).alias("id_b"), "__t",
+        F.col("doc_id").alias("id_b"), "__t",
         F.col("__len").alias("__lb"), F.col("__pos").alias("__xb"),
     )
     # size filter: J(x,y) ≥ t ⇒ t·|x| ≤ |y| — prunes candidates whose
@@ -296,8 +284,8 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("__hs").alias("__ha"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("__hs").alias("__hb"))
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("__hs").alias("__ha"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("__hs").alias("__hb"))
     rep_pairs = (
         cands.join(a, "id_a")
         .join(b, "id_b")
@@ -313,12 +301,7 @@ def ngram_jaccard_pairs(
     return intra.select("id_a", "id_b", "jaccard").unionByName(cross)
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.9,
-) -> DataFrame:
+def containment_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """All ORDERED (id_a, id_b) pairs with word-trigram containment
     C(A,B) = |A∩B| / |A| ≥ threshold, id_a ≠ id_b — "A is mostly
     contained in B". The asymmetric complement of
@@ -348,8 +331,8 @@ def containment_pairs(
     the container-side posting lists, and every stage is an
     explode/groupBy/equi-join — no all-pairs product.
     """
-    all_sh = _shingled(df, id_col, text_col, 3).filter(F.size("__sh") > 0)
-    grp = _collapse_identical(all_sh, id_col, fingerprint=True).transform(
+    all_sh = _shingled(df, 3).filter(F.size("__sh") > 0)
+    grp = _collapse_identical(all_sh, fingerprint=True).transform(
         cache_tracked
     )
     # identical sets: containment 1.0 in BOTH directions (ordered pairs)
@@ -361,32 +344,32 @@ def containment_pairs(
         .withColumn("containment", F.lit(1.0))
     )
     sh = (
-        grp.select(F.col("__rep").alias(id_col), "__sh")
+        grp.select(F.col("__rep").alias("doc_id"), "__sh")
         .withColumn(
             "__hs", F.array_sort(F.expr("transform(__sh, t -> xxhash64(t))"))
         )
-        .select(id_col, "__hs")
+        .select("doc_id", "__hs")
         .transform(cache_tracked)
     )
     # cached: four consumers (df ranking, the rank join, the container
     # side, and the hot-token guard) would otherwise each re-run the
     # shingle explode lineage
     posting = sh.select(
-        id_col, F.size("__hs").alias("__len"), F.explode("__hs").alias("__t")
+        "doc_id", F.size("__hs").alias("__len"), F.explode("__hs").alias("__t")
     ).transform(cache_tracked)
     tok_df = posting.groupBy("__t").agg(F.count(F.lit(1)).alias("__df"))
     ranked = posting.join(tok_df, "__t")
-    w = Window.partitionBy(id_col).orderBy("__df", "__t")
+    w = Window.partitionBy("doc_id").orderBy("__df", "__t")
     with_pos = ranked.withColumn("__pos", F.row_number().over(w))
     # contained-side prefix: |A| − ⌈t·|A|⌉ + 1 df-rarest shingles
     prefix = with_pos.filter(
         F.col("__pos")
         <= F.col("__len") - _safe_ceil(F.lit(threshold) * F.col("__len")) + 1
-    ).select(id_col, "__t", "__len")
+    ).select("doc_id", "__t", "__len")
     # container side = full postings; cap pathological lists (scale
     # guard — a capped token only loses candidates whose other prefix
     # tokens miss too; never fires on the test corpora)
-    full = posting.select(id_col, "__t", "__len")
+    full = posting.select("doc_id", "__t", "__len")
     hot = (
         full.groupBy("__t")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -395,10 +378,10 @@ def containment_pairs(
     )
     full = full.join(F.broadcast(hot), "__t", "left_anti")
     pa = prefix.select(
-        F.col(id_col).alias("id_a"), "__t", F.col("__len").alias("__la")
+        F.col("doc_id").alias("id_a"), "__t", F.col("__len").alias("__la")
     )
     pb = full.select(
-        F.col(id_col).alias("id_b"), "__t", F.col("__len").alias("__lb")
+        F.col("doc_id").alias("id_b"), "__t", F.col("__len").alias("__lb")
     )
     cands = (
         pa.join(pb, "__t")
@@ -409,8 +392,8 @@ def containment_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("__hs").alias("__ha"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("__hs").alias("__hb"))
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("__hs").alias("__ha"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("__hs").alias("__hb"))
     rep_pairs = (
         cands.join(a, "id_a")
         .join(b, "id_b")
@@ -507,7 +490,7 @@ def _minhash_band_kernel(num_hashes: int, bands: int):
 
 
 
-def _hashed_reps(grp: DataFrame, id_col: str) -> DataFrame:
+def _hashed_reps(grp: DataFrame) -> DataFrame:
     """Representative id → sorted int64-hashed shingle set (cached).
 
     One string hash per shingle; the same int-hash array backs BOTH
@@ -516,18 +499,18 @@ def _hashed_reps(grp: DataFrame, id_col: str) -> DataFrame:
     ~2⁻⁶⁴ within-pair collision, and int array_intersect is far
     cheaper than string array_intersect)."""
     return cache_tracked(
-        grp.select(F.col("__rep").alias(id_col), "__sh")
+        grp.select(F.col("__rep").alias("doc_id"), "__sh")
         .withColumn(
             "__hs", F.array_sort(F.expr("transform(__sh, t -> xxhash64(t))"))
         )
-        .select(id_col, "__hs")
+        .select("doc_id", "__hs")
     )
 
 
-def _banded(reps: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
+def _banded(reps: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """Banded signature frame: (id, set length, band, band key)."""
     return reps.select(
-        id_col,
+        "doc_id",
         F.size("__hs").alias("__len"),
         F.posexplode(
             _minhash_band_kernel(num_hashes, bands)("__hs")
@@ -538,7 +521,6 @@ def _banded(reps: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFr
 def _lsh_candidates(
     banded_probe: DataFrame,
     banded_universe: DataFrame,
-    id_col: str,
     threshold: float,
     max_bucket: int,
     symmetric: bool,
@@ -574,10 +556,10 @@ def _lsh_candidates(
         else banded_universe.join(F.broadcast(big), ["band", "bkey"], "left_anti")
     )
     pa = pa_frame.select(
-        F.col(id_col).alias("id_a"), F.col("__len").alias("__la"), "band", "bkey"
+        F.col("doc_id").alias("id_a"), F.col("__len").alias("__la"), "band", "bkey"
     )
     pb = pb_frame.select(
-        F.col(id_col).alias("id_b"), F.col("__len").alias("__lb"), "band", "bkey"
+        F.col("doc_id").alias("id_b"), F.col("__len").alias("__lb"), "band", "bkey"
     )
     id_pred = (
         (F.col("id_a") < F.col("id_b"))
@@ -601,7 +583,6 @@ def _lsh_candidates(
 
 def _rep_neardup_edges(
     reps_probe: DataFrame,
-    id_col: str,
     threshold: float,
     num_hashes: int,
     bands: int,
@@ -622,21 +603,19 @@ def _rep_neardup_edges(
     distinct) → exact-Jaccard verification on the hashed sets.
     """
     if banded_probe is None:
-        banded_probe = cache_tracked(
-            _banded(reps_probe, id_col, num_hashes, bands)
-        )
+        banded_probe = cache_tracked(_banded(reps_probe, num_hashes, bands))
     symmetric = reps_universe is None
     if symmetric:
         reps_universe = reps_probe
         banded_universe = banded_probe
     cands = _lsh_candidates(
-        banded_probe, banded_universe, id_col, threshold, _MAX_BUCKET, symmetric
+        banded_probe, banded_universe, threshold, _MAX_BUCKET, symmetric
     )
     a = reps_universe.select(
-        F.col(id_col).alias("id_a"), F.col("__hs").alias("__ha")
+        F.col("doc_id").alias("id_a"), F.col("__hs").alias("__ha")
     )
     b = reps_universe.select(
-        F.col(id_col).alias("id_b"), F.col("__hs").alias("__hb")
+        F.col("doc_id").alias("id_b"), F.col("__hs").alias("__hb")
     )
     return (
         cands.join(a, "id_a")
@@ -653,8 +632,6 @@ def _rep_neardup_edges(
 
 def minhash_neardup_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float = 0.9,
     num_hashes: int = 128,
     bands: int = 32,
@@ -685,13 +662,11 @@ def minhash_neardup_pairs(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    sh = _shingled(df, id_col, text_col, 1).filter(F.size("__sh") > 0)
-    grp = _collapse_identical(sh, id_col, fingerprint=True).transform(cache_tracked)
+    sh = _shingled(df, 1).filter(F.size("__sh") > 0)
+    grp = _collapse_identical(sh, fingerprint=True).transform(cache_tracked)
     intra = _intra_group_pairs(grp, "jaccard", 1.0)
-    reps = _hashed_reps(grp, id_col)
-    rep_pairs = _rep_neardup_edges(
-        reps, id_col, threshold, num_hashes, bands
-    )
+    reps = _hashed_reps(grp)
+    rep_pairs = _rep_neardup_edges(reps, threshold, num_hashes, bands)
     cross = _expand_rep_pairs(rep_pairs, grp, ["jaccard"])
     return intra.select("id_a", "id_b", "jaccard").unionByName(cross)
 
@@ -925,12 +900,7 @@ def connected_components(
     )
 
 
-def simhash_signature(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    portable_hash: bool = False,
-) -> DataFrame:
+def simhash_signature(df: DataFrame, portable_hash: bool = False) -> DataFrame:
     """id → 64-bit SimHash of the document's word shingle set.
 
     ``portable_hash=True`` swaps the per-shingle hash from xxhash64
@@ -946,7 +916,7 @@ def simhash_signature(
         else "t -> xxhash64(t)"
     )
     sh = (
-        _shingled(df, id_col, text_col, 1)
+        _shingled(df, 1)
         .filter(F.size("__sh") > 0)
         # hash shingles JVM-side (codegen'd scalar funcs) once up front
         .withColumn("__hs", F.expr(f"transform(__sh, {shingle_hash})"))
@@ -957,7 +927,7 @@ def simhash_signature(
     # compile on first run (BENCH_r01's 15.6s dedup_simhash). Hashes
     # arrive as signed int64; the kernel's uint64 view keeps the bit
     # semantics of the JVM's two's-complement shifts.
-    return sh.select(id_col, _simhash_kernel()("__hs").alias("simhash"))
+    return sh.select("doc_id", _simhash_kernel()("__hs").alias("simhash"))
 
 
 _SIMHASH_KERNEL = None
@@ -989,12 +959,7 @@ def _simhash_kernel():
     return _SIMHASH_KERNEL
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    portable_hash: bool = False,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, portable_hash: bool = False) -> DataFrame:
     """(id_a < id_b, distance) pairs with SimHash Hamming distance ≤
     k = ``_SIMHASH_MAX_DISTANCE``.
 
@@ -1003,21 +968,21 @@ def simhash_pairs(
     per chunk, then exact popcount verification. (Manku/Jain/Sarma,
     WWW'07 — the standard web-scale simhash dedup layout.)
     """
-    sigs = simhash_signature(df, id_col, text_col, portable_hash=portable_hash)
+    sigs = simhash_signature(df, portable_hash=portable_hash)
     # Collapse identical signatures: distance is a pure function of the
     # signature, so candidate generation runs once per distinct value
     # (intra-group pairs have distance 0 by construction).
-    grp = _collapse_identical(sigs, id_col, key="simhash").transform(cache_tracked)
+    grp = _collapse_identical(sigs, key="simhash").transform(cache_tracked)
     intra = _intra_group_pairs(grp, "distance", 0).withColumn(
         "distance", F.col("distance").cast("long")
     )
-    reps = grp.select(F.col("__rep").alias(id_col), "simhash")
-    rep_pairs = _simhash_rep_edges(reps, id_col)
+    reps = grp.select(F.col("__rep").alias("doc_id"), "simhash")
+    rep_pairs = _simhash_rep_edges(reps)
     cross = _expand_rep_pairs(rep_pairs, grp, ["distance"])
     return intra.select("id_a", "id_b", "distance").unionByName(cross)
 
 
-def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
+def _simhash_rep_edges(reps: DataFrame) -> DataFrame:
     """Verified (id_a < id_b, distance ≤ k) pairs over REPRESENTATIVE
     signatures — the shared candidate/guard/verify stage behind both
     the pair report (simhash_pairs) and the cluster report
@@ -1025,7 +990,7 @@ def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
     chunks = _SIMHASH_MAX_DISTANCE + 1
     width = 64 // chunks
     chunked = reps.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.expr(
@@ -1035,7 +1000,7 @@ def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
                 f"{(1 << width) - 1}) AS ckey))"
             )
         ).alias("__c"),
-    ).select(id_col, "simhash", "__c.chunk", "__c.ckey")
+    ).select("doc_id", "simhash", "__c.chunk", "__c.ckey")
     big = (
         chunked.groupBy("chunk", "ckey")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -1044,10 +1009,10 @@ def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
     )
     chunked = chunked.join(F.broadcast(big), ["chunk", "ckey"], "left_anti")
     ca = chunked.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("__ha"), "chunk", "ckey"
+        F.col("doc_id").alias("id_a"), F.col("simhash").alias("__ha"), "chunk", "ckey"
     )
     cb = chunked.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("__hb"), "chunk", "ckey"
+        F.col("doc_id").alias("id_b"), F.col("simhash").alias("__hb"), "chunk", "ckey"
     )
     rep_pairs = (
         ca.join(cb, ["chunk", "ckey"])
@@ -1061,12 +1026,7 @@ def _simhash_rep_edges(reps: DataFrame, id_col: str) -> DataFrame:
     return rep_pairs
 
 
-def simhash_clusters(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    portable_hash: bool = False,
-) -> DataFrame:
+def simhash_clusters(df: DataFrame, portable_hash: bool = False) -> DataFrame:
     """(id, canonical) SimHash near-dup clusters WITHOUT materializing
     the quadratic pair report — the dedup ACTION a 100 TB corpus runs.
 
@@ -1080,18 +1040,18 @@ def simhash_clusters(
     so the inherited label equals the min doc id over the cluster —
     the same contract as CC over the expanded pair graph.
     """
-    sigs = simhash_signature(df, id_col, text_col, portable_hash=portable_hash)
-    grp = cache_tracked(_collapse_identical(sigs, id_col, key="simhash"))
-    reps = grp.select(F.col("__rep").alias(id_col), "simhash")
-    rep_edges = _simhash_rep_edges(reps, id_col).select("id_a", "id_b")
+    sigs = simhash_signature(df, portable_hash=portable_hash)
+    grp = cache_tracked(_collapse_identical(sigs, key="simhash"))
+    reps = grp.select(F.col("__rep").alias("doc_id"), "simhash")
+    rep_edges = _simhash_rep_edges(reps).select("id_a", "id_b")
     comp = connected_components(
-        reps.select(F.col(id_col).alias("node")), rep_edges
+        reps.select(F.col("doc_id").alias("node")), rep_edges
     )
     return (
         grp.select(F.col("__rep").alias("node"), "__members")
         .join(comp, "node")
         .select(
-            F.explode("__members").alias(id_col),
+            F.explode("__members").alias("doc_id"),
             F.col("component").alias("canonical"),
         )
     )
@@ -1104,9 +1064,7 @@ INDEX_NUM_HASHES = 96
 INDEX_BANDS = 24
 
 
-def minhash_build_index(
-    base: DataFrame, id_col: str, text_col: str
-) -> dict[str, DataFrame]:
+def minhash_build_index(base: DataFrame) -> dict[str, DataFrame]:
     """Build the persistable LSH index of a corpus: duplicate-group
     table, per-representative hashed shingle sets, and the banded
     signature frame. In production these three frames ARE the index —
@@ -1115,19 +1073,17 @@ def minhash_build_index(
     signature shape. ``minhash_probe_index`` consumes them per delta
     batch.
     """
-    sh = _shingled(base, id_col, text_col, 1).filter(F.size("__sh") > 0)
-    grp = cache_tracked(_collapse_identical(sh, id_col, fingerprint=True))
-    reps = _hashed_reps(grp, id_col)
+    sh = _shingled(base, 1).filter(F.size("__sh") > 0)
+    grp = cache_tracked(_collapse_identical(sh, fingerprint=True))
+    reps = _hashed_reps(grp)
     return {
         "grp": grp.select("__rep", "__members"),
         "reps": reps,
-        "banded": _banded(reps, id_col, INDEX_NUM_HASHES, INDEX_BANDS),
+        "banded": _banded(reps, INDEX_NUM_HASHES, INDEX_BANDS),
     }
 
 
-def minhash_probe_index(
-    index: dict[str, DataFrame], delta: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+def minhash_probe_index(index: dict[str, DataFrame], delta: DataFrame) -> DataFrame:
     """Probe a prebuilt LSH index with a delta batch: all pairs
     (id_a < id_b, jaccard >= 0.9) touching the delta — new docs
     vs the indexed corpus and vs each other. The incremental ingest
@@ -1143,14 +1099,13 @@ def minhash_probe_index(
     deterministically. Candidate/guard/verify logic is the shared
     ``_rep_neardup_edges`` (probe × universe form).
     """
-    d = minhash_build_index(delta, id_col, text_col)
+    d = minhash_build_index(delta)
     grp_d, reps_d = d["grp"], d["reps"]
     probe = cache_tracked(d["banded"])
     intra = _intra_group_pairs(grp_d, "jaccard", 1.0)
 
     rep_pairs = _rep_neardup_edges(
         reps_d,
-        id_col,
         0.9,
         INDEX_NUM_HASHES,
         INDEX_BANDS,
@@ -1167,8 +1122,6 @@ def minhash_probe_index(
 
 def minhash_neardup_clusters(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     num_hashes: int = 128,
     bands: int = 32,
 ) -> DataFrame:
@@ -1189,30 +1142,23 @@ def minhash_neardup_clusters(
     """
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    sh = _shingled(df, id_col, text_col, 1).filter(F.size("__sh") > 0)
-    grp = cache_tracked(_collapse_identical(sh, id_col, fingerprint=True))
-    reps = _hashed_reps(grp, id_col)
-    rep_edges = _rep_neardup_edges(
-        reps, id_col, 0.9, num_hashes, bands
-    ).select("id_a", "id_b")
-    comp = connected_components(reps.select(F.col(id_col).alias("node")), rep_edges)
+    sh = _shingled(df, 1).filter(F.size("__sh") > 0)
+    grp = cache_tracked(_collapse_identical(sh, fingerprint=True))
+    reps = _hashed_reps(grp)
+    rep_edges = _rep_neardup_edges(reps, 0.9, num_hashes, bands).select("id_a", "id_b")
+    comp = connected_components(reps.select(F.col("doc_id").alias("node")), rep_edges)
     # members inherit their representative's component label
     return (
         grp.select(F.col("__rep").alias("node"), "__members")
         .join(comp, "node")
         .select(
-            F.explode("__members").alias(id_col),
+            F.explode("__members").alias("doc_id"),
             F.col("component").alias("canonical"),
         )
     )
 
 
-def block_dedup_keep_first(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_words: int = 20,
-) -> DataFrame:
+def block_dedup_keep_first(df: DataFrame, block_words: int = 20) -> DataFrame:
     """(id, n_blocks, n_kept, kept_fp): paragraph/block-level exact
     dedup with keep-first-occurrence semantics — the CCNet / C4
     dedup granularity (Wenzek et al. 2020 dedupe corpora at the
@@ -1240,12 +1186,12 @@ def block_dedup_keep_first(
     keeps the empty string (kept_fp = md5('')).
     """
     base = df.filter(
-        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
+        F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     b = int(block_words)
-    words = tokens(F.col(text_col))
+    words = tokens(F.col("text"))
     blocks = base.select(
-        F.col(id_col).alias("__id"),
+        "doc_id",
         F.posexplode(
             F.transform(
                 F.sequence(
@@ -1259,16 +1205,16 @@ def block_dedup_keep_first(
         ).alias("idx", "block"),
     )
     first = blocks.groupBy("block").agg(
-        F.min(F.struct("__id", "idx")).alias("__first")
+        F.min(F.struct("doc_id", "idx")).alias("__first")
     )
     kept = blocks.join(first, "block").filter(
-        (F.col("__id") == F.col("__first.__id"))
+        (F.col("doc_id") == F.col("__first.doc_id"))
         & (F.col("idx") == F.col("__first.idx"))
     )
-    totals = blocks.groupBy("__id").agg(
+    totals = blocks.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_blocks")
     )
-    survived = kept.groupBy("__id").agg(
+    survived = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.array_join(
             F.transform(
@@ -1278,8 +1224,8 @@ def block_dedup_keep_first(
             " ",
         ).alias("__kept_txt"),
     )
-    return totals.join(survived, "__id", "left").select(
-        F.col("__id").alias(id_col),
+    return totals.join(survived, "doc_id", "left").select(
+        "doc_id",
         "n_blocks",
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
         F.md5(F.coalesce(F.col("__kept_txt"), F.lit(""))).alias("kept_fp"),

@@ -15,12 +15,12 @@ Scale contracts:
 - Each iteration's rank frame is localCheckpoint-truncated so the
   logical plan stays O(1) in the iteration count instead of doubling
   per round (same discipline as connected components,
-  operators/dedup.py:457).
+  dedup.connected_components).
 - Double-precision rank sums are order-nondeterministic in their low
   bits; callers that need cross-engine stable output must round
   (ROUND(rank*N, 4) keeps ~11 safe decimal digits of headroom).
 
-Related: connected components (operators/dedup.py:440) covers the
+Related: connected components (dedup.connected_components) covers the
 label-propagation family; this covers fixed-point scoring.
 """
 

@@ -38,7 +38,6 @@ _INT64_HEADROOM = 1 << 62
 
 def gram_matrix(
     df: DataFrame,
-    vec_col: str,
     ndigits: int = ROUND_DIGITS,
     quantize_bits: int | None = None,
 ) -> DataFrame:
@@ -103,7 +102,7 @@ def gram_matrix(
             # accumulate in float64 even for float32-stored embeddings:
             # float32 partials drift ~1e-7, visibly flipping rounded
             # output digits (any SQL engine sums these in double)
-            x = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
             if quantize_bits is not None:
                 x = np.floor(x * float(1 << quantize_bits) + 0.5).astype(
                     np.int64
@@ -141,7 +140,7 @@ def gram_matrix(
     from .similarity import vector_is_valid
 
     partials = (
-        df.where(vector_is_valid(vec_col)).select(vec_col)
+        df.where(vector_is_valid()).select("embedding")
         .mapInPandas(batches, schema)
     )
     if quantize_bits is None:
@@ -160,7 +159,7 @@ def gram_matrix(
     )
 
 
-def top_component(df: DataFrame, vec_col: str) -> list:
+def top_component(df: DataFrame) -> list:
     """Principal direction of the (uncentered) Gramian. The N-sized
     work is the single distributed gram_matrix pass; the d x d eigen
     step runs on the driver (d^2 doubles — driver-side by design, like
@@ -174,7 +173,7 @@ def top_component(df: DataFrame, vec_col: str) -> list:
     """
     import numpy as np
 
-    rows = gram_matrix(df, vec_col, ndigits=9).collect()
+    rows = gram_matrix(df, ndigits=9).collect()
     d = max(r["j"] for r in rows)
     g = np.zeros((d, d))
     for r in rows:

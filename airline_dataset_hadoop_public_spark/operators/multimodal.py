@@ -36,31 +36,29 @@ _TARGET_W = 224
 _TARGET_H = 224
 
 
-def with_binary_payload(df: DataFrame, src_col: str) -> DataFrame:
-    """Materialize the binary ``payload`` column (UTF-8 bytes of a
-    string column here; in a real pipeline this is the raw media blob
+def with_binary_payload(df: DataFrame) -> DataFrame:
+    """Materialize the binary ``payload`` column (UTF-8 bytes of the
+    ``text`` column here; in a real pipeline this is the raw media blob
     read from object storage)."""
-    return df.withColumn("payload", F.encode(F.col(src_col), "UTF-8"))
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
-def _non_null_payload(df: DataFrame, id_col: str) -> DataFrame:
+def _non_null_payload(df: DataFrame) -> DataFrame:
     """Narrow (id, payload) projection minus NULL payloads.
 
     A missing blob is routine at 100 TB (failed fetch, tombstoned
     object); the media kernels skip it instead of crashing the batch.
     Oracles mirror with WHERE text IS NOT NULL.
     """
-    return df.where(F.col("payload").isNotNull()).select(id_col, "payload")
+    return df.where(F.col("payload").isNotNull()).select("doc_id", "payload")
 
 
-def _feature_batch(
-    batches: Iterator[pd.DataFrame], id_name: str
-) -> Iterator[pd.DataFrame]:
+def _feature_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         payloads = pdf["payload"]
         yield pd.DataFrame(
             {
-                "id": pdf[id_name],
+                "id": pdf["doc_id"],
                 "n_bytes": payloads.map(len),
                 "first_byte": payloads.map(lambda b: b[0] if len(b) else -1),
                 "checksum": payloads.map(
@@ -70,24 +68,20 @@ def _feature_batch(
         )
 
 
-def extract_byte_features(df: DataFrame, id_col: str) -> DataFrame:
+def extract_byte_features(df: DataFrame) -> DataFrame:
     """Arrow-batched per-partition feature extraction over the binary
     payload column. Deterministic stub features (see module docstring)."""
-    narrow = _non_null_payload(df, id_col)
-    return narrow.mapInPandas(
-        lambda it: _feature_batch(it, id_col), schema=FEATURE_SCHEMA
-    )
+    narrow = _non_null_payload(df)
+    return narrow.mapInPandas(_feature_batch, schema=FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = "id bigint, frame_idx bigint, byte_val bigint"
 
 
-def _frame_batch(
-    batches: Iterator[pd.DataFrame], id_name: str
-) -> Iterator[pd.DataFrame]:
+def _frame_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         ids, idxs, vals = [], [], []
-        for rid, payload in zip(pdf[id_name], pdf["payload"]):
+        for rid, payload in zip(pdf["doc_id"], pdf["payload"]):
             for i in range(_MAX_FRAMES):
                 pos = i * _FRAME_STRIDE
                 if pos >= len(payload):
@@ -106,7 +100,7 @@ def _frame_batch(
         )
 
 
-def sample_frames(df: DataFrame, id_col: str) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video-like payloads: emit every
     `_FRAME_STRIDE`-th byte (up to `_MAX_FRAMES`) as one row per "frame".
 
@@ -116,10 +110,8 @@ def sample_frames(df: DataFrame, id_col: str) -> DataFrame:
     the parts Spark cares about — are real and oracle-checked. One
     narrow mapInPandas pass, no shuffle, no driver involvement.
     """
-    narrow = _non_null_payload(df, id_col)
-    return narrow.mapInPandas(
-        lambda it: _frame_batch(it, id_col), schema=FRAME_SCHEMA
-    )
+    narrow = _non_null_payload(df)
+    return narrow.mapInPandas(_frame_batch, schema=FRAME_SCHEMA)
 
 
 def decode_media(df: DataFrame):
@@ -137,13 +129,11 @@ META_SCHEMA = (
 )
 
 
-def _resize_batch(
-    batches: Iterator[pd.DataFrame], id_name: str
-) -> Iterator[pd.DataFrame]:
+def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cap = (_TARGET_W * _TARGET_H) // 64
     for pdf in batches:
         ids, mimes, sw, sh, ow, oh, ob = [], [], [], [], [], [], []
-        for rid, payload in zip(pdf[id_name], pdf["payload"]):
+        for rid, payload in zip(pdf["doc_id"], pdf["payload"]):
             n = len(payload)
             first = payload[0] if n else 0
             # deterministic stand-in for header parsing: a real decoder
@@ -169,7 +159,7 @@ def _resize_batch(
         )
 
 
-def resize_media(df: DataFrame, id_col: str) -> DataFrame:
+def resize_media(df: DataFrame) -> DataFrame:
     """Resize plumbing for image-like payloads: typed metadata out
     (mime, source dims, target dims, output size), one narrow
     mapInPandas pass, no shuffle.
@@ -181,7 +171,5 @@ def resize_media(df: DataFrame, id_col: str) -> DataFrame:
     shape, and partitioning — the Spark-side contract — are
     oracle-verified. See `decode_media` for the honest decode guard.
     """
-    narrow = _non_null_payload(df, id_col)
-    return narrow.mapInPandas(
-        lambda it: _resize_batch(it, id_col), schema=META_SCHEMA
-    )
+    narrow = _non_null_payload(df)
+    return narrow.mapInPandas(_resize_batch, schema=META_SCHEMA)

@@ -26,7 +26,6 @@ from pyspark.sql.types import StructField, StructType
 def point_in_interval_join(
     points: DataFrame,
     intervals: DataFrame,
-    ts_col: str,
     start_col: str,
     end_col: str,
     equi_keys: Sequence[str] = (),
@@ -41,7 +40,7 @@ def point_in_interval_join(
     """
     b = F.lit(bucket_seconds)
     p = points.withColumn(
-        "__b", F.floor(F.unix_timestamp(F.col(ts_col)) / b).cast("long")
+        "__b", F.floor(F.unix_timestamp(F.col("ts")) / b).cast("long")
     ).alias("__pt")
     i = intervals.withColumn(
         "__b",
@@ -57,8 +56,8 @@ def point_in_interval_join(
     # row's NULL start/end and silently drops it — 'left' would
     # degrade to inner semantics.
     cond = (
-        (F.col(f"__pt.{ts_col}") >= F.col(f"__iv.{start_col}"))
-        & (F.col(f"__pt.{ts_col}") <= F.col(f"__iv.{end_col}"))
+        (F.col("__pt.ts") >= F.col(f"__iv.{start_col}"))
+        & (F.col("__pt.ts") <= F.col(f"__iv.{end_col}"))
         & (F.col("__pt.__b") == F.col("__iv.__b"))
     )
     for k in equi_keys:

@@ -41,21 +41,21 @@ _IVF_NPROBE = 2  # centroids searched per probe in ivf_topk
 _PAIR_THRESHOLD = 0.4  # cosine cut of embedding_cosine_pairs and srp_lsh_pairs
 
 
-def vector_is_valid(vec_col: str):
-    """Boolean column: vector is non-NULL, all-finite, and has a
-    positive L2 norm (see unit_normalize's contract). `exists`
-    short-circuits, and the norm check reuses one fold — O(d) per
-    row, JVM-side."""
+def vector_is_valid():
+    """Boolean column: the ``embedding`` vector is non-NULL, all-finite,
+    and has a positive L2 norm (see unit_normalize's contract).
+    `exists` short-circuits, and the norm check reuses one fold — O(d)
+    per row, JVM-side."""
     nonfinite = (
-        f"exists({vec_col}, x -> isnan(CAST(x AS DOUBLE)) "
-        f"OR abs(CAST(x AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"
+        "exists(embedding, x -> isnan(CAST(x AS DOUBLE)) "
+        "OR abs(CAST(x AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"
     )
     sq_norm = (
-        f"aggregate({vec_col}, CAST(0.0 AS DOUBLE), "
-        f"(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
+        "aggregate(embedding, CAST(0.0 AS DOUBLE), "
+        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE))"
     )
     return (
-        F.col(vec_col).isNotNull()
+        F.col("embedding").isNotNull()
         & ~F.expr(nonfinite)
         & (F.expr(sq_norm) > 0)
     )
@@ -67,7 +67,7 @@ def _rename_vec(df: DataFrame, suffix: str) -> DataFrame:
     )
 
 
-def unit_normalize(df: DataFrame, vec_col: str, out: str | None = None) -> DataFrame:
+def unit_normalize(df: DataFrame, out: str | None = None) -> DataFrame:
     """Scale vectors to unit L2 norm (float64). After this, cosine is a
     plain dot product — precomputing norms once per vector instead of
     per pair cuts the pairwise similarity cost to a third.
@@ -82,11 +82,11 @@ def unit_normalize(df: DataFrame, vec_col: str, out: str | None = None) -> DataF
     100 TB a batch of corrupt embeddings degrades coverage, never
     crashes a stage or floods top-k results. Oracles mirror with the
     shared ``valid-embedding`` WHERE fragment."""
-    out = out or vec_col
-    df = df.where(vector_is_valid(vec_col))
+    out = out or "embedding"
+    df = df.where(vector_is_valid())
     norm = (
-        f"sqrt(aggregate({vec_col}, CAST(0.0 AS DOUBLE), "
-        f"(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
+        "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE), "
+        "(acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
     )
     # let-bind the norm via transform(array(x), nm -> …)[0]: placed
     # directly inside the division lambda it would be re-evaluated per
@@ -98,7 +98,7 @@ def unit_normalize(df: DataFrame, vec_col: str, out: str | None = None) -> DataF
         out,
         F.expr(
             f"transform(array({norm}), __nm -> "
-            f"transform({vec_col}, v -> "
+            f"transform(embedding, v -> "
             f"CASE WHEN __nm = 0.0D THEN 0.0D "
             f"ELSE CAST(v AS DOUBLE) / __nm END))[0]"
         ),
@@ -111,10 +111,10 @@ _DOT_ARROW = None
 def _dot_arrow():
     """Arrow-vectorized dot product UDF (numpy einsum per batch).
 
-    The HOF-expression dot (functions.scalar.cosine_similarity) stays
-    JVM-side but evaluates element-wise per row; for dense pairwise
-    scoring numpy's fused multiply-add over Arrow batches is ~5-10×
-    faster. Created lazily: pandas_udf needs an active SparkSession.
+    A HOF-expression dot stays JVM-side but evaluates element-wise per
+    row; for dense pairwise scoring numpy's fused multiply-add over
+    Arrow batches is ~5-10× faster. Created lazily: pandas_udf needs an
+    active SparkSession.
     """
     global _DOT_ARROW
     if _DOT_ARROW is None:
@@ -278,8 +278,8 @@ def brute_force_topk(
     Output: (probe_id, neighbor_id, cosine). Ranking uses unrounded
     cosine with neighbor_id tie-break; the emitted value is rounded.
     """
-    p = _rename_vec(unit_normalize(probes, "embedding"), "probe")
-    v = _rename_vec(unit_normalize(vectors, "embedding"), "n")
+    p = _rename_vec(unit_normalize(probes), "probe")
+    v = _rename_vec(unit_normalize(vectors), "n")
     scored = (
         v.crossJoin(F.broadcast(p))
         .filter(F.col("id_n") != F.col("id_probe"))
@@ -300,9 +300,9 @@ def assign_to_centroids(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
 
     Ties break on ascending centroid id. Output: vectors + centroid_id.
     """
-    c = _rename_vec(unit_normalize(centroids, "embedding"), "c")
+    c = _rename_vec(unit_normalize(centroids), "c")
     scored = (
-        unit_normalize(vectors, "embedding", "__nvec")
+        unit_normalize(vectors, "__nvec")
         .crossJoin(F.broadcast(c))
         .withColumn("__cos", dot_product("__nvec", "vec_c"))
     )
@@ -318,9 +318,9 @@ def ivf_topk(
     """IVF-pruned cosine top-``_IVF_K``: search only the
     ``_IVF_NPROBE`` centroids nearest each probe. Output: (probe_id,
     neighbor_id, cosine)."""
-    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
-    c = _rename_vec(unit_normalize(centroids, "embedding"), "c")
-    p = _rename_vec(unit_normalize(probes, "embedding"), "probe")
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids))
+    c = _rename_vec(unit_normalize(centroids), "c")
+    p = _rename_vec(unit_normalize(probes), "probe")
     probe_cells = top_k_per_group(
         p.crossJoin(F.broadcast(c)).withColumn(
             "__pcos", dot_product("vec_probe", "vec_c")
@@ -360,7 +360,7 @@ def kmeans_fit(
     only the iteration counter. Empty clusters keep their previous
     centroid (standard Lloyd fallback).
     """
-    normed = unit_normalize(vectors, "embedding")
+    normed = unit_normalize(vectors)
     centroids = (
         normed.orderBy("vec_id")
         .limit(k)
@@ -422,7 +422,7 @@ def cosine_pairs_within_cells(
     # per pair (O(n_c²)·2d doubles of serialization); the per-cell
     # kernel ships each vector once and computes the identical einsum
     # per pair — see _cell_pair_scores for the bit-exactness contract.
-    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids))
     return _cell_pair_scores(assigned, threshold=threshold).select(
         "id_a", "id_b", F.round("__cos", ROUND_DIGITS).alias("cosine")
     )
@@ -450,7 +450,7 @@ def semantic_dedup_flags(
     )
     # invalid vectors are outside the decision (unit_normalize
     # contract), so the flag table also excludes them.
-    vectors = vectors.where(vector_is_valid("embedding"))
+    vectors = vectors.where(vector_is_valid())
     return vectors.select("vec_id").join(dropped, "vec_id", "left").select(
         "vec_id", F.coalesce("__drop", F.lit(False)).alias("dropped")
     )
@@ -461,7 +461,7 @@ def embedding_cosine_pairs(vectors: DataFrame) -> DataFrame:
     near-dup detection. Quadratic self-join: bound/bucket the input
     first at scale (e.g. via `assign_to_centroids` and pairing within
     cells)."""
-    normed = unit_normalize(vectors, "embedding")
+    normed = unit_normalize(vectors)
     a = _rename_vec(normed, "a")
     b = _rename_vec(normed, "b")
     return (
@@ -563,7 +563,6 @@ def srp_lsh_pairs(vectors: DataFrame) -> DataFrame:
                 "__codes",
                 _srp_kernel()(F.col("embedding").cast("array<double>")),
             ),
-            "embedding",
         )
         .select(
             "vec_id", "embedding", F.posexplode("__codes").alias("__band", "__code")
@@ -600,11 +599,12 @@ def srp_lsh_pairs(vectors: DataFrame) -> DataFrame:
     )
 
 
-def _sq_l2(a: str, b: str) -> str:
-    """Squared L2 distance between two double-array columns, as a
-    deterministic left-to-right HOF fold (stable summation order)."""
+def _sq_l2(a: str) -> str:
+    """Squared L2 distance between double-array column `a` and the
+    codebook column ``cv``, as a deterministic left-to-right HOF fold
+    (stable summation order)."""
     return (
-        f"aggregate(zip_with({a}, {b}, (p, q) -> (p - q) * (p - q)), "
+        f"aggregate(zip_with({a}, cv, (p, q) -> (p - q) * (p - q)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
 
@@ -644,7 +644,7 @@ def pq_adc_topk(vectors: DataFrame) -> DataFrame:
     """
     dsub = _PQ_DIM // _PQ_M
     # invalid vectors can't be PQ-encoded (unit_normalize contract).
-    vectors = vectors.where(vector_is_valid("embedding"))
+    vectors = vectors.where(vector_is_valid())
     sub = vectors.select(
         F.col("vec_id"),
         F.explode(
@@ -662,7 +662,7 @@ def pq_adc_topk(vectors: DataFrame) -> DataFrame:
 
     codes = (
         sub.join(F.broadcast(codebook), F.col("s") == F.col("cs"))
-        .withColumn("d2", F.expr(_sq_l2("sv", "cv")))
+        .withColumn("d2", F.expr(_sq_l2("sv")))
         .groupBy("vec_id", "s")
         .agg(F.min(F.struct("d2", "j")).alias("b"))
         .select("vec_id", "s", F.col("b.j").alias("code"))
@@ -676,7 +676,7 @@ def pq_adc_topk(vectors: DataFrame) -> DataFrame:
             F.col("sv").alias("pv"),
         )
         .join(F.broadcast(codebook), F.col("ps") == F.col("cs"))
-        .withColumn("pd2", F.expr(_sq_l2("pv", "cv")))
+        .withColumn("pd2", F.expr(_sq_l2("pv")))
         .select("probe_id", F.col("ps").alias("s"), F.col("j").alias("code"), "pd2")
     )
 
@@ -729,7 +729,7 @@ def mutual_knn_graph(
     # doubles (see _cell_pair_scores) — so the surviving directed
     # edge set is bit-identical while the boundary traffic drops from
     # O(pairs·d) to O(vectors·d) and the window exchange disappears.
-    assigned = unit_normalize(assign_to_centroids(vectors, centroids), "embedding")
+    assigned = unit_normalize(assign_to_centroids(vectors, centroids))
     directed = cache_tracked(
         _cell_pair_scores(assigned, topk=k).select(
             F.col("src"), F.col("dst"), "__cos"

@@ -43,20 +43,20 @@ def _in_list(var: str, words: tuple[str, ...]) -> str:
     return f"{var} IN ({lst})"
 
 
-def with_tokens(df: DataFrame, text_col: str) -> DataFrame:
-    return df.withColumn("toks", tokens(text_col))
+def with_tokens(df: DataFrame) -> DataFrame:
+    return df.withColumn("toks", tokens("text"))
 
 
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """(id, n_tokens, n_distinct_tokens) — whitespace tokenization."""
-    return with_tokens(df, text_col).select(
-        id_col,
+    return with_tokens(df).select(
+        "doc_id",
         F.size("toks").cast("long").alias("n_tokens"),
         F.size(F.array_distinct("toks")).cast("long").alias("n_distinct_tokens"),
     )
 
 
-def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Per-document quality features: length, token stats, average
     token length, stopword ratio, type-token ratio.
 
@@ -66,17 +66,17 @@ def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     CollapseProject (5× tokenization at scale).
     """
     feat = (
-        "transform(array(split(lower(trim({t})), '\\\\s+')), toks -> struct("
+        "transform(array(split(lower(trim(text)), '\\\\s+')), toks -> struct("
         "CAST(size(toks) AS BIGINT) AS n_tokens, "
         "aggregate(toks, CAST(0 AS BIGINT), (a, t) -> a + length(t)) AS charsum, "
         f"size(filter(toks, t -> {_in_list('t', STOPWORDS_EN)})) AS stop_hits, "
         "size(array_distinct(toks)) AS n_distinct))[0]"
-    ).format(t=text_col)
+    )
     d = df.withColumn("__f", F.expr(feat))
     n_tok = F.col("__f.n_tokens")
     return d.select(
-        id_col,
-        F.length(text_col).cast("long").alias("n_chars_obs"),
+        "doc_id",
+        F.length("text").cast("long").alias("n_chars_obs"),
         n_tok.alias("n_tokens"),
         F.round(F.col("__f.charsum") / n_tok, ROUND_DIGITS).alias("avg_token_len"),
         F.round(F.col("__f.stop_hits") / n_tok, ROUND_DIGITS).alias("stopword_ratio"),
@@ -84,7 +84,7 @@ def quality_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def langid_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def langid_scores(df: DataFrame) -> DataFrame:
     """Marker-word language scores + argmax prediction.
 
     Deterministic precedence on ties: en > es > de > fr (fixed CASE
@@ -98,11 +98,11 @@ def langid_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # single let-bound struct → one tokenization per row (see
     # quality_scores for the CollapseProject rationale)
     feat = (
-        f"transform(array(split(lower(trim({text_col})), '\\\\s+')), "
+        f"transform(array(split(lower(trim(text)), '\\\\s+')), "
         f"toks -> struct({hit_fields}))[0]"
     )
     d = df.withColumn("__f", F.expr(feat)).select(
-        id_col, *[F.col(f"__f.{lang}_hits").alias(f"{lang}_hits") for lang in LANG_MARKERS]
+        "doc_id", *[F.col(f"__f.{lang}_hits").alias(f"{lang}_hits") for lang in LANG_MARKERS]
     )
     en, es, de, fr = (F.col(f"{x}_hits") for x in ("en", "es", "de", "fr"))
     pred = (
@@ -132,7 +132,7 @@ CHAR_PROFILES: dict[str, list[str]] = {
 }
 
 
-def langid_char_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def langid_char_ngram(df: DataFrame) -> DataFrame:
     """Character-n-gram language ID: score = |doc's char-trigram set ∩
     language profile| over boundary-padded normalized text; argmax with
     the same en > es > de > fr tie precedence as the word-level scorer.
@@ -150,7 +150,7 @@ def langid_char_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         f" AS {lang}_hits"
         for lang in LANG_MARKERS
     )
-    norm = f"concat(' ', regexp_replace(lower(trim({text_col})), '\\\\s+', ' '), ' ')"
+    norm = f"concat(' ', regexp_replace(lower(trim(text)), '\\\\s+', ' '), ' ')"
     feat = (
         f"transform(array({norm}), nm -> "
         f"transform(array(array_distinct(transform("
@@ -158,7 +158,7 @@ def langid_char_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         f"tg -> struct({hit_fields}))[0])[0]"
     )
     d = df.withColumn("__f", F.expr(feat)).select(
-        id_col,
+        "doc_id",
         *[F.col(f"__f.{lang}_hits").alias(f"{lang}_hits") for lang in LANG_MARKERS],
     )
     en, es, de, fr = (F.col(f"{x}_hits") for x in ("en", "es", "de", "fr"))
@@ -171,11 +171,11 @@ def langid_char_ngram(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return d.withColumn("pred_lang", pred)
 
 
-def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """(id, fingerprint) — md5 of the whitespace-normalized text.
     Stable across engines (DuckDB md5 produces the same hex)."""
     return df.select(
-        id_col, F.md5(normalize_text(text_col)).alias("fingerprint")
+        "doc_id", F.md5(normalize_text()).alias("fingerprint")
     )
 
 
@@ -185,18 +185,18 @@ def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def bpe_token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def bpe_token_counts(df: DataFrame) -> DataFrame:
     """(id, n_bpe_tokens) — count of BPE-style pre-tokens. A proxy for
     LLM token budgeting; the regex runs JVM-side (codegen)."""
     return df.select(
-        id_col,
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN), F.lit(0)))
+        "doc_id",
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), F.lit(0)))
         .cast("long")
         .alias("n_bpe_tokens"),
     )
 
 
-def rolling_hash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def rolling_hash(df: DataFrame) -> DataFrame:
     """(id, rhash) — polynomial rolling hash of the normalized text's
     byte codes: fold (acc·_HASH_BASE + code) mod _HASH_MOD
     left-to-right. Pure higher-order expression. Mirrored in DuckDB via
@@ -206,14 +206,14 @@ def rolling_hash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # normalize regexp would otherwise be inlined into the lambda and
     # re-run for every position (O(n²) per doc)
     norm = (
-        f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
+        f"regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
     )
     # NULL text has no hashable bytes: dropped on both sides (the
     # engines disagree on folding over a NULL char list — Spark's
     # aggregate(NULL) is NULL, DuckDB's seeded list_reduce is 0).
-    df = df.where(F.col(text_col).isNotNull())
+    df = df.where(F.col("text").isNotNull())
     return df.select(
-        id_col,
+        "doc_id",
         F.expr(
             f"transform(array({norm}), nm -> "
             f"aggregate("
@@ -225,13 +225,7 @@ def rolling_hash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    window: int = 4,
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame, k: int = 5, window: int = 4) -> DataFrame:
     """(id, pos, khash) — winnowing document fingerprints (Schleimer/
     Wilkerson/Aiken, "Winnowing: Local Algorithms for Document
     Fingerprinting", SIGMOD'03 — the MOSS scheme).
@@ -257,15 +251,15 @@ def winnowing_fingerprints(
     pos_bits = 1 << 20
     # Normalization stays a JVM expression: Java's \s+ / lower rules are
     # what the oracle mirrors, and they must not drift with the kernel.
-    norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
-    normed = df.select(id_col, F.expr(norm).alias("__nm"))
+    norm = f"regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
+    normed = df.select("doc_id", F.expr(norm).alias("__nm"))
     combined = normed.select(
-        id_col, _winnow_kernel(k, window, pos_bits)("__nm").alias("__fp")
+        "doc_id", _winnow_kernel(k, window, pos_bits)("__nm").alias("__fp")
     )
     return combined.select(
-        id_col, F.explode("__fp").alias("__c")
+        "doc_id", F.explode("__fp").alias("__c")
     ).select(
-        id_col,
+        "doc_id",
         (F.lit(pos_bits - 1) - F.col("__c") % pos_bits).alias("pos"),
         F.expr(f"__c div {pos_bits}").alias("khash"),  # exact int64 division
     )
@@ -319,7 +313,7 @@ def _winnow_kernel(k: int, window: int, pos_bits: int):
     return _WINNOW_KERNELS[key]
 
 
-def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
     """(id, term, tfidf) — per-document top-3 terms by tf·idf.
 
     tf = raw term count in the document; idf = ln(N / df) with N the
@@ -348,9 +342,9 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     from ..functions.scalar import tokens
 
     terms = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("term")
+        F.col("doc_id"), F.explode(tokens("text")).alias("term")
     )
-    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
     ndocs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -359,7 +353,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(ndocs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 F.col("tf")
@@ -368,7 +362,7 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
@@ -378,8 +372,6 @@ def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def winnowing_overlap_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int = 5,
     window: int = 4,
     min_shared: int = 20,
@@ -399,11 +391,11 @@ def winnowing_overlap_pairs(
     """
     from .dedup import _collapse_identical, _expand_rep_pairs
 
-    fps = winnowing_fingerprints(df, id_col, text_col, k, window)
-    sets = fps.groupBy(id_col).agg(
+    fps = winnowing_fingerprints(df, k, window)
+    sets = fps.groupBy("doc_id").agg(
         F.array_sort(F.collect_set("khash")).alias("__sh")
     )
-    grp = _collapse_identical(sets, id_col, key="__sh").transform(cache_tracked)
+    grp = _collapse_identical(sets, key="__sh").transform(cache_tracked)
     intra = (
         grp.filter(
             (F.size("__members") > 1) & (F.size("__sh") >= min_shared)
@@ -419,10 +411,10 @@ def winnowing_overlap_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
     )
     posting = grp.select(
-        F.col("__rep").alias(id_col), F.explode("__sh").alias("khash")
+        F.col("__rep").alias("doc_id"), F.explode("__sh").alias("khash")
     )
-    a = posting.select(F.col(id_col).alias("id_a"), "khash")
-    b = posting.select(F.col(id_col).alias("id_b"), "khash")
+    a = posting.select(F.col("doc_id").alias("id_a"), "khash")
+    b = posting.select(F.col("doc_id").alias("id_b"), "khash")
     rep_pairs = (
         a.join(b, "khash")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -436,12 +428,7 @@ def winnowing_overlap_pairs(
     ).unionByName(cross.select("id_a", "id_b", "shared_fingerprints"))
 
 
-def tfidf_cosine_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    stop_df_divisor: int = 3,
-) -> DataFrame:
+def tfidf_cosine_pairs(df: DataFrame, stop_df_divisor: int = 3) -> DataFrame:
     """(id_a < id_b, cosine) — document pairs with tf-idf cosine
     similarity >= 0.5, computed term-at-a-time over an inverted
     index (no all-pairs stage; reference has no similarity surface at
@@ -472,13 +459,13 @@ def tfidf_cosine_pairs(
     """
     from ..functions.scalar import tokens
 
-    terms = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+    terms = df.select(F.col("doc_id"), F.explode(tokens("text")).alias("term"))
     # NOT cached (r10 optimization round, measured): the (doc, term,
     # tf) aggregate feeds five consumers, but AQE already reuses the
     # identical exchange across them — a cache_tracked here measured
     # 4.3s -> 8.3s at sf0.1 (InMemoryRelation materialization blocks
     # the exchange reuse and adds a storage pass)
-    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     ndocs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     dfreq = (
         tf.groupBy("term")
@@ -499,7 +486,7 @@ def tfidf_cosine_pairs(
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(ndocs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             (
                 F.col("tf")
@@ -515,7 +502,7 @@ def tfidf_cosine_pairs(
     # ':' always delimits tf — the serialization is injective
     kept = tf.join(dfreq.select("term"), "term")  # vocab-scaled: no hint
     grp = cache_tracked(
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.md5(
                 F.concat_ws(
@@ -528,25 +515,25 @@ def tfidf_cosine_pairs(
         )
         .groupBy("__fp")
         .agg(
-            F.min(id_col).alias("__rep"),
-            F.collect_list(id_col).alias("__members"),
+            F.min("doc_id").alias("__rep"),
+            F.collect_list("doc_id").alias("__members"),
         )
     )
     intra = _intra_group_pairs(grp, "cosine", 1.0)
-    wr = w.join(grp.select(F.col("__rep").alias(id_col)), id_col)
-    norms = wr.groupBy(id_col).agg(
+    wr = w.join(grp.select(F.col("__rep").alias("doc_id")), "doc_id")
+    norms = wr.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
     )
-    a = wr.select(F.col(id_col).alias("id_a"), "term", F.col("wt").alias("wa"))
-    b = wr.select(F.col(id_col).alias("id_b"), "term", F.col("wt").alias("wb"))
+    a = wr.select(F.col("doc_id").alias("id_a"), "term", F.col("wt").alias("wa"))
+    b = wr.select(F.col("doc_id").alias("id_b"), "term", F.col("wt").alias("wb"))
     dots = (
         a.join(b, "term")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
-    na = norms.select(F.col(id_col).alias("id_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col(id_col).alias("id_b"), F.col("nrm").alias("nb"))
+    na = norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("na"))
+    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("nb"))
     rep_pairs = (
         dots.join(na, "id_a")
         .join(nb, "id_b")
@@ -594,8 +581,6 @@ def _kgram_hash_kernel(k: int):
 
 def duplicate_span_removal(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int = 20,
     max_posting: int = 10_000,
 ) -> DataFrame:
@@ -627,32 +612,32 @@ def duplicate_span_removal(
     """
     from pyspark.sql import Window
 
-    norm_expr = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
+    norm_expr = f"regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
     # cached: the normalized corpus feeds BOTH the k-gram branch and
     # the final stitch join — without this the source scan + regexp
     # pass run twice (same repeated-lineage discipline as the graph
     # fixtures' edge materialization)
     normed = (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), F.expr(norm_expr).alias("__nm"))
+        df.where(F.col("text").isNotNull())
+        .select(F.col("doc_id"), F.expr(norm_expr).alias("__nm"))
         .transform(cache_tracked)
     )
     grams = normed.select(
-        id_col,
+        "doc_id",
         F.posexplode(_kgram_hash_kernel(k)("__nm")).alias(
             "__p0", "__h"
         ),
-    ).select(id_col, (F.col("__p0") + 1).alias("pos"), "__h")
+    ).select("doc_id", (F.col("__p0") + 1).alias("pos"), "__h")
     dup = (
         grams.groupBy("__h")
-        .agg(F.countDistinct(id_col).alias("__docs"), F.count(F.lit(1)).alias("__n"))
+        .agg(F.countDistinct("doc_id").alias("__docs"), F.count(F.lit(1)).alias("__n"))
         .filter((F.col("__docs") >= 2) & (F.col("__n") <= max_posting))
         .select("__h")
     )
     covered = grams.join(dup, "__h").select(
-        id_col, F.col("pos").alias("s"), (F.col("pos") + k - 1).alias("e")
+        "doc_id", F.col("pos").alias("s"), (F.col("pos") + k - 1).alias("e")
     )
-    w_ord = Window.partitionBy(id_col).orderBy("s", "e")
+    w_ord = Window.partitionBy("doc_id").orderBy("s", "e")
     w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
     islands = covered.withColumn(
         "__new", (F.col("s") > F.coalesce(F.max("e").over(w_prev), F.lit(0))).cast("int")
@@ -662,20 +647,20 @@ def duplicate_span_removal(
             w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    merged = islands.groupBy(id_col, "__isl").agg(
+    merged = islands.groupBy("doc_id", "__isl").agg(
         F.min("s").alias("s"), F.max("e").alias("e")
     )
-    per_doc = merged.groupBy(id_col).agg(
+    per_doc = merged.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("s", "e"))).alias("__spans")
     )
     # complement + stitch: pieces before/between/after the removal
     # spans, built from one let-bound pass over the span array
-    stitched = normed.join(per_doc, id_col, "left").select(
-        id_col,
+    stitched = normed.join(per_doc, "doc_id", "left").select(
+        "doc_id",
         "__nm",
         F.coalesce("__spans", F.expr("array()")).alias("__spans"),
     ).select(
-        id_col,
+        "doc_id",
         F.size("__spans").cast("long").alias("n_spans_removed"),
         F.expr(
             "aggregate(__spans, CAST(0 AS BIGINT), (a, x) -> a + x.e - x.s + 1)"
@@ -695,7 +680,7 @@ def duplicate_span_removal(
             "                   CAST(element_at(__spans, -1).e + 1 AS INT)) END)"
         ).alias("__kept"),
     ).select(
-        id_col,
+        "doc_id",
         "n_spans_removed",
         "chars_removed",
         F.length("__kept").cast("long").alias("n_chars_kept"),

@@ -26,33 +26,37 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Width of resample_ffill's regular grid (15 minutes)
+_BUCKET_SECONDS = 900
 
-def bucket_start(ts: Column, seconds: int) -> Column:
+
+def bucket_start(ts: Column) -> Column:
     """Epoch-aligned bucket start (same alignment as DuckDB's
-    time_bucket and Spark's window() — multiples of `seconds` since
+    time_bucket and Spark's window() — multiples of `_BUCKET_SECONDS` since
     1970-01-01 00:00:00 UTC)."""
     return F.timestamp_seconds(
-        F.floor(F.unix_timestamp(ts) / seconds).cast("long") * seconds
+        F.floor(F.unix_timestamp(ts) / _BUCKET_SECONDS).cast("long")
+        * _BUCKET_SECONDS
     )
 
 
-def time_spine(df: DataFrame, ts_col: str, seconds: int) -> DataFrame:
-    """One row per `seconds`-wide bucket covering [min(ts), max(ts)].
+def time_spine(df: DataFrame) -> DataFrame:
+    """One row per `_BUCKET_SECONDS`-wide bucket covering [min(ts), max(ts)].
 
     Single-row aggregate then sequence+explode — the spine never
     touches the driver and is tiny by construction.
     """
     return (
         df.agg(
-            bucket_start(F.min(ts_col), seconds).alias("t0"),
-            bucket_start(F.max(ts_col), seconds).alias("t1"),
+            bucket_start(F.min("ts")).alias("t0"),
+            bucket_start(F.max("ts")).alias("t1"),
         )
         .select(
             F.explode(
                 F.sequence(
                     F.col("t0"),
                     F.col("t1"),
-                    F.expr(f"INTERVAL {seconds} SECONDS"),
+                    F.expr(f"INTERVAL {_BUCKET_SECONDS} SECONDS"),
                 )
             ).alias("bucket")
         )
@@ -62,9 +66,7 @@ def time_spine(df: DataFrame, ts_col: str, seconds: int) -> DataFrame:
 def resample_ffill(
     df: DataFrame,
     key_col: str,
-    ts_col: str,
     value_col: str,
-    seconds: int,
     sum_round: int | None = None,
 ) -> DataFrame:
     """Regularize an event stream to a fixed grid per key.
@@ -88,7 +90,7 @@ def resample_ffill(
         avg_expr = F.round(F.sum(value_col), sum_round) / F.count(F.lit(1))
     agg = df.groupBy(
         F.col(key_col).alias("key"),
-        bucket_start(F.col(ts_col), seconds).alias("bucket"),
+        bucket_start(F.col("ts")).alias("bucket"),
     ).agg(
         F.count("*").alias("n_obs"),
         avg_expr.alias("avg_value"),
@@ -96,7 +98,7 @@ def resample_ffill(
     grid = (
         df.select(F.col(key_col).alias("key"))
         .distinct()
-        .crossJoin(F.broadcast(time_spine(df, ts_col, seconds)))
+        .crossJoin(F.broadcast(time_spine(df)))
     )
     w = (
         Window.partitionBy("key")

@@ -338,7 +338,7 @@ allow("plans/fixtures_timeseries.py", "events_xcorr_lead_lag", "lags",
 allow("plans/fixtures_timeseries.py", "events_theilsen_trend", "grid",
       "calendar", _CAL)
 allow("operators/timeseries.py", "resample_ffill",
-      "time_spine(df, ts_col, seconds)", "calendar", _CAL)
+      "time_spine(df)", "calendar", _CAL)
 
 # --- offset: two-pass range-partition offset tables -------------------------
 

@@ -98,7 +98,7 @@ def classify(
 
 # --- collect-cell adjudications ---------------------------------------------
 
-allow("collect", "operators/dedup.py", "_collapse_identical", "id_col",
+allow("collect", "operators/dedup.py", "_collapse_identical", "'doc_id'",
       "cluster",
       "members of one identical-content group (md5 of the canonical "
       "serialization); output is cluster-linear and the degenerate "
@@ -125,7 +125,7 @@ allow("collect", "operators/text.py", "winnowing_overlap_pairs",
 allow("collect", "operators/text.py", "tfidf_cosine_pairs",
       "F.concat_ws(':', 'term', 'tf')", "entity",
       "one document's (term, tf) pairs: bounded by document length")
-allow("collect", "operators/text.py", "tfidf_cosine_pairs", "id_col",
+allow("collect", "operators/text.py", "tfidf_cosine_pairs", "'doc_id'",
       "cluster",
       "members of one identical-tf-vector group (the identical-set "
       "collapse): cluster-linear, same caveat as "
@@ -228,7 +228,7 @@ allow("crossjoin", "operators/similarity.py", "ivf_topk",
       "F.broadcast(c)", "dimension",
       "nlist IVF centroids (operator parameter)")
 allow("crossjoin", "operators/timeseries.py", "resample_ffill",
-      "F.broadcast(time_spine(df, ts_col, seconds))", "calendar",
+      "F.broadcast(time_spine(df))", "calendar",
       "resample spine: span/step rows")
 allow("crossjoin", "plans/airline.py", "requests", "F.broadcast(dates)",
       "calendar", "date spine of the reference's request generator")

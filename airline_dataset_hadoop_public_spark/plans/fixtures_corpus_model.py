@@ -758,9 +758,7 @@ def corpus_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .select("doc_id", "text", "ws")
     )
-    pairs = D.minhash_neardup_pairs(
-        e, "doc_id", "text", threshold=0.9, num_hashes=96, bands=24
-    )
+    pairs = D.minhash_neardup_pairs(e, threshold=0.9, num_hashes=96, bands=24)
     comp = D.connected_components(e.select("doc_id"), pairs, node_col="doc_id")
     s2 = e.join(
         comp.filter(F.col("node") == F.col("component")).select(

@@ -56,9 +56,9 @@ GROUP BY norm
 @register("dedup_exact", _EXACT_ORACLE)
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").withColumn(
-        "norm", normalize_text("text")
+        "norm", normalize_text()
     )
-    return D.exact_dedup(docs, "norm", "doc_id").select("doc_id", "n_copies")
+    return D.exact_dedup(docs, "norm").select("doc_id", "n_copies")
 
 
 # Prefix-filtered oracle (r5: replaces the all-pairs join that was
@@ -98,7 +98,7 @@ FROM pairs WHERE u > 0 AND CAST(i AS DOUBLE) / u >= 0.2
 @register("dedup_ngram_jaccard", _NGRAM_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2)
+    return D.ngram_jaccard_pairs(docs, n=3, threshold=0.2)
 
 
 # Asymmetric containment C(A,B) = |A∩B|/|A|: catches a short document
@@ -134,7 +134,7 @@ FROM pairs WHERE CAST(i AS DOUBLE) / la >= 0.9
 @register("dedup_containment_neardup", _CONTAINMENT_ORACLE)
 def dedup_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.containment_pairs(docs, "doc_id", "text", threshold=0.9)
+    return D.containment_pairs(docs, threshold=0.9)
 
 
 # r5 rewrite mirroring the engine's own two scale tricks (so the
@@ -197,9 +197,7 @@ def dedup_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-certainty; a planted borderline-pair test covers the recall
     math separately. (The operator default stays at 128/32.)"""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_neardup_pairs(
-        docs, "doc_id", "text", threshold=0.9, num_hashes=96, bands=24
-    )
+    return D.minhash_neardup_pairs(docs, threshold=0.9, num_hashes=96, bands=24)
 
 
 # Dedup ACTION: near-dup pairs → connected components → canonical doc
@@ -292,7 +290,7 @@ def dedup_connected_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     components, restored by the anti-join union."""
     docs = load_table(spark, sf_dir, "documents")
     clusters = D.minhash_neardup_clusters(
-        docs, "doc_id", "text", num_hashes=96, bands=24
+        docs, num_hashes=96, bands=24
     ).select("doc_id", F.col("canonical").alias("canonical_id"))
     singletons = (
         docs.select("doc_id")
@@ -337,7 +335,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 @register("dedup_simhash", _SIMHASH_ORACLE)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_pairs(docs, "doc_id", "text", portable_hash=True)
+    return D.simhash_pairs(docs, portable_hash=True)
 
 
 # SimHash dedup ACTION (r3): clusters without the quadratic pair
@@ -405,7 +403,7 @@ WHERE s2.doc_id IS NULL
 def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     clusters = D.simhash_clusters(
-        docs, "doc_id", "text", portable_hash=True
+        docs, portable_hash=True
     ).select("doc_id", F.col("canonical").alias("canonical_id"))
     singletons = (
         docs.select("doc_id")
@@ -740,7 +738,7 @@ FROM (SELECT doc_id, {_W} AS w FROM documents)
 
 @register("text_token_counts", _TOKCOUNT_ORACLE)
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.token_counts(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return X.token_counts(load_table(spark, sf_dir, "documents"))
 
 
 _STOPLIST = ", ".join(f"'{w}'" for w in X.STOPWORDS_EN)
@@ -760,7 +758,7 @@ FROM (SELECT doc_id, text, {_W} AS w FROM documents)
 
 @register("text_quality_scores", _QUALITY_ORACLE)
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.quality_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return X.quality_scores(load_table(spark, sf_dir, "documents"))
 
 
 def _lang_hits_sql(lang: str) -> str:
@@ -779,15 +777,6 @@ FROM (SELECT doc_id, {_lang_hits_sql('en')}, {_lang_hits_sql('es')},
              {_lang_hits_sql('de')}, {_lang_hits_sql('fr')}
       FROM (SELECT doc_id, {_W} AS w FROM documents))
 """
-
-
-# Deregistered r3 (registry-trim, VERDICT r2 item 3): the stopword
-# langid operator stays fully exercised — text_langid_confusion
-# (fixtures_storage) runs BOTH langid variants against each other with
-# a value oracle, and text_langid_char_ngram carries the family's
-# langid coverage. Driver-green rows exist in CORRECTNESS_r02.
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.langid_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def _char_profile_sql(lang: str) -> str:
@@ -821,9 +810,7 @@ FROM (SELECT doc_id, {_char_profile_sql('en')}, {_char_profile_sql('es')},
 
 @register("text_langid_char_ngram", _LANGID_NGRAM_ORACLE)
 def text_langid_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.langid_char_ngram(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text"
-    )
+    return X.langid_char_ngram(load_table(spark, sf_dir, "documents"))
 
 
 _FP_ORACLE = """
@@ -835,7 +822,7 @@ FROM documents
 
 @register("text_fingerprint", _FP_ORACLE)
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.fingerprints(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return X.fingerprints(load_table(spark, sf_dir, "documents"))
 
 
 _BPE_ORACLE = f"""
@@ -848,9 +835,7 @@ FROM documents
 
 @register("text_bpe_token_counts", _BPE_ORACLE)
 def text_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.bpe_token_counts(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text"
-    )
+    return X.bpe_token_counts(load_table(spark, sf_dir, "documents"))
 
 
 # Rolling hash: DuckDB list_reduce has no init accumulator, so seed it
@@ -869,7 +854,7 @@ FROM (SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
 
 @register("text_rolling_hash", _RHASH_ORACLE)
 def text_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.rolling_hash(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return X.rolling_hash(load_table(spark, sf_dir, "documents"))
 
 
 # Winnowing parameters. k=12/window=8 is the discriminative-shingle
@@ -926,11 +911,11 @@ FROM (SELECT doc_id, UNNEST(fps) AS fp FROM w)
 # Deregistered r3 (registry-trim, VERDICT r2 item 3): the fingerprint
 # pipeline runs IN FULL inside text_winnowing_overlap (same kernel,
 # same k/window params) which remains registered; the per-position
-# report shape adds no operator coverage. Driver-green rows exist in
-# CORRECTNESS_r02; plan-shape pytest still pins the Arrow kernel here.
+# report shape adds no operator coverage. Plan-shape pytest still pins
+# the Arrow kernel here.
 def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.winnowing_fingerprints(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", k=_WK, window=_WW
+        load_table(spark, sf_dir, "documents"), k=_WK, window=_WW
     )
 
 
@@ -961,8 +946,7 @@ def text_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     discriminative k; a stop-gram cap can reuse the dedup module's
     guard pattern if a corpus has boilerplate."""
     return X.winnowing_overlap_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        k=_WK, window=_WW, min_shared=_WMS,
+        load_table(spark, sf_dir, "documents"), k=_WK, window=_WW, min_shared=_WMS,
     )
 
 
@@ -984,7 +968,7 @@ QUALIFY ROW_NUMBER() OVER (
 
 @register("text_tfidf_top_terms", _TFIDF_ORACLE)
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return X.tfidf_top_terms(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+    return X.tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1007,8 +991,8 @@ FROM documents WHERE text IS NOT NULL
 @register("multimodal_byte_features", _MM_ORACLE)
 def multimodal_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    payload = M.with_binary_payload(docs, "text")
-    return M.extract_byte_features(payload, "doc_id")
+    payload = M.with_binary_payload(docs)
+    return M.extract_byte_features(payload)
 
 
 # Frame sampling over a video-like payload: every 16th byte, up to 8
@@ -1033,8 +1017,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(
         F.octet_length("text") == F.length("text")
     )
-    payload = M.with_binary_payload(docs, "text")
-    return M.sample_frames(payload, "doc_id")
+    payload = M.with_binary_payload(docs)
+    return M.sample_frames(payload)
 
 
 # ---------------------------------------------------------------------------
@@ -1068,13 +1052,13 @@ WHERE n_tokens BETWEEN 20 AND 90
 def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     canonical = D.exact_dedup(
-        docs.withColumn("norm", normalize_text("text")), "norm", "doc_id"
+        docs.withColumn("norm", normalize_text()), "norm"
     ).select("doc_id")
     kept = docs.join(canonical, "doc_id")
-    counts = X.token_counts(kept, "doc_id", "text").filter(
+    counts = X.token_counts(kept).filter(
         F.col("n_tokens").between(20, 90)
     )
-    lang = X.langid_scores(kept, "doc_id", "text").filter(
+    lang = X.langid_scores(kept).filter(
         F.col("pred_lang") == "en"
     )
     return (
@@ -1448,9 +1432,7 @@ FROM n LEFT JOIN stitched st USING (doc_id)
 @register("dedup_span_removal", _SPAN_ORACLE)
 def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return X.duplicate_span_removal(
-        docs, "doc_id", "text", k=_SPAN_K, max_posting=_SPAN_CAP
-    )
+    return X.duplicate_span_removal(docs, k=_SPAN_K, max_posting=_SPAN_CAP)
 
 
 # ---------------------------------------------------------------------------
@@ -1504,9 +1486,7 @@ FROM tot t LEFT JOIN agg a USING (doc_id)
 @register("docs_paragraph_dedup", _PARA_ORACLE)
 def docs_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return D.block_dedup_keep_first(
-        docs, "doc_id", "text", block_words=_BLOCK_W
-    )
+    return D.block_dedup_keep_first(docs, block_words=_BLOCK_W)
 
 
 # ---------------------------------------------------------------------------

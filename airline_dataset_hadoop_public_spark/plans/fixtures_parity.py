@@ -785,7 +785,6 @@ def events_first48h_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = point_in_interval_join(
         ev.select("user_id", "ts", "value"),
         win,
-        ts_col="ts",
         start_col="w_start",
         end_col="w_end",
         equi_keys=["user_id"],

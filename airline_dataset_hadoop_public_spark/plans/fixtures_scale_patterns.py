@@ -55,11 +55,11 @@ def warehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _warehouse_dir(sf_dir)
     cust = bucketed_table(
         spark, sf_dir, "customer",
-        load_table(spark, sf_dir, "customer"), "c_custkey", 8, base,
+        load_table(spark, sf_dir, "customer"), "c_custkey", base,
     )
     orders = bucketed_table(
         spark, sf_dir, "orders",
-        load_table(spark, sf_dir, "orders"), "o_custkey", 8, base,
+        load_table(spark, sf_dir, "orders"), "o_custkey", base,
     )
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
@@ -214,7 +214,7 @@ GROUP BY 1, 2
 @register("embeddings_gram_matrix", _GRAM_ORACLE)
 def embeddings_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return L.gram_matrix(emb, "embedding", quantize_bits=10)
+    return L.gram_matrix(emb, quantize_bits=10)
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +254,7 @@ WHERE dot / (na.nrm * nb.nrm) >= 0.5
 @register("docs_tfidf_cosine_pairs", _COS_ORACLE)
 def docs_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return X.tfidf_cosine_pairs(docs, "doc_id", "text")
+    return X.tfidf_cosine_pairs(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -484,8 +484,8 @@ def multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as MM
 
     docs = load_table(spark, sf_dir, "documents")
-    payload = MM.with_binary_payload(docs, "text")
-    return MM.resize_media(payload, "doc_id")
+    payload = MM.with_binary_payload(docs)
+    return MM.resize_media(payload)
 
 
 # ---------------------------------------------------------------------------

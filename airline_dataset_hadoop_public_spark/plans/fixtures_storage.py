@@ -337,7 +337,7 @@ def _minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
         shutil.rmtree(path, ignore_errors=True)
         docs = load_table(spark, sf_dir, "documents")
         base = docs.filter(F.col("doc_id") % 5 != 0)
-        idx = D.minhash_build_index(base, "doc_id", "text")
+        idx = D.minhash_build_index(base)
         for name in ("grp", "reps", "banded"):
             idx[name].write.mode("overwrite").parquet(
                 os.path.join(path, name)
@@ -360,7 +360,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     docs = load_table(spark, sf_dir, "documents")
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    return D.minhash_probe_index(index, delta, "doc_id", "text")
+    return D.minhash_probe_index(index, delta)
 
 
 # ---------------------------------------------------------------------------
@@ -482,7 +482,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import text as X
 
     docs = load_table(spark, sf_dir, "documents")
-    pred = X.langid_scores(docs, "doc_id", "text").select("doc_id", "pred_lang")
+    pred = X.langid_scores(docs).select("doc_id", "pred_lang")
     j = (
         docs.select("doc_id", F.col("lang").alias("true_lang"))
         .join(pred, "doc_id")

@@ -61,9 +61,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         schema,
-        lambda s: windowed_agg(
-            s, "ts", "1 day", ["event_type"], watermark="1 hour"
-        ),
+        lambda s: windowed_agg(s, "1 day", watermark="1 hour"),
     )
 
 
@@ -94,9 +92,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         schema,
-        lambda s: windowed_agg(
-            s, "ts", "1 day", ["event_type"], watermark="1 hour", slide="12 hours"
-        ),
+        lambda s: windowed_agg(s, "1 day", watermark="1 hour", slide="12 hours"),
     )
 
 
@@ -128,9 +124,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         schema,
-        lambda s: session_window_agg(
-            s, "ts", "6 hours", ["user_id"], watermark="1 hour"
-        ),
+        lambda s: session_window_agg(s, watermark="1 hour"),
     )
 
 
@@ -190,9 +184,9 @@ def streaming_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataF
         spark,
         src,
         schema,
-        lambda s: running_count_sum(s.where(keep), "user_id", "value"),
+        lambda s: running_count_sum(s.where(keep)),
         output_mode="update",
-        finalize=lambda df: final_state(df, "user_id"),
+        finalize=final_state,
     )
 
 

@@ -60,7 +60,7 @@ def streaming_tws_running_extremes(spark: SparkSession, sf_dir: str) -> DataFram
             spark,
             src,
             schema,
-            lambda s: running_extremes_tws(spark, s, "user_id", "value"),
+            lambda s: running_extremes_tws(spark, s),
             output_mode="update",
             finalize=finalize,
         )

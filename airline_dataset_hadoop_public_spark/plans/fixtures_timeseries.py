@@ -83,7 +83,7 @@ def events_resample_15m_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeseries import resample_ffill
 
     ev = load_table(spark, sf_dir, "events")
-    out = resample_ffill(ev, "event_type", "ts", "value", 900, sum_round=2)
+    out = resample_ffill(ev, "event_type", "value", sum_round=2)
     return out.select(
         F.col("key").alias("event_type"),
         F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket"),

@@ -362,7 +362,7 @@ def embeddings_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # validity (non-null, finite, norm>0) also guarantees scale > 0,
     # so the per-vector absmax division below cannot divide by zero
     emb = load_table(spark, sf_dir, "embeddings").where(
-        vector_is_valid("embedding")
+        vector_is_valid()
     )
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     # let-bind v and scale via a one-element transform so the cast

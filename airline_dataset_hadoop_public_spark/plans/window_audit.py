@@ -31,8 +31,9 @@ keys. A window passes only if
 
 Anything else is UNADJUDICATED and fails the wired-in pytest
 (tests/test_window_audit.py), so a new registration cannot reintroduce
-the hazard silently. `scripts/window_audit.py` renders the full
-adjudicated inventory to WINDOW_AUDIT.md.
+the hazard silently. `render_inventory` renders the full adjudicated
+inventory: `scripts/window_audit.py` writes it to WINDOW_AUDIT.md, and
+the same test compares the committed file with it.
 
 Plan source: `optimizedPlan` (no jobs run, AQE-independent, and the
 optimizer has already pruned dead window expressions); streaming
@@ -43,6 +44,7 @@ optimization of streaming sources).
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -249,6 +251,48 @@ def audit_query(name: str, df: DataFrame) -> list[WindowFinding]:
     plan = plan_string(df)
     limited = dict(group_limit_key_sets(plan))
     return [classify(name, ks, limited) for ks in partition_key_sets(plan)]
+
+
+def render_inventory(
+    findings: list[WindowFinding],
+    n_queries: int,
+    errors: list[tuple[str, str]],
+    sf: str,
+) -> str:
+    """WINDOW_AUDIT.md for the findings of `n_queries` queries audited
+    at `sf`: unadjudicated windows first, then by query and keys, then
+    any (query, message) whose plan construction failed."""
+    by_status = Counter(r.status for r in findings)
+    lines = [
+        "# Window-hazard audit (generated by scripts/window_audit.py)",
+        "",
+        "Every `windowspecdefinition` in every registered query's "
+        f"optimized plan at {sf}, classified:",
+        "",
+        "- **pid** — keyed by `__pid` (the bounded-frame "
+        "two-pass primitives)",
+        "- **entity** — a partition key whose cardinality scales with "
+        "the data (frames bounded per entity)",
+        "- **allowlisted** — per-query adjudication with a written "
+        "boundedness reason (manifest / calendar / post-limit / "
+        "post-prune / dimension)",
+        "- **UNADJUDICATED** — the Gini-class hazard; fails "
+        "tests/test_window_audit.py",
+        "",
+        f"Queries scanned: {n_queries}; windows: {len(findings)}; "
+        + ", ".join(f"{k}: {v}" for k, v in sorted(by_status.items())),
+        "",
+        "| query | partition keys | status | reason |",
+        "|---|---|---|---|",
+    ]
+    for r in sorted(findings, key=lambda r: (r.status != "UNADJUDICATED",
+                                             r.query, sorted(r.keys))):
+        keys = ", ".join(sorted(r.keys)) or "(global)"
+        lines.append(f"| {r.query} | {keys} | {r.status} | {r.reason} |")
+    if errors:
+        lines += ["", "## Construction errors", ""]
+        lines += [f"- {n}: {msg}" for n, msg in errors]
+    return "\n".join(lines) + "\n"
 
 
 # --- adjudications, grouped by boundedness class ----------------------------

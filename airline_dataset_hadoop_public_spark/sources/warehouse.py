@@ -26,6 +26,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Bucket count of every bucketed table; both sides of a co-located join
+# must match it
+_BUCKETS = 8
+
 
 def _source_tag(sf_dir: str, table: str) -> str:
     p = os.path.join(sf_dir, f"{table}.parquet")
@@ -40,7 +44,6 @@ def bucketed_table(
     table: str,
     df: DataFrame,
     key: str,
-    buckets: int,
     base_dir: str,
 ) -> DataFrame:
     """Materialize ``df`` as a bucketed+sorted managed table (idempotent
@@ -48,7 +51,7 @@ def bucketed_table(
     carries the bucket spec, which is what lets the planner elide the
     shuffle on `key`-joins downstream."""
     tag = _source_tag(sf_dir, table)
-    name = f"adhps_b_{table}_{key}_{buckets}"
+    name = f"adhps_b_{table}_{key}_{_BUCKETS}"
     path = os.path.join(base_dir, f"{name}_{tag}")
     marker = os.path.join(path, "_ADHPS_READY")
     fresh = not os.path.exists(marker)
@@ -62,10 +65,10 @@ def bucketed_table(
         # buckets: without this, saveAsTable writes tasks x buckets
         # files (a small-file explosion at cluster scale); repartition
         # uses the same Murmur3 hash as the bucket spec, so each of the
-        # `buckets` tasks emits exactly one bucket file
+        # `_BUCKETS` tasks emits exactly one bucket file
         (
-            df.repartition(buckets, F.col(key))
-            .write.bucketBy(buckets, key)
+            df.repartition(_BUCKETS, F.col(key))
+            .write.bucketBy(_BUCKETS, key)
             .sortBy(key)
             .option("path", path)
             .saveAsTable(name)
@@ -78,7 +81,7 @@ def bucketed_table(
         )
         spark.sql(
             f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {_BUCKETS} BUCKETS "
             f"LOCATION '{path}'"
         )
     return spark.table(name)

@@ -32,11 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 
-def running_count_sum(
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
+def running_count_sum(stream: DataFrame) -> DataFrame:
     """Per-key running (count, sum) over an unbounded stream.
 
     Output per batch: one row per key seen in the batch with the
@@ -58,46 +54,41 @@ def running_count_sum(
             # must filter non-finite values upstream (FIXTURES.md §K;
             # the registered fixture does). `m` tracks non-NULL
             # contributions: SQL SUM over ONLY NULLs is NULL, not 0.
-            vals = pdf[value_col]
+            vals = pdf["value"]
             m += int(vals.notna().sum())
             s += float(vals.sum())
         state.update((n, m, s))
         yield pd.DataFrame(
             {
-                key_col: [k],
+                "user_id": [k],
                 "n_events": [n],
                 "sum_value": [round(s, 4) if m else None],
             }
         )
 
-    return stream.groupBy(key_col).applyInPandasWithState(
+    return stream.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=f"{key_col} bigint, n_events bigint, sum_value double",
+        outputStructType="user_id bigint, n_events bigint, sum_value double",
         stateStructType="n bigint, m bigint, s double",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def final_state(df: DataFrame, key_col: str) -> DataFrame:
+def final_state(df: DataFrame) -> DataFrame:
     """Reduce an update-mode sink to each key's LAST emission (running
     aggregates are monotone in count, so the max-count row per key is
     the final state — which equals the batch ground truth)."""
     from pyspark.sql import functions as F
 
     return (
-        df.groupBy(key_col)
+        df.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("__last"))
-        .select(key_col, "__last.n_events", "__last.sum_value")
+        .select("user_id", "__last.n_events", "__last.sum_value")
     )
 
 
-def running_extremes_tws(
-    spark: SparkSession,
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
+def running_extremes_tws(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """Per-key running (count, max) via ``transformWithStateInPandas``
     — the Spark 4 arbitrary-state API (typed state handles, timers,
     RocksDB-backed). Same contract as ``running_count_sum``: update
@@ -135,18 +126,18 @@ def running_extremes_tws(
             )
             for pdf in rows:
                 n += len(pdf)
-                mx = max(mx, float(pdf[value_col].max()))
+                mx = max(mx, float(pdf["value"].max()))
             self._st.update((n, mx))
             yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "max_value": [mx]}
+                {"user_id": [key[0]], "n_events": [n], "max_value": [mx]}
             )
 
         def close(self) -> None:
             pass
 
-    return stream.groupBy(key_col).transformWithStateInPandas(
+    return stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=Extremes(),
-        outputStructType=f"{key_col} bigint, n_events bigint, max_value double",
+        outputStructType="user_id bigint, n_events bigint, max_value double",
         outputMode="Update",
         timeMode="None",
     )

@@ -64,50 +64,43 @@ def scoped_stream_shuffle_partitions(spark: SparkSession, src_dir: str) -> int:
 
 def windowed_agg(
     stream: DataFrame,
-    ts_col: str,
     window: str,
-    keys: list[str],
     watermark: str | None = None,
     slide: str | None = None,
 ) -> DataFrame:
     """Tumbling (or sliding, if `slide` given) event-time window
-    counts+sums per key. Watermark bounds state retention — required
-    for append-mode sinks; harmless under complete mode."""
-    src = stream.withWatermark(ts_col, watermark) if watermark else stream
+    counts+sums of ``value`` per ``event_type`` over ``ts``. Watermark
+    bounds state retention — required for append-mode sinks; harmless
+    under complete mode."""
+    src = stream.withWatermark("ts", watermark) if watermark else stream
     win = (
-        F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
+        F.window("ts", window, slide) if slide else F.window("ts", window)
     )
     return (
-        src.groupBy(win.alias("w"), *keys)
+        src.groupBy(win.alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), ROUND_DIGITS).alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            *keys,
+            "event_type",
             "n",
             "sum_value",
         )
     )
 
 
-def session_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    gap: str,
-    keys: list[str],
-    watermark: str | None = None,
-) -> DataFrame:
-    """Gap-based session windows per key (count + sum), via Spark's
-    native ``session_window``: events whose [ts, ts+gap) windows chain
-    transitively merge into one session; a new session starts exactly
-    when the gap to the previous event is ≥ `gap`. Works identically
-    on batch and streaming input (watermark required for streaming
-    state eviction)."""
-    src = df.withWatermark(ts_col, watermark) if watermark else df
+def session_window_agg(df: DataFrame, watermark: str | None = None) -> DataFrame:
+    """Gap-based session windows per ``user_id`` (count + sum of
+    ``value``), via Spark's native ``session_window``: events whose
+    [ts, ts + 6 hours) windows chain transitively merge into one
+    session; a new session starts exactly when the gap to the previous
+    event is ≥ 6 hours. Works identically on batch and streaming input
+    (watermark required for streaming state eviction)."""
+    src = df.withWatermark("ts", watermark) if watermark else df
     return (
-        src.groupBy(F.session_window(ts_col, gap).alias("w"), *keys)
+        src.groupBy(F.session_window("ts", "6 hours").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), ROUND_DIGITS).alias("sum_value"))
         .select(
-            *keys,
+            "user_id",
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
             "n",
             "sum_value",

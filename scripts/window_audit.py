@@ -43,38 +43,8 @@ def main() -> int:
 
     by_status = Counter(r.status for r in rows)
     bad = [r for r in rows if r.status == "UNADJUDICATED"]
-
-    lines = [
-        "# Window-hazard audit (generated by scripts/window_audit.py)",
-        "",
-        "Every `windowspecdefinition` in every registered query's "
-        f"optimized plan at {SF}, classified:",
-        "",
-        "- **pid** — keyed by `__pid` (the bounded-frame "
-        "two-pass primitives)",
-        "- **entity** — a partition key whose cardinality scales with "
-        "the data (frames bounded per entity)",
-        "- **allowlisted** — per-query adjudication with a written "
-        "boundedness reason (manifest / calendar / post-limit / "
-        "post-prune / dimension)",
-        "- **UNADJUDICATED** — the Gini-class hazard; fails "
-        "tests/test_window_audit.py",
-        "",
-        f"Queries scanned: {len(names)}; windows: {len(rows)}; "
-        + ", ".join(f"{k}: {v}" for k, v in sorted(by_status.items())),
-        "",
-        "| query | partition keys | status | reason |",
-        "|---|---|---|---|",
-    ]
-    for r in sorted(rows, key=lambda r: (r.status != "UNADJUDICATED",
-                                         r.query, sorted(r.keys))):
-        keys = ", ".join(sorted(r.keys)) or "(global)"
-        lines.append(f"| {r.query} | {keys} | {r.status} | {r.reason} |")
-    if errors:
-        lines += ["", "## Construction errors", ""]
-        lines += [f"- {n}: {msg}" for n, msg in errors]
     with open(out_path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(wa.render_inventory(rows, len(names), errors, SF))
 
     print(f"wrote {out_path}: {len(rows)} windows over {len(names)} queries")
     print("  " + ", ".join(f"{k}={v}" for k, v in sorted(by_status.items())))

@@ -156,7 +156,7 @@ def test_winnowing_guarantee_and_empty_input(spark):
         ],
         "doc_id long, text string",
     )
-    fp = winnowing_fingerprints(docs, "doc_id", "text", k=5, window=4)
+    fp = winnowing_fingerprints(docs, k=5, window=4)
     rows = fp.collect()
     by_doc = {}
     for r in rows:

@@ -32,8 +32,8 @@ def docs(spark):
 def test_exact_dedup_normalized(spark, docs):
     from airline_dataset_hadoop_public_spark.functions.scalar import normalize_text
 
-    d = docs.withColumn("norm", normalize_text("text"))
-    out = {r["doc_id"]: r["n_copies"] for r in D.exact_dedup(d, "norm", "doc_id").collect()}
+    d = docs.withColumn("norm", normalize_text())
+    out = {r["doc_id"]: r["n_copies"] for r in D.exact_dedup(d, "norm").collect()}
     # docs 0, 3, 4 normalize identically → group keeps min id 0 with 3 copies
     assert out[0] == 3
     assert out[1] == 1 and out[2] == 1
@@ -42,9 +42,7 @@ def test_exact_dedup_normalized(spark, docs):
 def test_minhash_finds_planted_neardup(spark, docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.minhash_neardup_pairs(
-            docs, "doc_id", "text", threshold=0.8
-        ).collect()
+        for r in D.minhash_neardup_pairs(docs, threshold=0.8).collect()
     }
     assert (0, 1) in pairs  # near-dup (one word removed)
     assert (0, 3) in pairs and pairs[(0, 3)] == 1.0  # exact dup
@@ -62,10 +60,10 @@ def test_ngram_prefix_filter_equals_bruteforce(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     fast = {
         (r["id_a"], r["id_b"])
-        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.4).collect()
+        for r in D.ngram_jaccard_pairs(df, n=2, threshold=0.4).collect()
     }
     # brute force via the verifier on ALL pairs
-    sh = D._shingled(df, "doc_id", "text", 2)
+    sh = D._shingled(df, 2)
     ids = df.select("doc_id")
     all_pairs = (
         ids.alias("a")
@@ -75,7 +73,7 @@ def test_ngram_prefix_filter_equals_bruteforce(spark):
     )
     truth = {
         (r["id_a"], r["id_b"])
-        for r in D._verify_jaccard(all_pairs, sh, "doc_id", 0.4).collect()
+        for r in D._verify_jaccard(all_pairs, sh, 0.4).collect()
     }
     assert fast == truth and len(truth) > 0
 
@@ -85,7 +83,7 @@ def test_simhash_exact_dup_distance_zero(spark, docs):
     # votes on all 64), so only exact/normalized dups are asserted.
     pairs = {
         (r["id_a"], r["id_b"]): r["distance"]
-        for r in D.simhash_pairs(docs, "doc_id", "text").collect()
+        for r in D.simhash_pairs(docs).collect()
     }
     assert pairs == {(0, 3): 0, (0, 4): 0, (3, 4): 0}
 
@@ -121,7 +119,7 @@ def test_ivf_assignment_covers_all_vectors(spark):
 
 def test_quality_scores_known_values(spark):
     df = spark.createDataFrame([(1, "the cat the mat")], ["doc_id", "text"])
-    r = X.quality_scores(df, "doc_id", "text").collect()[0]
+    r = X.quality_scores(df).collect()[0]
     assert r["n_tokens"] == 4
     assert r["stopword_ratio"] == 0.5  # 'the' twice out of 4
     assert r["type_token_ratio"] == 0.75  # {the, cat, mat}
@@ -132,7 +130,7 @@ def test_langid_precedence_tiebreak(spark):
     df = spark.createDataFrame(
         [(1, "xyz abc qqq"), (2, "el la de que y en los")], ["doc_id", "text"]
     )
-    out = {r["doc_id"]: r["pred_lang"] for r in X.langid_scores(df, "doc_id", "text").collect()}
+    out = {r["doc_id"]: r["pred_lang"] for r in X.langid_scores(df).collect()}
     assert out[1] == "en"  # all-zero scores → precedence picks en
     assert out[2] == "es"
 
@@ -141,7 +139,7 @@ def test_fingerprint_matches_hashlib(spark):
     import hashlib
 
     df = spark.createDataFrame([(1, "  Hello   WORLD  ")], ["doc_id", "text"])
-    got = X.fingerprints(df, "doc_id", "text").collect()[0]["fingerprint"]
+    got = X.fingerprints(df).collect()[0]["fingerprint"]
     assert got == hashlib.md5(b"hello world").hexdigest()
 
 
@@ -149,9 +147,7 @@ def test_multimodal_features_match_python(spark):
     df = spark.createDataFrame([(1, "abc"), (2, "")], ["doc_id", "text"])
     out = {
         r["id"]: (r["n_bytes"], r["first_byte"], r["checksum"])
-        for r in M.extract_byte_features(
-            M.with_binary_payload(df, "text"), "doc_id"
-        ).collect()
+        for r in M.extract_byte_features(M.with_binary_payload(df)).collect()
     }
     assert out[1] == (3, ord("a"), (3 * 31 + ord("a")) % 1000)
     assert out[2] == (0, -1, 0)
@@ -184,7 +180,7 @@ def test_streaming_append_watermark_withholds_open_window(spark, tmp_path):
     spark.createDataFrame(pdf).write.parquet(src)
     schema = spark.read.parquet(src).schema
 
-    plan = lambda s: windowed_agg(s, "ts", "1 hour", ["event_type"], watermark="30 minutes")
+    plan = lambda s: windowed_agg(s, "1 hour", watermark="30 minutes")
     complete = run_file_stream_batch(spark, src, schema, plan, "complete")
     append = run_file_stream_batch(spark, src, schema, plan, "append")
     n_complete, n_append = complete.count(), append.count()

@@ -18,7 +18,7 @@ def test_bpe_token_counts_known_string(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text="Hello, world 42!"), Row(doc_id=2, text="")]
     )
-    got = {r["doc_id"]: r["n_bpe_tokens"] for r in bpe_token_counts(df, "doc_id", "text").collect()}
+    got = {r["doc_id"]: r["n_bpe_tokens"] for r in bpe_token_counts(df).collect()}
     # Hello | , | world | 42 | !  → 5 pre-tokens
     assert got == {1: 5, 2: 0}
 
@@ -32,7 +32,7 @@ def test_rolling_hash_matches_python(spark):
     for ch in norm:
         expect = (expect * 31 + ord(ch)) % 1_000_000_007
     df = spark.createDataFrame([Row(doc_id=7, text=text)])
-    [row] = rolling_hash(df, "doc_id", "text").collect()
+    [row] = rolling_hash(df).collect()
     assert (row["doc_id"], row["rhash"]) == (7, expect)
 
 
@@ -46,9 +46,8 @@ def test_sample_frames_shape_and_values(spark):
     short = "xyz"  # 1 frame
     df = with_binary_payload(
         spark.createDataFrame([Row(doc_id=1, text=long), Row(doc_id=2, text=short)]),
-        "text",
     )
-    rows = sample_frames(df, "doc_id").collect()
+    rows = sample_frames(df).collect()
     by_id: dict = {}
     for r in rows:
         by_id.setdefault(r["id"], []).append((r["frame_idx"], r["byte_val"]))
@@ -75,9 +74,7 @@ def test_session_window_gap_semantics(spark):
     ]
     got = {
         (r["user_id"], r["session_start"]): (r["n"], r["sum_value"])
-        for r in session_window_agg(
-            _mk_events(spark, rows), "ts", "6 hours", ["user_id"]
-        ).collect()
+        for r in session_window_agg(_mk_events(spark, rows)).collect()
     }
     assert got == {
         (1, "2024-01-01 00:00:00"): (2, 3.0),
@@ -211,7 +208,7 @@ def test_langid_char_ngram_detects_obvious_language(spark):
             Row(doc_id=3, text="der hund und die katze von dem haus"),
         ]
     )
-    got = {r["doc_id"]: r["pred_lang"] for r in langid_char_ngram(df, "doc_id", "text").collect()}
+    got = {r["doc_id"]: r["pred_lang"] for r in langid_char_ngram(df).collect()}
     assert got == {1: "en", 2: "es", 3: "de"}
 
 
@@ -234,7 +231,7 @@ def test_point_in_interval_join_boundaries(spark):
     got = sorted(
         r["pid"]
         for r in point_in_interval_join(
-            pts, iv, "ts", "w_start", "w_end", bucket_seconds=3600
+            pts, iv, "w_start", "w_end", bucket_seconds=3600
         ).collect()
     )
     assert got == [1, 2, 3]

@@ -87,7 +87,7 @@ def test_point_in_interval_left_keeps_unmatched(spark):
     got = {
         r["pid"]: r["iid"]
         for r in point_in_interval_join(
-            points, ivals, "ts", "start", "end", how="left"
+            points, ivals, "start", "end", how="left"
         ).collect()
     }
     assert got == {1: 100, 2: None}  # unmatched point survives with NULLs
@@ -115,7 +115,7 @@ def test_unit_normalize_invalid_vectors_dropped(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    kept = {r["vec_id"] for r in unit_normalize(df, "embedding").collect()}
+    kept = {r["vec_id"] for r in unit_normalize(df).collect()}
     assert kept == {1, 2}
     top = brute_force_topk(
         df, df.filter(F.col("vec_id") == 1), k=5

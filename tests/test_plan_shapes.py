@@ -81,20 +81,20 @@ def test_dedup_ops_on_empty_input(spark):
     from airline_dataset_hadoop_public_spark.operators import dedup as D
 
     docs = _empty_docs(spark)
-    assert D.exact_dedup(docs, "text", "doc_id").count() == 0
-    assert D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3).count() == 0
-    assert D.minhash_neardup_pairs(docs, "doc_id", "text").count() == 0
-    assert D.simhash_pairs(docs, "doc_id", "text").count() == 0
+    assert D.exact_dedup(docs, "text").count() == 0
+    assert D.ngram_jaccard_pairs(docs, n=3).count() == 0
+    assert D.minhash_neardup_pairs(docs).count() == 0
+    assert D.simhash_pairs(docs).count() == 0
 
 
 def test_text_ops_on_empty_input(spark):
     from airline_dataset_hadoop_public_spark.operators import text as X
 
     docs = _empty_docs(spark)
-    assert X.token_counts(docs, "doc_id", "text").count() == 0
-    assert X.quality_scores(docs, "doc_id", "text").count() == 0
-    assert X.langid_scores(docs, "doc_id", "text").count() == 0
-    assert X.rolling_hash(docs, "doc_id", "text").count() == 0
+    assert X.token_counts(docs).count() == 0
+    assert X.quality_scores(docs).count() == 0
+    assert X.langid_scores(docs).count() == 0
+    assert X.rolling_hash(docs).count() == 0
 
 
 def test_similarity_ops_on_empty_probes(spark):

@@ -107,7 +107,7 @@ def test_rolling_hash_matches_python_any_text(spark, text):
     from airline_dataset_hadoop_public_spark.operators.text import rolling_hash
 
     df = spark.createDataFrame([Row(doc_id=1, text=text)])
-    [row] = rolling_hash(df, "doc_id", "text").collect()
+    [row] = rolling_hash(df).collect()
     # normalize_text = regexp_replace(lower(trim(x)), '\s+', ' ') with
     # SQL trim semantics: strips SPACES only (tabs survive into the
     # whitespace-collapse step) — identical in Spark and DuckDB
@@ -184,7 +184,7 @@ def test_winnowing_kernel_matches_bruteforce(spark, texts):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = defaultdict(set)
-    for r in winnowing_fingerprints(df, "doc_id", "text", k, w).collect():
+    for r in winnowing_fingerprints(df, k, w).collect():
         got[r["doc_id"]].add((r["pos"], r["khash"]))
     for i, t in enumerate(texts):
         assert got.get(i, set()) == brute(t), (i, t)
@@ -223,9 +223,7 @@ def test_simhash_kernel_matches_bruteforce(spark, texts):
     )
     got = {
         r["doc_id"]: r["simhash"]
-        for r in simhash_signature(
-            df, "doc_id", "text", portable_hash=True
-        ).collect()
+        for r in simhash_signature(df, portable_hash=True).collect()
     }
     for i, t in enumerate(texts):
         expect = brute(t)
@@ -730,9 +728,7 @@ def test_containment_matches_python_any_threshold(spark, docs, threshold):
     )
     got = sorted(
         (r["id_a"], r["id_b"], r["containment"])
-        for r in containment_pairs(
-            df, "doc_id", "text", threshold=threshold
-        ).collect()
+        for r in containment_pairs(df, threshold=threshold).collect()
     )
 
     def tri(ws):
@@ -892,7 +888,7 @@ def test_vector_is_valid_matches_python(spark, vecs):
     )
     df = spark.createDataFrame(list(enumerate(vecs)), schema)
     kept = {
-        r["vid"] for r in df.where(vector_is_valid("embedding")).collect()
+        r["vid"] for r in df.where(vector_is_valid()).collect()
     }
     expect = {
         i

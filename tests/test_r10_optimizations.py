@@ -86,9 +86,7 @@ def test_cell_pair_kernel_threshold_bitexact_vs_join(spark):
 
     vecs = _random_vectors(spark)
     cents = vecs.filter(F.col("vec_id") < 4)
-    assigned = unit_normalize(
-        assign_to_centroids(vecs, cents), "embedding"
-    ).cache()
+    assigned = unit_normalize(assign_to_centroids(vecs, cents)).cache()
     new = {
         (r.id_a, r.id_b): r["__cos"]
         for r in _cell_pair_scores(assigned, threshold=0.1).collect()
@@ -114,9 +112,7 @@ def test_cell_pair_kernel_topk_bitexact_vs_window(spark):
 
     vecs = _random_vectors(spark, n=50, d=6, seed=11)
     cents = vecs.filter(F.col("vec_id") < 3)
-    assigned = unit_normalize(
-        assign_to_centroids(vecs, cents), "embedding"
-    ).cache()
+    assigned = unit_normalize(assign_to_centroids(vecs, cents)).cache()
     new = {
         (r.src, r.dst): r["__cos"]
         for r in _cell_pair_scores(assigned, topk=4).collect()
@@ -138,9 +134,7 @@ def test_cell_pair_kernel_chunking_matches_unchunked(spark, monkeypatch):
 
     vecs = _random_vectors(spark, n=40, d=4, seed=3)
     cents = vecs.filter(F.col("vec_id") < 1)  # ONE cell: all rows together
-    assigned = S.unit_normalize(
-        S.assign_to_centroids(vecs, cents), "embedding"
-    ).cache()
+    assigned = S.unit_normalize(S.assign_to_centroids(vecs, cents)).cache()
     big = sorted(
         map(tuple, S._cell_pair_scores(assigned, topk=3).collect())
     )
@@ -190,7 +184,7 @@ def test_stream_drain_restores_shuffle_partitions(spark, tmp_path):
         spark,
         src,
         ev.schema,
-        lambda s: windowed_agg(s, "ts", "1 day", ["event_type"]),
+        lambda s: windowed_agg(s, "1 day"),
     )
     assert out.count() > 0
     assert spark.conf.get(key) == before

@@ -121,9 +121,7 @@ def test_block_dedup_keep_first_semantics(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in block_dedup_keep_first(
-            docs, "doc_id", "text", block_words=3
-        ).collect()
+        for r in block_dedup_keep_first(docs, block_words=3).collect()
     }
     # doc 1: blocks [a b c][x y z][a b c] -> third drops
     assert (out[1]["n_blocks"], out[1]["n_kept"]) == (3, 2)
@@ -144,7 +142,7 @@ def test_block_dedup_null_rows_excluded(spark):
          Row(doc_id=2, text=None)],
         "doc_id bigint, text string",
     )
-    out = block_dedup_keep_first(docs, "doc_id", "text").collect()
+    out = block_dedup_keep_first(docs).collect()
     assert [r["doc_id"] for r in out] == [1]
     assert out[0]["n_kept"] == 1
 
@@ -158,9 +156,7 @@ def test_block_dedup_partial_tail_block(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in block_dedup_keep_first(
-            docs, "doc_id", "text", block_words=3
-        ).collect()
+        for r in block_dedup_keep_first(docs, block_words=3).collect()
     }
     assert (out[1]["n_blocks"], out[1]["n_kept"]) == (2, 2)
     assert (out[2]["n_blocks"], out[2]["n_kept"]) == (1, 0)

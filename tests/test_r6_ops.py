@@ -167,18 +167,14 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark):
     core = " ".join(f"tok{i}" for i in range(60))
     rows = [(i, f"{core} uniq{i}") for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = D._shingled(df, "doc_id", "text", 1).filter(F.size("__sh") > 0)
-    grp = D._collapse_identical(sh, "doc_id", fingerprint=True)
-    reps = D._hashed_reps(grp, "doc_id")
+    sh = D._shingled(df, 1).filter(F.size("__sh") > 0)
+    grp = D._collapse_identical(sh, fingerprint=True)
+    reps = D._hashed_reps(grp)
     bands, cap = 32, 3
-    banded = D._banded(reps, "doc_id", 128, bands).cache()
+    banded = D._banded(reps, 128, bands).cache()
     try:
-        uncapped = D._lsh_candidates(
-            banded, banded, "doc_id", 0.9, 10**9, symmetric=True
-        ).count()
-        capped = D._lsh_candidates(
-            banded, banded, "doc_id", 0.9, cap, symmetric=True
-        ).count()
+        uncapped = D._lsh_candidates(banded, banded, 0.9, 10**9, symmetric=True).count()
+        capped = D._lsh_candidates(banded, banded, 0.9, cap, symmetric=True).count()
         # the fixture really is a hot cluster: near-all-pairs uncapped
         assert uncapped >= 50  # C(12,2) = 66 when every pair collides
         # direct invariant: after the guard no bucket exceeds the cap

@@ -49,11 +49,11 @@ def test_bucketed_join_has_zero_exchanges(spark):
     base = _warehouse_dir(SF)
     cust = bucketed_table(
         spark, SF, "customer", load_table(spark, SF, "customer"),
-        "c_custkey", 8, base,
+        "c_custkey", base,
     )
     orders = bucketed_table(
         spark, SF, "orders", load_table(spark, SF, "orders"),
-        "o_custkey", 8, base,
+        "o_custkey", base,
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -87,9 +87,9 @@ def test_bucketed_table_mirror_reuse_roundtrips(spark):
 
     base = _warehouse_dir(SF)
     df = load_table(spark, SF, "customer")
-    first = bucketed_table(spark, SF, "customer", df, "c_custkey", 8, base)
+    first = bucketed_table(spark, SF, "customer", df, "c_custkey", base)
     n1 = first.count()
-    again = bucketed_table(spark, SF, "customer", df, "c_custkey", 8, base)
+    again = bucketed_table(spark, SF, "customer", df, "c_custkey", base)
     assert again.count() == n1 == df.count()
     assert "Bucketed: true" in _plan(
         again.groupBy("c_custkey").count()
@@ -190,7 +190,7 @@ def test_gram_matches_numpy(spark):
         dtype=np.float64,
     )
     expect = x.T @ x
-    got = gram_matrix(emb, "embedding", ndigits=6).collect()
+    got = gram_matrix(emb, ndigits=6).collect()
     assert len(got) == x.shape[1] * (x.shape[1] + 1) // 2
     for r in got:
         assert abs(r["gram"] - expect[r["i"] - 1, r["j"] - 1]) < 1e-5
@@ -203,7 +203,7 @@ def test_gram_empty_input(spark):
     from airline_dataset_hadoop_public_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF, "embeddings").limit(0)
-    assert gram_matrix(emb, "embedding").count() == 0
+    assert gram_matrix(emb).count() == 0
 
 
 def test_top_component_matches_numpy_eigh(spark):
@@ -221,7 +221,7 @@ def test_top_component_matches_numpy_eigh(spark):
     )
     vals, vecs = np.linalg.eigh(x.T @ x)
     ref = vecs[:, -1]
-    got = np.array(top_component(emb, "embedding"))
+    got = np.array(top_component(emb))
     assert abs(abs(ref @ got) - 1.0) < 1e-6
 
 
@@ -252,7 +252,7 @@ def test_tfidf_cosine_pairs_detects_near_dups(spark):
         ],
         "doc_id INT, text STRING",
     )
-    rows = tfidf_cosine_pairs(docs, "doc_id", "text", stop_df_divisor=1).collect()
+    rows = tfidf_cosine_pairs(docs, stop_df_divisor=1).collect()
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
     assert pairs[(1, 6)] == pytest.approx(1.0)  # exact dup in pruned space
     assert (1, 2) in pairs and (3, 4) in pairs
@@ -617,7 +617,7 @@ def test_gram_quantized_is_exact_dyadic(spark):
     )
     q = np.floor(x * 1024.0 + 0.5).astype(np.int64)
     expect = (q.T @ q).astype(np.float64) / 1048576.0
-    got = gram_matrix(emb, "embedding", quantize_bits=10).collect()
+    got = gram_matrix(emb, quantize_bits=10).collect()
     assert len(got) == x.shape[1] * (x.shape[1] + 1) // 2
     for r in got:
         assert r["gram"] == expect[r["i"] - 1, r["j"] - 1]  # exact, no eps
@@ -649,7 +649,7 @@ def test_gram_quantized_flush_keeps_exactness(spark, monkeypatch):
     # ~3 batches — multiple partials per (i, j) key reach the agg
     monkeypatch.setattr(linalg, "_INT64_HEADROOM", 3 * 7 * qmax * qmax)
     try:
-        got = linalg.gram_matrix(emb, "embedding", quantize_bits=10).collect()
+        got = linalg.gram_matrix(emb, quantize_bits=10).collect()
     finally:
         spark.conf.set(key, old)
     assert len(got) == x.shape[1] * (x.shape[1] + 1) // 2
@@ -667,7 +667,7 @@ def test_gram_quantized_single_batch_overflow_raises(spark, monkeypatch):
     emb = load_table(spark, SF, "embeddings")
     monkeypatch.setattr(linalg, "_INT64_HEADROOM", 1)
     with pytest.raises(Exception, match="int64 headroom"):
-        linalg.gram_matrix(emb, "embedding", quantize_bits=10).collect()
+        linalg.gram_matrix(emb, quantize_bits=10).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ def test_resample_ffill_fills_gaps_and_forward_fills(spark):
             Row(k="b", ts=_ts(0, 20), v=5.0),
         ]
     )
-    out = resample_ffill(df, "k", "ts", "v", 900)
+    out = resample_ffill(df, "k", "v")
     rows = {
         (r["key"], r["bucket"].minute): (r["n_obs"], r["avg_value_ffill"])
         for r in out.collect()

@@ -11,6 +11,8 @@ their documented construction collects)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -124,11 +126,13 @@ def test_every_registered_query_window_is_adjudicated(spark):
         for q, adjs in wa.QUERY_ALLOWLIST.items()
         for adj in adjs
     }
+    findings: list[wa.WindowFinding] = []
     for name in sorted(qs):
-        for f in wa.audit_query(name, qs[name](spark, SF)):
-            if f.status == "UNADJUDICATED":
-                bad.append(f"{name}: [{', '.join(sorted(f.keys))}]")
-            stale_allow.discard((f.query, f.keys))
+        findings += wa.audit_query(name, qs[name](spark, SF))
+    for f in findings:
+        if f.status == "UNADJUDICATED":
+            bad.append(f"{f.query}: [{', '.join(sorted(f.keys))}]")
+        stale_allow.discard((f.query, f.keys))
     release_caches()
     assert not bad, (
         "Gini-class window hazard(s) — reshape (literal rank prefilter "
@@ -141,4 +145,9 @@ def test_every_registered_query_window_is_adjudicated(spark):
     assert not stale_allow, (
         f"stale QUERY_ALLOWLIST entries (no matching window): "
         f"{sorted((q, sorted(k)) for q, k in stale_allow)}"
+    )
+    # the committed inventory is this scan's render
+    committed = Path(e.__file__).with_name("WINDOW_AUDIT.md").read_text()
+    assert wa.render_inventory(findings, len(qs), [], SF) == committed, (
+        "WINDOW_AUDIT.md is stale: rerun python scripts/window_audit.py"
     )
