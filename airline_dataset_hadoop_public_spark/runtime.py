@@ -105,11 +105,12 @@ def scratch_dir(*parts: str) -> str:
 
 
 def source_fingerprint(path: str) -> str:
-    """(mtime, size) identity of a source file, for mirror cache keys —
-    a regenerated fixture invalidates every derived mirror."""
+    """(mtime in ns, size) identity of a source file, for mirror cache
+    keys — a regenerated fixture invalidates every derived mirror, even
+    one rewritten within the same second."""
     try:
         st = _os.stat(path)
-        return f"{int(st.st_mtime)}_{st.st_size}"
+        return f"{st.st_mtime_ns}_{st.st_size}"
     except OSError:
         return "unknown"
 
@@ -119,7 +120,8 @@ def source_scratch_key(sf_dir: str, table_file: str) -> str:
     derived from one fixture table. Every mirror keyed this way is
     ORPHANED (not corrupted) by a regenerated corpus: the key changes,
     the old directory is simply never read again. One definition so
-    the stream mirrors, the persisted LSH index, and the state
-    checkpoint can never drift onto different invalidation rules."""
+    the stream mirrors, the persisted LSH index, the state checkpoint
+    and the bucketed warehouse tables can never drift onto different
+    invalidation rules."""
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     return f"{tag}_{source_fingerprint(_os.path.join(sf_dir, table_file))}"

@@ -11,31 +11,26 @@ of both sides) into a pure merge of pre-sorted bucket files. Bucket
 counts must MATCH on both sides (or divide evenly) for Spark to elide
 the exchange.
 
-The writer is mirror-cached by source-file identity (path + mtime +
-size), same contract as the streaming source mirror: re-running a
-query in one session reuses the bucketed copy instead of rewriting,
-and re-registers it, so a registered query can call it every run.
+The writer is mirror-cached by `runtime.source_scratch_key` (sf
+directory name, mtime, size), the key of the streaming source mirror
+too: re-running a query in one session reuses the bucketed copy
+instead of rewriting, and re-registers it, so a registered query can
+call it every run.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import source_scratch_key
+
 # Bucket count of every bucketed table; both sides of a co-located join
 # must match it
 _BUCKETS = 8
-
-
-def _source_tag(sf_dir: str, table: str) -> str:
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(p)
-    ident = f"{os.path.abspath(p)}|{st.st_mtime_ns}|{st.st_size}"
-    return hashlib.md5(ident.encode()).hexdigest()[:12]
 
 
 def bucketed_table(
@@ -50,7 +45,7 @@ def bucketed_table(
     per source identity) and return a reader over it. The catalog entry
     carries the bucket spec, which is what lets the planner elide the
     shuffle on `key`-joins downstream."""
-    tag = _source_tag(sf_dir, table)
+    tag = source_scratch_key(sf_dir, f"{table}.parquet")
     name = f"adhps_b_{table}_{key}_{_BUCKETS}"
     path = os.path.join(base_dir, f"{name}_{tag}")
     marker = os.path.join(path, "_ADHPS_READY")

@@ -50,7 +50,7 @@ def main() -> int:
     # depends on partition layout or summation order; the plan-shift
     # sweep (scripts/adversarial_planshift.py) additionally injects
     # session confs that flip Catalyst's physical strategy choices
-    cpus = int(os.environ.get("ADHPS_GATE_CPUS", "8"))
+    cpus = os.environ.get("ADHPS_GATE_CPUS")
     shuf = os.environ.get("ADHPS_GATE_SHUFFLE")
     extra = dict(
         kv.split("=", 1)
@@ -58,7 +58,8 @@ def main() -> int:
         if "=" in kv
     )
     spark = get_spark(
-        "correctness-check", cpus=cpus, driver_memory="8g",
+        "correctness-check",
+        cpus=int(cpus) if cpus else None,
         shuffle_partitions=int(shuf) if shuf else None,
         extra_conf=extra or None,
     )

@@ -13,13 +13,14 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 SF = "/root/testdata/sf0.001"
 
 
 def main() -> int:
-    out_path = "WINDOW_AUDIT.md"
+    out_path = os.path.join(_REPO, "WINDOW_AUDIT.md")
     args = sys.argv[1:]
     if args and args[0].endswith(".md"):
         out_path, args = args[0], args[1:]
@@ -28,8 +29,7 @@ def main() -> int:
     from airline_dataset_hadoop_public_spark.session import get_spark
     import __spark_entry__ as e
 
-    spark = get_spark("window-audit", cpus=8, shuffle_partitions=8,
-                      driver_memory="8g")
+    spark = get_spark("window-audit", shuffle_partitions=8)
     qs = e.queries()
     names = args or sorted(qs)
 

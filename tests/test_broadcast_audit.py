@@ -1,36 +1,29 @@
 """Mechanical broadcast-hint gate (r9 verdict item 4), modeled on
 test_window_audit.py: every `F.broadcast(...)` site in the package
 must carry a size-provenance adjudication in
-plans/broadcast_audit.py, and every adjudication must still match a
+plans/call_site_audit.py, and every adjudication must still match a
 site. A new data-scaled hint therefore cannot land unclassified, and
 the allowlist cannot rot. Pure AST analysis — no SparkSession."""
 
 from __future__ import annotations
 
-from airline_dataset_hadoop_public_spark.plans.broadcast_audit import (
+from airline_dataset_hadoop_public_spark.plans.call_site_audit import (
     ALLOWLIST,
+    CLASSES,
     classify,
     scan_sites,
 )
 
-_CLASSES = {
-    "scalar",
-    "dimension",
-    "calendar",
-    "offset",
-    "sketch-state",
-    "node-table",
-    "cap-guard",
-    "contract",
-    "pattern-pinned",
-}
+
+def _broadcast_sites():
+    return [s for s in scan_sites() if s.kind == "broadcast"]
 
 
 def test_every_broadcast_site_is_adjudicated():
-    _, unknown, _ = classify()
+    _, unknown, _ = classify(_broadcast_sites())
     assert not unknown, (
         "UNADJUDICATED F.broadcast sites (add a size-provenance entry "
-        "to plans/broadcast_audit.py, or drop the hint and let AQE "
+        "to plans/call_site_audit.py, or drop the hint and let AQE "
         "decide):\n"
         + "\n".join(f"  {s.path}:{s.lineno} {s.func} {s.arg[:80]}"
                     for s in unknown)
@@ -38,7 +31,8 @@ def test_every_broadcast_site_is_adjudicated():
 
 
 def test_no_stale_adjudications():
-    _, _, stale = classify()
+    _, _, stale = classify(_broadcast_sites())
+    stale = [k for k in stale if k[0] == "broadcast"]
     assert not stale, (
         "stale broadcast adjudications (the site changed or the hint "
         "was removed — delete the entry):\n"
@@ -47,19 +41,25 @@ def test_no_stale_adjudications():
 
 
 def test_every_adjudication_uses_a_known_class():
-    bad = {k: v for k, v in ALLOWLIST.items() if v[0] not in _CLASSES}
+    bad = {
+        k: v for k, v in ALLOWLIST.items()
+        if k[0] == "broadcast" and v[0] not in CLASSES["broadcast"]
+    }
     assert not bad, f"unknown provenance classes: {bad}"
 
 
 def test_every_adjudication_has_a_written_reason():
-    thin = {k: v for k, v in ALLOWLIST.items() if len(v[1]) < 10}
+    thin = {
+        k: v for k, v in ALLOWLIST.items()
+        if k[0] == "broadcast" and len(v[1]) < 10
+    }
     assert not thin, f"reasons too thin to audit: {thin}"
 
 
 def test_scanner_sees_the_package():
     # guard against a silent scan-root regression: the repo keeps a
     # known, non-trivial number of adjudicated hints
-    sites = scan_sites()
+    sites = _broadcast_sites()
     assert len(sites) >= 50, f"scanner found only {len(sites)} sites"
 
 
@@ -76,29 +76,29 @@ def test_removed_hints_stay_removed():
         ("plans/fixtures_extensions.py", "serving_point_read"),
     }
     hits = [
-        s for s in scan_sites() if (s.path, s.func) in banned
+        s for s in _broadcast_sites() if (s.path, s.func) in banned
     ]
     assert not hits, f"removed hints returned: {hits}"
 
 
 def test_committed_inventories_match_the_scripts(tmp_path):
-    """BROADCAST_AUDIT.md and CELL_AUDIT.md are what
-    scripts/broadcast_audit.py and scripts/cell_audit.py write today.
-    Rows name sites by (path, function, argument) with no line number,
-    so only an added, removed or re-adjudicated site changes them."""
+    """CALL_SITE_AUDIT.md is what scripts/call_site_audit.py writes
+    today, and the script exits 0. Rows name sites by (kind, path,
+    function, argument) with no line number, so only an added, removed
+    or re-adjudicated site changes it."""
     import pathlib
     import subprocess
     import sys
 
     repo = pathlib.Path(__file__).resolve().parent.parent
-    for name in ("broadcast_audit", "cell_audit"):
-        out = tmp_path / f"{name}.md"
-        subprocess.run(
-            [sys.executable, str(repo / "scripts" / f"{name}.py"), str(out)],
-            check=True,
-            capture_output=True,
-        )
-        committed = repo / f"{name.upper()}.md"
-        assert out.read_text() == committed.read_text(), (
-            f"{committed.name} is stale: run python scripts/{name}.py"
-        )
+    out = tmp_path / "CALL_SITE_AUDIT.md"
+    subprocess.run(
+        [sys.executable, str(repo / "scripts" / "call_site_audit.py"),
+         str(out)],
+        check=True,
+        capture_output=True,
+    )
+    committed = repo / "CALL_SITE_AUDIT.md"
+    assert out.read_text() == committed.read_text(), (
+        "CALL_SITE_AUDIT.md is stale: run python scripts/call_site_audit.py"
+    )
